@@ -4,8 +4,9 @@ import graft.operators.EmbeddingOps.IvfIndex
 import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 
-/** IVF ANN index persistence (r12 verdict ask #2) — [[ModelStore]]'s
+/** IVF ANN index persistence — [[ModelStore]]'s
   * S7/S8/S9 model-sink discipline applied to the embedding index: the
   * index a serving job probes is a STORED artifact, not an in-session
   * materialization, and a crawl increment appends to it without a
@@ -30,13 +31,16 @@ import org.apache.spark.sql.functions.col
   * `cell`, the probe access path); the quantizer is cells-sized. Loads
   * are lazy scans — nothing corpus-sized touches the driver.
   */
-object IvfStore {
+object IvfStore extends FoldableStore {
 
   /** S9 versioned path convention for index artifacts: f(cell count,
     * date), mirroring [[ModelStore.versionedDir]]. Date is an explicit
     * argument so path construction stays deterministic. */
   def versionedDir(base: String, cells: Int, date: java.time.LocalDate): String =
     s"$base/${cells}_cell_ivf_index_$date"
+
+  def isSaved(dir: String): Boolean =
+    new java.io.File(s"$dir/assigned/_SUCCESS").isFile
 
   /** Persist quantizer + cell-assigned corpus. The quantizer goes
     * through [[org.apache.spark.ml.clustering.GraftKMeansIO]] — exact
@@ -64,7 +68,7 @@ object IvfStore {
     IvfIndex(assigned, model)
   }
 
-  // ----- IVF-PQ artifact (r13 verdict ask #1): the PQ stage is a
+  // ----- IVF-PQ artifact: the PQ stage is a
   // fitted model like any other — without persisting it, every serving
   // session retrains the codebooks, and a retrain CHANGES the corpus
   // codes (different centroids), exactly the drift the round-trip rows
@@ -105,28 +109,27 @@ object IvfStore {
       .write.mode("overwrite").parquet(s"$dir/codes")
   }
 
-  // ----- Index MAINTENANCE (r14): the append/compact lifecycle a
+  // ----- Index MAINTENANCE: the append/compact lifecycle a
   // continuously-crawling deployment runs against the stored artifact.
-  // Appends publish through ExportCommit's atomic manifest (staged dir
-  // + createLink CAS — a replayed batchId is detected and its
-  // re-staged dir deleted, so the append is exactly-once under
+  // Appends publish through ExportCommit's atomic manifest
+  // ([[graft.sources.ExportCommit.commitOnce]] — exactly-once under
   // at-least-once batch delivery); compaction periodically folds the
   // committed batch dirs back into ONE versioned artifact so the
   // probe-side scan plans one bucketed relation instead of a
-  // manifest-length union (s17's compaction posture applied to the
-  // index). -----
+  // manifest-length union.
+  //
+  // Deletes (takedown / erasure / recrawl removal) arrive in batches
+  // like any other increment and publish through the SAME manifest
+  // protocol; a tombstone is honored LOGICALLY by the serve path the
+  // moment it commits (an anti-join on the id — ids-sized,
+  // broadcastable) and PHYSICALLY by the next compaction. Ref tie: the
+  // reference's refiner mutates a shipped model after the fact (ref
+  // 04_cluster_refiner.R:726-774) — the tombstone log is that posture
+  // for the index artifacts. -----
 
-  /** Stage + atomically commit one append batch: the incoming
-    * (vec_id, embedding) rows are assigned to the STORED quantizer's
-    * cells by the model's own transform (no refit — e15's
-    * structural-twin discipline) and committed under `batchId`.
-    * `features` is persisted as ARRAY<DOUBLE> so the batch files carry
-    * a plain parquet schema; [[committedAppends]] converts back
-    * losslessly. */
-  /** The no-refit coarse assignment both append paths share (e15's
-    * structural-twin discipline lives in exactly one place — r14
-    * review): (vec_id, embedding) → (vec_id, embedding, features,
-    * cell) through the stored quantizer's own transform. */
+  /** The no-refit coarse assignment both append paths share:
+    * (vec_id, embedding) → (vec_id, embedding, features, cell) through
+    * the stored quantizer's own transform. */
   private def coarseAssign(batch: org.apache.spark.sql.DataFrame,
       model: KMeansModel): org.apache.spark.sql.DataFrame =
     model.transform(
@@ -136,132 +139,87 @@ object IvfStore {
       .select(col("vec_id"), col("embedding"), col("features"),
         col(model.getPredictionCol).as("cell"))
 
-  private def alreadyCommitted(root: String, batchId: Long): Boolean =
-    graft.sources.ExportCommit.isCommitted(root, batchId)
+  /** On-disk shape of a committed append batch: `features` as
+    * ARRAY<DOUBLE> so the batch files carry a plain parquet schema. */
+  private val AppendSchema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("features_arr", ArrayType(DoubleType)),
+    StructField("cell", IntegerType)))
 
+  private def pqCodeSchema(subspaces: Int): StructType =
+    StructType(Seq(StructField("vec_id", LongType),
+      StructField("cell", IntegerType)) ++
+      (0 until subspaces).map(i => StructField(s"code$i", IntegerType)))
+
+  private val TombstoneSchema = StructType(Seq(StructField("vec_id", LongType)))
+
+  /** Commit one append batch: the incoming (vec_id, embedding) rows
+    * are assigned to the STORED quantizer's cells by the model's own
+    * transform (no refit — e15's structural-twin discipline) and
+    * committed under `batchId`, exactly-once under replay.
+    * [[committedAppends]] converts `features` back losslessly. */
   def appendBatch(root: String, batch: org.apache.spark.sql.DataFrame,
       batchId: Long, model: KMeansModel): Unit = {
-    if (alreadyCommitted(root, batchId)) return
-    val assigned = coarseAssign(batch, model)
-      .select(col("vec_id"), col("embedding"),
-        org.apache.spark.ml.functions.vector_to_array(col("features"))
-          .as("features_arr"),
-        col("cell"))
-    val staged = graft.sources.ExportCommit.stage(root, batchId)
-    assigned.write.parquet(staged)
-    graft.sources.ExportCommit.commitBatch(root, batchId, staged)
+    graft.sources.ExportCommit.commitOnce(root, batchId)(
+      coarseAssign(batch, model)
+        .select(col("vec_id"), col("embedding"),
+          org.apache.spark.ml.functions.vector_to_array(col("features"))
+            .as("features_arr"),
+          col("cell"))
+        .write.parquet(_))
     ()
   }
 
   /** Every committed appended row, in the index-relation shape
     * (vec_id, embedding, features, cell). An empty manifest reads as a
-    * typed empty relation (embedding as ARRAY<FLOAT> — the corpus
-    * contract). */
+    * typed empty relation. */
   def committedAppends(spark: SparkSession, root: String)
-      : org.apache.spark.sql.DataFrame = {
-    val dirs = graft.sources.ExportCommit.committedDirs(root)
-    if (dirs.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)),
-          StructField("features",
-            org.apache.spark.ml.linalg.SQLDataTypes.VectorType),
-          StructField("cell", IntegerType))))
-    } else {
-      val read = spark.read.parquet(dirs: _*)
-      // same loud contract as load's (r14 ADVICE): a batch dir written
-      // by an older or mis-built writer must fail HERE with the store's
-      // named violation, not as an AnalysisException at the consumer
-      val missing = Seq("vec_id", "embedding", "features_arr", "cell")
-        .filterNot(read.columns.contains)
-      require(missing.isEmpty,
-        s"ivf append store $root is missing columns: ${missing.mkString(", ")}")
-      read.select(col("vec_id"), col("embedding"),
+      : org.apache.spark.sql.DataFrame =
+    graft.sources.ExportCommit.committedParquet(spark, root, AppendSchema,
+        "ivf append store")
+      .select(col("vec_id"), col("embedding"),
         org.apache.spark.ml.functions.array_to_vector(col("features_arr"))
           .as("features"),
         col("cell"))
-    }
-  }
 
-  /** Stage + atomically commit one PQ-CODED append batch: the
-    * incoming (vec_id, embedding) rows are coarse-assigned by the
-    * STORED quantizer and PQ-encoded by the STORED codebooks — both
-    * the loaded models' own transforms, no refit of either stage (the
-    * e15 discipline applied twice: identical vectors through identical
-    * deterministic assignments get their originals' cell AND code).
-    * Committed rows carry (vec_id, cell, code0..code{M-1}) — the
-    * compressed-corpus shape the ADC serve consumes; raw embeddings
-    * are NOT in the committed files (PQ's bandwidth point applies to
-    * the maintenance path too). */
+  /** Commit one PQ-CODED append batch: the incoming (vec_id,
+    * embedding) rows are coarse-assigned by the STORED quantizer and
+    * PQ-encoded by the STORED codebooks — both the loaded models' own
+    * transforms, no refit of either stage (identical vectors through
+    * identical deterministic assignments get their originals' cell AND
+    * code). Committed rows carry (vec_id, cell, code0..code{M-1}) —
+    * the compressed-corpus shape the ADC serve consumes; raw
+    * embeddings are NOT in the committed files (PQ's bandwidth point
+    * applies to the maintenance path too). */
   def appendPqBatch(root: String, batch: org.apache.spark.sql.DataFrame,
       batchId: Long, model: KMeansModel,
       pq: graft.operators.EmbeddingOps.PqModel): Unit = {
-    if (alreadyCommitted(root, batchId)) return
-    val dim = model.clusterCenters.head.size
-    val assigned = coarseAssign(batch, model)
-      .select(col("vec_id"), col("features"), col("cell"))
-    val coded = graft.operators.EmbeddingOps.pqEncode(assigned, pq, dim)
-    val codeCols = pq.models.indices.map(i => col(s"code$i"))
-    val staged = graft.sources.ExportCommit.stage(root, batchId)
-    coded.select((Seq(col("vec_id"), col("cell")) ++ codeCols): _*)
-      .write.parquet(staged)
-    graft.sources.ExportCommit.commitBatch(root, batchId, staged)
+    graft.sources.ExportCommit.commitOnce(root, batchId) { staged =>
+      val dim = model.clusterCenters.head.size
+      val assigned = coarseAssign(batch, model)
+        .select(col("vec_id"), col("features"), col("cell"))
+      val coded = graft.operators.EmbeddingOps.pqEncode(assigned, pq, dim)
+      val codeCols = pq.models.indices.map(i => col(s"code$i"))
+      coded.select((Seq(col("vec_id"), col("cell")) ++ codeCols): _*)
+        .write.parquet(staged)
+    }
     ()
   }
 
   /** Every committed PQ-coded appended row. An empty manifest reads
     * as a typed empty relation. */
   def committedPqCodes(spark: SparkSession, root: String,
-      subspaces: Int): org.apache.spark.sql.DataFrame = {
-    val dirs = graft.sources.ExportCommit.committedDirs(root)
-    if (dirs.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(
-          Seq(StructField("vec_id", LongType),
-            StructField("cell", IntegerType)) ++
-          (0 until subspaces).map(i => StructField(s"code$i", IntegerType))))
-    } else {
-      val read = spark.read.parquet(dirs: _*)
-      // same loud contract as loadPq's (r14 ADVICE): missing/renamed
-      // code columns are the store's named violation, not a downstream
-      // AnalysisException at the consumer's select
-      val missing = (Seq("vec_id", "cell") ++
-        (0 until subspaces).map(i => s"code$i"))
-        .filterNot(read.columns.contains)
-      require(missing.isEmpty,
-        s"pq append store $root is missing columns: ${missing.mkString(", ")}")
-      read
-    }
-  }
+      subspaces: Int): org.apache.spark.sql.DataFrame =
+    graft.sources.ExportCommit.committedParquet(spark, root,
+      pqCodeSchema(subspaces), "pq append store")
 
-  // ----- Tombstone DELETE log (r14 verdict ask #1): takedown / GDPR
-  // erasure / recrawl removal is routine at 100 TB, and every store
-  // here is otherwise append-only. Deletion events arrive in batches
-  // like any other increment and publish through the SAME ExportCommit
-  // manifest (exactly-once under replay); a tombstone is honored
-  // LOGICALLY by the serve path the moment it commits (an anti-join on
-  // the id — ids-sized, broadcastable) and PHYSICALLY by the next
-  // compaction (the fold anti-joins the log before writing the new
-  // artifact; after adoption, the log's entries up to that version are
-  // janitor garbage). Ref tie: the reference's whole refiner exists to
-  // mutate a shipped model after the fact (ref
-  // 04_cluster_refiner.R:726-774) — the tombstone log is that posture
-  // for the index artifacts. -----
-
-  /** Stage + atomically commit one tombstone batch (a `vec_id` column;
-    * anything else is dropped). Replay-safe via the manifest CAS plus
-    * the pre-staging fast path. */
+  /** Commit one tombstone batch (a `vec_id` column; anything else is
+    * dropped), exactly-once under replay. */
   def appendTombstones(root: String, ids: org.apache.spark.sql.DataFrame,
       batchId: Long): Unit = {
-    if (alreadyCommitted(root, batchId)) return
-    val staged = graft.sources.ExportCommit.stage(root, batchId)
-    ids.select(col("vec_id")).write.parquet(staged)
-    graft.sources.ExportCommit.commitBatch(root, batchId, staged)
+    graft.sources.ExportCommit.commitOnce(root, batchId)(
+      ids.select(col("vec_id")).write.parquet(_))
     ()
   }
 
@@ -269,20 +227,9 @@ object IvfStore {
     * arrive in more than one batch). An empty manifest reads as a
     * typed empty relation: no log means nothing is deleted. */
   def committedTombstones(spark: SparkSession, root: String)
-      : org.apache.spark.sql.DataFrame = {
-    val dirs = graft.sources.ExportCommit.committedDirs(root)
-    if (dirs.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("vec_id", LongType))))
-    } else {
-      val read = spark.read.parquet(dirs: _*)
-      require(read.columns.contains("vec_id"),
-        s"tombstone store $root is missing the vec_id column")
-      read.select(col("vec_id")).distinct()
-    }
-  }
+      : org.apache.spark.sql.DataFrame =
+    graft.sources.ExportCommit.committedParquet(spark, root,
+      TombstoneSchema, "tombstone store").distinct()
 
   /** Serve-time tombstone honor: the index relation minus the committed
     * delete log — ONE definition for every consumer (e21's serve, the
@@ -318,7 +265,7 @@ object IvfStore {
 
   /** Fold a loaded IVF-PQ artifact + committed PQ-coded appends into
     * ONE new versioned artifact at `outDir` — e20's compaction posture
-    * for the COMPRESSED corpus (r14 verdict: s28's append manifest
+    * for the COMPRESSED corpus (s28's append manifest
     * otherwise grows one dir per micro-batch forever, and the ADC
     * serve plans a manifest-length union over exactly the artifact a
     * PQ fleet ships). The coarse quantizer AND the per-subspace

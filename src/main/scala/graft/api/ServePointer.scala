@@ -5,9 +5,8 @@ import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 
 /** Atomic CURRENT pointer over versioned artifact directories — the
   * operational primitive every store here implied but nothing
-  * provided: [[IvfStore.versionedDir]] / [[LshIndexStore]] /
-  * [[PassageIndexStore]] / [[WinnowIndexStore]] write immutable
-  * versioned dirs, compactions and rebuilds produce NEW dirs, and the
+  * provided: [[IvfStore.versionedDir]] / [[DocIndexStore]] write
+  * immutable versioned dirs, compactions and rebuilds produce NEW dirs, and the
   * question "which version does the fleet serve RIGHT NOW" needs an
   * atomic, auditable answer. This is the staged-rollout / rollback
   * switch: adopting a new artifact is one CAS; rolling back is
@@ -81,7 +80,7 @@ object ServePointer {
     * [[retirable]] candidate is compared in — absolute, `..`-free, no
     * trailing slash, so protection is path identity, not string
     * identity. */
-  private def normalize(dir: String): String =
+  private[api] def normalize(dir: String): String =
     Paths.get(dir).toAbsolutePath.normalize().toString
 
   /** Read one pointer version's dir, tolerating the file VANISHING

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryDef
+import graft.api.DocIndexStore
 import graft.functions.TextFunctions
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -872,8 +873,54 @@ object DedupOps {
     probePlantedAgainst(docs, off, prunedBandIndex(existing))
   }
 
+  private val StoreDate = java.time.LocalDate.ofEpochDay(0)
+
+  /** d17/d20/d24's stored serve: `store`'s artifact over `base`, saved
+    * once per session under `root` (the row's INPUT — the probe of the
+    * LOADED store is what the row witnesses), adopted through the
+    * family's atomic CURRENT pointer and loaded from whatever the
+    * pointer names — a stale or torn pointer breaks the row's hash,
+    * not a 3am rollout. */
+  private def pointerServed(s: SparkSession, store: DocIndexStore,
+      root: String, base: DataFrame): DataFrame = {
+    val dir = store.versionedDir(root, StoreDate)
+    store.saveOnce(dir, base)
+    graft.api.ServePointer.adopt(s"$root/pointer", dir)
+    store.load(s, graft.api.ServePointer.current(s"$root/pointer")
+      .getOrElse(sys.error(s"no adopted ${store.family} index under $root")))
+  }
+
+  /** The maintenance rows' store geometry: `store`'s base artifact over
+    * `base` at `baseDir` (the row's input, saved once per session) plus
+    * `appended` committed as append batch 0 under `root/append`.
+    * Returns the append root. */
+  private def baseAndAppend(store: DocIndexStore, baseDir: String,
+      base: DataFrame, root: String, appended: DataFrame): String = {
+    store.saveOnce(baseDir, base)
+    store.appendBatch(s"$root/append", appended, 0L)
+    s"$root/append"
+  }
+
+  /** d25/d27/d29's takedown fold: `takedown` committed to the
+    * doc-tombstone log under `root/tombstones` — twice, as
+    * at-least-once delivery of the delete event does (the replay is
+    * skipped) — then base ∪ appends MINUS tombstones folded into
+    * `root/compacted` and loaded. The probe of the loaded fold runs
+    * with NO tombstone filter, so a fold that leaves any tombstoned
+    * row breaks the row's hash. */
+  private def foldTakedown(s: SparkSession, store: DocIndexStore,
+      baseDir: String, appendRoot: String, root: String,
+      takedown: DataFrame): DataFrame = {
+    val tombRoot = s"$root/tombstones"
+    DocIndexStore.appendTombstones(tombRoot, takedown, 0L)
+    DocIndexStore.appendTombstones(tombRoot, takedown, 0L)
+    val outDir = store.versionedDir(s"$root/compacted", StoreDate)
+    store.compactAppends(s, baseDir, appendRoot, outDir, Some(tombRoot))
+    store.load(s, outDir)
+  }
+
   /** d20 — incremental near-dup against a STORED band index (the
-    * [[graft.api.LshIndexStore]] round-trip of d11, r13 — completing
+    * [[graft.api.DocIndexStore.Lsh]] round-trip of d11, r13 — completing
     * the stored-index symmetry e14 established for the embedding
     * side): the pruned band index d11 builds in-session is PERSISTED
     * (S9 versioned path), loaded back, and the SAME incoming batch is
@@ -893,23 +940,11 @@ object DedupOps {
   def incrementalNeardupStored(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val off = plantOffset(maxIdOf(docs, "doc_id"))
-    val existing = docs.filter(col("doc_id") % 2 === 0)
-    val root = graft.sources.TmpDirs.artifactRoot(s, d, "d20")
-    val dir = graft.api.LshIndexStore.versionedDir(
-      root, Bands, java.time.LocalDate.ofEpochDay(0))
-    // the stored artifact is this row's INPUT (the probe of the LOADED
-    // store is what it witnesses) — billed once per session, the same
-    // _SUCCESS guard d25/d30 already apply to their base stores
-    if (!new java.io.File(s"$dir/_SUCCESS").isFile)
-      graft.api.LshIndexStore.save(dir, prunedBandIndex(existing))
-    // r16 verdict ask #1: the serve resolves WHICH version through the
-    // atomic CURRENT pointer (e27's switch, LSH family) — a stale or
-    // torn pointer now breaks this row's hash, not a 3am rollout
-    graft.api.ServePointer.adopt(s"$root/pointer", dir)
-    val served = graft.api.ServePointer.current(s"$root/pointer")
-      .getOrElse(sys.error(s"no adopted LSH index under $root/pointer"))
-    probePlantedAgainst(docs, off, graft.api.LshIndexStore.load(s, served))
+    probePlantedAgainst(docs, off, pointerServed(s, DocIndexStore.Lsh,
+      graft.sources.TmpDirs.artifactRoot(s, d, "d20"),
+      docs.filter(col("doc_id") % 2 === 0)))
   }
+
 
   /** d21 — LSH band-index APPEND (r14 verdict ask #4, closing the
     * "maintained by the indexing job" promise s27's doc makes: the
@@ -919,7 +954,7 @@ object DedupOps {
     * 400); the younger half (even ids < 400 — which contains EVERY
     * planted re-fetch source, so the append is load-bearing in the
     * oracle) arrives as an append batch through
-    * [[graft.api.LshIndexStore.appendBatch]] (same ExportCommit atomic
+    * [[graft.api.DocIndexStore.Lsh.appendBatch]] (same ExportCommit atomic
     * manifest as s26 — replayed batchIds skip), and d11's incoming
     * batch probes base ∪ committedAppends through the SHARED
     * [[probePlantedAgainst]] plan. d11's planted oracle transfers
@@ -936,23 +971,18 @@ object DedupOps {
     val off = plantOffset(maxIdOf(docs, "doc_id"))
     val existing = docs.filter(col("doc_id") % 2 === 0)
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "d21")
-    val dir = graft.api.LshIndexStore.versionedDir(
-      root, Bands, java.time.LocalDate.ofEpochDay(0))
-    // base store = input, billed once (d25's guard, see d20)
-    if (!new java.io.File(s"$dir/_SUCCESS").isFile)
-      graft.api.LshIndexStore.save(dir,
-        prunedBandIndex(existing.filter(col("doc_id") >= 400)))
-    val appendRoot = s"$root/append"
-    graft.api.LshIndexStore.appendBatch(appendRoot,
-      existing.filter(col("doc_id") < 400), 0L)
-    probePlantedAgainst(docs, off,
-      graft.api.LshIndexStore.load(s, dir).unionByName(
-        graft.api.LshIndexStore.committedAppends(s, appendRoot)))
+    val dir = DocIndexStore.Lsh.versionedDir(root, StoreDate)
+    val appendRoot = baseAndAppend(DocIndexStore.Lsh, dir,
+      existing.filter(col("doc_id") >= 400), root,
+      existing.filter(col("doc_id") < 400))
+    probePlantedAgainst(docs, off, DocIndexStore.Lsh.load(s, dir)
+      .unionByName(DocIndexStore.Lsh.committedAppends(s, appendRoot)))
   }
+
 
   /** d22 — LSH band-index COMPACTION (e20's posture for the MinHash
     * side): d21's base + committed appends are folded by
-    * [[graft.api.LshIndexStore.compactAppends]] into ONE new versioned
+    * [[graft.api.DocIndexStore.Lsh.compactAppends]] into ONE new versioned
     * artifact — with the bucket census RE-RUN over the union (the only
     * stage that sees all rows, so buckets that grew degenerate across
     * increments retire here; see [[pruneBands]]) — and d11's incoming
@@ -966,20 +996,15 @@ object DedupOps {
     val off = plantOffset(maxIdOf(docs, "doc_id"))
     val existing = docs.filter(col("doc_id") % 2 === 0)
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "d22")
-    val baseDir = graft.api.LshIndexStore.versionedDir(
-      s"$root/base", Bands, java.time.LocalDate.ofEpochDay(0))
-    // base store = the compactor's input, billed once (d25's guard)
-    if (!new java.io.File(s"$baseDir/_SUCCESS").isFile)
-      graft.api.LshIndexStore.save(baseDir,
-        prunedBandIndex(existing.filter(col("doc_id") >= 400)))
-    val appendRoot = s"$root/append"
-    graft.api.LshIndexStore.appendBatch(appendRoot,
-      existing.filter(col("doc_id") < 400), 0L)
-    val outDir = graft.api.LshIndexStore.versionedDir(
-      s"$root/compacted", Bands, java.time.LocalDate.ofEpochDay(0))
-    graft.api.LshIndexStore.compactAppends(s, baseDir, appendRoot, outDir)
-    probePlantedAgainst(docs, off, graft.api.LshIndexStore.load(s, outDir))
+    val baseDir = DocIndexStore.Lsh.versionedDir(s"$root/base", StoreDate)
+    val appendRoot = baseAndAppend(DocIndexStore.Lsh, baseDir,
+      existing.filter(col("doc_id") >= 400), root,
+      existing.filter(col("doc_id") < 400))
+    val outDir = DocIndexStore.Lsh.versionedDir(s"$root/compacted", StoreDate)
+    DocIndexStore.Lsh.compactAppends(s, baseDir, appendRoot, outDir)
+    probePlantedAgainst(docs, off, DocIndexStore.Lsh.load(s, outDir))
   }
+
 
   /** d11's planted oracle with an optional extra survivor predicate —
     * shared by d11/d20/d21/d22 (none) and d25 (tombstoned sources
@@ -1002,7 +1027,7 @@ object DedupOps {
     * resurfaces through dedup review queues): d21's base + append
     * store, a takedown of HALF the planted re-fetch sources (even ids
     * < 100) committed to the LSH tombstone log (replay-safe), and
-    * [[graft.api.LshIndexStore.compactAppends]] folding base ∪ appends
+    * [[graft.api.DocIndexStore.Lsh.compactAppends]] folding base ∪ appends
     * MINUS tombstones into the new versioned artifact — the probe of
     * the LOADED COMPACTED store runs with NO tombstone filter, so a
     * fold that leaves any tombstoned row breaks the hash. The oracle
@@ -1014,25 +1039,15 @@ object DedupOps {
     val off = plantOffset(maxIdOf(docs, "doc_id"))
     val existing = docs.filter(col("doc_id") % 2 === 0)
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "d25")
-    val baseDir = graft.api.LshIndexStore.versionedDir(
-      s"$root/base", Bands, java.time.LocalDate.ofEpochDay(0))
-    if (!new java.io.File(s"$baseDir/_SUCCESS").isFile)
-      graft.api.LshIndexStore.save(baseDir,
-        prunedBandIndex(existing.filter(col("doc_id") >= 400)))
-    val appendRoot = s"$root/append"
-    graft.api.LshIndexStore.appendBatch(appendRoot,
-      existing.filter(col("doc_id") < 400), 0L)
-    val tombRoot = s"$root/tombstones"
-    val takedown = existing.filter(col("doc_id") < 100).select(col("doc_id"))
-    graft.api.LshIndexStore.appendTombstones(tombRoot, takedown, 0L)
-    // at-least-once delivery of the delete event — replay is skipped
-    graft.api.LshIndexStore.appendTombstones(tombRoot, takedown, 0L)
-    val outDir = graft.api.LshIndexStore.versionedDir(
-      s"$root/compacted", Bands, java.time.LocalDate.ofEpochDay(0))
-    graft.api.LshIndexStore.compactAppends(s, baseDir, appendRoot, outDir,
-      Some(tombRoot))
-    probePlantedAgainst(docs, off, graft.api.LshIndexStore.load(s, outDir))
+    val baseDir = DocIndexStore.Lsh.versionedDir(s"$root/base", StoreDate)
+    val appendRoot = baseAndAppend(DocIndexStore.Lsh, baseDir,
+      existing.filter(col("doc_id") >= 400), root,
+      existing.filter(col("doc_id") < 400))
+    probePlantedAgainst(docs, off, foldTakedown(s, DocIndexStore.Lsh,
+      baseDir, appendRoot, root,
+      existing.filter(col("doc_id") < 100).select(col("doc_id"))))
   }
+
 
   private val incrementalNeardupTombstonedSql =
     incrementalNeardupSqlWhere("AND doc_id >= 100")
@@ -1049,71 +1064,37 @@ object DedupOps {
       incrementalNeardupSqlWhere("AND doc_id >= 100") +
       ")\nORDER BY phase, in_id"
 
-  /** d30 — the janitor's MAINTENANCE DAY on the LSH family (e28's loop
-    * generalized across store families, so the trigger→fold→adopt→
-    * retire→serve composition is hash-gated on BOTH key spaces):
+  /** d30 — the janitor's MAINTENANCE DAY on the LSH family, hash-gated:
     * d25's exact geometry — base artifact (evens ≥ 400), one committed
     * append batch (evens < 400), a takedown of half the planted
-    * re-fetch sources (evens < 100) — but every stage fired by the
-    * OPERATIONAL machinery: [[graft.api.CompactionPolicy.due]]
-    * evaluates the real manifests and the fold runs ONLY if it fires
-    * (an under-counting policy leaves the serve on the append-less
-    * base and every planted pair vanishes);
-    * [[graft.api.LshIndexStore.compactAppends]] folds base ∪ appends
-    * MINUS tombstones with the global re-census;
-    * [[graft.api.ServePointer.adopt]] flips the family pointer (day-0
-    * artifact kept inside the rollback window, history pruned to the
-    * same horizon by [[graft.api.ServePointer.pruneHistory]]);
-    * [[graft.sources.ExportCommit.retireRoot]] deletes the folded
-    * append + tombstone roots; the probe serves the pointer-resolved
-    * LOADED artifact with NO serve-time filter. d25's selective
-    * closed-form oracle transfers across the whole loop.
+    * re-fetch sources (evens < 100) — with every stage fired by
+    * [[graft.api.CompactionPolicy.maintenanceDay]] (trigger over the
+    * real manifests, the tombstone fold with the global re-census,
+    * pointer flip inside the rollback window, input retirement,
+    * history pruning). An under-counting policy leaves the serve on
+    * the append-less base and every planted pair vanishes; the probe
+    * serves the pointer-resolved LOADED artifact with NO serve-time
+    * filter, so d25's selective closed form transfers across the loop.
     *
-    * 100 TB shape: e28's billing — kilobyte trigger reads, the one
-    * fold the janitor already pays for, a pointer-file flip, input
-    * retirement; the probe is d11's batch ⋈ index plan. */
+    * 100 TB shape: the maintenance day's billing; the probe is d11's
+    * batch ⋈ index plan. */
   def lshJanitorCycle(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val off = plantOffset(maxIdOf(docs, "doc_id"))
     val existing = docs.filter(col("doc_id") % 2 === 0)
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "d30")
-    val date = java.time.LocalDate.ofEpochDay(0)
-    val v1 = graft.api.LshIndexStore.versionedDir(s"$root/base", Bands, date)
-    val v2 = graft.api.LshIndexStore.versionedDir(s"$root/fold", Bands,
-      date.plusDays(1))
-    val ptr = s"$root/pointer"
-    val appendRoot = s"$root/append"
-    val tombRoot = s"$root/tombstones"
-    if (!graft.api.ServePointer.current(ptr).contains(
-        java.nio.file.Paths.get(v2).toAbsolutePath.normalize().toString)) {
-      if (!new java.io.File(s"$v1/_SUCCESS").isFile)
-        graft.api.LshIndexStore.save(v1,
-          prunedBandIndex(existing.filter(col("doc_id") >= 400)))
-      graft.api.ServePointer.adopt(ptr, v1) // day 0
-      graft.api.LshIndexStore.appendBatch(appendRoot,
-        existing.filter(col("doc_id") < 400), 0L)
-      graft.api.LshIndexStore.appendTombstones(tombRoot,
-        existing.filter(col("doc_id") < 100).select(col("doc_id")), 0L)
-      val decision = graft.api.CompactionPolicy.due(appendRoot,
-        Some(tombRoot), maxAppendBatches = 1, maxTombstoneBatches = 1)
-      if (decision.due) { // load-bearing: no fold ⇒ append-less serve
-        graft.api.LshIndexStore.compactAppends(s, v1, appendRoot, v2,
-          Some(tombRoot))
-        graft.api.ServePointer.adopt(ptr, v2)
-        require(graft.api.ServePointer.retirable(ptr, Seq(v1, v2)).isEmpty,
-          "rollback-window artifact offered for retirement")
-      }
+    val lsh = DocIndexStore.Lsh
+    val v1 = lsh.versionedDir(s"$root/base", StoreDate)
+    val dir = graft.api.CompactionPolicy.maintenanceDay(s, lsh, root, v1,
+        lsh.versionedDir(s"$root/fold", StoreDate.plusDays(1)),
+        maxAppendBatches = 1, maxTombstoneBatches = 1)(
+        lsh.saveOnce(v1, existing.filter(col("doc_id") >= 400))) {
+      (appendRoot, tombRoot) =>
+        lsh.appendBatch(appendRoot, existing.filter(col("doc_id") < 400), 0L)
+        DocIndexStore.appendTombstones(tombRoot,
+          existing.filter(col("doc_id") < 100).select(col("doc_id")), 0L)
     }
-    // retirement + history pruning run OUTSIDE the replay guard, on
-    // every entry (r17 ADVICE: a crash between adopt(v2) and an
-    // in-guard retire would leak the folded debt roots forever)
-    graft.api.ServePointer.retireFoldedDebt(ptr, v2,
-      Seq(appendRoot, tombRoot))
-    // the audit trail is bounded by the SAME horizon
-    graft.api.ServePointer.pruneHistory(ptr, keepLast = 2)
-    val dir = graft.api.ServePointer.current(ptr).getOrElse(
-      sys.error(s"no adopted version under $ptr"))
-    probePlantedAgainst(docs, off, graft.api.LshIndexStore.load(s, dir))
+    probePlantedAgainst(docs, off, lsh.load(s, dir))
   }
 
   /** d09 — eval-benchmark decontamination: corpus documents sharing any
@@ -1374,7 +1355,7 @@ object DedupOps {
 
   /** The (doc_id, h) passage-hash index relation over any corpus — ONE
     * builder for d17's stored artifact and the store's append path
-    * ([[graft.api.PassageIndexStore.appendBatch]]), so the passage
+    * ([[graft.api.DocIndexStore.Passage.appendBatch]]), so the passage
     * slicing and hashing cannot drift between build and maintenance
     * (d20/d21's shared-builder discipline at passage grain). Distinct
     * per (doc, hash): the probe's membership semantics need each
@@ -1432,7 +1413,7 @@ object DedupOps {
     * construction), which the spec pins.
     *
     * r16 re-plumb (the r15 verdict's #1 gap): the index side is now a
-    * SHIPPED ARTIFACT — [[graft.api.PassageIndexStore]], built once
+    * SHIPPED ARTIFACT — [[graft.api.DocIndexStore.Passage]], built once
     * per session (the artifact is the probe's INPUT, e21's billing)
     * and LOADED per invocation — where every prior round rebuilt
     * `passageInstancesFrom(existing)` from the full corpus inside
@@ -1452,19 +1433,12 @@ object DedupOps {
   def incrementalPassageDedup(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val off = plantOffset(maxIdOf(docs, "doc_id"))
-    val existing = docs.filter(col("doc_id") % 2 === 0)
-    val root = graft.sources.TmpDirs.artifactRoot(s, d, "d17")
-    val dir = graft.api.PassageIndexStore.versionedDir(
-      root, PassageTokens, java.time.LocalDate.ofEpochDay(0))
-    if (!new java.io.File(s"$dir/_SUCCESS").isFile)
-      graft.api.PassageIndexStore.save(dir, passageHashIndex(existing))
-    // pointer-resolved serve (r16 ask #1, passage family — see d20)
-    graft.api.ServePointer.adopt(s"$root/pointer", dir)
-    val served = graft.api.ServePointer.current(s"$root/pointer")
-      .getOrElse(sys.error(s"no adopted passage index under $root/pointer"))
     probePassagesAgainst(passageIncomingBatch(docs, off),
-      graft.api.PassageIndexStore.load(s, served))
+      pointerServed(s, DocIndexStore.Passage,
+        graft.sources.TmpDirs.artifactRoot(s, d, "d17"),
+        docs.filter(col("doc_id") % 2 === 0)))
   }
+
 
   /** d17's oracle with an optional extra predicate on the EXISTING
     * (index-side) corpus — "" for d17/d26 (all even docs) and the
@@ -1510,7 +1484,7 @@ object DedupOps {
     * the existing corpus (even ids ≥ 400); the younger half (even ids
     * < 400 — which contains EVERY planted re-fetch source, so the
     * append is load-bearing in the oracle) arrives as an append batch
-    * through [[graft.api.PassageIndexStore.appendBatch]] (ExportCommit
+    * through [[graft.api.DocIndexStore.Passage.appendBatch]] (ExportCommit
     * atomic manifest — replayed batchIds skip), and d17's incoming
     * batch probes base ∪ committedAppends through the SHARED
     * [[probePassagesAgainst]] plan. d17's oracle transfers verbatim:
@@ -1530,18 +1504,15 @@ object DedupOps {
     val off = plantOffset(maxIdOf(docs, "doc_id"))
     val existing = docs.filter(col("doc_id") % 2 === 0)
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "d26")
-    val dir = graft.api.PassageIndexStore.versionedDir(
-      s"$root/base", PassageTokens, java.time.LocalDate.ofEpochDay(0))
-    if (!new java.io.File(s"$dir/_SUCCESS").isFile)
-      graft.api.PassageIndexStore.save(dir,
-        passageHashIndex(existing.filter(col("doc_id") >= 400)))
-    val appendRoot = s"$root/append"
-    graft.api.PassageIndexStore.appendBatch(appendRoot,
-      existing.filter(col("doc_id") < 400), 0L)
+    val dir = DocIndexStore.Passage.versionedDir(s"$root/base", StoreDate)
+    val appendRoot = baseAndAppend(DocIndexStore.Passage, dir,
+      existing.filter(col("doc_id") >= 400), root,
+      existing.filter(col("doc_id") < 400))
     probePassagesAgainst(passageIncomingBatch(docs, off),
-      graft.api.PassageIndexStore.load(s, dir).unionByName(
-        graft.api.PassageIndexStore.committedAppends(s, appendRoot)))
+      DocIndexStore.Passage.load(s, dir).unionByName(
+        DocIndexStore.Passage.committedAppends(s, appendRoot)))
   }
+
 
   /** d27 — tombstone DELETE through the passage-hash index (d25's
     * posture at passage grain, closing the last store without a
@@ -1551,7 +1522,7 @@ object DedupOps {
     * ALSO held by a surviving document must stay known): d26's base +
     * append store, a takedown of HALF the planted re-fetch sources
     * (even ids < 50) committed to the tombstone log (replay-safe), and
-    * [[graft.api.PassageIndexStore.compactAppends]] folding base ∪
+    * [[graft.api.DocIndexStore.Passage.compactAppends]] folding base ∪
     * appends MINUS tombstones into the new versioned artifact — the
     * probe of the LOADED COMPACTED store runs with NO tombstone
     * filter, so a fold that leaves any tombstoned doc's rows breaks
@@ -1566,26 +1537,15 @@ object DedupOps {
     val off = plantOffset(maxIdOf(docs, "doc_id"))
     val existing = docs.filter(col("doc_id") % 2 === 0)
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "d27")
-    val baseDir = graft.api.PassageIndexStore.versionedDir(
-      s"$root/base", PassageTokens, java.time.LocalDate.ofEpochDay(0))
-    if (!new java.io.File(s"$baseDir/_SUCCESS").isFile)
-      graft.api.PassageIndexStore.save(baseDir,
-        passageHashIndex(existing.filter(col("doc_id") >= 400)))
-    val appendRoot = s"$root/append"
-    graft.api.PassageIndexStore.appendBatch(appendRoot,
-      existing.filter(col("doc_id") < 400), 0L)
-    val tombRoot = s"$root/tombstones"
-    val takedown = existing.filter(col("doc_id") < 50).select(col("doc_id"))
-    graft.api.PassageIndexStore.appendTombstones(tombRoot, takedown, 0L)
-    // at-least-once delivery of the delete event — replay is skipped
-    graft.api.PassageIndexStore.appendTombstones(tombRoot, takedown, 0L)
-    val outDir = graft.api.PassageIndexStore.versionedDir(
-      s"$root/compacted", PassageTokens, java.time.LocalDate.ofEpochDay(0))
-    graft.api.PassageIndexStore.compactAppends(s, baseDir, appendRoot,
-      outDir, Some(tombRoot))
+    val baseDir = DocIndexStore.Passage.versionedDir(s"$root/base", StoreDate)
+    val appendRoot = baseAndAppend(DocIndexStore.Passage, baseDir,
+      existing.filter(col("doc_id") >= 400), root,
+      existing.filter(col("doc_id") < 400))
     probePassagesAgainst(passageIncomingBatch(docs, off),
-      graft.api.PassageIndexStore.load(s, outDir))
+      foldTakedown(s, DocIndexStore.Passage, baseDir, appendRoot, root,
+        existing.filter(col("doc_id") < 50).select(col("doc_id"))))
   }
+
 
   private val incrementalPassagesTombstonedSql =
     incrementalPassageSqlWhere("AND doc_id >= 50")
@@ -1606,44 +1566,18 @@ object DedupOps {
     val off = plantOffset(maxIdOf(docs, "doc_id"))
     val existing = docs.filter(col("doc_id") % 2 === 0)
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "d31")
-    val date = java.time.LocalDate.ofEpochDay(0)
-    val v1 = graft.api.PassageIndexStore.versionedDir(
-      s"$root/base", PassageTokens, date)
-    val v2 = graft.api.PassageIndexStore.versionedDir(
-      s"$root/fold", PassageTokens, date.plusDays(1))
-    val ptr = s"$root/pointer"
-    val appendRoot = s"$root/append"
-    val tombRoot = s"$root/tombstones"
-    if (!graft.api.ServePointer.current(ptr).contains(
-        java.nio.file.Paths.get(v2).toAbsolutePath.normalize().toString)) {
-      if (!new java.io.File(s"$v1/_SUCCESS").isFile)
-        graft.api.PassageIndexStore.save(v1,
-          passageHashIndex(existing.filter(col("doc_id") >= 400)))
-      graft.api.ServePointer.adopt(ptr, v1) // day 0
-      graft.api.PassageIndexStore.appendBatch(appendRoot,
-        existing.filter(col("doc_id") < 400), 0L)
-      graft.api.PassageIndexStore.appendTombstones(tombRoot,
-        existing.filter(col("doc_id") < 50).select(col("doc_id")), 0L)
-      val decision = graft.api.CompactionPolicy.due(appendRoot,
-        Some(tombRoot), maxAppendBatches = 1, maxTombstoneBatches = 1)
-      if (decision.due) { // load-bearing: no fold ⇒ append-less serve
-        graft.api.PassageIndexStore.compactAppends(s, v1, appendRoot, v2,
-          Some(tombRoot))
-        graft.api.ServePointer.adopt(ptr, v2)
-        require(graft.api.ServePointer.retirable(ptr, Seq(v1, v2)).isEmpty,
-          "rollback-window artifact offered for retirement")
-      }
+    val pas = DocIndexStore.Passage
+    val v1 = pas.versionedDir(s"$root/base", StoreDate)
+    val dir = graft.api.CompactionPolicy.maintenanceDay(s, pas, root, v1,
+        pas.versionedDir(s"$root/fold", StoreDate.plusDays(1)),
+        maxAppendBatches = 1, maxTombstoneBatches = 1)(
+        pas.saveOnce(v1, existing.filter(col("doc_id") >= 400))) {
+      (appendRoot, tombRoot) =>
+        pas.appendBatch(appendRoot, existing.filter(col("doc_id") < 400), 0L)
+        DocIndexStore.appendTombstones(tombRoot,
+          existing.filter(col("doc_id") < 50).select(col("doc_id")), 0L)
     }
-    // retirement + history pruning OUTSIDE the replay guard (r17
-    // ADVICE: an in-guard retire leaks the debt roots after a crash
-    // between adopt(v2) and retirement)
-    graft.api.ServePointer.retireFoldedDebt(ptr, v2,
-      Seq(appendRoot, tombRoot))
-    graft.api.ServePointer.pruneHistory(ptr, keepLast = 2)
-    val dir = graft.api.ServePointer.current(ptr).getOrElse(
-      sys.error(s"no adopted version under $ptr"))
-    probePassagesAgainst(passageIncomingBatch(docs, off),
-      graft.api.PassageIndexStore.load(s, dir))
+    probePassagesAgainst(passageIncomingBatch(docs, off), pas.load(s, dir))
   }
 
   /** Passage-hash fanout guard for d18's pair join: a passage shared by
@@ -1959,7 +1893,7 @@ object DedupOps {
     * grain set: exact d08, near-dup d11/d20/d21/d22/s27, passage d17,
     * embedding e15/s26/s28): the archive (corpus ∪ the two-quotation
     * doc 0) persists its pruned fingerprint index through
-    * [[graft.api.WinnowIndexStore]]; the incoming batch (docs 1/2, each
+    * [[graft.api.DocIndexStore.Winnow]]; the incoming batch (docs 1/2, each
     * quoting the archived doc) fingerprints itself, probes the LOADED
     * index on the fingerprint key, pairs at ≥
     * [[MinSharedFingerprints]] shared fingerprints, and candidates are
@@ -2028,19 +1962,11 @@ object DedupOps {
     val archive = docs.unionByName(
       PlantedQuoteDocs.take(1).map { case (i, t) => (off + i, t) }
         .toDF("doc_id", "text"))
-    val root = graft.sources.TmpDirs.artifactRoot(s, d, "d24")
-    val dir = graft.api.WinnowIndexStore.versionedDir(
-      root, TextOps.WinnowK, TextOps.WinnowW, java.time.LocalDate.ofEpochDay(0))
-    // base store = input, billed once (d28/d29's guard, see d20)
-    if (!new java.io.File(s"$dir/_SUCCESS").isFile)
-      graft.api.WinnowIndexStore.save(dir, prunedFingerprintIndex(archive))
-    // pointer-resolved serve (r16 ask #1, winnow family — see d20)
-    graft.api.ServePointer.adopt(s"$root/pointer", dir)
-    val served = graft.api.ServePointer.current(s"$root/pointer")
-      .getOrElse(sys.error(s"no adopted winnow index under $root/pointer"))
     winnowProbeAgainst(archive, winnowIncoming(s, docs, off),
-      graft.api.WinnowIndexStore.load(s, served))
+      pointerServed(s, DocIndexStore.Winnow,
+        graft.sources.TmpDirs.artifactRoot(s, d, "d24"), archive))
   }
+
 
   /** The d24-family oracle over an ARBITRARY planted-archive-doc set —
     * the full two-relation pipeline (census → fp probe → exact gram
@@ -2101,7 +2027,7 @@ object DedupOps {
     * sweep could not GROW — an archive that forces a full corpus
     * refingerprint per crawl): the base artifact indexes the corpus
     * ONLY; the two-quotation archive doc 0 arrives as an append batch
-    * through [[graft.api.WinnowIndexStore.appendBatch]] (ExportCommit
+    * through [[graft.api.DocIndexStore.Winnow.appendBatch]] (ExportCommit
     * atomic manifest — replayed batchIds skip), and d24's incoming
     * batch (docs 1/2, each quoting doc 0) probes base ∪
     * committedAppends through the SHARED [[winnowProbeAgainst]] plan.
@@ -2126,19 +2052,14 @@ object DedupOps {
     val off = plantOffset(maxIdOf(docs, "doc_id"))
     val doc0 = PlantedQuoteDocs.take(1)
       .map { case (i, t) => (off + i, t) }.toDF("doc_id", "text")
-    val archive = docs.unionByName(doc0)
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "d28")
-    val dir = graft.api.WinnowIndexStore.versionedDir(
-      s"$root/base", TextOps.WinnowK, TextOps.WinnowW,
-      java.time.LocalDate.ofEpochDay(0))
-    if (!new java.io.File(s"$dir/_SUCCESS").isFile)
-      graft.api.WinnowIndexStore.save(dir, prunedFingerprintIndex(docs))
-    val appendRoot = s"$root/append"
-    graft.api.WinnowIndexStore.appendBatch(appendRoot, doc0, 0L)
-    winnowProbeAgainst(archive, winnowIncoming(s, docs, off),
-      graft.api.WinnowIndexStore.load(s, dir).unionByName(
-        graft.api.WinnowIndexStore.committedAppends(s, appendRoot)))
+    val dir = DocIndexStore.Winnow.versionedDir(s"$root/base", StoreDate)
+    val appendRoot = baseAndAppend(DocIndexStore.Winnow, dir, docs, root, doc0)
+    winnowProbeAgainst(docs.unionByName(doc0), winnowIncoming(s, docs, off),
+      DocIndexStore.Winnow.load(s, dir).unionByName(
+        DocIndexStore.Winnow.committedAppends(s, appendRoot)))
   }
+
 
   /** d29 — tombstone DELETE through the winnow-fingerprint index
     * (d25's posture at substring grain: a taken-down document's
@@ -2149,7 +2070,7 @@ object DedupOps {
     * an append batch carrying BOTH archive-side quotation sources
     * (doc 0 with both quotes, doc 3 re-using quote 2), a takedown of
     * HALF the sources (doc 0) committed to the tombstone log
-    * (replay-safe), and [[graft.api.WinnowIndexStore.compactAppends]]
+    * (replay-safe), and [[graft.api.DocIndexStore.Winnow.compactAppends]]
     * folding base ∪ appends MINUS tombstones into the new versioned
     * artifact with the fanout census RE-RUN over the union — the probe
     * of the LOADED COMPACTED store runs with NO tombstone filter.
@@ -2167,29 +2088,17 @@ object DedupOps {
     val planted = (PlantedQuoteDocs.take(1) ++ PlantedQuoteArchiveDoc)
       .map { case (i, t) => (off + i, t) }.toDF("doc_id", "text")
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "d29")
-    val baseDir = graft.api.WinnowIndexStore.versionedDir(
-      s"$root/base", TextOps.WinnowK, TextOps.WinnowW,
-      java.time.LocalDate.ofEpochDay(0))
-    if (!new java.io.File(s"$baseDir/_SUCCESS").isFile)
-      graft.api.WinnowIndexStore.save(baseDir, prunedFingerprintIndex(docs))
-    val appendRoot = s"$root/append"
-    graft.api.WinnowIndexStore.appendBatch(appendRoot, planted, 0L)
-    val tombRoot = s"$root/tombstones"
-    val takedown = Seq(off + 0L).toDF("doc_id")
-    graft.api.WinnowIndexStore.appendTombstones(tombRoot, takedown, 0L)
-    // at-least-once delivery of the delete event — replay is skipped
-    graft.api.WinnowIndexStore.appendTombstones(tombRoot, takedown, 0L)
-    val outDir = graft.api.WinnowIndexStore.versionedDir(
-      s"$root/compacted", TextOps.WinnowK, TextOps.WinnowW,
-      java.time.LocalDate.ofEpochDay(0))
-    graft.api.WinnowIndexStore.compactAppends(s, baseDir, appendRoot,
-      outDir, Some(tombRoot))
+    val baseDir = DocIndexStore.Winnow.versionedDir(s"$root/base", StoreDate)
+    val appendRoot = baseAndAppend(DocIndexStore.Winnow, baseDir, docs, root,
+      planted)
     // survivors-only archive: candidates can only name index docs
     val survivors = docs.unionByName(PlantedQuoteArchiveDoc
       .map { case (i, t) => (off + i, t) }.toDF("doc_id", "text"))
     winnowProbeAgainst(survivors, winnowIncoming(s, docs, off),
-      graft.api.WinnowIndexStore.load(s, outDir))
+      foldTakedown(s, DocIndexStore.Winnow, baseDir, appendRoot, root,
+        Seq(off + 0L).toDF("doc_id")))
   }
+
 
   private val winnowTombstonedProbeSql =
     winnowStoredSqlFor(PlantedQuoteArchiveDoc)
@@ -2224,46 +2133,24 @@ object DedupOps {
     val planted = (PlantedQuoteDocs.take(1) ++ PlantedQuoteArchiveDoc)
       .map { case (i, t) => (off + i, t) }.toDF("doc_id", "text")
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "d32")
-    val date = java.time.LocalDate.ofEpochDay(0)
-    val v1 = graft.api.WinnowIndexStore.versionedDir(
-      s"$root/base", TextOps.WinnowK, TextOps.WinnowW, date)
-    val v2 = graft.api.WinnowIndexStore.versionedDir(
-      s"$root/fold", TextOps.WinnowK, TextOps.WinnowW, date.plusDays(1))
-    val ptr = s"$root/pointer"
-    val appendRoot = s"$root/append"
-    val tombRoot = s"$root/tombstones"
-    if (!graft.api.ServePointer.current(ptr).contains(
-        java.nio.file.Paths.get(v2).toAbsolutePath.normalize().toString)) {
-      if (!new java.io.File(s"$v1/_SUCCESS").isFile)
-        graft.api.WinnowIndexStore.save(v1, prunedFingerprintIndex(docs))
-      graft.api.ServePointer.adopt(ptr, v1) // day 0
-      graft.api.WinnowIndexStore.appendBatch(appendRoot, planted, 0L)
-      graft.api.WinnowIndexStore.appendTombstones(tombRoot,
-        Seq(off + 0L).toDF("doc_id"), 0L)
-      val decision = graft.api.CompactionPolicy.due(appendRoot,
-        Some(tombRoot), maxAppendBatches = 1, maxTombstoneBatches = 1)
-      if (decision.due) { // load-bearing: no fold ⇒ quote-less serve
-        graft.api.WinnowIndexStore.compactAppends(s, v1, appendRoot, v2,
-          Some(tombRoot))
-        graft.api.ServePointer.adopt(ptr, v2)
-        require(graft.api.ServePointer.retirable(ptr, Seq(v1, v2)).isEmpty,
-          "rollback-window artifact offered for retirement")
-      }
+    val win = DocIndexStore.Winnow
+    val v1 = win.versionedDir(s"$root/base", StoreDate)
+    val dir = graft.api.CompactionPolicy.maintenanceDay(s, win, root, v1,
+        win.versionedDir(s"$root/fold", StoreDate.plusDays(1)),
+        maxAppendBatches = 1, maxTombstoneBatches = 1)(
+        win.saveOnce(v1, docs)) {
+      (appendRoot, tombRoot) =>
+        win.appendBatch(appendRoot, planted, 0L)
+        DocIndexStore.appendTombstones(tombRoot,
+          Seq(off + 0L).toDF("doc_id"), 0L)
     }
-    // retirement + history pruning OUTSIDE the replay guard (r17
-    // ADVICE: an in-guard retire leaks the debt roots after a crash
-    // between adopt(v2) and retirement)
-    graft.api.ServePointer.retireFoldedDebt(ptr, v2,
-      Seq(appendRoot, tombRoot))
-    graft.api.ServePointer.pruneHistory(ptr, keepLast = 2)
-    val dir = graft.api.ServePointer.current(ptr).getOrElse(
-      sys.error(s"no adopted version under $ptr"))
     // survivors-only archive: candidates can only name index docs
     val survivors = docs.unionByName(PlantedQuoteArchiveDoc
       .map { case (i, t) => (off + i, t) }.toDF("doc_id", "text"))
     winnowProbeAgainst(survivors, winnowIncoming(s, docs, off),
-      graft.api.WinnowIndexStore.load(s, dir))
+      win.load(s, dir))
   }
+
 
   /** The s33 oracle: d24's CANDIDATE GATE relation — the (archive doc,
     * incoming doc, shared-fingerprint count) queue the screening stage

@@ -1685,11 +1685,8 @@ object EmbeddingOps {
        |FROM phases ORDER BY phase, query_id""".stripMargin
   }
 
-  /** e28 — the JANITOR'S MAINTENANCE DAY as one oracled row (r16
-    * verdict ask #4: every lifecycle stage had its own witness —
-    * trigger (CompactionPolicy spec), fold (e22), adoption (e27),
-    * retirement (ExportCommitSpec's end-to-end) — but only a spec ran
-    * them as ONE loop; this row puts the loop under the hash gate):
+  /** e28 — the JANITOR'S MAINTENANCE DAY as one oracled row, on the
+    * IVF family ([[graft.api.CompactionPolicy.maintenanceDay]]):
     *
     *   day 0 — the base artifact is adopted through the pointer
     *     (what the fleet serves before any debt accrues);
@@ -1702,21 +1699,18 @@ object EmbeddingOps {
     *     every query's hash;
     *   fold — [[graft.api.IvfStore.compactAppends]] folds base ∪
     *     appends MINUS tombstones into a NEW versioned dir;
-    *   adopt — [[graft.api.ServePointer.adopt]] flips the fleet to the
-    *     fold (day 0's dir stays inside the rollback window —
-    *     [[graft.api.ServePointer.retirable]] must protect it);
-    *   retire — [[graft.sources.ExportCommit.retireRoot]] deletes the
-    *     folded append + tombstone roots (their manifests' replay
-    *     protection died WITH the fold — the upstream checkpoint
-    *     passed batch 0/1, the ordering contract's (b));
+    *   adopt — the pointer flips to the fold (day 0's dir stays
+    *     inside the rollback window);
+    *   retire — the folded append + tombstone roots are deleted
+    *     (their manifests' replay protection died WITH the fold — the
+    *     upstream checkpoint passed batch 0/1), and the pointer
+    *     history is pruned to the rollback horizon;
     *   serve — e13's batch against whatever the pointer names, NO
     *     serve-time tombstone filter.
     *
     * e21/e22's closed form transfers across the WHOLE loop: a janitor
     * that breaks the artifact at any stage breaks the hash. The loop
-    * runs once per session (guarded on the pointer — a deployment's
-    * janitor does not re-run a finished maintenance day); replays
-    * serve the adopted fold directly.
+    * runs once per session; replays serve the adopted fold directly.
     *
     * 100 TB shape: the trigger reads two kilobyte manifests; the fold
     * is the one union-scan + rewrite the janitor was already paying
@@ -1728,50 +1722,23 @@ object EmbeddingOps {
     val off = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
     val cells = ivfCellsFor(corpusCount(s, d))
     val root = indexTmpBase(s, d, "e28")
-    val ptr = s"$root/pointer"
     val v1 = graft.api.IvfStore.versionedDir(s"$root/base", cells, IndexDate)
-    val v2 = graft.api.IvfStore.versionedDir(s"$root/fold", cells,
-      IndexDate.plusDays(1))
-    val appendRoot = s"$root/append"
-    val tombRoot = s"$root/tombstones"
-    // one maintenance day per session: a pointer naming the fold means
-    // the janitor already ran — serve it (replay posture)
-    if (!graft.api.ServePointer.current(ptr).contains(
-        java.nio.file.Paths.get(v2).toAbsolutePath.normalize().toString)) {
-      val index = graft.api.Intermediates.memo(s, s"ivf|$d|$cells") {
-        ivfBuild(base, cells)
-      }
-      if (!new java.io.File(s"$v1/assigned/_SUCCESS").isFile)
-        graft.api.IvfStore.save(v1, index)
-      graft.api.ServePointer.adopt(ptr, v1) // day 0: the fleet serves base
-      val loaded = graft.api.IvfStore.load(s, v1)
-      graft.api.IvfStore.appendBatch(appendRoot,
-        base.select((col("vec_id") + lit(off)).as("vec_id"),
-          col("embedding")), 0L, loaded.model)
-      graft.api.IvfStore.appendBatch(appendRoot,
-        base.select((col("vec_id") + lit(2 * off)).as("vec_id"),
-          col("embedding")), 1L, loaded.model)
+    val dir = graft.api.CompactionPolicy.maintenanceDay(s, graft.api.IvfStore,
+        root, v1, graft.api.IvfStore.versionedDir(s"$root/fold", cells,
+          IndexDate.plusDays(1)),
+        maxAppendBatches = 2, maxTombstoneBatches = 1)(
+        graft.api.IvfStore.save(v1,
+          graft.api.Intermediates.memo(s, s"ivf|$d|$cells") {
+            ivfBuild(base, cells)
+          })) { (appendRoot, tombRoot) =>
+      val model = graft.api.IvfStore.load(s, v1).model
+      for (b <- Seq(0L, 1L))
+        graft.api.IvfStore.appendBatch(appendRoot,
+          base.select((col("vec_id") + lit((b + 1) * off)).as("vec_id"),
+            col("embedding")), b, model)
       graft.api.IvfStore.appendTombstones(tombRoot,
         tombstoneIds(base, off), 0L)
-      val decision = graft.api.CompactionPolicy.due(appendRoot,
-        Some(tombRoot), maxAppendBatches = 2, maxTombstoneBatches = 1)
-      if (decision.due) { // load-bearing: no fold ⇒ twin-less serve
-        graft.api.IvfStore.compactAppends(s, v1, appendRoot, v2,
-          Some(tombRoot))
-        graft.api.ServePointer.adopt(ptr, v2)
-        // day 0's artifact sits INSIDE the rollback window — the
-        // janitor must not touch it (a revert may still need it)
-        require(graft.api.ServePointer.retirable(ptr, Seq(v1, v2)).isEmpty,
-          "rollback-window artifact offered for retirement")
-      }
     }
-    // retirement runs OUTSIDE the replay guard, on every entry (r17
-    // ADVICE: a crash between adopt(v2) and an in-guard retire would
-    // leak the folded debt roots forever — the guard skips the day)
-    graft.api.ServePointer.retireFoldedDebt(ptr, v2,
-      Seq(appendRoot, tombRoot))
-    val dir = graft.api.ServePointer.current(ptr).getOrElse(
-      sys.error(s"no adopted version under $ptr"))
     batchServeAgainst(graft.api.IvfStore.load(s, dir), off)
   }
 

@@ -991,12 +991,8 @@ object PackOps {
     // rewrite lands as a NEW generation root + one pointer flip, and
     // this row's hash now rides on the pointer resolving correctly)
     val gen = s"$root/gen0"
-    if (!graft.sources.ExportCommit.isCommitted(gen, 0L)) {
-      val staged = graft.sources.ExportCommit.stage(gen, 0L)
-      assigned.write.partitionBy("shard")
-        .option("compression", "gzip").json(staged)
-      graft.sources.ExportCommit.commitBatch(gen, 0L, staged)
-    }
+    graft.sources.ExportCommit.commitOnce(gen, 0L)(
+      assigned.write.partitionBy("shard").option("compression", "gzip").json(_))
     graft.api.ServePointer.adopt(s"$root/pointer", gen)
     val served = graft.api.ServePointer.current(s"$root/pointer")
       .getOrElse(sys.error(s"no adopted export generation under $root"))
@@ -1061,28 +1057,21 @@ object PackOps {
     val idSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType)))
-    def committed(root: String, b: Long) = ExportCommit.isCommitted(root, b)
-    if (!committed(shardsRoot, 0L)) {
-      val st = ExportCommit.stage(shardsRoot, 0L)
-      epoch0.write.partitionBy("shard").option("compression", "gzip").json(st)
-      ExportCommit.commitBatch(shardsRoot, 0L, st)
-    }
-    if (!committed(indexRoot, 0L)) {
-      val st = ExportCommit.stage(indexRoot, 0L)
-      epoch0.select(col("doc_id")).write.parquet(st)
-      ExportCommit.commitBatch(indexRoot, 0L, st)
-    }
-    if (!committed(shardsRoot, 1L) || !committed(indexRoot, 1L)) {
+    // shards commit BEFORE the index, per epoch (see above)
+    ExportCommit.commitOnce(shardsRoot, 0L)(
+      epoch0.write.partitionBy("shard").option("compression", "gzip").json(_))
+    ExportCommit.commitOnce(indexRoot, 0L)(
+      epoch0.select(col("doc_id")).write.parquet(_))
+    if (!ExportCommit.isCommitted(shardsRoot, 1L) ||
+        !ExportCommit.isCommitted(indexRoot, 1L)) {
       val idx = ExportCommit.readCommitted(s, indexRoot, idSchema, "parquet")
       val fresh = exportAssigned(docs)
         .join(idx, Seq("doc_id"), "left_anti")
         .localCheckpoint() // consumed twice: shard stage, index stage
-      val stS = ExportCommit.stage(shardsRoot, 1L)
-      fresh.write.partitionBy("shard").option("compression", "gzip").json(stS)
-      ExportCommit.commitBatch(shardsRoot, 1L, stS)
-      val stI = ExportCommit.stage(indexRoot, 1L)
-      fresh.select(col("doc_id")).write.parquet(stI)
-      ExportCommit.commitBatch(indexRoot, 1L, stI)
+      ExportCommit.commitOnce(shardsRoot, 1L)(
+        fresh.write.partitionBy("shard").option("compression", "gzip").json(_))
+      ExportCommit.commitOnce(indexRoot, 1L)(
+        fresh.select(col("doc_id")).write.parquet(_))
     }
     val nNew = ExportCommit.readBatch(s, shardsRoot, 1L, epoch0.schema)
       .groupBy(col("shard")).agg(count(lit(1)).as("n_new"))
@@ -1162,33 +1151,23 @@ object PackOps {
     if (!folded) {
       // ---- base generation + the append debt (never recreated after
       // the fold retired it)
-      if (!ExportCommit.isCommitted(gen0, 0L)) {
-        val st = ExportCommit.stage(gen0, 0L)
-        assigned.filter(col("doc_id") % 10 =!= 0)
-          .write.partitionBy("shard").option("compression", "gzip").json(st)
-        ExportCommit.commitBatch(gen0, 0L, st)
-      }
+      ExportCommit.commitOnce(gen0, 0L)(assigned.filter(col("doc_id") % 10 =!= 0)
+        .write.partitionBy("shard").option("compression", "gzip").json(_))
       graft.api.ServePointer.adopt(ptr, gen0)
       for ((residue, b) <- Seq((0L, 0L), (10L, 1L)))
-        if (!ExportCommit.isCommitted(appends, b)) {
-          val st = ExportCommit.stage(appends, b)
+        ExportCommit.commitOnce(appends, b)(
           assigned.filter(col("doc_id") % 20 === residue)
-            .write.partitionBy("shard").option("compression", "gzip").json(st)
-          ExportCommit.commitBatch(appends, b, st)
-        }
+            .write.partitionBy("shard").option("compression", "gzip").json(_))
       // ---- the maintenance day: trigger → fold → adopt
       val dec = graft.api.CompactionPolicy.due(appends, None,
         maxAppendBatches = 2, maxTombstoneBatches = 1)
       require(dec.due && dec.appendBatches == 2,
         s"p16: compaction policy must fire on 2 committed appends, got $dec")
-      if (!ExportCommit.isCommitted(gen1, 0L)) {
-        val st = ExportCommit.stage(gen1, 0L)
+      ExportCommit.commitOnce(gen1, 0L)(
         ExportCommit.readCommitted(s, gen0, assigned.schema)
           .unionByName(ExportCommit.readCommitted(s, appends, assigned.schema))
           .repartition(col("shard"))
-          .write.partitionBy("shard").option("compression", "gzip").json(st)
-        ExportCommit.commitBatch(gen1, 0L, st)
-      }
+          .write.partitionBy("shard").option("compression", "gzip").json(_))
       graft.api.ServePointer.adopt(ptr, gen1)
       graft.api.ServePointer.pruneHistory(ptr, keepLast = 2)
       ()
@@ -1289,45 +1268,27 @@ object PackOps {
     val idSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType)))
-    def committed(root: String, b: Long) = ExportCommit.isCommitted(root, b)
-    if (!committed(shardsRoot, 0L)) {
-      val st = ExportCommit.stage(shardsRoot, 0L)
-      assigned.write.partitionBy("shard").option("compression", "gzip").json(st)
-      ExportCommit.commitBatch(shardsRoot, 0L, st)
-    }
-    if (!committed(indexRoot, 0L)) {
-      val st = ExportCommit.stage(indexRoot, 0L)
-      assigned.select(col("doc_id")).write.parquet(st)
-      ExportCommit.commitBatch(indexRoot, 0L, st)
-    }
-    if (!committed(tombRoot, 0L)) {
-      val st = ExportCommit.stage(tombRoot, 0L)
+    ExportCommit.commitOnce(shardsRoot, 0L)(
+      assigned.write.partitionBy("shard").option("compression", "gzip").json(_))
+    ExportCommit.commitOnce(indexRoot, 0L)(
+      assigned.select(col("doc_id")).write.parquet(_))
+    ExportCommit.commitOnce(tombRoot, 0L)(
       docs.filter(col("doc_id") % 10 === 0).select(col("doc_id"))
-        .write.parquet(st)
-      ExportCommit.commitBatch(tombRoot, 0L, st)
-    }
+        .write.parquet(_))
     val tombs = ExportCommit.readCommitted(s, tombRoot, idSchema, "parquet")
       .localCheckpoint() // ids-sized; consumed by four joins below
     val shardOf = (shuffleKey(col("doc_id"), ShuffleSeed) % EpochShards)
       .as("shard")
     val affected = tombs.select(shardOf).distinct().localCheckpoint()
-    if (!committed(rewriteRoot, 0L)) {
-      val survivors = ExportCommit
-        .readCommitted(s, shardsRoot, assigned.schema)
+    ExportCommit.commitOnce(rewriteRoot, 0L)(
+      ExportCommit.readCommitted(s, shardsRoot, assigned.schema)
         .join(broadcast(affected), Seq("shard"), "left_semi")
         .join(tombs, Seq("doc_id"), "left_anti")
-      val st = ExportCommit.stage(rewriteRoot, 0L)
-      survivors.write.partitionBy("shard").option("compression", "gzip")
-        .json(st)
-      ExportCommit.commitBatch(rewriteRoot, 0L, st)
-    }
-    if (!committed(index2Root, 0L)) {
-      val st = ExportCommit.stage(index2Root, 0L)
+        .write.partitionBy("shard").option("compression", "gzip").json(_))
+    ExportCommit.commitOnce(index2Root, 0L)(
       ExportCommit.readCommitted(s, indexRoot, idSchema, "parquet")
         .join(tombs, Seq("doc_id"), "left_anti")
-        .write.parquet(st)
-      ExportCommit.commitBatch(index2Root, 0L, st)
-    }
+        .write.parquet(_))
     val composed = ExportCommit.readCommitted(s, shardsRoot, assigned.schema)
       .join(broadcast(affected), Seq("shard"), "left_anti")
       .unionByName(ExportCommit.readCommitted(s, rewriteRoot, assigned.schema))
@@ -1448,44 +1409,25 @@ object PackOps {
     // ONE takedown set, committed once per key space (replay-safe)
     val docTombRoot = s"$root/tomb_docs"
     val vecTombRoot = s"$root/tomb_vecs"
-    graft.api.LshIndexStore.appendTombstones(docTombRoot, docTombs, 0L)
+    graft.api.DocIndexStore.appendTombstones(docTombRoot, docTombs, 0L)
     graft.api.IvfStore.appendTombstones(vecTombRoot, vecTombs, 0L)
     def guarded(marker: String)(build: => Unit): Unit =
       if (!new java.io.File(marker).isFile) build
     val date = java.time.LocalDate.ofEpochDay(0)
 
-    // ---- lsh_bands (d25's fold; flags only — see forgottenSurfaceRow)
-    val lshBase = s"$root/lsh_base"
-    val lshOut = s"$root/lsh_out"
-    guarded(s"$lshBase/_SUCCESS") {
-      graft.api.LshIndexStore.save(lshBase, DedupOps.prunedBandIndex(docs))
-    }
-    guarded(s"$lshOut/_SUCCESS") {
-      graft.api.LshIndexStore.compactAppends(s, lshBase, s"$root/lsh_none",
-        lshOut, Some(docTombRoot))
-    }
-
-    // ---- winnow_index (d29's fold)
-    val winBase = s"$root/win_base"
-    val winOut = s"$root/win_out"
-    guarded(s"$winBase/_SUCCESS") {
-      graft.api.WinnowIndexStore.save(winBase,
-        DedupOps.prunedFingerprintIndex(docs))
-    }
-    guarded(s"$winOut/_SUCCESS") {
-      graft.api.WinnowIndexStore.compactAppends(s, winBase, s"$root/win_none",
-        winOut, Some(docTombRoot))
-    }
-
-    // ---- passage_index (d27's fold)
-    val pasBase = s"$root/pas_base"
-    val pasOut = s"$root/pas_out"
-    guarded(s"$pasBase/_SUCCESS") {
-      graft.api.PassageIndexStore.save(pasBase, DedupOps.passageHashIndex(docs))
-    }
-    guarded(s"$pasOut/_SUCCESS") {
-      graft.api.PassageIndexStore.compactAppends(s, pasBase, s"$root/pas_none",
-        pasOut, Some(docTombRoot))
+    // ---- lsh_bands / winnow_index / passage_index (d25/d29/d27's
+    // folds over the ONE doc-tombstone log; lsh reports flags only —
+    // see forgottenSurfaceRow)
+    val docStores = Seq(
+      ("lsh_bands", "lsh", graft.api.DocIndexStore.Lsh, false),
+      ("winnow_index", "win", graft.api.DocIndexStore.Winnow, true),
+      ("passage_index", "pas", graft.api.DocIndexStore.Passage, true))
+    for ((_, fam, store, _) <- docStores) {
+      val base = s"$root/${fam}_base"
+      store.saveOnce(base, docs)
+      if (!store.isSaved(s"$root/${fam}_out"))
+        store.compactAppends(s, base, s"$root/${fam}_none",
+          s"$root/${fam}_out", Some(docTombRoot))
     }
 
     // ---- ivf_assigned (e22's fold; the shared base-corpus quantizer)
@@ -1522,25 +1464,18 @@ object PackOps {
     val shardsRoot = s"$root/shards"
     val rewriteRoot = s"$root/rewrite"
     val assigned = exportAssigned(docs)
-    if (!ExportCommit.isCommitted(shardsRoot, 0L)) {
-      val st = ExportCommit.stage(shardsRoot, 0L)
-      assigned.write.partitionBy("shard").option("compression", "gzip").json(st)
-      ExportCommit.commitBatch(shardsRoot, 0L, st)
-    }
-    val tombsRead = graft.api.LshIndexStore.committedTombstones(s, docTombRoot)
+    ExportCommit.commitOnce(shardsRoot, 0L)(
+      assigned.write.partitionBy("shard").option("compression", "gzip").json(_))
+    val tombsRead = graft.api.DocIndexStore.committedTombstones(s, docTombRoot)
       .localCheckpoint() // ids-sized; consumed by the audits below
     val shardOf = (shuffleKey(col("doc_id"), ShuffleSeed) % EpochShards)
       .as("shard")
     val affected = tombsRead.select(shardOf).distinct().localCheckpoint()
-    if (!ExportCommit.isCommitted(rewriteRoot, 0L)) {
-      val survivors = ExportCommit.readCommitted(s, shardsRoot, assigned.schema)
+    ExportCommit.commitOnce(rewriteRoot, 0L)(
+      ExportCommit.readCommitted(s, shardsRoot, assigned.schema)
         .join(broadcast(affected), Seq("shard"), "left_semi")
         .join(tombsRead, Seq("doc_id"), "left_anti")
-      val st = ExportCommit.stage(rewriteRoot, 0L)
-      survivors.write.partitionBy("shard").option("compression", "gzip")
-        .json(st)
-      ExportCommit.commitBatch(rewriteRoot, 0L, st)
-    }
+        .write.partitionBy("shard").option("compression", "gzip").json(_))
     val exportPre = ExportCommit.readCommitted(s, shardsRoot, assigned.schema)
 
     // r16 ask #1: the audit resolves every POST artifact through its
@@ -1571,18 +1506,11 @@ object PackOps {
         graft.api.IvfStore.loadPq(s, pqBase, m)._3,
         graft.api.IvfStore.loadPq(s, adopted("pq", pqOut), m)._3,
         "vec_id", vecTombs, reportN = true))
-      .unionByName(forgottenSurfaceRow("lsh_bands",
-        graft.api.LshIndexStore.load(s, lshBase),
-        graft.api.LshIndexStore.load(s, adopted("lsh", lshOut)),
-        "doc_id", tombsRead, reportN = false))
-      .unionByName(forgottenSurfaceRow("winnow_index",
-        graft.api.WinnowIndexStore.load(s, winBase),
-        graft.api.WinnowIndexStore.load(s, adopted("win", winOut)),
-        "doc_id", tombsRead, reportN = true))
-      .unionByName(forgottenSurfaceRow("passage_index",
-        graft.api.PassageIndexStore.load(s, pasBase),
-        graft.api.PassageIndexStore.load(s, adopted("pas", pasOut)),
-        "doc_id", tombsRead, reportN = true))
+      .unionByName(docStores.map { case (surface, fam, store, reportN) =>
+        forgottenSurfaceRow(surface, store.load(s, s"$root/${fam}_base"),
+          store.load(s, adopted(fam, s"$root/${fam}_out")),
+          "doc_id", tombsRead, reportN)
+      }.reduce(_.unionByName(_)))
       .orderBy(col("surface"))
   }
 
@@ -1674,19 +1602,11 @@ object PackOps {
     val existing = docs.filter(col("doc_id") % 2 === 0)
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "c08")
     val date = java.time.LocalDate.ofEpochDay(0)
-    def guarded(marker: String)(build: => Unit): Unit =
-      if (!new java.io.File(marker).isFile) build
-    val lshDir = graft.api.LshIndexStore.versionedDir(
-      s"$root/lsh", DedupOps.Bands, date)
-    guarded(s"$lshDir/_SUCCESS") {
-      graft.api.LshIndexStore.save(lshDir, DedupOps.prunedBandIndex(existing))
-    }
-    val pasDir = graft.api.PassageIndexStore.versionedDir(
-      s"$root/passage", DedupOps.PassageTokens, date)
-    guarded(s"$pasDir/_SUCCESS") {
-      graft.api.PassageIndexStore.save(pasDir,
-        DedupOps.passageHashIndex(existing))
-    }
+    val lshDir = graft.api.DocIndexStore.Lsh.versionedDir(s"$root/lsh", date)
+    graft.api.DocIndexStore.Lsh.saveOnce(lshDir, existing)
+    val pasDir =
+      graft.api.DocIndexStore.Passage.versionedDir(s"$root/passage", date)
+    graft.api.DocIndexStore.Passage.saveOnce(pasDir, existing)
 
     // the incoming crawl increment: organic odds plus four planted
     // reject classes at disjoint plantOffset multiples
@@ -1725,7 +1645,7 @@ object PackOps {
       md5(TextFunctions.cleanText(col("text")).cast("binary"))
     val cands = DedupOps.minhashBands(batch)
       .select(col("doc_id").as("in_id"), col("band"), col("bucket"))
-      .join(graft.api.LshIndexStore.load(s, lshDir)
+      .join(graft.api.DocIndexStore.Lsh.load(s, lshDir)
         .select(col("doc_id").as("src_id"), col("band"), col("bucket")),
         Seq("band", "bucket"))
       .select(col("in_id"), col("src_id")).distinct()
@@ -1740,7 +1660,7 @@ object PackOps {
     // gate 4: passage membership vs the LOADED passage index — a doc
     // at least half of whose passages are already held is quarantined
     val pasHit = DedupOps.probePassagesAgainst(batch,
-        graft.api.PassageIndexStore.load(s, pasDir))
+        graft.api.DocIndexStore.Passage.load(s, pasDir))
       .filter(col("n_known") * 2 >= col("n_passages"))
       .select(col("doc_id")).withColumn("__pas", lit(1))
     // gate 5: held-out benchmark 5-gram overlap (d09's shape)
@@ -1817,11 +1737,11 @@ object PackOps {
     *   2_exact_intra — duplicate digest WITHIN the batch, keep-first
     *     (organic odd-id twins);
     *   3_neardup — LSH candidates against the loaded
-    *     [[graft.api.LshIndexStore]] artifact, verified by cleaned-text
+    *     [[graft.api.DocIndexStore.Lsh]] artifact, verified by cleaned-text
     *     identity (planted: evens in [100,200) re-fetched UPPERCASED at
     *     +2·off — new digest, identical cleaned tokens);
     *   4_passage — ≥ half the doc's passages already in the loaded
-    *     [[graft.api.PassageIndexStore]] membership set (planted:
+    *     [[graft.api.DocIndexStore.Passage]] membership set (planted:
     *     quotation docs built from evens in [200,250) at +3·off — the
     *     source's first two passage windows plus a salted tail);
     *   5_decontam — ≥ [[DecontamMinHits]] distinct cleaned 5-grams
@@ -1870,8 +1790,8 @@ object PackOps {
 
     // ---- the admission COMMIT: survivors appended to the serving
     // indexes through the stores' own atomic manifest paths
-    graft.api.LshIndexStore.appendBatch(s"$root/lsh_app", admitted, 0L)
-    graft.api.PassageIndexStore.appendBatch(s"$root/pas_app", admitted, 0L)
+    graft.api.DocIndexStore.Lsh.appendBatch(s"$root/lsh_app", admitted, 0L)
+    graft.api.DocIndexStore.Passage.appendBatch(s"$root/pas_app", admitted, 0L)
 
     def cleanKey: Column =
       md5(TextFunctions.cleanText(col("text")).cast("binary"))
@@ -1896,10 +1816,10 @@ object PackOps {
     val variants = admitted.select(
       (col("doc_id") + lit(5 * off)).as("doc_id"),
       upper(col("text")).as("text"))
-    val lshDir = graft.api.LshIndexStore.versionedDir(
-      s"$root/lsh", DedupOps.Bands, date)
-    val lshServe = graft.api.LshIndexStore.load(s, lshDir).unionByName(
-      graft.api.LshIndexStore.committedAppends(s, s"$root/lsh_app"))
+    val lshDir = graft.api.DocIndexStore.Lsh.versionedDir(
+      s"$root/lsh", date)
+    val lshServe = graft.api.DocIndexStore.Lsh.load(s, lshDir).unionByName(
+      graft.api.DocIndexStore.Lsh.committedAppends(s, s"$root/lsh_app"))
     val storeClean = existing
       .select(col("doc_id").as("src_id"), cleanKey.as("sck"))
       .unionByName(admitted
@@ -1919,10 +1839,10 @@ object PackOps {
     val quotes = admitted.select(
       (col("doc_id") + lit(6 * off)).as("doc_id"),
       admitQuoteText.as("text"))
-    val pasDir = graft.api.PassageIndexStore.versionedDir(
-      s"$root/passage", DedupOps.PassageTokens, date)
-    val pasServe = graft.api.PassageIndexStore.load(s, pasDir).unionByName(
-      graft.api.PassageIndexStore.committedAppends(s, s"$root/pas_app"))
+    val pasDir = graft.api.DocIndexStore.Passage.versionedDir(
+      s"$root/passage", date)
+    val pasServe = graft.api.DocIndexStore.Passage.load(s, pasDir).unionByName(
+      graft.api.DocIndexStore.Passage.committedAppends(s, s"$root/pas_app"))
     val r2c = DedupOps.probePassagesAgainst(quotes, pasServe)
       .filter(col("n_known") * 2 >= col("n_passages"))
       .select(col("doc_id"))
@@ -2065,12 +1985,8 @@ object PackOps {
       .select(col("doc_id"), col("text"))
     val assigned = exportAssigned(admitted)
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "c10")
-    if (!graft.sources.ExportCommit.isCommitted(root, 0L)) {
-      val staged = graft.sources.ExportCommit.stage(root, 0L)
-      assigned.write.partitionBy("shard")
-        .option("compression", "gzip").json(staged)
-      graft.sources.ExportCommit.commitBatch(root, 0L, staged)
-    }
+    graft.sources.ExportCommit.commitOnce(root, 0L)(
+      assigned.write.partitionBy("shard").option("compression", "gzip").json(_))
     manifestFrom(
       graft.sources.ExportCommit.readCommitted(s, root, assigned.schema))
   }
@@ -2121,11 +2037,8 @@ object PackOps {
     val assigned = committed.select(col("vec_id"), col("embedding"),
       (shuffleKey(col("vec_id"), ShuffleSeed) % EpochShards).as("shard"))
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "c11")
-    if (!ExportCommit.isCommitted(root, 0L)) {
-      val staged = ExportCommit.stage(root, 0L)
-      assigned.write.partitionBy("shard").parquet(staged)
-      ExportCommit.commitBatch(root, 0L, staged)
-    }
+    ExportCommit.commitOnce(root, 0L)(
+      assigned.write.partitionBy("shard").parquet(_))
     vecManifestFrom(
       ExportCommit.readCommitted(s, root, assigned.schema, "parquet"))
   }
@@ -2197,11 +2110,8 @@ object PackOps {
       .select(col("doc_id"), col("text"), col("vec_id"), col("embedding"),
         (shuffleKey(col("doc_id"), ShuffleSeed) % EpochShards).as("shard"))
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "c13")
-    if (!ExportCommit.isCommitted(root, 0L)) {
-      val staged = ExportCommit.stage(root, 0L)
-      assigned.write.partitionBy("shard").parquet(staged)
-      ExportCommit.commitBatch(root, 0L, staged)
-    }
+    ExportCommit.commitOnce(root, 0L)(
+      assigned.write.partitionBy("shard").parquet(_))
     pairManifestFrom(
       ExportCommit.readCommitted(s, root, assigned.schema, "parquet"))
   }
@@ -2392,7 +2302,7 @@ object PackOps {
           .select(col("doc_id"), col("text")).distinct().localCheckpoint()
         val av = pairs.filter(bothAdmit)
           .select(col("vec_id"), col("embedding")).distinct().localCheckpoint()
-        graft.api.LshIndexStore.appendBatch(s"$root/lsh_app", ad, 0L)
+        graft.api.DocIndexStore.Lsh.appendBatch(s"$root/lsh_app", ad, 0L)
         graft.api.IvfStore.appendBatch(s"$root/ivf_app", av, 0L,
           loaded.model)
         (ad, av)
@@ -2401,11 +2311,10 @@ object PackOps {
     // ---- phase 2: the four resubmission witnesses
     def cleanKey: Column =
       md5(TextFunctions.cleanText(col("text")).cast("binary"))
-    val lshDir = graft.api.LshIndexStore.versionedDir(
-      s"${graft.sources.TmpDirs.artifactRoot(s, d, "c08")}/lsh",
-      DedupOps.Bands, date)
-    val lshServe = graft.api.LshIndexStore.load(s, lshDir).unionByName(
-      graft.api.LshIndexStore.committedAppends(s, s"$root/lsh_app"))
+    val lshDir = graft.api.DocIndexStore.Lsh.versionedDir(
+      s"${graft.sources.TmpDirs.artifactRoot(s, d, "c08")}/lsh", date)
+    val lshServe = graft.api.DocIndexStore.Lsh.load(s, lshDir).unionByName(
+      graft.api.DocIndexStore.Lsh.committedAppends(s, s"$root/lsh_app"))
     val storeClean = existing
       .select(col("doc_id").as("src_id"), cleanKey.as("sck"))
       .unionByName(admDocs

@@ -73,12 +73,28 @@ object ExportCommit {
 
   /** True when `batchId` is already committed under `root` — the
     * at-least-once replay's common path. Every append entry point
-    * checks it BEFORE staging (r14 ADVICE): a crash-replay loop would
-    * otherwise rewrite its whole increment per retry only for
-    * commitBatch to discard it. [[commitBatch]]'s CAS remains the
+    * checks it BEFORE staging ([[commitOnce]] does): a crash-replay
+    * loop would otherwise rewrite its whole increment per retry only
+    * for commitBatch to discard it. [[commitBatch]]'s CAS remains the
     * correctness gate — this is the one shared fast path. */
   def isCommitted(root: String, batchId: Long): Boolean =
     latest(root).exists(_.batchIds.contains(batchId))
+
+  /** The one append entry point: skip a replayed `batchId` before
+    * staging (the [[isCommitted]] fast path), otherwise stage a fresh
+    * dir, hand it to `write`, and publish it through [[commitBatch]]'s
+    * CAS. Appends are exactly-once under replay: a replay that races
+    * its own earlier attempt past the fast path still loses at the
+    * CAS. A `write` that throws publishes nothing — its staged dir is
+    * a crashed attempt for [[gcStaging]]. Returns true when this call
+    * published the batch. */
+  def commitOnce(root: String, batchId: Long)(write: String => Unit)
+      : Boolean =
+    !isCommitted(root, batchId) && {
+      val staged = stage(root, batchId)
+      write(staged)
+      commitBatch(root, batchId, staged)
+    }
 
   /** Commit a staged directory under `batchId`. Returns true if this
     * call published a new manifest version; false if the batchId was
@@ -349,6 +365,28 @@ object ExportCommit {
   def committedDirs(root: String): Seq[String] =
     latest(root).map(_.entries.map(e =>
       Paths.get(root).resolve(e.dir).toString)).getOrElse(Seq.empty)
+
+  /** Every committed parquet batch under `root`, in `schema`'s column
+    * order, read as ONE multi-path scan. An empty manifest reads as a
+    * typed empty relation. Loud on a batch dir that lacks a schema
+    * column — a dir from an older or mis-built writer fails HERE with
+    * `store` and the missing columns named, not as an
+    * AnalysisException at the consumer. */
+  def committedParquet(s: SparkSession, root: String, schema: StructType,
+      store: String): DataFrame = {
+    val dirs = committedDirs(root)
+    if (dirs.isEmpty)
+      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        schema)
+    else {
+      val read = s.read.parquet(dirs: _*)
+      val missing = schema.fieldNames.filterNot(read.columns.contains)
+      require(missing.isEmpty,
+        s"$store $root is missing columns: ${missing.mkString(", ")}")
+      read.select(schema.fieldNames.toSeq.map(
+        org.apache.spark.sql.functions.col): _*)
+    }
+  }
 
   /** Read exactly the committed directories (empty relation when no
     * manifest exists yet). Each dir is read with its own base path so

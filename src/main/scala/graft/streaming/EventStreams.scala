@@ -1247,14 +1247,12 @@ object EventStreams {
         val dir = graft.api.ServePointer.current(ptr).getOrElse(
           sys.error(s"no adopted version under $ptr"))
         val phase = if (dir == v1n) 1L else 2L
-        if (!ExportCommit.isCommitted(resultsRoot, batchId)) {
+        ExportCommit.commitOnce(resultsRoot, batchId) { staged =>
           val served = serveBatch(batch.toDF(), dir)
-          val staged = ExportCommit.stage(resultsRoot, batchId)
           served.select(lit(phase).as("phase") +:
             served.columns.toSeq.map(col): _*).write.parquet(staged)
-          ExportCommit.commitBatch(resultsRoot, batchId, staged)
-          ()
         }
+        ()
       })
       .option("checkpointLocation", s"$root/chk")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1306,201 +1304,136 @@ object EventStreams {
       .orderBy(col("phase"), col("query_id"))
   }
 
-  /** s38 — the MAINTENANCE DAY DURING A LIVE SERVE, LSH family (r17
-    * verdict asks #4 + #6 composed on the doc key space: s36 witnessed
-    * the live reload on the IVF family only, and the streaming LSH
-    * probe s27 loaded its artifact once per drain): v1 = the FULL
-    * pruned band index (d11/d20's artifact) with the takedown debt
-    * (evens < 100 — d25's geometry) committed to the tombstone log
-    * BEFORE the drain; the d11 incoming batch arrives as two identical
-    * query files; AT the batch-1 boundary the janitor runs in-drain
-    * ([[janitorDayAt]]: policy trigger on the REAL manifest → fold →
-    * adopt → retire → prune); each micro-batch probes the
-    * pointer-resolved LOADED index through [[graft.operators.DedupOps
-    * .probeIncomingPlanted]] (the batch rows' own plan). Phase 1 must
-    * report every planted pair (d11's closed form), phase 2 only the
-    * surviving sources (d25's) — a drain that caches the resolved dir
-    * across batches, a policy that under-counts the debt, or a fold
-    * that tears a serving batch each break a phase. */
-  def streamLshFlip(s: SparkSession, d: String): DataFrame = {
+  /** The pieces a doc-keyed live-flip row varies, all over the stream
+    * session's (doc_id, text) documents: the docs the day-0 index
+    * covers, the takedown ids the maintenance day folds out, the
+    * incoming query batch, and the family's probe of a batch against
+    * a LOADED index. */
+  private final case class DocFlipRows(indexed: DataFrame,
+      takedown: DataFrame, incoming: DataFrame,
+      probe: (DataFrame, DataFrame) => DataFrame)
+
+  /** The maintenance day during a live serve on a doc-keyed store —
+    * s38/s39/s40's one body: v1 = `store`'s index over `rows.indexed`;
+    * the incoming batch arrives as two identical query files; AT the
+    * batch-1 boundary the in-drain janitor ([[janitorDayAt]]) commits
+    * the takedown debt, folds it out, adopts, retires and prunes; each
+    * micro-batch probes the pointer-resolved LOADED index through
+    * `rows.probe`. Phase 1 must report the full index's matches,
+    * phase 2 only the survivors' — a drain that caches the resolved
+    * dir across batches, a policy that under-counts the debt, or a
+    * fold that tears a serving batch each break a phase. Callers add
+    * their total ORDER BY. */
+  private def docStoreFlip(s: SparkSession, d: String, tag: String,
+      store: graft.api.DocIndexStore)(
+      rows: (SparkSession, DataFrame, Long) => DocFlipRows): DataFrame = {
     import graft.operators.DedupOps
     val ss = streamSession(s)
     val docs = graft.sources.Tables.documents(ss, d)
       .select(col("doc_id"), col("text"))
     val off = DedupOps.plantOffset(DedupOps.maxIdOf(docs, "doc_id"))
-    val existing = docs.filter(col("doc_id") % 2 === 0)
-    val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s38")
+    val r = rows(ss, docs, off)
+    val root = graft.sources.TmpDirs.artifactRoot(ss, d, tag)
     val date = java.time.LocalDate.ofEpochDay(0)
-    val v1 = graft.api.LshIndexStore.versionedDir(s"$root/base",
-      DedupOps.Bands, date)
-    if (!new java.io.File(s"$v1/_SUCCESS").isFile)
-      graft.api.LshIndexStore.save(v1, DedupOps.prunedBandIndex(existing))
-    val tombRoot = s"$root/tombstones"
-    val v2 = graft.api.LshIndexStore.versionedDir(s"$root/fold",
-      DedupOps.Bands, date.plusDays(1))
-    val ptr = s"$root/pointer"
-    // debt commits BEFORE the drain — but not again after a finished
-    // maintenance day retired it (s41's replay posture)
-    if (!graft.api.ServePointer.current(ptr).contains(java.nio.file
-        .Paths.get(v2).toAbsolutePath.normalize().toString))
-      graft.api.LshIndexStore.appendTombstones(tombRoot,
-        existing.filter(col("doc_id") < 100).select(col("doc_id")), 0L)
-    pointerFlipDrain(ss, root, DedupOps.lshIncomingBatch(docs, off), v1,
-      _ => janitorDayAt(root, v1, v2, tombRoot,
-        () => graft.api.LshIndexStore.compactAppends(ss, v1,
-          s"$root/no_appends", v2, Some(tombRoot)), s"$v2/_SUCCESS"),
-      (batch, dir) => DedupOps.probeIncomingPlanted(batch, off,
-        graft.api.LshIndexStore.load(ss, dir)))
-      .orderBy(col("phase"), col("in_id"))
+    val v1 = store.versionedDir(s"$root/base", date)
+    store.saveOnce(v1, r.indexed)
+    pointerFlipDrain(ss, root, r.incoming, v1,
+      _ => janitorDayAt(ss, store, root, v1,
+        store.versionedDir(s"$root/fold", date.plusDays(1)))(
+        store.saveOnce(v1, r.indexed))(
+        graft.api.DocIndexStore.appendTombstones(_, r.takedown, 0L)),
+      (batch, dir) => r.probe(batch, store.load(ss, dir)))
   }
 
-  /** The in-drain MAINTENANCE DAY shared by s38/s39/s40/s41 — runs
-    * BETWEEN micro-batches inside [[pointerFlipDrain]]'s flip
-    * callback, every step replay-safe: [[graft.api.CompactionPolicy
-    * .due]] evaluates the REAL tombstone manifest and the fold runs
-    * ONLY if it fires (an under-counting policy leaves phase 2
-    * serving v1 and breaks the phased oracle);
-    * [[graft.api.ServePointer.adopt]] flips the live pointer (day 0
-    * protected inside the rollback window);
-    * [[graft.api.ServePointer.retireFoldedDebt]] retires the folded
-    * log idempotently; [[graft.api.ServePointer.pruneHistory]] bounds
-    * the audit trail. A batch replay re-enters the whole day without
-    * churn. */
-  private def janitorDayAt(root: String, v1: String,
-      v2: String, tombRoot: String, fold: () => Unit,
-      foldMarker: String): Unit = {
-    val ptr = s"$root/pointer"
-    val decision = graft.api.CompactionPolicy.due(s"$root/no_appends",
-      Some(tombRoot), maxAppendBatches = Int.MaxValue,
-      maxTombstoneBatches = 1)
-    if (decision.due) { // load-bearing: no fold ⇒ phase 2 = phase 1
-      if (!new java.io.File(foldMarker).isFile) fold()
-      graft.api.ServePointer.adopt(ptr, v2)
-      require(graft.api.ServePointer.retirable(ptr, Seq(v1, v2)).isEmpty,
-        "rollback-window artifact offered for retirement")
-    }
-    graft.api.ServePointer.retireFoldedDebt(ptr, v2, Seq(tombRoot))
-    graft.api.ServePointer.pruneHistory(ptr, keepLast = 2)
+  /** s38 — the maintenance day during a live serve, LSH family: v1 =
+    * the FULL pruned band index (d11/d20's artifact), takedown = evens
+    * < 100 (d25's geometry), the d11 incoming batch probed through
+    * [[graft.operators.DedupOps.probeIncomingPlanted]]. Phase 1 =
+    * d11's closed form, phase 2 = d25's survivors. */
+  def streamLshFlip(s: SparkSession, d: String): DataFrame =
+    docStoreFlip(s, d, "s38", graft.api.DocIndexStore.Lsh) {
+      (_, docs, off) =>
+        val existing = docs.filter(col("doc_id") % 2 === 0)
+        DocFlipRows(existing,
+          existing.filter(col("doc_id") < 100).select(col("doc_id")),
+          graft.operators.DedupOps.lshIncomingBatch(docs, off),
+          graft.operators.DedupOps.probeIncomingPlanted(_, off, _))
+    }.orderBy(col("phase"), col("in_id"))
+
+  /** The in-drain MAINTENANCE DAY shared by s38/s39/s40/s41 —
+    * [[graft.api.CompactionPolicy.maintenanceDay]] run BETWEEN
+    * micro-batches inside [[pointerFlipDrain]]'s flip callback, with
+    * only tombstone debt (an under-counting policy leaves phase 2
+    * serving v1 and breaks the phased oracle). v1 is already saved
+    * and adopted by the drain, so the day's first steps are replay
+    * no-ops; a batch replay re-enters the whole day without churn. */
+  private def janitorDayAt(ss: SparkSession,
+      store: graft.api.FoldableStore, root: String, v1: String,
+      v2: String)(saveBase: => Unit)(commitTombstones: String => Unit)
+      : Unit = {
+    graft.api.CompactionPolicy.maintenanceDay(ss, store, root, v1, v2,
+      maxAppendBatches = Int.MaxValue, maxTombstoneBatches = 1)(saveBase)(
+      (_, tombRoot) => commitTombstones(tombRoot))
     ()
   }
 
-  /** s39 — the maintenance day during a live serve, passage family
-    * (s38's witness at passage grain): v1 = the full even-corpus
-    * passage-hash index (d17's artifact) with the takedown debt
-    * (evens < 50 — d27/d31's geometry) committed before the drain;
-    * the in-drain janitor ([[janitorDayAt]]) folds, adopts, retires,
-    * and prunes at the batch-1 boundary; d17's incoming batch probes
-    * the pointer-resolved LOADED index per micro-batch through
-    * [[graft.operators.DedupOps.probePassagesAgainst]]. Phase 1 =
-    * d17's closed form, phase 2 = the survivors'. */
-  def streamPassageFlip(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.DedupOps
-    val ss = streamSession(s)
-    val docs = graft.sources.Tables.documents(ss, d)
-      .select(col("doc_id"), col("text"))
-    val off = DedupOps.plantOffset(DedupOps.maxIdOf(docs, "doc_id"))
-    val existing = docs.filter(col("doc_id") % 2 === 0)
-    val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s39")
-    val date = java.time.LocalDate.ofEpochDay(0)
-    val v1 = graft.api.PassageIndexStore.versionedDir(s"$root/base",
-      DedupOps.PassageTokens, date)
-    if (!new java.io.File(s"$v1/_SUCCESS").isFile)
-      graft.api.PassageIndexStore.save(v1,
-        DedupOps.passageHashIndex(existing))
-    val tombRoot = s"$root/tombstones"
-    val v2 = graft.api.PassageIndexStore.versionedDir(s"$root/fold",
-      DedupOps.PassageTokens, date.plusDays(1))
-    if (!graft.api.ServePointer.current(s"$root/pointer").contains(
-        java.nio.file.Paths.get(v2).toAbsolutePath.normalize().toString))
-      graft.api.PassageIndexStore.appendTombstones(tombRoot,
-        existing.filter(col("doc_id") < 50).select(col("doc_id")), 0L)
-    pointerFlipDrain(ss, root, DedupOps.passageIncomingBatch(docs, off), v1,
-      _ => janitorDayAt(root, v1, v2, tombRoot,
-        () => graft.api.PassageIndexStore.compactAppends(ss, v1,
-          s"$root/no_appends", v2, Some(tombRoot)), s"$v2/_SUCCESS"),
-      (batch, dir) => DedupOps.probePassagesAgainst(batch,
-        graft.api.PassageIndexStore.load(ss, dir)))
-      .orderBy(col("phase"), col("doc_id"))
-  }
+  /** s39 — the maintenance day during a live serve, passage family:
+    * v1 = the full even-corpus passage-hash index (d17's artifact),
+    * takedown = evens < 50 (d27/d31's geometry), d17's incoming batch
+    * probed through [[graft.operators.DedupOps.probePassagesAgainst]].
+    * Phase 1 = d17's closed form, phase 2 = the survivors'. */
+  def streamPassageFlip(s: SparkSession, d: String): DataFrame =
+    docStoreFlip(s, d, "s39", graft.api.DocIndexStore.Passage) {
+      (_, docs, off) =>
+        val existing = docs.filter(col("doc_id") % 2 === 0)
+        DocFlipRows(existing,
+          existing.filter(col("doc_id") < 50).select(col("doc_id")),
+          graft.operators.DedupOps.passageIncomingBatch(docs, off),
+          graft.operators.DedupOps.probePassagesAgainst)
+    }.orderBy(col("phase"), col("doc_id"))
 
-  /** s40 — the maintenance day during a live serve, winnow family
-    * (s38's witness at substring grain): v1 = the fingerprint index
-    * holding BOTH archived quotation sources (planted doc 0 and d29's
-    * surviving archive doc) with doc 0's takedown committed before the
-    * drain; the in-drain janitor ([[janitorDayAt]]) folds, adopts,
-    * retires, and prunes at the batch-1 boundary (d29/d32's geometry);
-    * d24's incoming batch (docs 1/2, each quoting doc 0's quotes)
-    * probes the pointer-resolved LOADED index per micro-batch through
+  /** s40 — the maintenance day during a live serve, winnow family: v1
+    * = the fingerprint index holding BOTH archived quotation sources
+    * (planted doc 0 and d29's surviving archive doc), takedown = doc 0
+    * (d29/d32's geometry); d24's incoming batch (docs 1/2, each
+    * quoting doc 0's quotes) probes through
     * [[graft.operators.DedupOps.winnowProbeAgainst]] (the archive text
     * side is the superset relation — candidates can only name docs the
     * INDEX holds, so the fold alone decides which archive docs can
     * verify). Phase 1 = runs against both sources, phase 2 = the
     * survivor's only. */
-  def streamWinnowFlip(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.DedupOps
-    import s.implicits._
-    val ss = streamSession(s)
-    val docs = graft.sources.Tables.documents(ss, d)
-      .select(col("doc_id"), col("text"))
-    val off = DedupOps.plantOffset(DedupOps.maxIdOf(docs, "doc_id"))
-    val planted = (DedupOps.PlantedQuoteDocs.take(1) ++
-      DedupOps.PlantedQuoteArchiveDoc)
-      .map { case (i, t) => (off + i, t) }.toDF("doc_id", "text")
-    val archive = docs.unionByName(planted)
-    val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s40")
-    val date = java.time.LocalDate.ofEpochDay(0)
-    val v1 = graft.api.WinnowIndexStore.versionedDir(s"$root/base",
-      graft.operators.TextOps.WinnowK, graft.operators.TextOps.WinnowW,
-      date)
-    if (!new java.io.File(s"$v1/_SUCCESS").isFile)
-      graft.api.WinnowIndexStore.save(v1,
-        DedupOps.prunedFingerprintIndex(archive))
-    val tombRoot = s"$root/tombstones"
-    val v2 = graft.api.WinnowIndexStore.versionedDir(s"$root/fold",
-      graft.operators.TextOps.WinnowK, graft.operators.TextOps.WinnowW,
-      date.plusDays(1))
-    if (!graft.api.ServePointer.current(s"$root/pointer").contains(
-        java.nio.file.Paths.get(v2).toAbsolutePath.normalize().toString))
-      graft.api.WinnowIndexStore.appendTombstones(tombRoot,
-        Seq(off + 0L).toDF("doc_id"), 0L)
-    pointerFlipDrain(ss, root, DedupOps.winnowIncoming(ss, docs, off), v1,
-      _ => janitorDayAt(root, v1, v2, tombRoot,
-        () => graft.api.WinnowIndexStore.compactAppends(ss, v1,
-          s"$root/no_appends", v2, Some(tombRoot)), s"$v2/_SUCCESS"),
-      (batch, dir) => DedupOps.winnowProbeAgainst(archive, batch,
-        graft.api.WinnowIndexStore.load(ss, dir)))
-      .orderBy(col("phase"), col("doc_a"), col("doc_b"), col("a_pos"),
-        col("b_pos"))
-  }
+  def streamWinnowFlip(s: SparkSession, d: String): DataFrame =
+    docStoreFlip(s, d, "s40", graft.api.DocIndexStore.Winnow) {
+      (ss, docs, off) =>
+        import graft.operators.DedupOps
+        import ss.implicits._
+        val archive = docs.unionByName(
+          (DedupOps.PlantedQuoteDocs.take(1) ++ DedupOps.PlantedQuoteArchiveDoc)
+            .map { case (i, t) => (off + i, t) }.toDF("doc_id", "text"))
+        DocFlipRows(archive, Seq(off + 0L).toDF("doc_id"),
+          DedupOps.winnowIncoming(ss, docs, off),
+          DedupOps.winnowProbeAgainst(archive, _, _))
+    }.orderBy(col("phase"), col("doc_a"), col("doc_b"), col("a_pos"),
+      col("b_pos"))
 
-  /** s41 — the JANITOR'S MAINTENANCE DAY DURING A LIVE SERVE (r17
-    * verdict ask #6, the serving fleet's actual steady state: e28 and
-    * d30–d32 run the maintenance day in BATCH rows; s36 flips to a
-    * PRE-BUILT v2 mid-drain; the missing composition is the day
-    * itself — trigger, fold, adopt, retire, prune — landing BETWEEN
-    * micro-batches of one continuous query drain): v1 = e27's
-    * double-planted index, adopted at day 0 with the tombstone debt
-    * already committed; the query stream drains in two deterministic
-    * micro-batches; AT the batch-1 boundary the janitor runs inside
-    * `flip` — [[graft.api.CompactionPolicy.due]] evaluates the REAL
-    * tombstone manifest and the fold runs ONLY if it fires,
-    * [[graft.api.IvfStore.compactAppends]] folds v1 minus the
-    * takedowns into v2, [[graft.api.ServePointer.adopt]] flips the
-    * live pointer, [[graft.api.ServePointer.retireFoldedDebt]] retires
-    * the folded log, and [[graft.api.ServePointer.pruneHistory]]
-    * bounds the audit trail — every step individually replay-safe, so
-    * a batch replay re-enters the whole day without churn. Pre-fold
-    * batches answer from v1, post-fold from v2: s36's phase oracle
-    * transfers VERBATIM, so a janitor that breaks the artifact at any
-    * stage, a policy that under-counts the debt (no fold ⇒ phase 2
-    * still answers +off and the flip row breaks), or a fold that tears
-    * a serving batch each break a phase's rows.
+  /** s41 — the JANITOR'S MAINTENANCE DAY DURING A LIVE SERVE, IVF
+    * family (the serving fleet's actual steady state: e28 and d30–d32
+    * run the maintenance day in BATCH rows, s36 flips to a PRE-BUILT
+    * v2 mid-drain; this is the day itself — trigger, fold, adopt,
+    * retire, prune — landing BETWEEN micro-batches of one continuous
+    * query drain): v1 = e27's double-planted index, adopted at day 0;
+    * the query stream drains in two deterministic micro-batches; AT
+    * the batch-1 boundary [[janitorDayAt]] commits the takedown debt,
+    * folds v1 minus the takedowns into v2 and flips the live pointer.
+    * Pre-fold batches answer from v1, post-fold from v2: s36's phase
+    * oracle transfers VERBATIM, so a janitor that breaks the artifact
+    * at any stage, a policy that under-counts the debt (no fold ⇒
+    * phase 2 still answers +off and the flip row breaks), or a fold
+    * that tears a serving batch each break a phase's rows.
     *
     * 100 TB shape: the in-drain janitor bills exactly e28's
-    * maintenance day (kilobyte trigger reads, the one fold, a pointer
-    * flip, input retirement) while the serve keeps draining — zero
-    * stream restart, every batch consistent against one immutable
-    * version. */
+    * maintenance day while the serve keeps draining — zero stream
+    * restart, every batch consistent against one immutable version. */
   def streamJanitorLive(s: SparkSession, d: String): DataFrame = {
     import graft.operators.{DedupOps, EmbeddingOps}
     val ss = streamSession(s)
@@ -1509,34 +1442,24 @@ object EventStreams {
     val off = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
     val cells = EmbeddingOps.ivfCellsFor(
       3L * EmbeddingOps.corpusCount(ss, d))
-    // e27's exact double-planted artifact (shared memo key with
-    // e21/e22/s30/s36)
-    val index = graft.api.Intermediates.memo(ss, s"ivf_tomb|$d|$cells") {
-      EmbeddingOps.ivfBuild(
-        EmbeddingOps.doublePlantedUnion(base, off), cells)
-    }
     val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s41")
     val date = java.time.LocalDate.ofEpochDay(0)
     val v1 = graft.api.IvfStore.versionedDir(root, cells, date)
-    if (!new java.io.File(s"$v1/assigned/_SUCCESS").isFile)
-      graft.api.IvfStore.save(v1, index)
-    val tombRoot = s"$root/tombstones"
-    val v2 = graft.api.IvfStore.versionedDir(root, cells, date.plusDays(1))
-    val ptr = s"$root/pointer"
-    // the debt commits BEFORE the drain — but not again after a
-    // finished maintenance day retired it (replay posture: a re-run
-    // must not re-accrue debt the janitor already folded)
-    if (!graft.api.ServePointer.current(ptr).contains(java.nio.file
-        .Paths.get(v2).toAbsolutePath.normalize().toString))
-      graft.api.IvfStore.appendTombstones(tombRoot,
-        EmbeddingOps.tombstoneIds(base, off), 0L)
+    // e27's exact double-planted artifact (shared memo key with
+    // e21/e22/s30/s36)
+    def saveBase(): Unit = graft.api.IvfStore.save(v1,
+      graft.api.Intermediates.memo(ss, s"ivf_tomb|$d|$cells") {
+        EmbeddingOps.ivfBuild(
+          EmbeddingOps.doublePlantedUnion(base, off), cells)
+      })
+    if (!graft.api.IvfStore.isSaved(v1)) saveBase()
     pointerFlipDrain(ss, root,
       base.filter(col("vec_id") % EmbeddingOps.BatchQueryMod === 0),
       v1,
-      _ => janitorDayAt(root, v1, v2, tombRoot,
-        () => graft.api.IvfStore.compactAppends(ss, v1,
-          s"$root/no_appends", v2, Some(tombRoot)),
-        s"$v2/assigned/_SUCCESS"),
+      _ => janitorDayAt(ss, graft.api.IvfStore, root, v1,
+        graft.api.IvfStore.versionedDir(root, cells, date.plusDays(1)))(
+        saveBase())(graft.api.IvfStore.appendTombstones(_,
+          EmbeddingOps.tombstoneIds(base, off), 0L)),
       (batch, dir) => EmbeddingOps.serveQueriesAgainst(ss,
         graft.api.IvfStore.load(ss, dir), batch)
         .select(col("query_id"), col("top1_id"), col("cos_sim")))
@@ -1721,7 +1644,7 @@ object EventStreams {
     * completing the streaming-probe symmetry across all five
     * incremental grains: exact s14, near-dup s27, embedding s29/s31,
     * passage HERE, winnow s33's gate): the stored corpus's passage-hash
-    * index is persisted through [[graft.api.PassageIndexStore]]
+    * index is persisted through [[graft.api.DocIndexStore.Passage]]
     * (session-billed — the probe's INPUT) and loaded back; the
     * incoming document stream — d17's exact scenario, odd docs plus
     * re-fetched evens under fresh crawl ids — slices and hashes its
@@ -1745,13 +1668,10 @@ object EventStreams {
       graft.operators.DedupOps.maxIdOf(docs, "doc_id"))
     val existing = docs.filter(col("doc_id") % 2 === 0)
     val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s32")
-    val dir = graft.api.PassageIndexStore.versionedDir(
-      root, graft.operators.DedupOps.PassageTokens,
-      java.time.LocalDate.ofEpochDay(0))
-    if (!new java.io.File(s"$dir/_SUCCESS").isFile)
-      graft.api.PassageIndexStore.save(dir,
-        graft.operators.DedupOps.passageHashIndex(existing))
-    val known = graft.api.PassageIndexStore.load(ss, dir)
+    val dir = graft.api.DocIndexStore.Passage.versionedDir(
+      root, java.time.LocalDate.ofEpochDay(0))
+    graft.api.DocIndexStore.Passage.saveOnce(dir, existing)
+    val known = graft.api.DocIndexStore.Passage.load(ss, dir)
       .select(col("h")).distinct().withColumn("__known", lit(1L))
     val stream = readDocuments(ss, d).select(col("doc_id"), col("text"))
     val incoming = stream.filter(col("doc_id") % 2 === 1)
@@ -1801,13 +1721,10 @@ object EventStreams {
       graft.operators.DedupOps.PlantedQuoteDocs.take(1)
         .map { case (i, t) => (off + i, t) }.toDF("doc_id", "text"))
     val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s33")
-    val dir = graft.api.WinnowIndexStore.versionedDir(
-      root, graft.operators.TextOps.WinnowK,
-      graft.operators.TextOps.WinnowW, java.time.LocalDate.ofEpochDay(0))
-    if (!new java.io.File(s"$dir/_SUCCESS").isFile)
-      graft.api.WinnowIndexStore.save(dir,
-        graft.operators.DedupOps.prunedFingerprintIndex(archive))
-    val loaded = graft.api.WinnowIndexStore.load(ss, dir)
+    val dir = graft.api.DocIndexStore.Winnow.versionedDir(
+      root, java.time.LocalDate.ofEpochDay(0))
+    graft.api.DocIndexStore.Winnow.saveOnce(dir, archive)
+    val loaded = graft.api.DocIndexStore.Winnow.load(ss, dir)
       .select(col("fp"), col("doc_id").as("doc_a"))
     // the submission stream: the planted docs staged once as a parquet
     // source dir (the harness's stand-in for the arrival topic)
@@ -1924,16 +1841,12 @@ object EventStreams {
     // and streaming waterfalls probe the identical stores)
     val root = graft.sources.TmpDirs.artifactRoot(ss, d, "c08")
     val date = java.time.LocalDate.ofEpochDay(0)
-    val lshDir = graft.api.LshIndexStore.versionedDir(
-      s"$root/lsh", DedupOps.Bands, date)
-    if (!new java.io.File(s"$lshDir/_SUCCESS").isFile)
-      graft.api.LshIndexStore.save(lshDir,
-        DedupOps.prunedBandIndex(existing))
-    val pasDir = graft.api.PassageIndexStore.versionedDir(
-      s"$root/passage", DedupOps.PassageTokens, date)
-    if (!new java.io.File(s"$pasDir/_SUCCESS").isFile)
-      graft.api.PassageIndexStore.save(pasDir,
-        DedupOps.passageHashIndex(existing))
+    val lshDir = graft.api.DocIndexStore.Lsh.versionedDir(
+      s"$root/lsh", date)
+    graft.api.DocIndexStore.Lsh.saveOnce(lshDir, existing)
+    val pasDir = graft.api.DocIndexStore.Passage.versionedDir(
+      s"$root/passage", date)
+    graft.api.DocIndexStore.Passage.saveOnce(pasDir, existing)
 
     def plantedBatch(f: DataFrame): DataFrame = admissionIncrement(f, off)
 
@@ -1962,7 +1875,7 @@ object EventStreams {
     val nearPairsStream = (
       DedupOps.minhashBandsRowLocal(incoming)
         .select(col("doc_id").as("in_id"), col("band"), col("bucket"))
-        .join(graft.api.LshIndexStore.load(ss, lshDir)
+        .join(graft.api.DocIndexStore.Lsh.load(ss, lshDir)
           .select(col("doc_id").as("src_id"), col("band"), col("bucket")),
           Seq("band", "bucket"))
         .join(inClean, Seq("in_id"))
@@ -1971,7 +1884,7 @@ object EventStreams {
         .select(col("in_id")),
       "append", "s34_near")
     // gate 3 (complete): passage membership roll-up
-    val known = graft.api.PassageIndexStore.load(ss, pasDir)
+    val known = graft.api.DocIndexStore.Passage.load(ss, pasDir)
       .select(col("h")).distinct().withColumn("__known", lit(1L))
     val pasAggStream = (
       DedupOps.passageInstancesFrom(incoming)
@@ -2233,7 +2146,7 @@ object EventStreams {
   /** s27 — STREAMING near-dup probe against the STORED LSH band index
     * (d20 on the live path, r13 verdict ask #6 — the LSH side of s26):
     * the existing corpus's pruned band index is persisted through
-    * [[graft.api.LshIndexStore]] and loaded back; the incoming
+    * [[graft.api.DocIndexStore.Lsh]] and loaded back; the incoming
     * document stream — d11's exact scenario, novel docs plus re-fetched
     * content under fresh crawl ids — computes its band buckets
     * ROW-LOCALLY ([[graft.operators.DedupOps.minhashBandsRowLocal]]:
@@ -2257,16 +2170,13 @@ object EventStreams {
     val off = graft.operators.DedupOps.plantOffset(
       graft.operators.DedupOps.maxIdOf(docs, "doc_id"))
     val existing = docs.filter(col("doc_id") % 2 === 0)
-    val dir = graft.api.LshIndexStore.versionedDir(
+    val dir = graft.api.DocIndexStore.Lsh.versionedDir(
       graft.sources.TmpDirs.artifactRoot(ss, d, "s27"),
-      graft.operators.DedupOps.Bands, java.time.LocalDate.ofEpochDay(0))
-    // base store = the probe's INPUT, billed once per session — the
-    // d20/s32/s38 guard this row alone was missing (optimization r20);
-    // the probe of the LOADED index below stays per-run
-    if (!new java.io.File(s"$dir/_SUCCESS").isFile)
-      graft.api.LshIndexStore.save(dir,
-        graft.operators.DedupOps.prunedBandIndex(existing))
-    val loaded = graft.api.LshIndexStore.load(ss, dir)
+      java.time.LocalDate.ofEpochDay(0))
+    // base store = the probe's INPUT, billed once per session; the
+    // probe of the LOADED index below stays per-run
+    graft.api.DocIndexStore.Lsh.saveOnce(dir, existing)
+    val loaded = graft.api.DocIndexStore.Lsh.load(ss, dir)
       .select(col("doc_id").as("src_id"), col("band"), col("bucket"))
     val stream = readDocuments(ss, d).select(col("doc_id"), col("text"))
     val incoming = stream.filter(col("doc_id") % 2 === 1)
@@ -2390,13 +2300,12 @@ object EventStreams {
     * the manifest is aggregation-only, so the contract is
     * order-independent by construction (s16's associativity stance).
     *
-    * Exactly-once (r12): each micro-batch STAGES its files and
-    * publishes them through [[graft.sources.ExportCommit]]'s atomic
-    * manifest protocol — the formerly-documented crash window between
-    * a batch's append and its checkpoint commit is closed IN-REPO: a
-    * replayed batch id is detected in the manifest and its re-staged
-    * directory deleted, an uncommitted (crashed) attempt is invisible
-    * to the manifest reader. The checkpoint remains the normal-path
+    * Exactly-once: each micro-batch publishes its files through
+    * [[graft.sources.ExportCommit.commitOnce]] — the crash window
+    * between a batch's append and its checkpoint commit is closed
+    * IN-REPO: a replayed batch id is detected in the manifest BEFORE
+    * staging (nothing is rewritten), an uncommitted (crashed) attempt
+    * is invisible to the manifest reader. The checkpoint remains the normal-path
     * replay suppressor; the manifest is the correctness backstop
     * (ExportCommitSpec replays a batch and proves no double count). */
   def streamExportManifest(s: SparkSession, d: String): DataFrame = {
@@ -2410,10 +2319,9 @@ object EventStreams {
     val q = src.writeStream
       .foreachBatch((batch: Dataset[org.apache.spark.sql.Row],
           batchId: Long) => {
-        val staged = graft.sources.ExportCommit.stage(shardsRoot, batchId)
-        batch.write.partitionBy("shard")
-          .option("compression", "gzip").json(staged)
-        graft.sources.ExportCommit.commitBatch(shardsRoot, batchId, staged)
+        graft.sources.ExportCommit.commitOnce(shardsRoot, batchId)(
+          batch.write.partitionBy("shard")
+            .option("compression", "gzip").json(_))
         ()
       })
       .option("checkpointLocation", s"$base/chk")

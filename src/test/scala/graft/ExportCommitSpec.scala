@@ -629,25 +629,25 @@ class ExportCommitSpec extends SparkSpec {
   }
 
   test("janitor loop end-to-end: policy fires, fold, retire — debt zero, serve unchanged, no leak") {
-    import graft.api.{CompactionPolicy, LshIndexStore}
+    import graft.api.{CompactionPolicy, DocIndexStore}
     val docs = graft.sources.Tables.documents(spark, sfTiny)
       .select(org.apache.spark.sql.functions.col("doc_id"),
         org.apache.spark.sql.functions.col("text"))
     val root = java.nio.file.Files.createTempDirectory("janitor").toString
     val baseDir = s"$root/base"
-    LshIndexStore.save(baseDir, graft.operators.DedupOps.prunedBandIndex(
+    DocIndexStore.Lsh.save(baseDir, graft.operators.DedupOps.prunedBandIndex(
       docs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 0)))
     val a = s"$root/append"
     val odd = docs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 1)
-    LshIndexStore.appendBatch(a,
+    DocIndexStore.Lsh.appendBatch(a,
       odd.filter(org.apache.spark.sql.functions.col("doc_id") < 100), 0L)
-    LshIndexStore.appendBatch(a,
+    DocIndexStore.Lsh.appendBatch(a,
       odd.filter(org.apache.spark.sql.functions.col("doc_id") >= 100), 1L)
     // debt reaches the threshold → the janitor folds
     assert(CompactionPolicy.due(a, None, 2, 1).due)
     val out = s"$root/v1"
-    LshIndexStore.compactAppends(spark, baseDir, a, out)
-    val served = LshIndexStore.load(spark, out).count()
+    DocIndexStore.Lsh.compactAppends(spark, baseDir, a, out)
+    val served = DocIndexStore.Lsh.load(spark, out).count()
     assert(served > 0)
     // adoption done → the folded inputs retire; the root tree is GONE
     // (gcStaging alone could never reclaim these manifest-referenced
@@ -658,10 +658,10 @@ class ExportCommitSpec extends SparkSpec {
     // debt is zero again and the adopted artifact serves unchanged
     assert(CompactionPolicy.due(a, None, 2, 1) ===
       CompactionPolicy.Decision(false, 0, 0))
-    assert(LshIndexStore.load(spark, out).count() === served)
+    assert(DocIndexStore.Lsh.load(spark, out).count() === served)
     // the next increment era starts clean: a NEW batch commits into a
     // fresh manifest at version 1
-    LshIndexStore.appendBatch(a,
+    DocIndexStore.Lsh.appendBatch(a,
       odd.filter(org.apache.spark.sql.functions.col("doc_id") < 50), 7L)
     assert(ExportCommit.latest(a).map(_.version) === Some(1))
     assert(ExportCommit.latest(a).map(_.batchIds) === Some(Set(7L)))
@@ -669,31 +669,31 @@ class ExportCommitSpec extends SparkSpec {
 
   test("maintenance day end-to-end: fold → adopt → retire inputs → window-expired artifact retires, pointer serve unbroken") {
     import org.apache.spark.sql.functions.col
-    import graft.api.{CompactionPolicy, LshIndexStore, ServePointer}
+    import graft.api.{CompactionPolicy, DocIndexStore, ServePointer}
     val docs = graft.sources.Tables.documents(spark, sfTiny)
       .select(col("doc_id"), col("text"))
     val root = java.nio.file.Files.createTempDirectory("maint").toString
     val ptr = s"$root/pointer"
     val v1 = s"$root/v1"
-    LshIndexStore.save(v1, graft.operators.DedupOps.prunedBandIndex(
+    DocIndexStore.Lsh.save(v1, graft.operators.DedupOps.prunedBandIndex(
       docs.filter(col("doc_id") % 2 === 0)))
     ServePointer.adopt(ptr, v1)
     // era 1: appends accrue until the policy fires, fold into v2
     val a = s"$root/append"
     val odd = docs.filter(col("doc_id") % 2 === 1)
-    LshIndexStore.appendBatch(a, odd.filter(col("doc_id") < 100), 0L)
+    DocIndexStore.Lsh.appendBatch(a, odd.filter(col("doc_id") < 100), 0L)
     assert(CompactionPolicy.due(a, None, 1, 1).due)
     val v2 = s"$root/v2"
-    LshIndexStore.compactAppends(spark,
+    DocIndexStore.Lsh.compactAppends(spark,
       ServePointer.current(ptr).get, a, v2)
     ServePointer.adopt(ptr, v2)
     assert(ExportCommit.retireRoot(a))
     // v1 is still inside the rollback window (keepLast=2): protected
     assert(ServePointer.retirable(ptr, Seq(v1, v2)) === Nil)
     // era 2: another fold pushes v1 past the window — NOW it retires
-    LshIndexStore.appendBatch(a, odd.filter(col("doc_id") >= 100), 0L)
+    DocIndexStore.Lsh.appendBatch(a, odd.filter(col("doc_id") >= 100), 0L)
     val v3 = s"$root/v3"
-    LshIndexStore.compactAppends(spark,
+    DocIndexStore.Lsh.compactAppends(spark,
       ServePointer.current(ptr).get, a, v3)
     ServePointer.adopt(ptr, v3)
     assert(ExportCommit.retireRoot(a))
@@ -704,7 +704,7 @@ class ExportCommitSpec extends SparkSpec {
     // folds may legally retire more rows per bucket than a one-shot
     // census — doc-level presence is the stable contract here)
     assert(ServePointer.current(ptr) === Some(v3))
-    val served = LshIndexStore.load(spark, ServePointer.current(ptr).get)
+    val served = DocIndexStore.Lsh.load(spark, ServePointer.current(ptr).get)
     assert(served.filter(col("doc_id") % 2 === 0).count() > 0)
     assert(served.filter(col("doc_id") % 2 === 1 &&
       col("doc_id") < 100).count() > 0)
@@ -746,5 +746,48 @@ class ExportCommitSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       CompactionPolicy.due(a, Some(t), 0, 2)
     }
+  }
+
+  test("commitOnce: a replayed batchId never calls the writer; a throwing writer publishes nothing") {
+    val r = root()
+    var calls = 0
+    assert(ExportCommit.commitOnce(r, 0L) { st =>
+      calls += 1; batch(Seq(1L, 2L)).write.json(st)
+    })
+    val v1 = ExportCommit.latest(r).map(_.version)
+    // replay of the committed batch: the fast path skips before staging
+    assert(!ExportCommit.commitOnce(r, 0L) { _ => calls += 1 })
+    assert(calls === 1)
+    assert(ExportCommit.latest(r).map(_.version) === v1)
+    // a writer that fails: no manifest entry, no new manifest version
+    intercept[IllegalStateException] {
+      ExportCommit.commitOnce(r, 1L) { _ =>
+        throw new IllegalStateException("writer failed")
+      }
+    }
+    assert(!ExportCommit.isCommitted(r, 1L))
+    assert(ExportCommit.latest(r).map(_.version) === v1)
+    assert(ExportCommit.latest(r).map(_.batchIds) === Some(Set(0L)))
+  }
+
+  test("the commit protocol lives in one module: src/main stages and commits only through commitOnce") {
+    val main = new java.io.File("src/main/scala")
+    assert(main.isDirectory,
+      s"source tree not found from ${new java.io.File(".").getAbsolutePath}")
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val offenders = sources(main)
+      .filterNot(_.getPath.endsWith("sources/ExportCommit.scala"))
+      .flatMap { f =>
+        import scala.jdk.CollectionConverters._
+        java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("ExportCommit.stage(") ||
+              line.contains("ExportCommit.commitBatch(") =>
+            s"${f.getPath}:${i + 1}"
+        }.toList
+      }
+    assert(offenders.isEmpty,
+      s"hand-rolled stage/commit outside ExportCommit: ${offenders.mkString(", ")}")
   }
 }

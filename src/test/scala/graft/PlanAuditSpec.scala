@@ -481,9 +481,8 @@ class PlanAuditSpec extends SparkSpec {
     // a second full-corpus tokenize. Build once (session-billed), then
     // pin the steady-state plan.
     graft.operators.DedupOps.incrementalPassageDedup(spark, sfTiny).collect()
-    val dir = graft.api.PassageIndexStore.versionedDir(
+    val dir = graft.api.DocIndexStore.Passage.versionedDir(
       graft.sources.TmpDirs.artifactRoot(spark, sfTiny, "d17"),
-      graft.operators.DedupOps.PassageTokens,
       java.time.LocalDate.ofEpochDay(0))
     assert(new java.io.File(s"$dir/_SUCCESS").isFile,
       "d17 did not persist its passage index")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.api.LshIndexStore
+import graft.api.DocIndexStore
 import graft.operators.{BpeOps, DedupOps}
 import org.apache.spark.sql.functions._
 
@@ -12,15 +12,15 @@ class StoredIndexSpec extends SparkSpec {
   test("LshIndexStore round-trips a band index exactly; loud on an absent store") {
     val idx = Seq((1L, 0, 11L), (1L, 1, 12L), (2L, 0, 11L))
       .toDF("doc_id", "band", "bucket")
-    val dir = LshIndexStore.versionedDir(
+    val dir = DocIndexStore.Lsh.versionedDir(
       java.nio.file.Files.createTempDirectory("lsh").toString,
-      8, java.time.LocalDate.ofEpochDay(0))
-    LshIndexStore.save(dir, idx)
-    val got = LshIndexStore.load(spark, dir)
+      java.time.LocalDate.ofEpochDay(0))
+    DocIndexStore.Lsh.save(dir, idx)
+    val got = DocIndexStore.Lsh.load(spark, dir)
       .as[(Long, Int, Long)].collect().sorted.toSeq
     assert(got === Seq((1L, 0, 11L), (1L, 1, 12L), (2L, 0, 11L)))
     intercept[Exception] {
-      LshIndexStore.load(spark,
+      DocIndexStore.Lsh.load(spark,
         java.nio.file.Files.createTempDirectory("lsh2").toString + "/none")
     }
   }
@@ -269,28 +269,27 @@ class StoredIndexSpec extends SparkSpec {
   }
 
   test("LshIndexStore append is exactly-once under replay; compaction is idempotent") {
-    import graft.api.LshIndexStore
     val docs = graft.sources.Tables.documents(spark, sfTiny)
       .select(col("doc_id"), col("text"))
     val root = java.nio.file.Files.createTempDirectory("lsh_append").toString
     val baseDir = s"$root/base"
-    LshIndexStore.save(baseDir,
+    DocIndexStore.Lsh.save(baseDir,
       graft.operators.DedupOps.prunedBandIndex(
         docs.filter(col("doc_id") % 2 === 0)))
     val batch = docs.filter(col("doc_id") % 2 === 1 && col("doc_id") < 100)
-    LshIndexStore.appendBatch(s"$root/a", batch, 0L)
-    val n1 = LshIndexStore.committedAppends(spark, s"$root/a").count()
+    DocIndexStore.Lsh.appendBatch(s"$root/a", batch, 0L)
+    val n1 = DocIndexStore.Lsh.committedAppends(spark, s"$root/a").count()
     assert(n1 > 0)
-    LshIndexStore.appendBatch(s"$root/a", batch, 0L) // replay: skipped
-    assert(LshIndexStore.committedAppends(spark, s"$root/a").count() === n1)
-    LshIndexStore.compactAppends(spark, baseDir, s"$root/a", s"$root/out")
-    val c1 = LshIndexStore.load(spark, s"$root/out").count()
-    LshIndexStore.compactAppends(spark, baseDir, s"$root/a", s"$root/out2")
-    assert(LshIndexStore.load(spark, s"$root/out2").count() === c1)
+    DocIndexStore.Lsh.appendBatch(s"$root/a", batch, 0L) // replay: skipped
+    assert(DocIndexStore.Lsh.committedAppends(spark, s"$root/a").count() === n1)
+    DocIndexStore.Lsh.compactAppends(spark, baseDir, s"$root/a", s"$root/out")
+    val c1 = DocIndexStore.Lsh.load(spark, s"$root/out").count()
+    DocIndexStore.Lsh.compactAppends(spark, baseDir, s"$root/a", s"$root/out2")
+    assert(DocIndexStore.Lsh.load(spark, s"$root/out2").count() === c1)
     // empty manifest folds to exactly the (re-censused) base
-    LshIndexStore.compactAppends(spark, baseDir, s"$root/none", s"$root/out3")
-    assert(LshIndexStore.load(spark, s"$root/out3").count() ===
-      LshIndexStore.load(spark, baseDir).count())
+    DocIndexStore.Lsh.compactAppends(spark, baseDir, s"$root/none", s"$root/out3")
+    assert(DocIndexStore.Lsh.load(spark, s"$root/out3").count() ===
+      DocIndexStore.Lsh.load(spark, baseDir).count())
   }
 
   test("d25 compacted probe drops exactly the tombstoned sources (selective delete)") {
@@ -303,79 +302,84 @@ class StoredIndexSpec extends SparkSpec {
       "takedown through LSH compaction lost survivors or kept deleted sources")
     // the compacted artifact physically lacks every tombstoned doc row
     val root = graft.sources.TmpDirs.artifactRoot(spark, sfTiny, "d25")
-    val out = graft.api.LshIndexStore.load(spark,
-      graft.api.LshIndexStore.versionedDir(s"$root/compacted",
-        graft.operators.DedupOps.Bands, java.time.LocalDate.ofEpochDay(0)))
+    val out = graft.api.DocIndexStore.Lsh.load(spark,
+      graft.api.DocIndexStore.Lsh.versionedDir(s"$root/compacted",
+        java.time.LocalDate.ofEpochDay(0)))
     assert(out.filter(col("doc_id") < 100).count() === 0L)
   }
 
   test("PassageIndexStore round-trip + append exactly-once + idempotent compaction") {
-    import graft.api.PassageIndexStore
     val docs = graft.sources.Tables.documents(spark, sfTiny)
       .select(col("doc_id"), col("text"))
     val root = java.nio.file.Files.createTempDirectory("pass_store").toString
     val baseDir = s"$root/base"
     val baseIdx = graft.operators.DedupOps.passageHashIndex(
       docs.filter(col("doc_id") % 2 === 0))
-    PassageIndexStore.save(baseDir, baseIdx)
+    DocIndexStore.Passage.save(baseDir, baseIdx)
     // lossless round-trip of the (doc_id, h) relation
     val want = baseIdx.collect().map(r => (r.getLong(0), r.getString(1)))
       .sortBy(identity).toSeq
-    val got = PassageIndexStore.load(spark, baseDir).collect()
+    val got = DocIndexStore.Passage.load(spark, baseDir).collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(identity).toSeq
     assert(got === want)
     // append is exactly-once under batchId replay
     val batch = docs.filter(col("doc_id") % 2 === 1 && col("doc_id") < 100)
-    PassageIndexStore.appendBatch(s"$root/a", batch, 0L)
-    val n1 = PassageIndexStore.committedAppends(spark, s"$root/a").count()
+    DocIndexStore.Passage.appendBatch(s"$root/a", batch, 0L)
+    val n1 = DocIndexStore.Passage.committedAppends(spark, s"$root/a").count()
     assert(n1 > 0)
-    PassageIndexStore.appendBatch(s"$root/a", batch, 0L) // replay: skipped
-    assert(PassageIndexStore.committedAppends(spark, s"$root/a").count() === n1)
+    DocIndexStore.Passage.appendBatch(s"$root/a", batch, 0L) // replay: skipped
+    assert(DocIndexStore.Passage.committedAppends(spark, s"$root/a").count() === n1)
     // compaction is idempotent; empty manifest folds to exactly the base
-    PassageIndexStore.compactAppends(spark, baseDir, s"$root/a", s"$root/out")
-    val c1 = PassageIndexStore.load(spark, s"$root/out").count()
+    DocIndexStore.Passage.compactAppends(spark, baseDir, s"$root/a", s"$root/out")
+    val c1 = DocIndexStore.Passage.load(spark, s"$root/out").count()
     assert(c1 === want.size + n1)
-    PassageIndexStore.compactAppends(spark, baseDir, s"$root/a", s"$root/out2")
-    assert(PassageIndexStore.load(spark, s"$root/out2").count() === c1)
-    PassageIndexStore.compactAppends(spark, baseDir, s"$root/none", s"$root/out3")
-    assert(PassageIndexStore.load(spark, s"$root/out3").count() === want.size)
+    DocIndexStore.Passage.compactAppends(spark, baseDir, s"$root/a", s"$root/out2")
+    assert(DocIndexStore.Passage.load(spark, s"$root/out2").count() === c1)
+    DocIndexStore.Passage.compactAppends(spark, baseDir, s"$root/none", s"$root/out3")
+    assert(DocIndexStore.Passage.load(spark, s"$root/out3").count() === want.size)
   }
 
-  test("passage/winnow stores are loud on absent and mis-shaped artifacts") {
-    import graft.api.{PassageIndexStore, WinnowIndexStore}
+  test("doc-keyed stores are loud on absent and mis-shaped artifacts") {
     val tmp = java.nio.file.Files.createTempDirectory("loud").toString
-    // absent store: refuse, never serve an empty membership set
-    intercept[Exception] { PassageIndexStore.load(spark, s"$tmp/none") }
-    intercept[Exception] { WinnowIndexStore.load(spark, s"$tmp/none2") }
-    // mis-shaped store (missing the probe key): the require names it
+    // one mis-shaped relation (missing every probe key) serves as both
+    // a bad base artifact and a bad committed append batch
     spark.range(3).selectExpr("id AS doc_id", "id AS wrong")
       .write.parquet(s"$tmp/bad")
-    val e1 = intercept[IllegalArgumentException] {
-      PassageIndexStore.load(spark, s"$tmp/bad")
+    val badRoot = s"$tmp/aroot"
+    graft.sources.ExportCommit.commitOnce(badRoot, 0L)(
+      spark.range(3).selectExpr("id AS doc_id", "id AS wrong").write.parquet(_))
+    for ((store, valueCols) <- Seq(
+        (DocIndexStore.Lsh, Seq("band", "bucket")),
+        (DocIndexStore.Passage, Seq("h")),
+        (DocIndexStore.Winnow, Seq("fp")))) {
+      val fam = store.family
+      // absent store: refuse, never serve an empty index
+      intercept[Exception] { store.load(spark, s"$tmp/none_$fam") }
+      // mis-shaped base: the require names the family and the columns
+      val e1 = intercept[IllegalArgumentException] {
+        store.load(spark, s"$tmp/bad")
+      }
+      assert(e1.getMessage.contains(s"$fam index store") &&
+        e1.getMessage.contains(s"missing columns: ${valueCols.mkString(", ")}"),
+        e1.getMessage)
+      // mis-shaped APPEND batch dir: the same loud contract (a batch dir
+      // from an older writer fails HERE, not as an AnalysisException at
+      // the consumer)
+      val e2 = intercept[IllegalArgumentException] {
+        store.committedAppends(spark, badRoot).collect()
+      }
+      assert(e2.getMessage.contains(s"$fam append store") &&
+        e2.getMessage.contains(s"missing columns: ${valueCols.mkString(", ")}"),
+        e2.getMessage)
+      // empty manifest: a typed empty relation in the store's shape
+      val empty = store.committedAppends(spark, s"$tmp/empty_$fam")
+      assert(empty.columns.toSeq === "doc_id" +: valueCols)
+      assert(empty.schema("doc_id").dataType ===
+        org.apache.spark.sql.types.LongType)
+      assert(empty.count() === 0L)
     }
-    assert(e1.getMessage.contains("missing columns") &&
-      e1.getMessage.contains("h"))
-    val e2 = intercept[IllegalArgumentException] {
-      WinnowIndexStore.load(spark, s"$tmp/bad")
-    }
-    assert(e2.getMessage.contains("missing columns") &&
-      e2.getMessage.contains("fp"))
-    // mis-shaped APPEND store: committedAppends carries the same loud
-    // contract (a batch dir from an older writer fails HERE, not as an
-    // AnalysisException at the consumer)
-    val root = s"$tmp/aroot"
-    val staged = graft.sources.ExportCommit.stage(root, 0L)
-    spark.range(3).selectExpr("id AS doc_id", "id AS wrong")
-      .write.parquet(staged)
-    graft.sources.ExportCommit.commitBatch(root, 0L, staged)
-    val e3 = intercept[IllegalArgumentException] {
-      PassageIndexStore.committedAppends(spark, root).collect()
-    }
-    assert(e3.getMessage.contains("missing columns"))
-    val e4 = intercept[IllegalArgumentException] {
-      WinnowIndexStore.committedAppends(spark, root).collect()
-    }
-    assert(e4.getMessage.contains("missing columns"))
+    val tombs = DocIndexStore.committedTombstones(spark, s"$tmp/no_tombs")
+    assert(tombs.columns.toSeq === Seq("doc_id") && tombs.count() === 0L)
   }
 
   test("d17 stored probe and d26 base+appended probe equal the in-session probe") {
@@ -418,9 +422,8 @@ class StoredIndexSpec extends SparkSpec {
       "takedown through passage compaction lost survivors or kept deleted docs")
     // the compacted artifact physically lacks every tombstoned doc row
     val root = graft.sources.TmpDirs.artifactRoot(spark, sfTiny, "d27")
-    val out = graft.api.PassageIndexStore.load(spark,
-      graft.api.PassageIndexStore.versionedDir(s"$root/compacted",
-        graft.operators.DedupOps.PassageTokens,
+    val out = graft.api.DocIndexStore.Passage.load(spark,
+      graft.api.DocIndexStore.Passage.versionedDir(s"$root/compacted",
         java.time.LocalDate.ofEpochDay(0)))
     assert(out.filter(col("doc_id") < 50).count() === 0L)
     assert(out.filter(col("doc_id") >= 50 && col("doc_id") < 400).count() > 0L,
@@ -428,35 +431,34 @@ class StoredIndexSpec extends SparkSpec {
   }
 
   test("WinnowIndexStore append exactly-once; tombstone fold precedes the re-census") {
-    import graft.api.WinnowIndexStore
     val docs = graft.sources.Tables.documents(spark, sfTiny)
       .select(col("doc_id"), col("text"))
     val root = java.nio.file.Files.createTempDirectory("win_store").toString
     val baseDir = s"$root/base"
-    WinnowIndexStore.save(baseDir,
+    DocIndexStore.Winnow.save(baseDir,
       DedupOps.prunedFingerprintIndex(docs.filter(col("doc_id") % 2 === 0)))
     val batch = docs.filter(col("doc_id") % 2 === 1 && col("doc_id") < 100)
-    WinnowIndexStore.appendBatch(s"$root/a", batch, 0L)
-    val n1 = WinnowIndexStore.committedAppends(spark, s"$root/a").count()
+    DocIndexStore.Winnow.appendBatch(s"$root/a", batch, 0L)
+    val n1 = DocIndexStore.Winnow.committedAppends(spark, s"$root/a").count()
     assert(n1 > 0)
-    WinnowIndexStore.appendBatch(s"$root/a", batch, 0L) // replay: skipped
-    assert(WinnowIndexStore.committedAppends(spark, s"$root/a").count() === n1)
+    DocIndexStore.Winnow.appendBatch(s"$root/a", batch, 0L) // replay: skipped
+    assert(DocIndexStore.Winnow.committedAppends(spark, s"$root/a").count() === n1)
     // compaction is idempotent; empty manifest folds to the re-censused base
-    WinnowIndexStore.compactAppends(spark, baseDir, s"$root/a", s"$root/out")
-    val c1 = WinnowIndexStore.load(spark, s"$root/out").count()
-    WinnowIndexStore.compactAppends(spark, baseDir, s"$root/a", s"$root/out2")
-    assert(WinnowIndexStore.load(spark, s"$root/out2").count() === c1)
-    WinnowIndexStore.compactAppends(spark, baseDir, s"$root/none", s"$root/out3")
-    assert(WinnowIndexStore.load(spark, s"$root/out3").count() ===
-      WinnowIndexStore.load(spark, baseDir).count())
+    DocIndexStore.Winnow.compactAppends(spark, baseDir, s"$root/a", s"$root/out")
+    val c1 = DocIndexStore.Winnow.load(spark, s"$root/out").count()
+    DocIndexStore.Winnow.compactAppends(spark, baseDir, s"$root/a", s"$root/out2")
+    assert(DocIndexStore.Winnow.load(spark, s"$root/out2").count() === c1)
+    DocIndexStore.Winnow.compactAppends(spark, baseDir, s"$root/none", s"$root/out3")
+    assert(DocIndexStore.Winnow.load(spark, s"$root/out3").count() ===
+      DocIndexStore.Winnow.load(spark, baseDir).count())
     // tombstones leave the folded artifact physically
     val ids = docs.filter(col("doc_id") % 2 === 0 && col("doc_id") < 50)
       .select(col("doc_id"))
-    WinnowIndexStore.appendTombstones(s"$root/t", ids, 0L)
-    WinnowIndexStore.appendTombstones(s"$root/t", ids, 0L) // replay
-    WinnowIndexStore.compactAppends(spark, baseDir, s"$root/a",
+    DocIndexStore.appendTombstones(s"$root/t", ids, 0L)
+    DocIndexStore.appendTombstones(s"$root/t", ids, 0L) // replay
+    DocIndexStore.Winnow.compactAppends(spark, baseDir, s"$root/a",
       s"$root/out4", Some(s"$root/t"))
-    val out4 = WinnowIndexStore.load(spark, s"$root/out4")
+    val out4 = DocIndexStore.Winnow.load(spark, s"$root/out4")
     assert(out4.filter(col("doc_id") % 2 === 0 && col("doc_id") < 50)
       .count() === 0L)
     assert(out4.filter(col("doc_id") % 2 === 1).count() > 0L,
@@ -484,9 +486,8 @@ class StoredIndexSpec extends SparkSpec {
     assert(got.forall { case (a, b) => a == off + 3 && b == off + 2 })
     // the compacted artifact physically lacks the tombstoned doc's fps
     val root = graft.sources.TmpDirs.artifactRoot(spark, sfTiny, "d29")
-    val out = graft.api.WinnowIndexStore.load(spark,
-      graft.api.WinnowIndexStore.versionedDir(s"$root/compacted",
-        graft.operators.TextOps.WinnowK, graft.operators.TextOps.WinnowW,
+    val out = graft.api.DocIndexStore.Winnow.load(spark,
+      graft.api.DocIndexStore.Winnow.versionedDir(s"$root/compacted",
         java.time.LocalDate.ofEpochDay(0)))
     assert(out.filter(col("doc_id") === off + 0L).count() === 0L)
     assert(out.filter(col("doc_id") === off + 3L).count() > 0L)
