@@ -108,8 +108,7 @@ object ModelPipeline {
     val countVecs = Featurize.countVectors(fm.counts, fm.vocab,
       fm.vocabTerms.length)
     val updated = LdaSplitter.split(
-      fm.docTerms, countVecs,
-      fm.assignments.select(col("doc_id"), col("cluster")),
+      countVecs, fm.assignments.select(col("doc_id"), col("cluster")),
       scores, fm.vocabTerms, params)
     // materialize once: every downstream consumer (top terms, coherence,
     // merge centers, stats, labels) re-reads the split assignments, and
