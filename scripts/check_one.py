@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
-"""Compare RunOne output (one parquet dir + dumped .sql per query)
+"""Compare `graft.Tool run` output (one parquet dir + dumped .sql per query)
 against DuckDB — the per-query twin of check.py.
-Usage: python3 scripts/check_one.py [sfDir] [runOneOut]
+Usage: python3 scripts/check_one.py [sfDir] [toolRunOut]
 """
 import glob
 import os

@@ -86,7 +86,7 @@ e29_quantizer_forget,e30_pq_forget,s44_stream_model_flip"
 
 echo "== synthesizing ${MULT}x corpus from $BASE into $BIG =="
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" sbt -batch \
-  "runMain graft.Synth $BASE $BIG $MULT" 2>&1 | tail -1
+  "runMain graft.Tool synth $BASE $BIG $MULT" 2>&1 | tail -1
 
 echo "== running the invariant-row gate at ${MULT}x =="
 rm -rf "$OUT"

@@ -7,7 +7,7 @@
 # skew mode: sources reassigned by a deterministic zipf(1) draw; a
 # mult*100-doc text-identical boilerplate cluster drives its shared
 # band buckets ~100x past the caps), prints the guard-engagement
-# diagnostic (graft.SkewDiag — which buckets the LSH guards drop,
+# diagnostic (graft.Tool skew — which buckets the LSH guards drop,
 # which sources the domain cap truncates), and runs the dedup/packing
 # rows whose oracles hold under ANY distribution.
 #
@@ -18,7 +18,7 @@
 #     candidate path, under a documented precondition of
 #     < MaxBucketSize/2 near-identical docs. The skew corpus violates
 #     that precondition ON PURPOSE — the hot cluster's buckets are
-#     degenerate and the guard DROPS them (that is its job; SkewDiag
+#     degenerate and the guard DROPS them (that is its job; Tool skew
 #     names the drop). Running those rows here would grade the guard's
 #     correct behavior as a miss.
 #   - c03_source_card: the zipf regrouping makes one source's
@@ -53,11 +53,11 @@ p16_export_maintenance"
 
 echo "== synthesizing skewed ${MULT}x corpus from $BASE into $BIG =="
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" sbt -batch \
-  "runMain graft.Synth $BASE $BIG $MULT skew" 2>&1 | tail -1
+  "runMain graft.Tool synth $BASE $BIG $MULT skew" 2>&1 | tail -1
 
 echo "== skew-guard engagement diagnostic =="
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" sbt -batch \
-  "runMain graft.SkewDiag $BIG" 2>&1 | grep -o '{"banded_rows".*}' || true
+  "runMain graft.Tool skew $BIG" 2>&1 | grep -o '{"banded_rows".*}' || true
 
 echo "== running the skew-tolerant dedup/packing rows at ${MULT}x-skew =="
 rm -rf "$OUT"

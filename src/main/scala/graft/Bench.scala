@@ -1,148 +1,114 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 object Bench {
 
-  /** One query's aggregated sweep stats: (name, median, min, max,
-    * firstSuccessful, failedRuns, memoHits, memoMisses,
-    * firstShuffleRead, firstShuffleWrite, steadyShuffleRead,
-    * steadyShuffleWrite) — shuffle volumes in bytes. */
-  private[graft] type QueryStats =
-    (String, Double, Double, Double, Double, Int, Long, Long,
-      Long, Long, Long, Long)
-
-  /** Per-stage shuffle-volume tally (r18 verdict ask #5): the plan-shape
-    * pins can't see a same-shape 10× shuffle-BYTES regression, and the
-    * memo/footprint sections carry no bytes. Stage-completion metrics
-    * accumulate here; Bench diffs the counters at query boundaries —
-    * the artifact then carries per-query shuffle read/write volume,
-    * diffable round over round. */
-  private[graft] final class ShuffleTally
-      extends org.apache.spark.scheduler.SparkListener {
-    private val read = new java.util.concurrent.atomic.AtomicLong()
-    private val write = new java.util.concurrent.atomic.AtomicLong()
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = e.stageInfo.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        ()
-      }
-    }
-    def snapshot(): (Long, Long) = (read.get, write.get)
+  /** One query's aggregated sweep stats; shuffle volumes in bytes. The
+    * `first` slot is the first successful run; a failed query carries
+    * -1.0 in every time slot. */
+  private[graft] final case class QueryStats(name: String, median: Double,
+      min: Double, max: Double, first: Double, failedRuns: Int,
+      memoHits: Long, memoMisses: Long,
+      firstShuffleRead: Long, firstShuffleWrite: Long,
+      steadyShuffleRead: Long, steadyShuffleWrite: Long) {
+    def ok: Boolean = median >= 0
+    def steadyShuffle: Long = steadyShuffleRead + steadyShuffleWrite
   }
 
-  /** Assemble the artifact line (r17 verdict ask #5 — self-diagnosing:
-    * the r17 driver sweep showed a 12× m-family blowup that could not
-    * be adjudicated from the artifact because the memo hit/miss and
-    * family-boundary footprints lived on stderr, which the driver's
-    * stdout tail doesn't capture. The JSON now carries both: an
-    * anomalous sweep names its own cause — memo rebuild vs environment
-    * pressure). Pure function so the artifact schema is spec-testable
-    * without running a sweep. */
+  /** A query moving more than this through the shuffle per steady-state
+    * run is named by the artifact's shuffle canary. */
+  private[graft] val ShuffleEnvelopeBytes: Long = 1L << 30
+
+  /** Assemble the full artifact line. It carries the memo hit/miss and
+    * family-boundary footprint sections so an anomalous sweep names its
+    * own cause (memo rebuild vs environment pressure) from the artifact
+    * alone. Pure function so the schema is spec-testable without a
+    * sweep. */
   private[graft] def renderLine(
       results: Seq[QueryStats],
       footprints: Seq[(String, String, Map[String, Long])],
       runsPerQuery: Int, compiled: Long, cacheMax: Long,
-      sfDir: String, shuffleEnvelopeBytes: Long = 1L << 30): String = {
-    val failed = results.collect {
-      case (k, v, _, _, _, _, _, _, _, _, _, _) if v < 0 => "\"" + k + "\"" }
-    // intermittent crashes (some-but-not-all runs failed) must stay
-    // distinguishable in the metric line even though a median exists
-    val flaky = results
-      .collect { case (k, v, _, _, _, nf, _, _, _, _, _, _)
-          if v >= 0 && nf > 0 => "\"" + k + "\":" + nf }
-      .mkString("{", ",", "}")
-    val qs = results.map { case (k, v, _, _, _, _, _, _, _, _, _, _) =>
-      "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val spread = results.map { case (k, _, lo, hi, _, _, _, _, _, _, _, _) =>
-      "\"" + k + "\":[" + lo + "," + hi + "]" }.mkString("{", ",", "}")
-    // memo deltas only where a query touched the memo at all — a
-    // 213-query sweep's artifact stays readable, and an m-family run
-    // whose miss count is nonzero on a LATER-than-first run is the
-    // rebuild signature the r17 adjudication needed
+      sfDir: String): String = {
+    val spread = results.map(r =>
+      s""""${r.name}":[${r.min},${r.max}]""").mkString("{", ",", "}")
+    // memo deltas only where a query touched the memo at all, so a
+    // full-registry artifact stays readable; a miss on a later-than-
+    // first run is the rebuild signature
     val memo = results
-      .collect { case (k, _, _, _, _, _, h, m, _, _, _, _) if h + m > 0 =>
-        s""""$k":{"hit":$h,"miss":$m}""" }
+      .collect { case r if r.memoHits + r.memoMisses > 0 =>
+        s""""${r.name}":{"hit":${r.memoHits},"miss":${r.memoMisses}}""" }
       .mkString("{", ",", "}")
-    // shuffle volumes (r18 ask #5): [first-run read, first-run write,
-    // steady-state read, steady-state write] in BYTES, only where a
-    // query shuffled at all — first vs steady splits a shared build's
-    // shuffle from the query's own, the round-over-round diff of the
-    // steady columns is the same-shape-regression detector
+    // [first-run read, first-run write, steady read, steady write] bytes,
+    // only where a query shuffled at all: first vs steady splits a
+    // shared build's shuffle from the query's own, and the steady
+    // columns' round-over-round diff catches a same-shape plan moving
+    // more bytes, which the plan pins cannot see
     val shuffle = results
-      .collect { case (k, _, _, _, _, _, _, _, fr, fw, sr, sw)
-          if fr + fw + sr + sw > 0 => s""""$k":[$fr,$fw,$sr,$sw]""" }
+      .collect { case r if r.firstShuffleRead + r.firstShuffleWrite +
+          r.steadyShuffle > 0 =>
+        s""""${r.name}":[${r.firstShuffleRead},${r.firstShuffleWrite},""" +
+          s"""${r.steadyShuffleRead},${r.steadyShuffleWrite}]""" }
       .mkString("{", ",", "}")
-    // the in-run envelope canary: a steady-state run moving more than
-    // the envelope through the shuffle is named HERE, not discovered as
-    // an unexplained wall-clock regression two rounds later
     val over = results
-      .collect { case (k, _, _, _, _, _, _, _, _, _, sr, sw)
-          if sr + sw > shuffleEnvelopeBytes => s""""$k":${sr + sw}""" }
+      .collect { case r if r.steadyShuffle > ShuffleEnvelopeBytes =>
+        s""""${r.name}":${r.steadyShuffle}""" }
       .mkString("{", ",", "}")
     val shuffleCanary =
-      s"""{"envelope_bytes":$shuffleEnvelopeBytes,"over":$over,""" +
+      s"""{"envelope_bytes":$ShuffleEnvelopeBytes,"over":$over,""" +
         s""""ok":${over == "{}"}}"""
     val fps = footprints.map { case (fam, at, m) =>
       s"""{"family":"$fam","at":"$at",""" +
         m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }
           .mkString(",") + "}"
     }.mkString("[", ",", "]")
-    val total = results.collect {
-      case (_, v, _, _, _, _, _, _, _, _, _, _) if v >= 0 => v }.sum
-    val firstTotal = results.collect {
-      case (_, v, _, _, f, _, _, _, _, _, _, _) if v >= 0 => f }.sum
     val cacheOk = compiled <= (cacheMax * 8) / 10
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+    s"""{"metric":"total","value":${total(results)},"unit":"sec",""" +
+      s""""queries":${queries(results)},""" +
       s""""spread":$spread,"runs_per_query":$runsPerQuery,""" +
-      s""""first_total":$firstTotal,"flaky":$flaky,""" +
-      s""""failed":${failed.mkString("[", ",", "]")},""" +
+      s""""first_total":${firstTotal(results)},"flaky":${flaky(results)},""" +
+      s""""failed":${failed(results)},""" +
       s""""memo":$memo,"shuffle":$shuffle,""" +
       s""""shuffle_canary":$shuffleCanary,"footprints":$fps,""" +
       s""""codegen_cache_canary":{"compiled_classes":$compiled,""" +
       s""""cache_max":$cacheMax,"ok":$cacheOk},"sf":"$sfDir"}"""
   }
 
-  /** The stdout metric line (optimization r20, r19 verdict #6): the
-    * FULL artifact grew past ~35 KB (226 queries × five per-query
-    * dicts) and the driver's stdout-tail capture truncated it two
-    * rounds running (BENCH_r18 `parsed: null`). The driver contract
-    * needs exactly {"metric","value","unit","queries",...,"sf"} plus
-    * the failure accounting — print THAT, and keep every diagnostic
-    * section (spread/memo/shuffle/canaries/footprints) in
-    * `bench_out.json`, which Bench writes itself and is the
-    * authoritative committed artifact. Same totals, same per-query
-    * medians, same methodology — only the stdout serialization shrank. */
+  /** The stdout metric line: the contract keys (metric, value, unit,
+    * queries, sf) plus the failure accounting. The full artifact outgrew
+    * a stdout-tail capture, so every diagnostic section (spread, memo, shuffle,
+    * canaries, footprints) lives only in `bench_out.json`. Same totals
+    * and per-query medians as the full line. */
   private[graft] def renderStdoutLine(
-      results: Seq[QueryStats], runsPerQuery: Int, sfDir: String): String = {
-    val failed = results.collect {
-      case (k, v, _, _, _, _, _, _, _, _, _, _) if v < 0 => "\"" + k + "\"" }
-    val flaky = results
-      .collect { case (k, v, _, _, _, nf, _, _, _, _, _, _)
-          if v >= 0 && nf > 0 => "\"" + k + "\":" + nf }
-      .mkString("{", ",", "}")
-    val qs = results.map { case (k, v, _, _, _, _, _, _, _, _, _, _) =>
-      "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val total = results.collect {
-      case (_, v, _, _, _, _, _, _, _, _, _, _) if v >= 0 => v }.sum
-    val firstTotal = results.collect {
-      case (_, v, _, _, f, _, _, _, _, _, _, _) if v >= 0 => f }.sum
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""runs_per_query":$runsPerQuery,"first_total":$firstTotal,""" +
-      s""""flaky":$flaky,"failed":${failed.mkString("[", ",", "]")},""" +
+      results: Seq[QueryStats], runsPerQuery: Int, sfDir: String): String =
+    s"""{"metric":"total","value":${total(results)},"unit":"sec",""" +
+      s""""queries":${queries(results)},""" +
+      s""""runs_per_query":$runsPerQuery,""" +
+      s""""first_total":${firstTotal(results)},""" +
+      s""""flaky":${flaky(results)},"failed":${failed(results)},""" +
       s""""sf":"$sfDir"}"""
-  }
+
+  // failed queries keep their -1.0 sentinel in the medians dict; the
+  // `failed` list is the machine-readable cue
+  private def queries(rs: Seq[QueryStats]): String =
+    rs.map(r => s""""${r.name}":${r.median}""").mkString("{", ",", "}")
+  private def total(rs: Seq[QueryStats]): Double =
+    rs.filter(_.ok).map(_.median).sum
+  private def firstTotal(rs: Seq[QueryStats]): Double =
+    rs.filter(_.ok).map(_.first).sum
+  private def failed(rs: Seq[QueryStats]): String =
+    rs.filterNot(_.ok).map(r => "\"" + r.name + "\"").mkString("[", ",", "]")
+  // intermittent crashes (some-but-not-all runs failed) stay visible
+  // even though a median exists
+  private def flaky(rs: Seq[QueryStats]): String =
+    rs.collect { case r if r.ok && r.failedRuns > 0 =>
+      s""""${r.name}":${r.failedRuns}""" }.mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Harness.sfDirFromEnv
     // Single-sample timings on the ML family were observed ±5× across
-    // runs (dozens of tiny concurrent LDA jobs → scheduler-noise-bound
-    // wall clock). N runs per query, report the MEDIAN: a re-run of the
-    // bench then agrees per query instead of ghost-regressing on noise.
+    // runs (dozens of tiny concurrent jobs → scheduler-noise-bound wall
+    // clock). N runs per query, report the MEDIAN, so a re-run of the
+    // bench agrees per query instead of ghost-regressing on noise.
     val runsPerQuery = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_RUNS") match {
         case Some(v) => scala.util.Try(v.toInt).getOrElse {
@@ -152,46 +118,30 @@ object Bench {
         }
         case None => 3
       })
-    val spark = Sessions.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Session warm-up: one tiny scan + noop write initializes the parquet
-    // reader, file index, codegen compiler, and write path ONCE, so the
-    // one-time bring-up cost isn't billed to whichever query happens to
-    // run first (it's session overhead, not query work). Fatal errors
-    // (OOM, linkage) must propagate — only expected setup noise is eaten.
-    try spark.read.parquet(s"$sfDir/nation.parquet")
-      .write.mode("overwrite").format("noop").save()
-    catch { case NonFatal(e) =>
-      System.err.println(s"[bench] warm-up failed (continuing): $e")
-    }
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
     // Corpus-drift canary (footer reads only): a regenerated corpus is
     // named loudly here as the root cause, not as N opaque per-query
     // -1.0s; the sweep still runs whatever the drift didn't break.
     graft.sources.SchemaCanary.warn(spark, sfDir)
     // Shared Intermediates builds (DFM, K-means fit, IVF index) are
     // deliberately billed to the first query that triggers them: they are
-    // real pipeline work and must stay inside the benchmark total —
-    // excluding them (pre-building before the loop) would understate the
-    // engine's cost. With medians the build lands only in that query's
-    // FIRST run, so the median reflects steady-state cost; the build is
-    // still visible in that query's max and in `first_total` (the sum of
-    // first-run times — the honest cold-start figure for the whole sweep).
-    // Per-query medians are run-order-dependent for the m/f families;
-    // neither total is.
-    // noop sink forces full materialization of every output column
+    // real pipeline work and must stay inside the benchmark total. With
+    // medians the build lands only in that query's FIRST run, so the
+    // median reflects steady-state cost; the build is still visible in
+    // that query's max and in `first_total` (the sum of first-run times,
+    // the cold-start figure for the whole sweep). Per-query medians are
+    // run-order-dependent for the m/f families; neither total is.
+    // The noop sink forces full materialization of every output column
     // (count() would let Catalyst prune the expensive projections).
-    // Failed queries record a -1.0 sentinel and a `failed` list — a crash
-    // must be distinguishable from a fast query in the metric line.
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       val n = s.size
       if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
     }
-    // Storage/heap footprint at family boundaries — the
-    // instrumentation that localizes any future sweep-pollution
-    // regression to the family that accumulated the state. Recorded
-    // INTO the artifact (r17 ask #5), echoed to stderr for humans.
+    // Storage/heap footprint at family boundaries localizes any
+    // sweep-pollution regression to the family that accumulated the
+    // state. Recorded into the artifact, echoed to stderr.
     val footprints = scala.collection.mutable.ArrayBuffer
       .empty[(String, String, Map[String, Long])]
     def recordFootprint(fam: String, at: String): Unit = {
@@ -206,67 +156,23 @@ object Bench {
       System.err.println(s"[bench] family $fam $at: " +
         m.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(" "))
     }
-    // Family-boundary release (registry is name-sorted, so each
-    // one-letter family runs contiguously): once a family's last query
-    // has run, its pinned materializations (d/e-family component labels,
-    // the m-family DFM + fitted models) and the streaming memory sinks
-    // have no future consumer — but left resident they squeeze the later
-    // families' share of the 8 GiB unified pool. r6 evidence: t04/t05/t09
-    // (which pin nothing) ran 3-5x slower at the END of the 107-query
-    // sweep than standalone, at zero source diff. Cost: a family whose
-    // first query re-triggers a shared build re-bills that build to its
-    // own first run (s09 rebuilds the fitted model the m-family had) —
-    // more honest than inheriting a neighbor family's leftovers.
-    def familyBoundary(prevFam: String, fam: String): Unit = {
-      recordFootprint(prevFam, "done")
-      graft.api.Intermediates.releaseAll(spark)
-      graft.streaming.EventStreams.releaseSinks(spark)
-      spark.catalog.clearCache()
-      System.gc()
-      recordFootprint(fam, "start")
-    }
-    // Diagnostic subset filter (A/B arms only — the driver leaves it
-    // unset and sweeps everything): comma-separated name PREFIXES, a
-    // query runs iff its name starts with one of them. Family-scoped
-    // arms ("m", "s09,s20") isolate whether a regression reproduces
-    // without the rest of the sweep's session pressure.
+    // Diagnostic subset filter (unset, the whole registry runs):
+    // comma-separated name PREFIXES, a query runs iff its
+    // name starts with one of them.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .filter(_.nonEmpty)
-    // Shuffle-volume tally (r18 ask #5). Listener delivery is async, so
-    // query-boundary snapshots drain the bus first; the drain helper
-    // reaches the package-private LiveListenerBus reflectively (it is
-    // public in bytecode) and degrades to a no-op if the internal moves
-    // — worst case a trailing stage's bytes land on the neighboring
-    // snapshot, which the order-of-magnitude canary tolerates.
-    val shuffleTally = new ShuffleTally
-    spark.sparkContext.addSparkListener(shuffleTally)
-    val drainBus: () => Unit = {
-      val attempt = scala.util.Try {
-        val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-          .invoke(spark.sparkContext)
-        val m = bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .getOrElse(sys.error("no waitUntilEmpty"))
-        () => { scala.util.Try(m.invoke(bus)); () }
-      }
-      attempt.getOrElse(() => ())
-    }
+    val tally = new Harness.StageTally
+    spark.sparkContext.addSparkListener(tally)
     def shuffleSnapshot(): (Long, Long) = {
-      drainBus()
-      shuffleTally.snapshot()
+      Harness.drainListenerBus(spark)
+      tally.snapshot()
     }
-    val shuffleEnvelopeBytes =
-      sys.env.get("SPARK_GRAFT_SHUFFLE_ENVELOPE_MB")
-        .flatMap(v => scala.util.Try(v.toLong).toOption)
-        .map(_ * 1048576L).getOrElse(1L << 30)
-    var prevFam = ""
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .map { case (name, fn) =>
-      val fam = name.take(1)
-      if (prevFam.nonEmpty && fam != prevFam) familyBoundary(prevFam, fam)
-      prevFam = fam
+    val results = Harness.sweep(spark,
+        name => only.forall(_.exists(name.startsWith)),
+        familyDone = recordFootprint(_, "done"),
+        familyStart = fam => { System.gc(); recordFootprint(fam, "start") }) {
+        (name, fn) =>
       System.err.println(s"[bench] start $name ($runsPerQuery runs)")
       val (memoHits0, memoMisses0) = graft.api.Intermediates.stats()
       val (shr0, shw0) = shuffleSnapshot()
@@ -281,17 +187,7 @@ object Bench {
           }
         val elapsed = (System.nanoTime() - t0) / 1e9 // before cleanup — its cost must not bill to this query
         if (i == 1) firstBoundary = shuffleSnapshot()
-        // Release the query's SCRATCH state before the next run:
-        // localCheckpoint blocks stay pinned until their RDD is GC'd, and
-        // two dozen accumulated checkpoints visibly degrade the later
-        // heavy queries in a shared session. Intermediates-pinned RDDs are
-        // the session-shared materializations (DFM, fitted models) — they
-        // are deliberately kept (unpersisting a localCheckpoint is data
-        // loss, and later queries/runs reuse them by design).
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => graft.api.Intermediates.isPinned(spark, id) }
-          .values.foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
+        Harness.releaseScratch(spark)
         if (ok) elapsed else -1.0
       }
       val good = runs.filter(_ >= 0)
@@ -307,28 +203,21 @@ object Bench {
         if (runsPerQuery > 1)
           ((shr1 - fbr) / (runsPerQuery - 1), (shw1 - fbw) / (runsPerQuery - 1))
         else (firstR, firstW)
-      // first-run slot uses the first SUCCESSFUL run: runs.head is the
-      // -1.0 sentinel when only the first run failed, which would
-      // silently corrupt first_total while the v>=0 guard passes
-      (name,
-        if (good.isEmpty) -1.0 else median(good),
-        if (good.isEmpty) -1.0 else good.min,
-        if (good.isEmpty) -1.0 else good.max,
-        if (good.isEmpty) -1.0 else good.head,
-        runs.count(_ < 0),
-        memoHits1 - memoHits0,
-        memoMisses1 - memoMisses0,
+      // runs.head is the -1.0 sentinel when only the first run failed,
+      // which would corrupt first_total while the ok guard passes
+      def orFailed(f: Seq[Double] => Double) =
+        if (good.isEmpty) -1.0 else f(good)
+      QueryStats(name, orFailed(median), orFailed(_.min), orFailed(_.max),
+        orFailed(_.head), runs.count(_ < 0),
+        memoHits1 - memoHits0, memoMisses1 - memoMisses0,
         firstR, firstW, steadyR, steadyW)
     }
-    if (prevFam.nonEmpty) recordFootprint(prevFam, "done")
-    // Registry-growth canary for the whole-stage-codegen class cache
-    // (r13 verdict ask #5 — the r12 regression was silent for a full
-    // round because nothing watched this): the sweep's total compile
-    // count is the session's distinct-plan working set when the cache
-    // holds (every plan compiles once); a working set past the cache
-    // capacity recompiles on every run and the count balloons past it.
-    // Guard at 80% capacity so the registry outgrowing the cache is
-    // named BEFORE eviction churn starts skewing family timings.
+    // Registry-growth canary for the whole-stage-codegen class cache:
+    // the sweep's total compile count is the session's distinct-plan
+    // working set while the cache holds (every plan compiles once); a
+    // working set past capacity recompiles on every run and the count
+    // balloons. Guard at 80% capacity so the registry outgrowing the
+    // cache is named before eviction churn skews family timings.
     val compiled = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
     val cacheMax = scala.util.Try(
@@ -342,27 +231,23 @@ object Bench {
           s"$cacheMax — the registry's distinct-plan working set is within " +
           "20% of (or past) the cache capacity; raise maxEntries in " +
           "Sessions.configure or late-sweep families will recompile every " +
-          "plan every run (the r12 m-family regression, SCALE.md postmortem)")
-    val shuffleMax = results.map { case (_, _, _, _, _, _, _, _, _, _, sr, sw)
-      => sr + sw }.maxOption.getOrElse(0L)
+          "plan every run (the m-family regression, SCALE.md postmortem)")
+    val shuffleMax = results.map(_.steadyShuffle).maxOption.getOrElse(0L)
     System.err.println(s"[bench] max steady-state shuffle volume " +
       s"${shuffleMax / 1048576} MB vs envelope " +
-      s"${shuffleEnvelopeBytes / 1048576} MB")
-    results.foreach { case (k, _, _, _, _, _, _, _, _, _, sr, sw) =>
-      if (sr + sw > shuffleEnvelopeBytes)
-        System.err.println(s"[bench] SHUFFLE ENVELOPE CANARY: $k moved " +
-          s"${(sr + sw) / 1048576} MB through the shuffle at steady state " +
-          s"— past the ${shuffleEnvelopeBytes / 1048576} MB envelope; a " +
-          "same-shape plan moving 10x the bytes is a regression the plan " +
-          "pins cannot see (check the round-over-round 'shuffle' diff)")
+      s"${ShuffleEnvelopeBytes / 1048576} MB")
+    results.filter(_.steadyShuffle > ShuffleEnvelopeBytes).foreach { r =>
+      System.err.println(s"[bench] SHUFFLE ENVELOPE CANARY: ${r.name} moved " +
+        s"${r.steadyShuffle / 1048576} MB through the shuffle at steady state " +
+        s"— past the ${ShuffleEnvelopeBytes / 1048576} MB envelope; a " +
+        "same-shape plan moving 10x the bytes is a regression the plan " +
+        "pins cannot see (check the round-over-round 'shuffle' diff)")
     }
     val line = renderLine(results, footprints.toSeq, runsPerQuery,
-      compiled, cacheMax, sfDir, shuffleEnvelopeBytes)
-    // Truncation-proofing: both prior rounds' driver artifacts captured
-    // only a tail of stdout and cut the medians dict. The FULL line
-    // (every diagnostic section) goes to the file; stdout gets the
-    // compact contract line (r19 verdict #6) so the driver's tail
-    // window can never truncate mid-dict again. Same numbers.
+      compiled, cacheMax, sfDir)
+    // The full line (every diagnostic section) goes to the file; stdout
+    // gets the compact contract line, which a stdout-tail capture
+    // cannot truncate. Same numbers.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_out.json"), line + "\n")
     catch { case NonFatal(e) =>

@@ -3,19 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Empirical scale probe behind SCALE.md: times the heaviest
-  * document-table queries at the base SF and at a synthetic `mult`x
-  * blow-up, printing the per-query ratio. The blow-up keeps the
-  * workload's SHAPE linear: copy i is the base corpus under a
-  * per-copy Caesar substitution (letters rotated by i, case
-  * preserved, ids offset past the base range), so each copy is
-  * isomorphic to the original — organic near-dup structure is
-  * replicated WITHIN copies, while shingles never collide ACROSS
-  * copies (verbatim copies would plant artificial mult-member
-  * cliques and drive the dedup joins super-linear for data reasons,
-  * not engine reasons).
-  *
-  * Usage: runMain graft.ScaleProbe [baseDir] [bigDir] [mult]
+/** Empirical scale probe behind SCALE.md (`graft.Tool scale`): times
+  * the heaviest document-table queries at the base SF and at a
+  * synthetic `mult`x blow-up, printing the per-query ratio. The blow-up
+  * keeps the workload's SHAPE linear: copy i is the base corpus under a
+  * per-copy Caesar substitution (letters rotated by i, case preserved,
+  * ids offset past the base range), so each copy is isomorphic to the
+  * original — organic near-dup structure is replicated WITHIN copies,
+  * while shingles never collide ACROSS copies (verbatim copies would
+  * plant artificial mult-member cliques and drive the dedup joins
+  * super-linear for data reasons, not engine reasons).
   */
 object ScaleProbe {
 
@@ -23,68 +20,38 @@ object ScaleProbe {
     "c01_corpus_prep", "d10_production_dedup", "t08_winnow_fingerprints",
     "t05_lang_guess", "s09_model_roundtrip", "e10_semantic_dedup",
     "s04_stream_sessions",
-    // r10 additions: the bigram-keyed scoring join (the one shuffle
-    // whose key space grows superlinearly in vocabulary) and the
-    // passage-family reassembly (two uniform hash aggs + per-doc sort)
+    // the bigram-keyed scoring join (the one shuffle whose key space
+    // grows superlinearly in vocabulary) and the passage-family
+    // reassembly (two uniform hash aggs + per-doc sort)
     "t15_bigram_ce", "d16_boilerplate_strip",
-    // r11 additions: the stream-stream interval join — DUAL buffered
-    // state stores, one per input side, the shape s04's single keyed
-    // session store doesn't witness (r10 verdict item 7) — and the
-    // trainer-facing export (gzip-JSONL shard write + read-back
-    // manifest: the literal 100 TB output path)
+    // the stream-stream interval join (dual buffered state stores, a
+    // shape s04's single keyed session store doesn't witness) and the
+    // trainer-facing export (gzip-JSONL shard write + read-back manifest)
     "s07_stream_join", "p11_export_manifest",
-    // r12 additions: the trained language-ID scoring join (trigram
-    // instances ⋈ vocabulary-sized model + doc-partitioned argmax) and
-    // the learned-unit budget draw (tokenizer replay + grouped prefix
-    // scan — the t16 apply surface under the p09 draw shape)
+    // the trained language-ID scoring join (trigram instances ⋈
+    // vocabulary-sized model + doc-partitioned argmax) and the
+    // learned-unit budget draw (tokenizer replay + grouped prefix scan)
     "t17_lang_model", "p13_bpe_budget_draw",
-    // r13 additions: the MOSS winnow-run composition (fingerprint
-    // candidates + pair-scoped gram verification — the guarded-fanout
-    // claim under test) and the stored-band-index probe (batch ⋈
-    // loaded index through a real parquet round-trip)
+    // the MOSS winnow-run composition (fingerprint candidates +
+    // pair-scoped gram verification) and the stored-band-index probe
+    // (batch ⋈ loaded index through a real parquet round-trip)
     "d19_winnow_run_dedup", "d20_stored_neardup",
-    // r14 additions: the IVFADC-R composition (ADC shortlist join +
-    // exact re-rank — the codes-not-embeddings bandwidth claim under
-    // test at scale) and the streaming index append (per-batch
-    // quantizer assignment + manifest commit + union-serve — the live
-    // maintenance path's full write/read cycle)
+    // the IVFADC-R composition (ADC shortlist join + exact re-rank) and
+    // the streaming index append (per-batch quantizer assignment +
+    // manifest commit + union-serve)
     "e19_ivfpq_rerank", "s26_stream_index_append",
-    // r15 additions: the tombstone-compaction fold (anti-join + full
-    // artifact rewrite — the physical-delete cost claim under test)
+    // the tombstone-compaction fold (anti-join + full artifact rewrite)
     // and the query-side streaming serve (stream-static cell probe +
-    // complete-mode argmax — the live retrieval path)
+    // complete-mode argmax)
     "e22_tombstone_compact", "s29_stream_ann_serve",
-    // r16 additions: the streaming query-side PQ/ADC serve (carried
-    // row-local LUT + stream-static codes join + tombstone anti-join —
-    // the compressed live-retrieval path's full cost) and the
-    // passage-index tombstone fold (set-maintenance compaction + the
-    // stored-membership probe — the "index survives 100x without a
-    // corpus re-tokenize" claim under test)
+    // the streaming PQ/ADC serve (carried row-local LUT + stream-static
+    // codes join + tombstone anti-join) and the passage-index tombstone
+    // fold (set-maintenance compaction + stored-membership probe)
     "s31_stream_pq_serve", "d27_passage_tombstone",
-    // r16-continuation additions: the composed admission waterfall —
-    // four store-probe gates + two manifest appends in one row, the
-    // "a crawl increment admits in one pass over the batch" claim —
-    // and its streaming twin (four stream-static probes + two bounded
-    // complete-mode roll-ups on the live path)
+    // the composed admission waterfall (four store-probe gates + two
+    // manifest appends in one row) and its streaming twin (four
+    // stream-static probes + two bounded complete-mode roll-ups)
     "c08_crawl_admission", "s34_stream_admission")
-
-  def main(args: Array[String]): Unit = {
-    val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val bigDir = if (args.length > 1) args(1) else "/tmp/graft_scale_synth"
-    val mult = if (args.length > 2) args(2).toInt else 10
-    // one substitution alphabet of 26 rotations: copy 26 would equal
-    // copy 0 verbatim and plant exactly the artificial cross-copy
-    // cliques the cipher construction exists to avoid
-    require(mult >= 1 && mult <= 26,
-      s"mult must be in [1, 26] (got $mult): rotations repeat past 26")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    synthesize(spark, base, bigDir, mult)
-    probe(spark, base, bigDir, mult)
-    spark.stop()
-  }
 
   /** The skew synthesis' hot-cluster template (≥ 3 tokens ⇒ shingles
     * exist ⇒ every copy lands in the same LSH band buckets) and its
@@ -102,7 +69,7 @@ object ScaleProbe {
     * (documents, embeddings, events) — shared by the timing probe and
     * the 20x correctness-gate receipt (scripts/gate20x.sh).
     *
-    * `skew = true` (r18 verdict ask #6) deforms the DOCUMENT table into
+    * `skew = true` deforms the DOCUMENT table into
     * the adversarial shape the skew guards exist for, while the
     * embeddings/events stay uniform:
     *  - SOURCE skew: every doc's source is reassigned by a
@@ -201,16 +168,12 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$bigDir/events.parquet")
   }
 
-  private def probe(spark: SparkSession, base: String, bigDir: String,
+  private[graft] def probe(spark: SparkSession, base: String, bigDir: String,
       mult: Int): Unit = {
-    def clean(): Unit = {
-      // clean pool before every timed run, same as the bench's family
-      // boundaries — memoized fits must be REBUILT inside the timing
-      // (they are the work being scaled), only JIT/codegen stay warm
-      graft.api.Intermediates.releaseAll(spark)
-      graft.streaming.EventStreams.releaseSinks(spark)
-      spark.catalog.clearCache()
-    }
+    // clean pool before every timed run, as at the bench's family
+    // boundaries: memoized fits must be REBUILT inside the timing (they
+    // are the work being scaled), only JIT/codegen stay warm
+    def clean(): Unit = Harness.releaseFamily(spark)
     def run(dir: String, q: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(q)(spark, dir)
@@ -234,81 +197,5 @@ object ScaleProbe {
       println(f"| $q | x$mult | ${baseT(q)}%.2f | ${bigT(q)}%.2f | " +
         f"${bigT(q) / baseT(q)}%.1f |")
     }
-  }
-}
-
-/** Synthesis-only entry: build the cipher-isomorphic mult-x corpus and
-  * exit (the 20x gate receipt wants the corpus without the timing
-  * probe). Usage: runMain graft.Synth [baseDir] [bigDir] [mult] [skew] */
-object Synth {
-  def main(args: Array[String]): Unit = {
-    val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val bigDir = if (args.length > 1) args(1) else "/tmp/graft_scale_synth"
-    val mult = if (args.length > 2) args(2).toInt else 20
-    val skew = args.length > 3 && args(3) == "skew"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.configure(
-      org.apache.spark.sql.SparkSession.builder().master(s"local[$cpus]"),
-      cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    ScaleProbe.synthesize(spark, base, bigDir, mult, skew)
-    spark.stop()
-  }
-}
-
-/** Skew-guard engagement diagnostic (r18 verdict ask #6's receipt):
-  * measures, on a (skew-)synthesized corpus, exactly which skew guards
-  * the dedup/packing plans ENGAGE — the gate's correctness rows prove
-  * the survivor arithmetic, this names the guards that produced it.
-  * Prints one JSON line:
-  *  - LSH band buckets over the fixed d03 cap and over d10's 3×-union
-  *    scaled cap, with the banded rows those drops retire (the
-  *    all-pairs work the guard refuses to do);
-  *  - the per-source census head (p08's hot-domain scenario) and how
-  *    many sources exceed the 10-doc cap.
-  * Usage: runMain graft.SkewDiag [dir] */
-object SkewDiag {
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.length > 0) args(0) else "/tmp/graft_scale_skew"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.configure(
-      org.apache.spark.sql.SparkSession.builder().master(s"local[$cpus]"),
-      cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.operators.DedupOps
-    val docs = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"))
-    val banded = DedupOps.minhashBands(docs).localCheckpoint()
-    val nBanded = banded.count()
-    val fixedCap = DedupOps.MaxBucketSize.toLong
-    // d10 runs the candidate path over the 3× planted union, whose
-    // bucket loads triple — measure against ITS effective cap so the
-    // receipt names the production guard, not just d03's windowed one
-    val scaledCap3x = 3L * fixedCap
-    val loads = banded.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("n")).localCheckpoint()
-    def over(cap: Long): (Long, Long) = {
-      val r = loads.filter(col("n") > cap)
-        .agg(count(lit(1)), coalesce(sum(col("n")), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val (nOverFixed, rowsOverFixed) = over(fixedCap)
-    val (nOver3x, rowsOver3x) = over(scaledCap3x)
-    val maxLoad = loads.agg(max(col("n"))).head().getLong(0)
-    val srcCensus = graft.sources.Tables.documents(spark, dir)
-      .groupBy(col("source")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc).localCheckpoint()
-    val top = srcCensus.limit(5).collect()
-      .map(r => s""""${r.getString(0)}":${r.getLong(1)}""").mkString(",")
-    val nCapped = srcCensus.filter(col("n") > 10).count()
-    println(
-      s"""{"banded_rows":$nBanded,"max_bucket_load":$maxLoad,""" +
-        s""""buckets_over_fixed_cap_$fixedCap":$nOverFixed,""" +
-        s""""banded_rows_in_dropped_buckets":$rowsOverFixed,""" +
-        s""""buckets_over_3x_cap_$scaledCap3x":$nOver3x,""" +
-        s""""banded_rows_in_3x_dropped":$rowsOver3x,""" +
-        s""""source_census_top5":{$top},""" +
-        s""""sources_over_p08_cap_10":$nCapped}""")
-    spark.stop()
   }
 }

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared SparkSession configuration for the engine's entry points
-  * (Verify, Bench, tests). Local-mode sized, but every knob is the one
-  * you'd set on a real cluster too.
+  * (Bench, Verify, Tool, tests). Local-mode sized, but every knob is the
+  * one you'd set on a real cluster too.
   */
 object Sessions {
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
@@ -16,16 +16,12 @@ object Sessions {
       // The generated-class cache (Janino output) defaults to 100
       // entries — smaller than this library's registry working set.
       // Past that point every additional query family EVICTS earlier
-      // plans and each re-run recompiles from scratch: the r12 sweep
-      // measured the m-family +52% (m04 0.44→1.51 tight-min) purely
-      // from recompilation churn; 4096 restored r11 timings exactly
-      // (SCALE.md r13 postmortem). Sized WITH the registry now that a
-      // canary watches it (Bench + QueryRegistrySpec, r13 verdict ask
-      // #5): r14 measured ~17 compiled classes per registered query,
-      // so 8192 carries the registry past 300 queries at the guarded
-      // 20/query allowance. Cost is driver heap for compiled classes —
-      // tens of MB, standard tuning on a long-lived session serving
-      // many distinct plans.
+      // plans and each re-run recompiles from scratch (the m-family ran
+      // +52% from recompilation churn alone; SCALE.md postmortem). At
+      // ~17 compiled classes per registered query, 8192 carries the
+      // registry past 300 queries at a 20/query allowance; Bench and
+      // QueryRegistrySpec watch it. Cost is driver heap for compiled
+      // classes — tens of MB.
       .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -33,12 +29,5 @@ object Sessions {
       // nano-epoch longs under this flag (Tables.events converts).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-  def local(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = configure(
-      SparkSession.builder().master(s"local[$cpus]").appName(appName), cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  def local(appName: String): SparkSession = Harness.session(Some(appName))
 }

@@ -8,8 +8,7 @@ object Verify {
     * zero-row `__graft_err` sentinel there instead and record the error
     * in `errors`. The sentinel makes the driver's compare record an
     * explicit red row (0 rows, schema mismatch) rather than omitting the
-    * query — a CORRECTNESS file can never silently shrink (r8 dropped 9
-    * failures without a trace). */
+    * query — a correctness file can never silently shrink. */
   private[graft] def dumpOne(spark: SparkSession, name: String,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
       sfDir: String, outDir: String,
@@ -35,47 +34,18 @@ object Verify {
       case Array(a, b)    => (a, b, None)
       case Array(a, b, c) => (a, b, Some(c.split(",").map(_.trim).toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Corpus-drift canary: name post-normalization type drift up front
-    // (the root-cause banner) instead of letting it surface as N
-    // operator-deep AnalysisExceptions (r8: events.ts TIMESTAMP_NTZ
-    // drift broke 9 queries with opaque errors). Warn-and-continue:
-    // unaffected queries still produce green rows; affected ones become
-    // explicit err sentinels below.
+    // instead of letting it surface as N operator-deep
+    // AnalysisExceptions. Warn-and-continue: unaffected queries still
+    // produce green rows; affected ones become explicit err sentinels.
     graft.sources.SchemaCanary.warn(spark, sfDir)
       .foreach(msg => errors += "_schema_canary" -> msg)
-    var prevFam = ""
-    // NAME-SORTED iteration (SparkEntry.queries is a hash Map — bare
-    // foreach visits families interleaved, which would make the boundary
-    // release below fire between most queries and thrash the shared
-    // materializations it exists to protect)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      // Family-boundary release (same rationale as Bench): a finished
-      // family's pinned materializations and streaming memory sinks have
-      // no future consumer in the name-sorted sweep — drop them so the
-      // later families run against a clean pool instead of the
-      // accumulated ballast.
-      val fam = name.take(1)
-      if (prevFam.nonEmpty && fam != prevFam) {
-        graft.api.Intermediates.releaseAll(spark)
-        graft.streaming.EventStreams.releaseSinks(spark)
-        spark.catalog.clearCache()
-      }
-      prevFam = fam
+    Harness.sweep(spark, name => only.forall(_.contains(name))) { (name, fn) =>
       dumpOne(spark, name, fn, sfDir, outDir, errors)
-      // release per-query SCRATCH checkpoint blocks; keep the
-      // Intermediates-pinned shared materializations (see Bench)
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => graft.api.Intermediates.isPinned(spark, id) }
-        .values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      Harness.releaseScratch(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,19 +1,19 @@
 package graft
 
-/** The bench artifact's self-diagnosis sections (r17 verdict ask #5):
-  * the r17 driver sweep showed a 12× m-family anomaly that could not
-  * be adjudicated from bench_out.json because memo behavior and
-  * family-boundary footprints lived on stderr. The artifact now
-  * carries both — these specs pin the schema so a refactor can't
-  * silently drop the diagnosing fields again. */
+/** The bench artifact's self-diagnosis sections: memo behaviour,
+  * shuffle volumes and family-boundary footprints live in
+  * bench_out.json so an anomalous sweep can be diagnosed from the
+  * artifact alone. These specs pin the schema so a refactor can't
+  * silently drop the diagnosing fields. */
 class BenchArtifactSpec extends SparkSpec {
 
   test("renderLine emits memo + shuffle + footprints sections as valid JSON (r17 ask #5 + r18 ask #5)") {
     val results: Seq[Bench.QueryStats] = Seq(
-      ("m07_lda", 1.5, 1.0, 15.0, 15.0, 0, 2L, 3L,
+      Bench.QueryStats("m07_lda", 1.5, 1.0, 15.0, 15.0, 0, 2L, 3L,
         5000000L, 2000000L, 1000000L, 500000L),
-      ("t01_clean", 0.2, 0.1, 0.3, 0.3, 1, 0L, 0L, 0L, 0L, 0L, 0L),
-      ("q22_skew", 0.9, 0.8, 1.0, 1.0, 0, 0L, 0L,
+      Bench.QueryStats("t01_clean", 0.2, 0.1, 0.3, 0.3, 1, 0L, 0L,
+        0L, 0L, 0L, 0L),
+      Bench.QueryStats("q22_skew", 0.9, 0.8, 1.0, 1.0, 0, 0L, 0L,
         3000000000L, 3000000000L, 2000000000L, 1500000000L))
     val fps = Seq(
       ("m", "done", Map("cached_rdds" -> 4L, "storage_mem_mb" -> 100L,
@@ -57,10 +57,12 @@ class BenchArtifactSpec extends SparkSpec {
 
   test("stdout metric line keeps the driver contract and stays compact (r19 verdict #6)") {
     val results: Seq[Bench.QueryStats] = Seq(
-      ("m07_lda", 1.5, 1.0, 15.0, 15.0, 0, 2L, 3L,
+      Bench.QueryStats("m07_lda", 1.5, 1.0, 15.0, 15.0, 0, 2L, 3L,
         5000000L, 2000000L, 1000000L, 500000L),
-      ("t01_clean", 0.2, 0.1, 0.3, 0.3, 1, 0L, 0L, 0L, 0L, 0L, 0L),
-      ("x99_dead", -1.0, -1.0, -1.0, -1.0, 3, 0L, 0L, 0L, 0L, 0L, 0L))
+      Bench.QueryStats("t01_clean", 0.2, 0.1, 0.3, 0.3, 1, 0L, 0L,
+        0L, 0L, 0L, 0L),
+      Bench.QueryStats("x99_dead", -1.0, -1.0, -1.0, -1.0, 3, 0L, 0L,
+        0L, 0L, 0L, 0L))
     val line = Bench.renderStdoutLine(results, runsPerQuery = 3,
       sfDir = "/x/sf0.1")
     import spark.implicits._
@@ -92,7 +94,7 @@ class BenchArtifactSpec extends SparkSpec {
 
   test("shuffle canary is ok when every query stays inside the envelope") {
     val results: Seq[Bench.QueryStats] = Seq(
-      ("q01_agg", 0.5, 0.4, 0.6, 0.6, 0, 0L, 0L,
+      Bench.QueryStats("q01_agg", 0.5, 0.4, 0.6, 0.6, 0, 0L, 0L,
         9000000L, 4000000L, 9000000L, 4000000L))
     val line = Bench.renderLine(results, Seq.empty, runsPerQuery = 1,
       compiled = 10L, cacheMax = 8192L, sfDir = "/x/sf0.01")
@@ -101,7 +103,7 @@ class BenchArtifactSpec extends SparkSpec {
   }
 
   test("ShuffleTally accumulates stage shuffle metrics from a real job") {
-    val tally = new Bench.ShuffleTally
+    val tally = new Harness.StageTally
     spark.sparkContext.addSparkListener(tally)
     try {
       import spark.implicits._
@@ -110,11 +112,7 @@ class BenchArtifactSpec extends SparkSpec {
         .groupBy(($"x" % 97).as("k")).count()
         .write.mode("overwrite").format("noop").save()
       // drain the async bus the same way Bench does
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-        .invoke(spark.sparkContext)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .foreach(_.invoke(bus))
+      Harness.drainListenerBus(spark)
       val (r, w) = tally.snapshot()
       assert(w > 0, "a groupBy job wrote no shuffle bytes into the tally")
       assert(r > 0, "a groupBy job read no shuffle bytes into the tally")

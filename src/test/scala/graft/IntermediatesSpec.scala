@@ -26,9 +26,7 @@ class IntermediatesSpec extends SparkSpec {
       spark.range(100).toDF("x").localCheckpoint()
     }
     // the Bench/Verify cleanup: unpersist everything NOT pinned
-    spark.sparkContext.getPersistentRDDs
-      .filterNot { case (id, _) => Intermediates.isPinned(spark, id) }
-      .values.foreach(_.unpersist(blocking = true))
+    Harness.releaseScratch(spark)
     // pinned blocks intact: the checkpointed relation still evaluates
     // (an unpersisted localCheckpoint would lose its only data copy)
     assert(df.agg(sum(col("x"))).head.getLong(0) === 4950L)
