@@ -42,6 +42,11 @@ object IvfStore extends FoldableStore {
   def isSaved(dir: String): Boolean =
     new java.io.File(s"$dir/assigned/_SUCCESS").isFile
 
+  /** [[save]] unless `dir` already holds a complete index — an input
+    * artifact billed once per session. */
+  def saveOnce(dir: String, index: IvfIndex): Unit =
+    if (!isSaved(dir)) save(dir, index)
+
   /** Persist quantizer + cell-assigned corpus. The quantizer goes
     * through [[org.apache.spark.ml.clustering.GraftKMeansIO]] — exact
     * centers, zero Spark jobs (guide §5: the constant-size model is
@@ -94,6 +99,17 @@ object IvfStore extends FoldableStore {
   def versionedPqDir(base: String, cells: Int, subspaces: Int, codes: Int,
       date: java.time.LocalDate): String =
     s"$base/${cells}_cell_${subspaces}x${codes}_ivfpq_index_$date"
+
+  /** True when `dir` holds a completely written IVF-PQ artifact (the
+    * codes are written last). */
+  def isPqSaved(dir: String): Boolean =
+    new java.io.File(s"$dir/codes/_SUCCESS").isFile
+
+  /** [[savePq]] unless `dir` already holds a complete IVF-PQ artifact. */
+  def savePqOnce(dir: String, index: IvfIndex,
+      pq: graft.operators.EmbeddingOps.PqModel,
+      codes: org.apache.spark.sql.DataFrame): Unit =
+    if (!isPqSaved(dir)) savePq(dir, index, pq, codes)
 
   /** Persist the full IVF-PQ artifact: coarse quantizer + assigned
     * corpus (the [[save]] layout) + per-subspace codebooks + corpus

@@ -66,6 +66,11 @@ object ModelStore {
       .write.mode("overwrite").parquet(s"$dir/vocab")
   }
 
+  /** True when `dir` holds a completely written model (the vocabulary
+    * is written last). */
+  def isSaved(dir: String): Boolean =
+    new java.io.File(s"$dir/vocab/_SUCCESS").isFile
+
   def load(spark: SparkSession, dir: String): Saved = {
     val vocab = spark.read.parquet(s"$dir/vocab")
     val model =

@@ -451,8 +451,8 @@ object MlQueries {
     val dir = tmpModelDir(s, d, "m10", fm.model.getK)
     // the stored model is this row's INPUT (s09 witnesses the round
     // trip; m10 witnesses the LOADED model's predictions) — billed
-    // once per session, m18's own vocab/_SUCCESS guard
-    if (!new java.io.File(s"$dir/vocab/_SUCCESS").isFile)
+    // once per session
+    if (!ModelStore.isSaved(dir))
       ModelStore.save(dir, fm.model, fm.vocab, fm.counts,
         Tables.documents(s, d))
     val saved = ModelStore.load(s, dir)
@@ -852,7 +852,7 @@ object MlQueries {
     * same artifacts through its own pointer): v1 = the kmeans+vocab
     * pipeline fit on documents ∪ the planted marker doc, v2 = the
     * survivor refit (the session's shared fitted pipeline), both
-    * saved under the m18 root with _SUCCESS replay guards. The FITS
+    * saved under the m18 root with replay guards. The FITS
     * run only when a save is actually needed — a caller entering
     * after the artifacts landed (s44 in a sweep where m18 already
     * ran, or any replay) pays two file stats, not two k-means fits.
@@ -866,7 +866,7 @@ object MlQueries {
     val date = java.time.LocalDate.of(2026, 1, 1)
     val d1 = ModelStore.versionedDir(s"$root/model", 15, date)
     val d2 = ModelStore.versionedDir(s"$root/model", 15, date.plusDays(1))
-    if (!new java.io.File(s"$d1/vocab/_SUCCESS").isFile) {
+    if (!ModelStore.isSaved(d1)) {
       val off = DedupOps.plantOffset(DedupOps.maxIdOf(docs, "doc_id"))
       val nDocs = docs.count().toInt
       // built as an expression over range(1), not a driver-side
@@ -889,7 +889,7 @@ object MlQueries {
     }
     // ---- the takedown arrives: survivors = union ∖ {planted} = the
     // corpus, so the refit is the session's shared fitted pipeline
-    if (!new java.io.File(s"$d2/vocab/_SUCCESS").isFile) {
+    if (!ModelStore.isSaved(d2)) {
       val fm2 = ModelPipeline.fitted(s, d)
       ModelStore.save(d2, fm2.model, fm2.vocab, fm2.counts, docs)
     }

@@ -385,31 +385,31 @@ object BpeOps {
     (merges.toSeq, sweeps)
   }
 
-  /** Train once per (dataset, nMerges) and share across t16/t18/specs —
-    * the merge table is k-row driver state, exactly what the
-    * Intermediates memo exists for. SHIPS the batched trainer (r17
-    * verdict ask #2): [[trainBpeBatched]] is greedy-PROVABLE —
-    * bit-identical merge tables in strictly fewer sweeps — so every
-    * learned-unit consumer (t16/t18–t23, p13/p14, s23, c05/c06) bills
-    * through the scale path; t16's UNCHANGED DuckDB oracle recomputes
-    * greedy independently, so the equality stays gated per run, and
-    * the t24 spec additionally pins merge-for-merge equality against
-    * [[trainBpe]] directly. */
-  private[graft] def trainedMerges(s: SparkSession, d: String): Seq[MergeRow] =
-    graft.api.Intermediates.memo(s, s"bpe_merges|$d|$NMerges") {
-      trainBpeBatched(sliceWords(Tables.documents(s, d)), NMerges)._1
+  /** The batched trainer's (merge table, sweeps) over one training
+    * slice (doc_id % TrainMod == `residue`), trained once per (dataset,
+    * residue) — the merge table is k-row driver state, exactly what the
+    * Intermediates memo exists for. [[trainBpeBatched]] is
+    * greedy-PROVABLE — bit-identical merge tables in strictly fewer
+    * sweeps — so every learned-unit consumer (t16/t18–t24, p13/p14,
+    * s23, c05/c06) bills through the scale path; t16's DuckDB oracle
+    * recomputes greedy independently, so the equality stays gated per
+    * run, and the t24 spec additionally pins merge-for-merge equality
+    * against [[trainBpe]] directly. */
+  private def trainedSlice(s: SparkSession, d: String,
+      residue: Long): (Seq[MergeRow], Int) =
+    graft.api.Intermediates.memo(s, s"bpe_merges|$d|$NMerges|r$residue") {
+      trainBpeBatched(sliceWords(Tables.documents(s, d), residue), NMerges)
     }
 
-  /** t22's RETRAIN-slice tokenizer (doc_id % TrainMod == `residue`) —
-    * its own memo key, so the shipped tokenizer's materialization can
-    * never stand in for it. Batched for the same reason as
-    * [[trainedMerges]]. */
+  /** The shipped tokenizer: slice 0's merge table. */
+  private[graft] def trainedMerges(s: SparkSession, d: String): Seq[MergeRow] =
+    trainedSlice(s, d, 0L)._1
+
+  /** t22's RETRAIN-slice tokenizer; a residue other than 0 keys its own
+    * slice, so the shipped tokenizer can never stand in for it. */
   private[graft] def retrainedMerges(s: SparkSession, d: String,
       residue: Long): Seq[MergeRow] =
-    graft.api.Intermediates.memo(s, s"bpe_merges|$d|$NMerges|r$residue") {
-      trainBpeBatched(sliceWords(Tables.documents(s, d), residue),
-        NMerges)._1
-    }
+    trainedSlice(s, d, residue)._1
 
   /** Replay a merge table over any (word) relation — the BPE APPLY rule
     * (merges in training order), which handles words the training slice
@@ -426,16 +426,13 @@ object BpeOps {
   /** t24 — the BATCHED trainer under t16's own gate: the merge table
     * [[trainBpeBatched]] learns (several greedy-provable merges per
     * sweep) must be IDENTICAL to the one-merge-per-sweep table, so it
-    * is registered against t16's unchanged oracle — a batching rule
-    * that deviates from greedy semantics by one merge, one count, or
-    * one tie-break breaks this hash. Its own memo key: the shipped
-    * tokenizer's materialization can never stand in for it. */
+    * is registered against t16's oracle — a batching rule that
+    * deviates from greedy semantics by one merge, one count, or one
+    * tie-break breaks this hash — and must have paid no more sweeps
+    * than merges. */
   def bpeBatchedMerges(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (m, sweeps) = graft.api.Intermediates.memo(s,
-      s"bpe_merges_batched|$d|$NMerges") {
-      trainBpeBatched(sliceWords(Tables.documents(s, d)), NMerges)
-    }
+    val (m, sweeps) = trainedSlice(s, d, 0L)
     require(sweeps <= m.size,
       "batched BPE training paid more sweeps than merges — the batch " +
         "guard degenerated below the one-merge-per-sweep baseline")
@@ -492,7 +489,7 @@ object BpeOps {
     // unit of account, AND c05's datasheet columns — it re-ran per
     // call. Keyed by the memoTag so t19's loaded-table twin keeps its
     // own relation (the save/load-drift isolation documented above).
-    graft.api.Intermediates.memo(s, s"${memoTag}_doccounts|$d|$NMerges") {
+    graft.api.Intermediates.memo(s, s"doccounts|$memoTag|$d|$NMerges") {
       Tables.documents(s, d)
         .select(col("doc_id"),
           explode(rawWords(col("text"))).as("word"))
@@ -544,6 +541,12 @@ object BpeOps {
         merged = decodeStr(m.merged)))
       .toDF().coalesce(1).write.mode("overwrite").parquet(dir)
   }
+
+  /** [[saveMerges]] unless `dir` already holds a complete merge table;
+    * `merges` is evaluated only when the save runs. */
+  def saveMergesOnce(s: SparkSession, dir: String)(
+      merges: => Seq[MergeRow]): Unit =
+    if (!new java.io.File(s"$dir/_SUCCESS").isFile) saveMerges(s, merges, dir)
 
   /** Load a merge table in training order. Loud on an empty/absent
     * store — applying zero merges would silently degrade every
@@ -992,8 +995,8 @@ object BpeOps {
     val v1 = s"$root/tok_v1"
     val v2 = s"$root/tok_v2"
     val ptr = s"$root/pointer"
-    if (!new java.io.File(s"$v1/_SUCCESS").isFile) saveMerges(s, vm1, v1)
-    if (!new java.io.File(s"$v2/_SUCCESS").isFile) saveMerges(s, vm2, v2)
+    saveMergesOnce(s, v1)(vm1)
+    saveMergesOnce(s, v2)(vm2)
     val v2n = java.nio.file.Paths.get(v2).toAbsolutePath.normalize().toString
     if (!ServePointer.current(ptr).contains(v2n))
       ServePointer.adopt(ptr, v1) // replays keep the flip (s38 posture)

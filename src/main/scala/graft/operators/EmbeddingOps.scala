@@ -435,29 +435,80 @@ object EmbeddingOps {
               cells: Int, probes: Int): DataFrame =
     ivfTopK(ivfBuild(emb, cells), queryId, k, probes)
 
-  /** e05 query wrapper over the corpus table (rows-only: k-means cells).
-    * The index is a session-shared materialization ([[graft.api.Intermediates]])
-    * — built once per dataset, probed per query, exactly the
-    * build-offline/probe-online IVF deployment shape. Note the test
-    * corpus is isotropic noise — real recall behavior is pinned by the
-    * planted-structure fixture in SkewOpsSpec. */
   /** Corpus row count, memoized per dataset alongside the index memos:
     * quantizer sizing needs it BEFORE the build (the memo key pins the
     * cell count the index was actually built with), but repeat probes
-    * must not pay a sizing scan per call (ADVICE r8). */
+    * must not pay a sizing scan per call. */
   private[graft] def corpusCount(s: SparkSession, d: String): Long =
     graft.api.Intermediates.memo(s, s"embcount|$d") {
       Tables.embeddings(s, d).count()
     }
 
-  def annIvf(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val cells = ivfCellsFor(corpusCount(s, d))
-    val index = graft.api.Intermediates.memo(s, s"ivf|$d|$cells") {
-      ivfBuild(emb, cells)
-    }
-    ivfTopK(index, queryId = 0, k = 20)
+  /** Which relation a session-shared IVF index is built over: the
+    * corpus itself plus `copies − 1` id-shifted identical copies (the
+    * i-th at +i·off, disjoint ranges since corpus ids < off).
+    *
+    *  - [[Geometry.Base]]: the corpus — the deployment posture, where
+    *    planted rows arrive later as appends.
+    *  - [[Geometry.Planted]]: corpus ∪ one twin — the closed-form
+    *    recall and serve rows: every query's top-1 is its twin.
+    *  - [[Geometry.DoublePlanted]]: corpus ∪ two twins — the takedown
+    *    rows. Both twins score cosine 1.0 and the (cos desc, vec_id
+    *    asc) tie-break picks the first, so a takedown of the first
+    *    twin must surface the second at exactly +2·off: an ignored
+    *    tombstone returns +off, an over-delete an organic id, and both
+    *    break the hash.
+    *
+    * The quantizer is sized from the indexed row count, copies · n. */
+  sealed abstract class Geometry(val tag: String, val copies: Int) {
+    def cellsFor(n: Long): Int = ivfCellsFor(copies * n)
+
+    /** By-name `off`: the base geometry plants nothing, so its build
+      * never runs the max-id probe. */
+    private[operators] def indexed(base: DataFrame, off: => Long): DataFrame =
+      (1 until copies).foldLeft(base) { (u, i) =>
+        u.unionByName(base.select((col("vec_id") + lit(i * off)).as("vec_id"),
+          col("embedding")))
+      }
   }
+
+  object Geometry {
+    case object Base extends Geometry("base", 1)
+    case object Planted extends Geometry("planted", 2)
+    case object DoublePlanted extends Geometry("double", 3)
+  }
+
+  /** A dataset's IVF index under one [[Geometry]]. The corpus count
+    * and so `cells` are read on construction; the plant offset and the
+    * build resolve on first use, so a row that never reads them pays
+    * neither the max-id probe nor the build. */
+  final class SharedIndex private[operators] (s: SparkSession, d: String,
+      geometry: Geometry) {
+    private val base =
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+    val n: Long = corpusCount(s, d)
+    val rows: Long = geometry.copies * n
+    val cells: Int = geometry.cellsFor(n)
+    lazy val off: Long = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
+    lazy val index: IvfIndex =
+      graft.api.Intermediates.memo(s, s"ivf|${geometry.tag}|$d|$cells") {
+        ivfBuild(geometry.indexed(base, off), cells)
+      }
+  }
+
+  /** The one session-shared IVF build: every row that probes, saves or
+    * serves an index of `g` over `d` reads this memo. */
+  def sharedIndex(s: SparkSession, d: String, g: Geometry): SharedIndex =
+    new SharedIndex(s, d, g)
+
+  /** e05 query wrapper over the corpus table (rows-only: k-means cells).
+    * The index is the session-shared base-geometry build — built once
+    * per dataset, probed per query, exactly the build-offline/
+    * probe-online IVF deployment shape. Note the test corpus is
+    * isotropic noise — real recall behavior is pinned by the
+    * planted-structure fixture in SkewOpsSpec. */
+  def annIvf(s: SparkSession, d: String): DataFrame =
+    ivfTopK(sharedIndex(s, d, Geometry.Base).index, queryId = 0, k = 20)
 
   /** e05 — IVF probe BOUND contract (closes the last rows-only gap the
     * r9 verdict named): the deterministic exact side is e01's
@@ -481,11 +532,7 @@ object EmbeddingOps {
     * q21/q33/d14 discipline. The raw probe API remains [[annIvf]];
     * both run the same memoized index, so the sweep builds it once. */
   def annIvfBound(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val cells = ivfCellsFor(corpusCount(s, d))
-    val index = graft.api.Intermediates.memo(s, s"ivf|$d|$cells") {
-      ivfBuild(emb, cells)
-    }
+    val index = sharedIndex(s, d, Geometry.Base).index
     val probed = probedCells(index, queryId = 0, IvfProbes)
     val found = ivfTopK(index, queryId = 0, k = 20)
       .select(col("vec_id"), lit(1).as("__found"))
@@ -521,15 +568,8 @@ object EmbeddingOps {
     * self-join, which would be O(n²/cells) at scale). Full DuckDB
     * oracle: one row per corpus vector. */
   def ivfPlantedRecall(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val (union, off) = DedupOps.plantedUnion(base, "vec_id")
-    // memoized like e05's index: the k-means build is the expensive part
-    // and is identical across bench runs. The quantizer is sized from
-    // the UNION row count (2× the corpus) — the relation it indexes.
-    val cells = ivfCellsFor(2L * corpusCount(s, d))
-    val index = graft.api.Intermediates.memo(s, s"ivf_recall|$d|$cells") {
-      ivfBuild(union, cells)
-    }
+    val shared = sharedIndex(s, d, Geometry.Planted)
+    val (index, off) = (shared.index, shared.off)
     val a = index.assigned.filter(col("vec_id") < off)
       .select(col("vec_id").as("a_id"), col("cell").as("a_cell"))
     val b = index.assigned.filter(col("vec_id") >= off)
@@ -581,14 +621,8 @@ object EmbeddingOps {
     * two windows partition by query_id. Nothing data-scale touches
     * the driver — the batch can be arbitrarily large. */
   def annBatchServe(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val (union, off) = DedupOps.plantedUnion(base, "vec_id")
-    val cells = ivfCellsFor(2L * corpusCount(s, d))
-    // the SAME shared index build as e07/e10 (one memo key)
-    val index = graft.api.Intermediates.memo(s, s"ivf_recall|$d|$cells") {
-      ivfBuild(union, cells)
-    }
-    batchServeAgainst(index, off)
+    val shared = sharedIndex(s, d, Geometry.Planted)
+    batchServeAgainst(shared.index, shared.off)
   }
 
   /** The e13 serve plan against an ARBITRARY index — shared verbatim by
@@ -708,23 +742,18 @@ object EmbeddingOps {
     * probe access path — making the candidate equi-join
     * shuffle-free). */
   def annIndexRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val (union, off) = DedupOps.plantedUnion(base, "vec_id")
-    val cells = ivfCellsFor(2L * corpusCount(s, d))
-    val index = graft.api.Intermediates.memo(s, s"ivf_recall|$d|$cells") {
-      ivfBuild(union, cells)
-    }
+    val shared = sharedIndex(s, d, Geometry.Planted)
     val dir = graft.api.IvfStore.versionedDir(
-      indexTmpBase(s, d, "e14"), cells, IndexDate)
-    graft.api.IvfStore.save(dir, index)
-    batchServeAgainst(graft.api.IvfStore.load(s, dir), off)
+      indexTmpBase(s, d, "e14"), shared.cells, IndexDate)
+    graft.api.IvfStore.save(dir, shared.index)
+    batchServeAgainst(graft.api.IvfStore.load(s, dir), shared.off)
   }
 
   /** e15 — INCREMENTAL APPEND to a stored index (d11's
-    * batch-⋈-stored-index posture for the embedding side, r12 verdict
-    * ask #2): a new crawl increment (the id-shifted planted copy) is
-    * assigned to the cells of the LOADED base-corpus index with NO
-    * refit and NO corpus join — the increment streams through the
+    * batch-⋈-stored-index posture for the embedding side): a new crawl
+    * increment (the id-shifted planted copy) is assigned to the cells
+    * of the LOADED base-corpus index with NO refit and NO corpus
+    * join — the increment streams through the
     * loaded quantizer's assignment function ([[toFeatures]] +
     * `model.transform`, a broadcast of the centers under the hood),
     * exactly how the stored rows were assigned at build time. That
@@ -739,30 +768,25 @@ object EmbeddingOps {
     * The index keeps its BUILD-time cell count (sized from the base
     * corpus — the honest incremental posture: appends do not resize
     * the quantizer; re-sharding is a rebuild, d17's distinction).
-    * This is e05's shared stored index (same memo key), not e13's
-    * union-built one — the e13/e14 family proves the serve path,
-    * e15 proves the index UPDATE path.
+    * This is e05's base-geometry index, not e13's union-built one —
+    * the e13/e14 family proves the serve path, e15 proves the index
+    * UPDATE path.
     *
     * 100 TB shape: increment × broadcast centers (cells-sized), one
     * unionByName with the loaded index relation, then the e13 serve
     * plan — the increment never joins the corpus. */
   def annIndexAppend(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val cells = ivfCellsFor(corpusCount(s, d))
-    val index = graft.api.Intermediates.memo(s, s"ivf|$d|$cells") {
-      ivfBuild(base, cells)
-    }
+    val shared = sharedIndex(s, d, Geometry.Base)
     val dir = graft.api.IvfStore.versionedDir(
-      indexTmpBase(s, d, "e15"), cells, IndexDate)
-    // the stored index is the append's INPUT — billed once per session
-    // (s26's guard, the same lifecycle posture); the round-trip rows
-    // e14/e17 keep their per-invocation save+load deliberately
-    if (!new java.io.File(s"$dir/assigned/_SUCCESS").isFile)
-      graft.api.IvfStore.save(dir, index)
+      indexTmpBase(s, d, "e15"), shared.cells, IndexDate)
+    // the stored index is the append's INPUT — billed once per session;
+    // the round-trip rows e14/e17 keep their per-invocation save+load
+    // deliberately
+    graft.api.IvfStore.saveOnce(dir, shared.index)
     val loaded = graft.api.IvfStore.load(s, dir)
-    val (union, off) = DedupOps.plantedUnion(base, "vec_id")
-    val increment = union.filter(col("vec_id") >= off)
-      .select(col("vec_id"), col("embedding"),
+    val off = shared.off
+    val increment = Tables.embeddings(s, d)
+      .select((col("vec_id") + lit(off)).as("vec_id"), col("embedding"),
         toFeatures(col("embedding")).as("features"))
     val appendedRows = loaded.model.transform(increment)
       .select(col("vec_id"), col("embedding"), col("features"),
@@ -907,29 +931,27 @@ object EmbeddingOps {
     * reduction that IS the point of PQ); everything partitions by
     * query_id or the cell key. */
   def annIvfPqServe(s: SparkSession, d: String): DataFrame = {
-    val (index, pq, codes, off) = pqSharedBuild(s, d)
+    val (index, pq, codes, off) = sharedPq(s, d, Geometry.Planted)
     adcServe(index, pq, codes, off)
   }
 
-  /** The shared e16/e17 IVF-PQ build: the e13-family index plus the
-    * memoized codebooks and corpus codes. e17 SAVES these; its serve
-    * side reads only the loaded artifact (the e14/t19 discipline). */
-  private def pqSharedBuild(s: SparkSession, d: String)
+  /** The one session-shared IVF-PQ build over a [[Geometry]]: the
+    * [[sharedIndex]] plus its codebooks and corpus codes, and the plant
+    * offset. The codes are collision-asserted here, their one
+    * production site. Round-trip rows SAVE these; their serve side
+    * reads only the loaded artifact (the e14/t19 discipline). */
+  private[graft] def sharedPq(s: SparkSession, d: String, g: Geometry)
       : (IvfIndex, PqModel, DataFrame, Long) = {
-    val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val (union, off) = DedupOps.plantedUnion(base, "vec_id")
-    val cells = ivfCellsFor(2L * corpusCount(s, d))
-    val index = graft.api.Intermediates.memo(s, s"ivf_recall|$d|$cells") {
-      ivfBuild(union, cells)
-    }
+    val shared = sharedIndex(s, d, g)
+    val (index, off) = (shared.index, shared.off)
     val dim = index.model.clusterCenters.head.size
-    val pq = graft.api.Intermediates.memo(s, s"pq|$d|$PqSubspaces|$PqCodes") {
+    val pq = graft.api.Intermediates.memo(s,
+        s"pq|${g.tag}|$d|$PqSubspaces|$PqCodes") {
       pqTrain(index.assigned, dim)
     }
-    val codes = graft.api.Intermediates.memo(s, s"pqcodes|$d|$PqSubspaces|$PqCodes") {
+    val codes = graft.api.Intermediates.memo(s,
+        s"pqcodes|${g.tag}|$d|$PqSubspaces|$PqCodes") {
       val encoded = pqEncode(index.assigned, pq, dim).localCheckpoint()
-      // write-time collision assert (once per dataset per session —
-      // the memo IS the code-production site for this family)
       assertNoQueryCodeCollisions(encoded, off)
       encoded
     }
@@ -1046,7 +1068,7 @@ object EmbeddingOps {
     * codes relation is the corpus at M small ints per vector — the
     * compressed corpus IS the artifact a PQ serving fleet ships. */
   def annPqRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val (index, pq, codes, off) = pqSharedBuild(s, d)
+    val (index, pq, codes, off) = sharedPq(s, d, Geometry.Planted)
     val dir = graft.api.IvfStore.versionedPqDir(
       indexTmpBase(s, d, "e17"), index.model.getK, PqSubspaces, PqCodes,
       IndexDate)
@@ -1085,17 +1107,12 @@ object EmbeddingOps {
     * centers; the write is the bucketed rewrite a version mint always
     * costs. Janitor cadence, never the serve path. */
   def annIndexRebuild(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val (union, off) = DedupOps.plantedUnion(base, "vec_id")
-    val cells = ivfCellsFor(2L * corpusCount(s, d))
-    val index = graft.api.Intermediates.memo(s, s"ivf_recall|$d|$cells") {
-      ivfBuild(union, cells)
-    }
+    val shared = sharedIndex(s, d, Geometry.Planted)
+    val (cells, off) = (shared.cells, shared.off)
     val root = indexTmpBase(s, d, "e26")
     val v1 = graft.api.IvfStore.versionedDir(root, cells, IndexDate)
     // the v1 artifact is the rebuild's INPUT, not its work (e23's billing)
-    if (!new java.io.File(s"$v1/assigned/_SUCCESS").isFile)
-      graft.api.IvfStore.save(v1, index)
+    graft.api.IvfStore.saveOnce(v1, shared.index)
     val loaded = graft.api.IvfStore.load(s, v1)
     // the rebuild itself: refit at 2x the cells over the STORED vectors
     val newCells = math.min(IvfMaxCells, 2 * cells)
@@ -1144,20 +1161,17 @@ object EmbeddingOps {
     * cadence — never on the serve path; the serve side is e13's plan
     * against one relation again. */
   def annIndexCompact(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val cells = ivfCellsFor(corpusCount(s, d))
-    val index = graft.api.Intermediates.memo(s, s"ivf|$d|$cells") {
-      ivfBuild(base, cells)
-    }
+    val shared = sharedIndex(s, d, Geometry.Base)
+    val cells = shared.cells
     val root = indexTmpBase(s, d, "e20")
     val baseDir = graft.api.IvfStore.versionedDir(
       s"$root/base", cells, IndexDate)
     // base store = the compactor's input, billed once (e23's guard)
-    if (!new java.io.File(s"$baseDir/assigned/_SUCCESS").isFile)
-      graft.api.IvfStore.save(baseDir, index)
+    graft.api.IvfStore.saveOnce(baseDir, shared.index)
     val loaded = graft.api.IvfStore.load(s, baseDir)
-    val (union, off) = DedupOps.plantedUnion(base, "vec_id")
-    val inc = union.filter(col("vec_id") >= off)
+    val off = shared.off
+    val inc = Tables.embeddings(s, d)
+      .select((col("vec_id") + lit(off)).as("vec_id"), col("embedding"))
     val appendRoot = s"$root/append"
     graft.api.IvfStore.appendBatch(appendRoot,
       inc.filter(col("vec_id") % 2 === 0), 0L, loaded.model)
@@ -1167,33 +1181,6 @@ object EmbeddingOps {
       s"$root/compacted", cells, IndexDate)
     graft.api.IvfStore.compactAppends(s, baseDir, appendRoot, outDir)
     batchServeAgainst(graft.api.IvfStore.load(s, outDir), off)
-  }
-
-  /** The BASE-corpus IVF-PQ stack (s28's deployment posture: quantizer
-    * + codebooks trained on the shipped corpus, not the planted union —
-    * the union side arrives later as appends): shared by e23's
-    * compaction row and usable by any batch-side consumer of the
-    * base-posture artifact. Codes are collision-asserted at production
-    * (write-time, r14 verdict item 6). */
-  private[graft] def pqBaseBuild(s: SparkSession, d: String)
-      : (IvfIndex, PqModel, DataFrame, Long) = {
-    val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val off = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
-    val cells = ivfCellsFor(corpusCount(s, d))
-    val index = graft.api.Intermediates.memo(s, s"ivf|$d|$cells") {
-      ivfBuild(base, cells)
-    }
-    val dim = index.model.clusterCenters.head.size
-    val pq = graft.api.Intermediates.memo(s, s"pq_base|$d|$PqSubspaces|$PqCodes") {
-      pqTrain(index.assigned, dim)
-    }
-    val codes = graft.api.Intermediates.memo(s,
-        s"pqcodes_base|$d|$PqSubspaces|$PqCodes") {
-      val encoded = pqEncode(index.assigned, pq, dim).localCheckpoint()
-      assertNoQueryCodeCollisions(encoded, off)
-      encoded
-    }
-    (index, pq, codes, off)
   }
 
   /** e23 — PQ-CODES COMPACTION (r14 verdict ask #2, e20's posture for
@@ -1218,7 +1205,7 @@ object EmbeddingOps {
     * (M small ints per vector), janitor cadence; the serve side plans
     * ONE codes relation again instead of the manifest-length union. */
   def annPqCompact(s: SparkSession, d: String): DataFrame = {
-    val (index, pq, codes, off) = pqBaseBuild(s, d)
+    val (index, pq, codes, off) = sharedPq(s, d, Geometry.Base)
     val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val cells = index.model.getK
     val root = indexTmpBase(s, d, "e23")
@@ -1227,8 +1214,7 @@ object EmbeddingOps {
     // the base artifact is the COMPACTOR'S INPUT, not its work — in a
     // deployment it already exists (e17's job); creating it is billed
     // once per session, like the memoized build it ships
-    if (!new java.io.File(s"$baseDir/codes/_SUCCESS").isFile)
-      graft.api.IvfStore.savePq(baseDir, index, pq, codes)
+    graft.api.IvfStore.savePqOnce(baseDir, index, pq, codes)
     val (li, lp, _) = graft.api.IvfStore.loadPq(s, baseDir, PqSubspaces)
     val inc = base.select((col("vec_id") + lit(off)).as("vec_id"),
       col("embedding"))
@@ -1254,22 +1240,8 @@ object EmbeddingOps {
     base.filter(col("vec_id") % (2 * BatchQueryMod) === 0)
       .select((col("vec_id") + lit(off)).as("vec_id"))
 
-  /** base ∪ two id-shifted identical copies (first at +off, second at
-    * +2·off — disjoint ranges since base ids < off). The second copy is
-    * what makes the post-delete serve CLOSED FORM: both copies score
-    * cosine 1.0, the (cos desc, vec_id asc) tie-break picks the first
-    * copy, and a takedown of the first copy's row must surface the
-    * second at exactly +2·off — an ignored tombstone returns +off, an
-    * over-delete returns an organic id, both break the hash. */
-  private[graft] def doublePlantedUnion(base: DataFrame, off: Long): DataFrame =
-    base
-      .unionByName(base.select((col("vec_id") + lit(off)).as("vec_id"),
-        col("embedding")))
-      .unionByName(base.select((col("vec_id") + lit(2 * off)).as("vec_id"),
-        col("embedding")))
-
   /** The e21/e22 oracle: top-1 = the surviving nearest twin, closed
-    * form per query (see [[doublePlantedUnion]]); shared verbatim by
+    * form per query (see [[Geometry.DoublePlanted]]); shared verbatim by
     * the serve-time row and the compaction row so the logical and
     * physical delete paths cannot drift. */
   private[graft] val tombstoneServeSql = {
@@ -1283,10 +1255,10 @@ object EmbeddingOps {
       |ORDER BY query_id""".stripMargin
   }
 
-  /** e21 — tombstone DELETE honored by the ANN SERVE (r14 verdict ask
-    * #1: every store was append-only, and a takedown / GDPR erasure /
-    * recrawl removal — routine at 100 TB — required a full rebuild):
-    * the index over [[doublePlantedUnion]] is persisted and loaded
+  /** e21 — tombstone DELETE honored by the ANN SERVE (without it every
+    * store is append-only, and a takedown / GDPR erasure / recrawl
+    * removal — routine at 100 TB — requires a full rebuild):
+    * the [[Geometry.DoublePlanted]] index is persisted and loaded
     * (e14's artifact posture), a SELECTIVE takedown set — every other
     * query's first twin ([[tombstoneIds]]) — is committed to the
     * tombstone log through ExportCommit's atomic manifest
@@ -1296,25 +1268,22 @@ object EmbeddingOps {
     * — ids-sized anti-join) through the SAME [[batchServeAgainst]]
     * kernel. Closed form per query: the surviving nearest twin — +2·off
     * where the first twin was taken down, +off elsewhere, cosine 1.0
-    * both ways (see [[doublePlantedUnion]] for why each failure mode
-    * breaks the hash). Ref tie: post-hoc mutation of a shipped model is
-    * the reference's own concern (ref 04_cluster_refiner.R:726-774).
+    * both ways (see [[Geometry.DoublePlanted]] for why each failure
+    * mode breaks the hash). Ref tie: post-hoc mutation of a shipped
+    * model is the reference's own concern (ref
+    * 04_cluster_refiner.R:726-774).
     *
     * 100 TB shape: the log is ids-sized (broadcast anti-join on the
     * serve path — zero extra shuffle); the physical fold is e22's
     * compaction job, never the serve path. */
   def annTombstoneServe(s: SparkSession, d: String): DataFrame = {
     val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val off = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
-    val cells = ivfCellsFor(3L * corpusCount(s, d))
-    val index = graft.api.Intermediates.memo(s, s"ivf_tomb|$d|$cells") {
-      ivfBuild(doublePlantedUnion(base, off), cells)
-    }
+    val shared = sharedIndex(s, d, Geometry.DoublePlanted)
+    val off = shared.off
     val root = indexTmpBase(s, d, "e21")
-    val dir = graft.api.IvfStore.versionedDir(root, cells, IndexDate)
+    val dir = graft.api.IvfStore.versionedDir(root, shared.cells, IndexDate)
     // the artifact is the serve's INPUT, not its work (e23's billing)
-    if (!new java.io.File(s"$dir/assigned/_SUCCESS").isFile)
-      graft.api.IvfStore.save(dir, index)
+    graft.api.IvfStore.saveOnce(dir, shared.index)
     val loaded = graft.api.IvfStore.load(s, dir)
     val tombRoot = s"$root/tombstones"
     graft.api.IvfStore.appendTombstones(tombRoot, tombstoneIds(base, off), 0L)
@@ -1344,36 +1313,9 @@ object EmbeddingOps {
     * 100 TB shape: the honor is one ids-sized broadcast anti-join on
     * the code relation — the scoring join still moves M-int rows and
     * nothing else changes. */
-  /** The double-planted IVF-PQ stack (e21's takedown geometry with
-    * e16's PQ stage: quantizer over [[doublePlantedUnion]], codebooks +
-    * collision-asserted codes) — ONE build shared by e24's batch serve
-    * and s31's streaming query-side serve, so the two takedown serve
-    * paths read identical artifacts (memoized per session). */
-  private[graft] def pqTombBuild(s: SparkSession, d: String)
-      : (IvfIndex, PqModel, DataFrame, Long) = {
-    val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val off = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
-    val cells = ivfCellsFor(3L * corpusCount(s, d))
-    val index = graft.api.Intermediates.memo(s, s"ivf_tomb|$d|$cells") {
-      ivfBuild(doublePlantedUnion(base, off), cells)
-    }
-    val dim = index.model.clusterCenters.head.size
-    val pq = graft.api.Intermediates.memo(s,
-        s"pq_tomb|$d|$PqSubspaces|$PqCodes") {
-      pqTrain(index.assigned, dim)
-    }
-    val codes = graft.api.Intermediates.memo(s,
-        s"pqcodes_tomb|$d|$PqSubspaces|$PqCodes") {
-      val encoded = pqEncode(index.assigned, pq, dim).localCheckpoint()
-      assertNoQueryCodeCollisions(encoded, off)
-      encoded
-    }
-    (index, pq, codes, off)
-  }
-
   def annPqTombstoneServe(s: SparkSession, d: String): DataFrame = {
     val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val (index, pq, codes, off) = pqTombBuild(s, d)
+    val (index, pq, codes, off) = sharedPq(s, d, Geometry.DoublePlanted)
     val tombRoot = indexTmpBase(s, d, "e24") + "/tombstones"
     graft.api.IvfStore.appendTombstones(tombRoot, tombstoneIds(base, off), 0L)
     adcServe(index, pq,
@@ -1476,15 +1418,14 @@ object EmbeddingOps {
     * code rows, janitor cadence) plus one ids-sized broadcast
     * anti-join per side; the serve plans ONE codes relation again. */
   def annPqTombstoneCompact(s: SparkSession, d: String): DataFrame = {
-    val (index, pq, codes, off) = pqBaseBuild(s, d)
+    val (index, pq, codes, off) = sharedPq(s, d, Geometry.Base)
     val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val cells = index.model.getK
     val root = indexTmpBase(s, d, "e25")
     val baseDir = graft.api.IvfStore.versionedPqDir(
       s"$root/base", cells, PqSubspaces, PqCodes, IndexDate)
     // the base artifact is the compactor's INPUT (e23's billing)
-    if (!new java.io.File(s"$baseDir/codes/_SUCCESS").isFile)
-      graft.api.IvfStore.savePq(baseDir, index, pq, codes)
+    graft.api.IvfStore.savePqOnce(baseDir, index, pq, codes)
     val (li, lp, _) = graft.api.IvfStore.loadPq(s, baseDir, PqSubspaces)
     val appendRoot = s"$root/append"
     graft.api.IvfStore.appendPqBatch(appendRoot,
@@ -1522,17 +1463,13 @@ object EmbeddingOps {
     * adoption the tombstone log's folded entries are garbage. */
   def annTombstoneCompact(s: SparkSession, d: String): DataFrame = {
     val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val off = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
-    val cells = ivfCellsFor(corpusCount(s, d))
-    val index = graft.api.Intermediates.memo(s, s"ivf|$d|$cells") {
-      ivfBuild(base, cells)
-    }
+    val shared = sharedIndex(s, d, Geometry.Base)
+    val (cells, off) = (shared.cells, shared.off)
     val root = indexTmpBase(s, d, "e22")
     val baseDir = graft.api.IvfStore.versionedDir(s"$root/base", cells,
       IndexDate)
     // the base artifact is the compactor's INPUT (e23's billing)
-    if (!new java.io.File(s"$baseDir/assigned/_SUCCESS").isFile)
-      graft.api.IvfStore.save(baseDir, index)
+    graft.api.IvfStore.saveOnce(baseDir, shared.index)
     val loaded = graft.api.IvfStore.load(s, baseDir)
     val appendRoot = s"$root/append"
     graft.api.IvfStore.appendBatch(appendRoot,
@@ -1581,21 +1518,16 @@ object EmbeddingOps {
     * dir the pointer names. */
   def annVersionRollback(s: SparkSession, d: String): DataFrame = {
     val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val off = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
-    val cells = ivfCellsFor(3L * corpusCount(s, d))
-    // e21's shared double-planted index build (same memo key)
-    val index = graft.api.Intermediates.memo(s, s"ivf_tomb|$d|$cells") {
-      ivfBuild(doublePlantedUnion(base, off), cells)
-    }
+    val shared = sharedIndex(s, d, Geometry.DoublePlanted)
+    val (cells, off) = (shared.cells, shared.off)
     val root = indexTmpBase(s, d, "e27")
     val v1 = graft.api.IvfStore.versionedDir(root, cells, IndexDate)
-    if (!new java.io.File(s"$v1/assigned/_SUCCESS").isFile)
-      graft.api.IvfStore.save(v1, index)
+    graft.api.IvfStore.saveOnce(v1, shared.index)
     val tombRoot = s"$root/tombstones"
     graft.api.IvfStore.appendTombstones(tombRoot, tombstoneIds(base, off), 0L)
     val v2 = graft.api.IvfStore.versionedDir(root, cells,
       IndexDate.plusDays(1))
-    if (!new java.io.File(s"$v2/assigned/_SUCCESS").isFile)
+    if (!graft.api.IvfStore.isSaved(v2))
       graft.api.IvfStore.compactAppends(s, v1, s"$root/no_appends", v2,
         Some(tombRoot))
     val ptr = s"$root/pointer"
@@ -1719,18 +1651,15 @@ object EmbeddingOps {
     * outside the fold. */
   def annJanitorCycle(s: SparkSession, d: String): DataFrame = {
     val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val off = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
-    val cells = ivfCellsFor(corpusCount(s, d))
+    val shared = sharedIndex(s, d, Geometry.Base)
+    val (cells, off) = (shared.cells, shared.off)
     val root = indexTmpBase(s, d, "e28")
     val v1 = graft.api.IvfStore.versionedDir(s"$root/base", cells, IndexDate)
     val dir = graft.api.CompactionPolicy.maintenanceDay(s, graft.api.IvfStore,
         root, v1, graft.api.IvfStore.versionedDir(s"$root/fold", cells,
           IndexDate.plusDays(1)),
         maxAppendBatches = 2, maxTombstoneBatches = 1)(
-        graft.api.IvfStore.save(v1,
-          graft.api.Intermediates.memo(s, s"ivf|$d|$cells") {
-            ivfBuild(base, cells)
-          })) { (appendRoot, tombRoot) =>
+        graft.api.IvfStore.save(v1, shared.index)) { (appendRoot, tombRoot) =>
       val model = graft.api.IvfStore.load(s, v1).model
       for (b <- Seq(0L, 1L))
         graft.api.IvfStore.appendBatch(appendRoot,
@@ -1743,9 +1672,9 @@ object EmbeddingOps {
   }
 
   /** e29 — QUANTIZER-SURFACE right-to-be-forgotten (m18/t25's refit
-    * loop on the third fitted artifact the r18 verdict named: the IVF
-    * coarse quantizer — and via the identical build path, the PQ
-    * codebooks — was FIT on vectors that included later-deleted ones;
+    * loop on the third fitted artifact: the IVF coarse quantizer — and
+    * via the identical build path, the PQ codebooks — was FIT on
+    * vectors that included later-deleted ones;
     * e21/e22 delete the vectors FROM the index but the codebook
     * geometry still reflects them): the pre-takedown v1 index is
     * built on embeddings ∪ max(64, n/10) planted copies of one
@@ -1754,7 +1683,7 @@ object EmbeddingOps {
     * provably dedicates a centroid to, since any mixed assignment
     * leaves a cost term ~100·dim per planted copy); the takedown
     * removes them; the refit on survivors IS the session's shared
-    * base index (e22's memo key). Both versions are saved through
+    * base-geometry [[sharedIndex]]. Both versions are saved through
     * [[graft.api.IvfStore]] and adopted v1 → v2 behind a
     * [[graft.api.ServePointer]]; the audit emits the relational
     * membership counts (planted ids in the loaded v1 assignment =
@@ -1775,13 +1704,13 @@ object EmbeddingOps {
   def quantizerForget(s: SparkSession, d: String): DataFrame = {
     import graft.api.{IvfStore, ServePointer}
     val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val off = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
-    val n = corpusCount(s, d)
-    val p = math.max(64L, n / 10L)
+    // survivors = the shared base build
+    val shared = sharedIndex(s, d, Geometry.Base)
+    val (cells, off) = (shared.cells, shared.off)
+    val p = math.max(64L, shared.n / 10L)
     val dim = base.select(size(col("embedding"))).head().getInt(0)
     val planted = s.range(p).select((col("id") + lit(off)).as("vec_id"),
       array_repeat(lit(10.0f), dim).as("embedding"))
-    val cells = ivfCellsFor(n)
     val root = indexTmpBase(s, d, "e29")
     val ptr = s"$root/pointer"
     val v1 = IvfStore.versionedDir(s"$root/pre", cells, IndexDate)
@@ -1791,15 +1720,11 @@ object EmbeddingOps {
     val preIdx = graft.api.Intermediates.memo(s, s"e29-fit|$d|$cells") {
       ivfBuild(base.unionByName(planted), cells)
     }
-    val refit = graft.api.Intermediates.memo(s, s"ivf|$d|$cells") {
-      ivfBuild(base, cells) // survivors = the e22-shared base build
-    }
-    if (!new java.io.File(s"$v1/assigned/_SUCCESS").isFile)
-      IvfStore.save(v1, preIdx)
+    val refit = shared.index
+    IvfStore.saveOnce(v1, preIdx)
     if (!ServePointer.current(ptr).contains(v2n))
       ServePointer.adopt(ptr, v1) // replays keep the flip (s38 posture)
-    if (!new java.io.File(s"$v2/assigned/_SUCCESS").isFile)
-      IvfStore.save(v2, refit)
+    IvfStore.saveOnce(v2, refit)
     ServePointer.adopt(ptr, v2)
     val served = IvfStore.load(s, ServePointer.current(ptr).getOrElse(
       sys.error(s"no adopted quantizer version under $ptr")))
@@ -1849,7 +1774,7 @@ object EmbeddingOps {
     * corpus codes) built on embeddings ∪ the e29 plant (max(64, n/10)
     * copies of the 10·e1 point, whose energy lives in subspace 0);
     * the takedown removes them; the refit on survivors IS the
-    * session's shared [[pqBaseBuild]] stack. Both versions are saved
+    * session's shared base-geometry [[sharedPq]] stack. Both versions are saved
     * through [[graft.api.IvfStore.savePq]] and adopted v1 → v2 behind
     * a [[graft.api.ServePointer]]. Audit:
     *  - relational: planted ids in the loaded v1 codes = the
@@ -1888,7 +1813,7 @@ object EmbeddingOps {
     // which is exactly why an all-ones plant cannot witness there)
     val planted = s.range(p).select((col("id") + lit(off)).as("vec_id"),
       array((lit(10.0f) +: Seq.fill(dim - 1)(lit(0.0f))): _*).as("embedding"))
-    val cells = ivfCellsFor(n)
+    val cells = Geometry.Base.cellsFor(n)
     val m = PqSubspaces
     val root = indexTmpBase(s, d, "e30")
     val ptr = s"$root/pointer"
@@ -1903,13 +1828,11 @@ object EmbeddingOps {
       val pq = pqTrain(idx.assigned, dim)
       (idx, pq, pqEncode(idx.assigned, pq, dim).localCheckpoint())
     }
-    val (refitIdx, refitPq, refitCodes, _) = pqBaseBuild(s, d)
-    if (!new java.io.File(s"$v1/codes/_SUCCESS").isFile)
-      IvfStore.savePq(v1, preIdx, prePq, preCodes)
+    val (refitIdx, refitPq, refitCodes, _) = sharedPq(s, d, Geometry.Base)
+    IvfStore.savePqOnce(v1, preIdx, prePq, preCodes)
     if (!ServePointer.current(ptr).contains(v2n))
       ServePointer.adopt(ptr, v1) // replays keep the flip (s38 posture)
-    if (!new java.io.File(s"$v2/codes/_SUCCESS").isFile)
-      IvfStore.savePq(v2, refitIdx, refitPq, refitCodes)
+    IvfStore.savePqOnce(v2, refitIdx, refitPq, refitCodes)
     ServePointer.adopt(ptr, v2)
     val (_, servedPq, servedCodes) = IvfStore.loadPq(s,
       ServePointer.current(ptr).getOrElse(
@@ -2077,17 +2000,11 @@ object EmbeddingOps {
     * and c12's multimodal pair admission. */
   private[graft] def vecAdmissionArtifact(s: SparkSession, d: String)
       : (IvfIndex, Long) = {
-    val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val off = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
-    val cells = ivfCellsFor(corpusCount(s, d))
-    // e22's shared base-corpus index build (same memo key)
-    val index = graft.api.Intermediates.memo(s, s"ivf|$d|$cells") {
-      ivfBuild(base, cells)
-    }
-    val root = indexTmpBase(s, d, "c09")
-    val dir = graft.api.IvfStore.versionedDir(root, cells, IndexDate)
-    if (!new java.io.File(s"$dir/assigned/_SUCCESS").isFile)
-      graft.api.IvfStore.save(dir, index)
+    val shared = sharedIndex(s, d, Geometry.Base)
+    val off = shared.off
+    val dir = graft.api.IvfStore.versionedDir(indexTmpBase(s, d, "c09"),
+      shared.cells, IndexDate)
+    graft.api.IvfStore.saveOnce(dir, shared.index)
     (graft.api.IvfStore.load(s, dir), off)
   }
 
@@ -2120,7 +2037,7 @@ object EmbeddingOps {
   /** c09's attributed increment WITH its commit, memoized per session
     * — the shared artifact between c09's histogram row and c11's
     * trainer handoff (ONE waterfall, billed once): the base-corpus
-    * index artifact is built/loaded (e22's shared memo key), both
+    * index artifact is built/loaded, both
     * gates run over [[admissionVecBatch]], and the admitted survivors
     * are committed through [[graft.api.IvfStore.appendBatch]] (atomic
     * manifest, replay-safe — a second caller in the session reads the
@@ -2257,7 +2174,8 @@ object EmbeddingOps {
     * at deployment the exact side is the offline eval job, not the
     * serving path. */
   def annTopkServeBound(s: SparkSession, d: String): DataFrame = {
-    val (index, off) = topkSharedIndex(s, d)
+    val shared = sharedIndex(s, d, Geometry.Planted)
+    val (index, off) = (shared.index, shared.off)
     // ONE probe sub-plan feeds both the serve side and the flag
     val probes = batchProbes(index, off)._2
     val served = topKFromProbes(index, probes, ServeTopK)
@@ -2273,18 +2191,6 @@ object EmbeddingOps {
         when(col("__served").isNotNull || col("__probed").isNull, 1)
           .otherwise(0).as("in_served_or_unprobed"))
       .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** The shared e13-family union index, for the top-k bound rows
-    * and s29's loaded serving artifact. */
-  private[graft] def topkSharedIndex(s: SparkSession, d: String): (IvfIndex, Long) = {
-    val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val (union, off) = DedupOps.plantedUnion(base, "vec_id")
-    val cells = ivfCellsFor(2L * corpusCount(s, d))
-    val index = graft.api.Intermediates.memo(s, s"ivf_recall|$d|$cells") {
-      ivfBuild(union, cells)
-    }
-    (index, off)
   }
 
   /** The deterministic EXACT side shared by e18 and e19: per window
@@ -2344,7 +2250,7 @@ object EmbeddingOps {
     * touches embeddings, sized by the shortlist, not the corpus. */
   def annIvfPqRerank(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (index, pq, codes, off) = pqSharedBuild(s, d)
+    val (index, pq, codes, off) = sharedPq(s, d, Geometry.Planted)
     val shortlist = adcRank(index, pq, codes, off)
       .filter(col("rn") <= AdcShortlist)
       .select(col("query_id"), col("vec_id"))
@@ -2662,13 +2568,8 @@ object EmbeddingOps {
 
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
     val labels = graft.api.Intermediates.memo(s, s"semdedup|$d") {
-      val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val nBase = corpusCount(s, d)
-      val (union, off) = DedupOps.plantedUnion(base, "vec_id")
-      val nCells = ivfCellsFor(2L * nBase)
-      val index = graft.api.Intermediates.memo(s, s"ivf_recall|$d|$nCells") {
-        ivfBuild(union, nCells)
-      }
+      val shared = sharedIndex(s, d, Geometry.Planted)
+      val (index, nBase) = (shared.index, shared.n)
       // boundary multi-probe (r9 verdict item 2): the pair pass joins
       // each vector's TWO nearest cells, so boundary-straddling
       // near-dups are no longer sacrificed; membership for
@@ -2676,10 +2577,11 @@ object EmbeddingOps {
       // keyed on vec_id, not cells)
       val edges = multiProbeEdges(
         index.assigned.select(col("cell"), col("vec_id"), col("embedding")),
-        probeAssignments(index), 2L * nBase, nCells).localCheckpoint()
+        probeAssignments(index), shared.rows, shared.cells).localCheckpoint()
       // Loud planting invariants (ADVICE r7): the closed-form oracle is
       // only valid when the edge set is EXACTLY the planted twins.
-      val nonPlanted = edges.filter(col("dst") =!= col("src") + lit(off)).count()
+      val nonPlanted = edges
+        .filter(col("dst") =!= col("src") + lit(shared.off)).count()
       require(nonPlanted == 0,
         s"semanticDedup oracle assumption violated: $nonPlanted non-planted " +
           "pair(s) at cosine >= 0.95 — the corpus's max native cosine has " +
@@ -2689,7 +2591,7 @@ object EmbeddingOps {
         s"semanticDedup oracle assumption violated: $nEdges planted edges " +
           s"for $nBase vectors — a zero-norm embedding (cosine null) or a " +
           "guard-excluded hot cell dropped a planted pair")
-      val nodes = union.select(col("vec_id").as("id"))
+      val nodes = index.assigned.select(col("vec_id").as("id"))
       GraphOps.connectedComponents(nodes, edges,
         maxRounds = VerifyWindow.CcMaxRounds)
     }

@@ -1411,8 +1411,6 @@ object PackOps {
     val vecTombRoot = s"$root/tomb_vecs"
     graft.api.DocIndexStore.appendTombstones(docTombRoot, docTombs, 0L)
     graft.api.IvfStore.appendTombstones(vecTombRoot, vecTombs, 0L)
-    def guarded(marker: String)(build: => Unit): Unit =
-      if (!new java.io.File(marker).isFile) build
     val date = java.time.LocalDate.ofEpochDay(0)
 
     // ---- lsh_bands / winnow_index / passage_index (d25/d29/d27's
@@ -1431,34 +1429,27 @@ object PackOps {
     }
 
     // ---- ivf_assigned (e22's fold; the shared base-corpus quantizer)
-    val cells = EmbeddingOps.ivfCellsFor(EmbeddingOps.corpusCount(s, d))
-    val ivfIndex = graft.api.Intermediates.memo(s, s"ivf|$d|$cells") {
-      EmbeddingOps.ivfBuild(emb, cells)
-    }
+    val ivf = EmbeddingOps.sharedIndex(s, d, EmbeddingOps.Geometry.Base)
+    val cells = ivf.cells
     val ivfBase = graft.api.IvfStore.versionedDir(s"$root/ivf_base", cells, date)
     val ivfOut = graft.api.IvfStore.versionedDir(s"$root/ivf_out", cells, date)
-    guarded(s"$ivfBase/assigned/_SUCCESS") {
-      graft.api.IvfStore.save(ivfBase, ivfIndex)
-    }
-    guarded(s"$ivfOut/assigned/_SUCCESS") {
+    graft.api.IvfStore.saveOnce(ivfBase, ivf.index)
+    if (!graft.api.IvfStore.isSaved(ivfOut))
       graft.api.IvfStore.compactAppends(s, ivfBase, s"$root/ivf_none",
         ivfOut, Some(vecTombRoot))
-    }
 
     // ---- pq_codes (e25's fold; the shared base-posture PQ stack)
-    val (pqIndex, pqModel, pqCodes, _) = EmbeddingOps.pqBaseBuild(s, d)
+    val (pqIndex, pqModel, pqCodes, _) =
+      EmbeddingOps.sharedPq(s, d, EmbeddingOps.Geometry.Base)
     val m = EmbeddingOps.PqSubspaces
     val pqBase = graft.api.IvfStore.versionedPqDir(s"$root/pq_base",
       cells, m, EmbeddingOps.PqCodes, date)
     val pqOut = graft.api.IvfStore.versionedPqDir(s"$root/pq_out",
       cells, m, EmbeddingOps.PqCodes, date)
-    guarded(s"$pqBase/codes/_SUCCESS") {
-      graft.api.IvfStore.savePq(pqBase, pqIndex, pqModel, pqCodes)
-    }
-    guarded(s"$pqOut/codes/_SUCCESS") {
+    graft.api.IvfStore.savePqOnce(pqBase, pqIndex, pqModel, pqCodes)
+    if (!graft.api.IvfStore.isPqSaved(pqOut))
       graft.api.IvfStore.compactPqAppends(s, pqBase, s"$root/pq_none",
         pqOut, m, Some(vecTombRoot))
-    }
 
     // ---- export_shards (p15's shard-selective rewrite, composed view)
     val shardsRoot = s"$root/shards"

@@ -783,7 +783,7 @@ object TextOps {
     // — a localCheckpoint is illegal on a streaming frame.
     val bg = memoKey.fold(bgRaw)(k =>
       graft.api.Intermediates.memo(documents.sparkSession,
-        s"${k}_bg") { bgRaw.localCheckpoint() })
+        s"bigrams|$k") { bgRaw.localCheckpoint() })
     val bgf = bg.groupBy(col("bg")).agg(count(lit(1)).as("c2"))
     val pf = bgf
       .groupBy(split(col("bg"), " ").getItem(0).as("prev"))

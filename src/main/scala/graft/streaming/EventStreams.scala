@@ -935,22 +935,15 @@ object EventStreams {
     * deployment, periodic compaction folds them into the bucketed
     * `assigned/` relation — s17's job). */
   def streamIndexAppend(s: SparkSession, d: String): DataFrame = {
+    import graft.operators.EmbeddingOps.{sharedIndex, Geometry}
     val ss = streamSession(s)
-    val base = graft.sources.Tables.embeddings(ss, d)
-      .select(col("vec_id"), col("embedding"))
-    val off = graft.operators.DedupOps.plantOffset(
-      graft.operators.DedupOps.maxIdOf(base, "vec_id"))
-    val cells = graft.operators.EmbeddingOps.ivfCellsFor(
-      graft.operators.EmbeddingOps.corpusCount(ss, d))
-    val index = graft.api.Intermediates.memo(ss, s"ivf|$d|$cells") {
-      graft.operators.EmbeddingOps.ivfBuild(base, cells)
-    }
+    val shared = sharedIndex(ss, d, Geometry.Base)
+    val off = shared.off
     val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s26")
     val baseDir = graft.api.IvfStore.versionedDir(
-      root, cells, java.time.LocalDate.ofEpochDay(0))
+      root, shared.cells, java.time.LocalDate.ofEpochDay(0))
     // base store = the append's input, billed once (e15/d25's guard)
-    if (!new java.io.File(s"$baseDir/assigned/_SUCCESS").isFile)
-      graft.api.IvfStore.save(baseDir, index)
+    graft.api.IvfStore.saveOnce(baseDir, shared.index)
     val loaded = graft.api.IvfStore.load(ss, baseDir)
     val appendRoot = s"$root/append"
     val stream = readEmbeddings(ss, d)
@@ -999,12 +992,10 @@ object EventStreams {
     * the serve side is e16's codes-only scoring join. */
   def streamPqAppend(s: SparkSession, d: String): DataFrame = {
     val ss = streamSession(s)
-    // the SAME base-posture build e23's compaction row runs (one
-    // definition, shared memo keys — r15 review): quantizer +
-    // codebooks trained on the shipped corpus, codes collision-
-    // asserted at production
-    val (index, pq, codes, off) =
-      graft.operators.EmbeddingOps.pqBaseBuild(ss, d)
+    // the SAME base-posture build e23's compaction row runs: quantizer
+    // + codebooks trained on the shipped corpus
+    val (index, pq, codes, off) = graft.operators.EmbeddingOps.sharedPq(
+      ss, d, graft.operators.EmbeddingOps.Geometry.Base)
     val cells = index.model.getK
     val m = graft.operators.EmbeddingOps.PqSubspaces
     val k = graft.operators.EmbeddingOps.PqCodes
@@ -1058,15 +1049,16 @@ object EventStreams {
     * deployment); nothing corpus-sized rides the stream, the state is
     * the answer set itself. */
   def streamAnnServe(s: SparkSession, d: String): DataFrame = {
+    import graft.operators.EmbeddingOps.{sharedIndex, Geometry}
     val ss = streamSession(s)
-    val (index, off) = graft.operators.EmbeddingOps.topkSharedIndex(ss, d)
+    val shared = sharedIndex(ss, d, Geometry.Planted)
+    val (index, off) = (shared.index, shared.off)
     val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s29")
     val dir = graft.api.IvfStore.versionedDir(
-      root, index.model.getK, java.time.LocalDate.ofEpochDay(0))
+      root, shared.cells, java.time.LocalDate.ofEpochDay(0))
     // the artifact is the SERVE'S INPUT, not its work (e23's billing):
     // created once per session, loaded per invocation
-    if (!new java.io.File(s"$dir/assigned/_SUCCESS").isFile)
-      graft.api.IvfStore.save(dir, index)
+    graft.api.IvfStore.saveOnce(dir, index)
     val loaded = graft.api.IvfStore.load(ss, dir)
     val static = loaded.assigned
       .select(col("vec_id"), col("embedding"), col("cell"))
@@ -1133,16 +1125,15 @@ object EventStreams {
     val ss = streamSession(s)
     val base = graft.sources.Tables.embeddings(ss, d)
       .select(col("vec_id"), col("embedding"))
-    val (index, pq, codes, off) =
-      graft.operators.EmbeddingOps.pqTombBuild(ss, d)
+    val (index, pq, codes, off) = graft.operators.EmbeddingOps.sharedPq(
+      ss, d, graft.operators.EmbeddingOps.Geometry.DoublePlanted)
     val m = graft.operators.EmbeddingOps.PqSubspaces
     val k = graft.operators.EmbeddingOps.PqCodes
     val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s31")
     val dir = graft.api.IvfStore.versionedPqDir(
       root, index.model.getK, m, k, java.time.LocalDate.ofEpochDay(0))
     // the artifact is the SERVE'S INPUT, not its work (e23's billing)
-    if (!new java.io.File(s"$dir/codes/_SUCCESS").isFile)
-      graft.api.IvfStore.savePq(dir, index, pq, codes)
+    graft.api.IvfStore.savePqOnce(dir, index, pq, codes)
     val (li, lp, lc) = graft.api.IvfStore.loadPq(ss, dir, m)
     val tombRoot = s"$root/tombstones"
     graft.api.IvfStore.appendTombstones(tombRoot,
@@ -1268,29 +1259,24 @@ object EventStreams {
   }
 
   def streamPointerFlip(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.{DedupOps, EmbeddingOps}
+    import graft.operators.EmbeddingOps
     import graft.sources.ExportCommit
     val ss = streamSession(s)
     val base = graft.sources.Tables.embeddings(ss, d)
       .select(col("vec_id"), col("embedding"))
-    val off = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
-    val cells = EmbeddingOps.ivfCellsFor(
-      3L * EmbeddingOps.corpusCount(ss, d))
-    // e27's exact artifact pair (shared memo key with e21/e22/s30)
-    val index = graft.api.Intermediates.memo(ss, s"ivf_tomb|$d|$cells") {
-      EmbeddingOps.ivfBuild(
-        EmbeddingOps.doublePlantedUnion(base, off), cells)
-    }
+    // e27's exact artifact pair
+    val shared = EmbeddingOps.sharedIndex(ss, d,
+      EmbeddingOps.Geometry.DoublePlanted)
+    val (cells, off) = (shared.cells, shared.off)
     val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s36")
     val date = java.time.LocalDate.ofEpochDay(0)
     val v1 = graft.api.IvfStore.versionedDir(root, cells, date)
-    if (!new java.io.File(s"$v1/assigned/_SUCCESS").isFile)
-      graft.api.IvfStore.save(v1, index)
+    graft.api.IvfStore.saveOnce(v1, shared.index)
     val tombRoot = s"$root/tombstones"
     graft.api.IvfStore.appendTombstones(tombRoot,
       EmbeddingOps.tombstoneIds(base, off), 0L)
     val v2 = graft.api.IvfStore.versionedDir(root, cells, date.plusDays(1))
-    if (!new java.io.File(s"$v2/assigned/_SUCCESS").isFile)
+    if (!graft.api.IvfStore.isSaved(v2))
       graft.api.IvfStore.compactAppends(ss, v1, s"$root/no_appends", v2,
         Some(tombRoot))
     pointerFlipDrain(ss, root,
@@ -1435,23 +1421,18 @@ object EventStreams {
     * maintenance day while the serve keeps draining — zero stream
     * restart, every batch consistent against one immutable version. */
   def streamJanitorLive(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.{DedupOps, EmbeddingOps}
+    import graft.operators.EmbeddingOps
     val ss = streamSession(s)
     val base = graft.sources.Tables.embeddings(ss, d)
       .select(col("vec_id"), col("embedding"))
-    val off = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
-    val cells = EmbeddingOps.ivfCellsFor(
-      3L * EmbeddingOps.corpusCount(ss, d))
+    // e27's exact double-planted artifact
+    val shared = EmbeddingOps.sharedIndex(ss, d,
+      EmbeddingOps.Geometry.DoublePlanted)
+    val (cells, off) = (shared.cells, shared.off)
     val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s41")
     val date = java.time.LocalDate.ofEpochDay(0)
     val v1 = graft.api.IvfStore.versionedDir(root, cells, date)
-    // e27's exact double-planted artifact (shared memo key with
-    // e21/e22/s30/s36)
-    def saveBase(): Unit = graft.api.IvfStore.save(v1,
-      graft.api.Intermediates.memo(ss, s"ivf_tomb|$d|$cells") {
-        EmbeddingOps.ivfBuild(
-          EmbeddingOps.doublePlantedUnion(base, off), cells)
-      })
+    def saveBase(): Unit = graft.api.IvfStore.save(v1, shared.index)
     if (!graft.api.IvfStore.isSaved(v1)) saveBase()
     pointerFlipDrain(ss, root,
       base.filter(col("vec_id") % EmbeddingOps.BatchQueryMod === 0),
@@ -1493,7 +1474,8 @@ object EventStreams {
     val ss = streamSession(s)
     val base = graft.sources.Tables.embeddings(ss, d)
       .select(col("vec_id"), col("embedding"))
-    val (index, pq, codes, off) = EmbeddingOps.pqTombBuild(ss, d)
+    val (index, pq, codes, off) = EmbeddingOps.sharedPq(ss, d,
+      EmbeddingOps.Geometry.DoublePlanted)
     val m = EmbeddingOps.PqSubspaces
     val k = EmbeddingOps.PqCodes
     val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s42")
@@ -1501,14 +1483,13 @@ object EventStreams {
     val cells = index.model.getK
     val v1 = graft.api.IvfStore.versionedPqDir(s"$root/base", cells,
       m, k, date)
-    if (!new java.io.File(s"$v1/codes/_SUCCESS").isFile)
-      graft.api.IvfStore.savePq(v1, index, pq, codes)
+    graft.api.IvfStore.savePqOnce(v1, index, pq, codes)
     val tombRoot = s"$root/tombstones"
     graft.api.IvfStore.appendTombstones(tombRoot,
       EmbeddingOps.tombstoneIds(base, off), 0L)
     val v2 = graft.api.IvfStore.versionedPqDir(s"$root/fold", cells,
       m, k, date.plusDays(1))
-    if (!new java.io.File(s"$v2/codes/_SUCCESS").isFile)
+    if (!graft.api.IvfStore.isPqSaved(v2))
       graft.api.IvfStore.compactPqAppends(ss, v1, s"$root/no_appends",
         v2, m, Some(tombRoot))
     pointerFlipDrain(ss, root,
@@ -1542,7 +1523,7 @@ object EventStreams {
     * across batches or an adoption that tears a batch breaks a phase.
     *
     * The artifacts are built on the BATCH session (the fits hit the
-    * m-family's shared memos and the _SUCCESS-guarded saves are
+    * m-family's shared memos and the guarded saves are
     * replay no-ops); the stream session only LOADS the immutable
     * versioned dirs — per batch, one pointer read + one model load.
     *
@@ -1613,10 +1594,8 @@ object EventStreams {
     val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s43")
     val v1 = s"$root/tok_v1"
     val v2 = s"$root/tok_v2"
-    if (!new java.io.File(s"$v1/_SUCCESS").isFile)
-      BpeOps.saveMerges(ss, BpeOps.trainedMerges(ss, d), v1)
-    if (!new java.io.File(s"$v2/_SUCCESS").isFile)
-      BpeOps.saveMerges(ss, BpeOps.retrainedMerges(ss, d, 1L), v2)
+    BpeOps.saveMergesOnce(ss, v1)(BpeOps.trainedMerges(ss, d))
+    BpeOps.saveMergesOnce(ss, v2)(BpeOps.retrainedMerges(ss, d, 1L))
     val v1n = java.nio.file.Paths.get(v1).toAbsolutePath.normalize().toString
     pointerFlipDrain(ss, root,
       graft.sources.Tables.documents(ss, d)
@@ -1958,21 +1937,17 @@ object EventStreams {
     * 100 TB shape: both gates are stream ⋈ static on uniform keys
     * (64-bit hash / cell id); nothing stateful rides the stream. */
   def streamEmbeddingAdmission(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.{DedupOps, EmbeddingOps, PackOps}
+    import graft.operators.{EmbeddingOps, PackOps}
     val ss = streamSession(s)
     val base = graft.sources.Tables.embeddings(ss, d)
       .select(col("vec_id"), col("embedding"))
-    val off = DedupOps.plantOffset(DedupOps.maxIdOf(base, "vec_id"))
-    val cells = EmbeddingOps.ivfCellsFor(EmbeddingOps.corpusCount(ss, d))
-    val index = graft.api.Intermediates.memo(ss, s"ivf|$d|$cells") {
-      EmbeddingOps.ivfBuild(base, cells)
-    }
+    val shared = EmbeddingOps.sharedIndex(ss, d, EmbeddingOps.Geometry.Base)
+    val off = shared.off
     // c09's session artifact — one build, two consumers
     val root = graft.sources.TmpDirs.artifactRoot(ss, d, "c09")
     val dir = graft.api.IvfStore.versionedDir(
-      root, cells, java.time.LocalDate.ofEpochDay(0))
-    if (!new java.io.File(s"$dir/assigned/_SUCCESS").isFile)
-      graft.api.IvfStore.save(dir, index)
+      root, shared.cells, java.time.LocalDate.ofEpochDay(0))
+    graft.api.IvfStore.saveOnce(dir, shared.index)
     val loaded = graft.api.IvfStore.load(ss, dir)
 
     val incoming = EmbeddingOps.admissionVecBatch(
@@ -2106,22 +2081,14 @@ object EventStreams {
     * manifest CAS — the takedown stream never touches the corpus; the
     * serve-side honor is the same broadcast anti-join as e21. */
   def streamTombstoneServe(s: SparkSession, d: String): DataFrame = {
+    import graft.operators.EmbeddingOps.{sharedIndex, Geometry}
     val ss = streamSession(s)
-    val base = graft.sources.Tables.embeddings(ss, d)
-      .select(col("vec_id"), col("embedding"))
-    val off = graft.operators.DedupOps.plantOffset(
-      graft.operators.DedupOps.maxIdOf(base, "vec_id"))
-    val cells = graft.operators.EmbeddingOps.ivfCellsFor(
-      3L * graft.operators.EmbeddingOps.corpusCount(ss, d))
-    val index = graft.api.Intermediates.memo(ss, s"ivf_tomb|$d|$cells") {
-      graft.operators.EmbeddingOps.ivfBuild(
-        graft.operators.EmbeddingOps.doublePlantedUnion(base, off), cells)
-    }
+    val shared = sharedIndex(ss, d, Geometry.DoublePlanted)
+    val off = shared.off
     val root = graft.sources.TmpDirs.artifactRoot(ss, d, "s30")
     val dir = graft.api.IvfStore.versionedDir(
-      root, cells, java.time.LocalDate.ofEpochDay(0))
-    if (!new java.io.File(s"$dir/assigned/_SUCCESS").isFile)
-      graft.api.IvfStore.save(dir, index)
+      root, shared.cells, java.time.LocalDate.ofEpochDay(0))
+    graft.api.IvfStore.saveOnce(dir, shared.index)
     val loaded = graft.api.IvfStore.load(ss, dir)
     val tombRoot = s"$root/tombstones"
     val takedown = readEmbeddings(ss, d)

@@ -771,17 +771,10 @@ class ExportCommitSpec extends SparkSpec {
   }
 
   test("the commit protocol lives in one module: src/main stages and commits only through commitOnce") {
-    val main = new java.io.File("src/main/scala")
-    assert(main.isDirectory,
-      s"source tree not found from ${new java.io.File(".").getAbsolutePath}")
-    def sources(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(sources)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val offenders = sources(main)
+    val offenders = MainSources.files()
       .filterNot(_.getPath.endsWith("sources/ExportCommit.scala"))
       .flatMap { f =>
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex.collect {
+        MainSources.lines(f).zipWithIndex.collect {
           case (line, i) if line.contains("ExportCommit.stage(") ||
               line.contains("ExportCommit.commitBatch(") =>
             s"${f.getPath}:${i + 1}"

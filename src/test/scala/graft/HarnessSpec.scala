@@ -1,33 +1,21 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 /** The registry tools share one harness: a single diagnostic entry
   * point, and the scratch-release sweep written once. */
 class HarnessSpec extends SparkSpec {
 
-  private def mainSources: Seq[java.io.File] = {
-    val main = new java.io.File("src/main/scala")
-    assert(main.isDirectory,
-      s"source tree not found from ${new java.io.File(".").getAbsolutePath}")
-    def sources(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(sources)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    sources(main)
-  }
-
-  private def lines(f: java.io.File): IndexedSeq[String] =
-    java.nio.file.Files.readAllLines(f.toPath).asScala.toIndexedSeq
+  import MainSources.lines
 
   test("entry points: def main appears in src/main only in Bench, Verify, Smoke and Tool") {
     val allowed = Set("Bench.scala", "Verify.scala", "Smoke.scala", "Tool.scala")
-    val withMain = mainSources.filter(f => lines(f).exists(_.contains("def main(")))
+    val withMain = MainSources.files()
+      .filter(f => lines(f).exists(_.contains("def main(")))
     assert(withMain.map(_.getName).toSet === allowed,
       s"def main in: ${withMain.map(_.getPath).mkString(", ")}")
   }
 
   test("the scratch-release sweep (getPersistentRDDs filtered by isPinned) lives only in Harness") {
-    val offenders = mainSources
+    val offenders = MainSources.files()
       .filterNot(_.getPath.endsWith("graft/Harness.scala"))
       .flatMap { f =>
         val ls = lines(f)

@@ -13,13 +13,12 @@ class IvfStoreSpec extends SparkSpec {
   private def baseEmb =
     Tables.embeddings(spark, sfTiny).select(col("vec_id"), col("embedding"))
 
-  /** The cell count annPqRoundtrip actually builds with — derived the
-    * same way the operator derives it (ivfCellsFor over the planted
-    * union size), not the IvfCells floor constant, so these specs keep
-    * finding the artifact if the tiny fixture ever outgrows the floor
-    * (r14 review). */
+  /** The cell count annPqRoundtrip builds with — the planted
+    * geometry's sizing, not the IvfCells floor constant, so these specs
+    * keep finding the artifact if the tiny fixture ever outgrows the
+    * floor. */
   private def e17Cells: Int =
-    graft.operators.EmbeddingOps.ivfCellsFor(2L * baseEmb.count())
+    EmbeddingOps.Geometry.Planted.cellsFor(baseEmb.count())
 
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"ivf_$tag").toString
@@ -106,7 +105,7 @@ class IvfStoreSpec extends SparkSpec {
     val nTombs = tombs.count()
     assert(nTombs > 0)
     val root = graft.sources.TmpDirs.artifactRoot(spark, sfTiny, "e25")
-    val cells = graft.operators.EmbeddingOps.ivfCellsFor(emb.count())
+    val cells = EmbeddingOps.Geometry.Base.cellsFor(emb.count())
     val outDir = IvfStore.versionedPqDir(s"$root/compacted", cells,
       EmbeddingOps.PqSubspaces, EmbeddingOps.PqCodes,
       java.time.LocalDate.ofEpochDay(0))
@@ -177,7 +176,7 @@ class IvfStoreSpec extends SparkSpec {
     assert(r.getLong(5) === 1L, "served centers must equal the base build")
     assert(r.getLong(7) === 2L)
     val root = graft.sources.TmpDirs.artifactRoot(spark, sfTiny, "e29")
-    val cells = EmbeddingOps.ivfCellsFor(
+    val cells = EmbeddingOps.Geometry.Base.cellsFor(
       EmbeddingOps.corpusCount(spark, sfTiny))
     val date = java.time.LocalDate.ofEpochDay(0)
     val v1 = IvfStore.versionedDir(s"$root/pre", cells, date)
@@ -201,7 +200,7 @@ class IvfStoreSpec extends SparkSpec {
       "re-sharding changed the serve contract (closed form must hold under any quantizer)")
     // the rebuild really re-sharded: v2 carries double v1's cells and
     // every stored row
-    val cells = EmbeddingOps.ivfCellsFor(2L * baseEmb.count())
+    val cells = EmbeddingOps.Geometry.Planted.cellsFor(baseEmb.count())
     val root = graft.sources.TmpDirs.artifactRoot(spark, sfTiny, "e26")
     val v2 = IvfStore.load(spark, IvfStore.versionedDir(root,
       math.min(EmbeddingOps.IvfMaxCells, 2 * cells),
@@ -422,7 +421,7 @@ class IvfStoreSpec extends SparkSpec {
     // the compacted artifact physically lacks every tombstoned id
     val n = baseEmb.count()
     val nTombs = baseEmb.filter(col("vec_id") % 40 === 0).count()
-    val cells = EmbeddingOps.ivfCellsFor(n)
+    val cells = EmbeddingOps.Geometry.Base.cellsFor(n)
     val outDir = IvfStore.versionedDir(
       graft.sources.TmpDirs.artifactRoot(spark, sfTiny, "e22") + "/compacted",
       cells, java.time.LocalDate.ofEpochDay(0))

@@ -461,7 +461,8 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val base = graft.sources.Tables.embeddings(spark, sfTiny)
       .select(col("vec_id"), col("embedding"))
-    val (index, _) = graft.operators.EmbeddingOps.topkSharedIndex(spark, sfTiny)
+    val index = graft.operators.EmbeddingOps.sharedIndex(spark, sfTiny,
+      graft.operators.EmbeddingOps.Geometry.Planted).index
     val topP = graft.operators.EmbeddingOps.probeCellsRowLocal(
       spark, index.model, graft.operators.EmbeddingOps.IvfProbes)
     val q = base.filter(col("vec_id") % 20 === 0)
@@ -505,8 +506,8 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val base = graft.sources.Tables.embeddings(spark, sfTiny)
       .select(col("vec_id"), col("embedding"))
-    val (index, pq, codes, off) =
-      graft.operators.EmbeddingOps.pqTombBuild(spark, sfTiny)
+    val (index, pq, codes, off) = graft.operators.EmbeddingOps.sharedPq(
+      spark, sfTiny, graft.operators.EmbeddingOps.Geometry.DoublePlanted)
     val tombRoot = java.nio.file.Files.createTempDirectory("s31pin").toString
     graft.api.IvfStore.appendTombstones(tombRoot,
       graft.operators.EmbeddingOps.tombstoneIds(base, off), 0L)

@@ -274,7 +274,7 @@ class SkewOpsSpec extends SparkSpec {
     // answer as e05's driver-side probedCells path on the same union
     val union = base.unionByName(
       base.withColumn("vec_id", col("vec_id") + lit(off)))
-    val cells = EmbeddingOps.ivfCellsFor(2L * base.count())
+    val cells = EmbeddingOps.Geometry.Planted.cellsFor(base.count())
     out.take(3).foreach { case (q, want, _) =>
       val got = EmbeddingOps.ivfTopK(union, q, k = 1,
         cells = cells, probes = EmbeddingOps.IvfProbes)
