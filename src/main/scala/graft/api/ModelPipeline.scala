@@ -93,7 +93,8 @@ object ModelPipeline {
         Some(counts(s, d)), Some(weights(s, d)))
     }
 
-  /** Per-cluster coherence over the top-M TF-IDF terms (A8 + A10). */
+  /** Per-cluster coherence over the top-M TF-IDF terms (A8 + A10): one
+    * census job, run when called; the result is a local relation. */
   def coherence(fm: Fitted, topM: Int = 5): DataFrame =
     ProbCoherence.perCluster(
       fm.docTerms,
@@ -135,24 +136,12 @@ object ModelPipeline {
     Renumber.dense(CosineMerge.apply(assignments, mm))
   }
 
-  /** Full optimization: split → merge → per-cluster stats
-    * (cluster, n_docs, withinss), ordered. */
-  def optimize(docs: DataFrame, k: Int = 15, seed: Long = 123,
-               vocabSize: Int = 2000,
-               params: LdaSplitter.Params = LdaSplitter.Params(),
-               mergeThreshold: Double = 0.9): DataFrame = {
-    val fm = fit(docs, k, seed, vocabSize)
-    optimizeFrom(split(fm, params), mergeThreshold)
-  }
-
-  /** Dir-keyed optimize over the shared fit/split materializations. */
+  /** Full optimization over the shared fit/split materializations:
+    * split → merge → per-cluster stats (cluster, n_docs, withinss),
+    * ordered. */
   def optimize(s: SparkSession, d: String, k: Int, seed: Long,
                params: LdaSplitter.Params, mergeThreshold: Double): DataFrame =
-    optimizeFrom(splitAssignments(s, d, params, k, seed), mergeThreshold)
-
-  private def optimizeFrom(afterSplit: DataFrame,
-                           mergeThreshold: Double): DataFrame =
-    ModelRefresh.stats(merge(afterSplit, mergeThreshold))
+    ModelRefresh.stats(merge(splitAssignments(s, d, params, k, seed), mergeThreshold))
       .orderBy(col("cluster"))
 
   /** M10 + A10: the refiner pipeline (ref runPhase1Pipeline

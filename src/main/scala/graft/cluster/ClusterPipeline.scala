@@ -1,39 +1,20 @@
 package graft.cluster
 
-import graft.features.Featurize
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** K-means clustering stage + per-cluster statistics (SURVEY §2.9 M1,
+/** Per-cluster statistics of the K-means stage (SURVEY §2.9 M1,
   * §2.4 A2-A5, §2.5 T2/T3), re-expressing the reference's
   * apply_clustering + update_kmeans_model (ref 02_build_models.R:183-190,
-  * 391-450). MLlib KMeans (Lloyd) replaces R's Hartigan-Wong — identical
-  * assignments are not guaranteed; correctness is invariants + fixed-seed
+  * 391-450). The fit itself is [[graft.api.ModelPipeline.fit]]: MLlib
+  * KMeans (Lloyd) replaces R's Hartigan-Wong — identical assignments are
+  * not guaranteed; correctness is invariants + fixed-seed
   * reproducibility (SURVEY §7.4.3).
   */
 object ClusterPipeline {
-
-  /** Featurized docs with K-means cluster assignments.
-    * Returns (assignments(doc_id, cluster, features), weights, model). */
-  def fit(docs: DataFrame, k: Int = 15, seed: Long = 123,
-          vocabSize: Int = 2000): (DataFrame, DataFrame, KMeansModel) = {
-    val (feats, _, weights) = Featurize.features(docs, vocabSize)
-    // Eager materialization: the iterative KMeans fit re-reads features
-    // every iteration. localCheckpoint cuts lineage and is GC-released
-    // after the query (persist() would leak cache in a shared session).
-    val cached = feats.localCheckpoint()
-    val model = new KMeans().setK(k).setSeed(seed)
-      .setFeaturesCol("features").setPredictionCol("cluster")
-      .fit(cached)
-    (model.transform(cached), weights, model)
-  }
-
-  /** A4 cluster sizes. */
-  def sizes(assignments: DataFrame): DataFrame =
-    assignments.groupBy(col("cluster")).agg(count(lit(1)).as("n_docs"))
 
   /** A5 within-cluster sum of squares against broadcast centers. */
   def withinss(assignments: DataFrame, model: KMeansModel): DataFrame = {

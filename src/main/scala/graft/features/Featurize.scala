@@ -108,17 +108,4 @@ object Featurize {
     * fit consumes — topic models want counts, not TF-IDF weights). */
   def countVectors(counts: DataFrame, vocab: DataFrame, vocabSize: Int): DataFrame =
     assemble(counts, vocab, vocabSize, col("cnt").cast("double"))
-
-  /** Full featurization: docs → (features DF, vocab DF, weights DF).
-    * `weights` is reusable for top-terms/coherence without recompute. */
-  def features(docs: DataFrame, vocabSize: Int = 2000,
-               textCol: String = "text"): (DataFrame, DataFrame, DataFrame) = {
-    // one materialization of the tokenize→ngram→count subtree; the vocab
-    // ranking, weight join, and vector assembly all re-read it
-    val counts = termCounts(docTerms(docs, textCol)).localCheckpoint()
-    val w = tfidf(counts, docs)
-    val vocab = topVocab(w, vocabSize)
-    val inVocab = w.join(vocab, "term")
-    (vectors(w, vocab, vocabSize), vocab, inVocab)
-  }
 }

@@ -5,11 +5,10 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
 /** Typed `Aggregator` surface (SURVEY §2.13 UDAF row): the engine's
-  * custom aggregations are normally RELATIONAL decompositions (Mimno
-  * coherence, ProbCoherence.scala) because composed built-ins stay in
-  * codegen; this module carries the genuine `Aggregator[IN, BUF, OUT]`
-  * instance for the cases a decomposition can't express — order-robust
-  * single-pass moment accumulation here.
+  * custom aggregations are normally RELATIONAL decompositions because
+  * composed built-ins stay in codegen; this module carries the genuine
+  * `Aggregator[IN, BUF, OUT]` instance for the cases a decomposition
+  * can't express — order-robust single-pass moment accumulation here.
   *
   * [[WelfordVar]] is Welford's online variance with Chan's parallel
   * MERGE step — the formulation whose partial states combine

@@ -903,7 +903,7 @@ object Relational {
     * map-side partials, O(1) buffer per group — a typed `Aggregator`
     * plans as ObjectHashAggregate (off the codegen path, the documented
     * cost of the UDAF surface vs the relational decompositions used
-    * everywhere else, e.g. ProbCoherence). */
+    * everywhere else). */
   def welfordVariance(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"))

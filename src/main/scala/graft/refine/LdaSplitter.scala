@@ -1,6 +1,7 @@
 package graft.refine
 
 import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}
+import graft.coherence.ProbCoherence
 import org.apache.spark.SparkContext
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.mllib.clustering.GraftOnlineLDA
@@ -27,8 +28,8 @@ import scala.util.control.NonFatal
   * E-step once per k against its own cluster's models and adds to that
   * (cluster, k)'s partial statistics; the driver sums the per-partition
   * partials in partition-index order and applies the online λ/α update
-  * to every model ([[GraftOnlineLDA]]). Then one job counts the term
-  * presence every candidate topic's coherence needs, and the theta-argmax
+  * to every model ([[GraftOnlineLDA]]). Then one [[ProbCoherence]]
+  * census job scores every candidate topic, and the theta-argmax
   * reassignment is one lazy `mapPartitions`. The split costs about
   * `maxIter + 2` jobs whatever the number of (cluster, k) fits; MLlib's
   * optimizer spends about `2 · maxIter + 2` jobs on each fit, and those
@@ -394,49 +395,34 @@ object LdaSplitter {
     else (for { (c, ss) <- states if !failed.contains(c); s <- ss } yield (c, s.k) -> s)
   }
 
-  /** Probabilistic coherence (ProbCoherence's formula) of every topic of
-    * every model, from one job over the prepared docs that counts, per
-    * cluster, the docs holding each pair of its candidate top terms (the
-    * diagonal: each term). Keyed by (cluster, k), one entry per topic;
-    * None for a topic with fewer than two top terms present in the
-    * cluster. None overall when the deadline passed. */
+  /** Probabilistic coherence of every topic of every model, from one
+    * [[ProbCoherence.census]] job over the prepared docs whose candidate
+    * terms, per cluster, are the union of its models' top terms. Keyed by
+    * (cluster, k), one entry per topic; None for a topic with fewer than
+    * two top terms present in the cluster. None overall when the
+    * deadline passed. */
   private[graft] def topicCoherence(prepared: Prepared,
                                     topics: Map[(Int, Int), Array[Array[Int]]],
                                     sweep: Sweep)
       : Option[Map[(Int, Int), Seq[Option[Double]]]] = {
-    val candidates: Map[Int, Array[Int]] = topics.groupBy(_._1._1).map { case (c, ts) =>
-      c -> ts.values.flatMap(_.flatMap(_.toSeq)).toArray.distinct.sorted
+    val position: Map[Int, Map[Int, Int]] = topics.groupBy(_._1._1).map { case (c, ts) =>
+      c -> ts.values.flatMap(_.flatMap(_.toSeq)).toArray.distinct.sorted.zipWithIndex.toMap
     }
+    val widths = position.map { case (c, p) => c -> p.size }
     val census = prepared.docs.mapPartitions { it =>
-      val pos = candidates.map { case (c, ts) => c -> ts.zipWithIndex.toMap }
-      val pairs = candidates.map { case (c, ts) => c -> new Array[Long](ts.length * ts.length) }
-      it.foreach { d =>
-        pos.get(d.cluster).foreach { p =>
+      Iterator.single(ProbCoherence.census(it.flatMap { d =>
+        position.get(d.cluster).map { p =>
           val present = scala.collection.mutable.ArrayBuffer[Int]()
           d.features.foreachActive((i, v) => if (v != 0) p.get(i).foreach(present += _))
-          val (counts, u) = (pairs(d.cluster), candidates(d.cluster).length)
-          present.foreach(a => present.foreach(b => if (a <= b) counts(a * u + b) += 1))
+          d.cluster -> present.toArray
         }
-      }
-      Iterator.single(pairs)
+      }, widths))
     }
     sweep.run(census, "topic coherence").map { parts =>
+      val counts = ProbCoherence.total(parts, widths)
       topics.map { case ((c, k), ts) =>
-        val counts = parts.map(_(c)).transpose.map(_.sum)
-        val pos = candidates(c).zipWithIndex.toMap
-        val u = candidates(c).length
-        def docs(a: Int, b: Int) = counts(math.min(a, b) * u + math.max(a, b)).toDouble
-        val n = prepared.sizes(c).toDouble
-        (c, k) -> ts.toSeq.map { ranked =>
-          val present = ranked.map(pos).filter(p => docs(p, p) > 0)
-          val scores = for (a <- present.indices; b <- a + 1 until present.length) yield {
-            val (i, j) = (present(a), present(b))
-            docs(i, j) / docs(i, i) - docs(j, j) / n
-          }
-          if (scores.isEmpty) None
-          else Some(BigDecimal(scores.sum / scores.size)
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        }
+        (c, k) -> ts.toSeq.map(ranked => ProbCoherence.coherence(
+          ranked.toSeq.map(position(c)), counts(c), prepared.sizes(c)))
       }
     }
   }

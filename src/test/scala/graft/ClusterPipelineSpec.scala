@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.ModelPipeline
 import graft.cluster.ClusterPipeline
 import org.apache.spark.sql.functions._
 
@@ -20,28 +21,30 @@ class ClusterPipelineSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   test("fit assigns every doc to one of k clusters; sizes sum to n") {
-    val (asg, _, model) = ClusterPipeline.fit(corpus, k = 3, seed = 123, vocabSize = 100)
+    val fm = ModelPipeline.fit(corpus, k = 3, seed = 123, vocabSize = 100)
+    val (asg, model) = (fm.assignments, fm.model)
     val a = asg.select("doc_id", "cluster").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toMap
     assert(a.keySet === Set(1L, 2L, 3L, 4L, 5L, 6L))
     assert(a.values.forall(c => c >= 0 && c < 3))
     assert(model.clusterCenters.length === 3)
-    val sizes = ClusterPipeline.sizes(asg).as[(Int, Long)].collect().toMap
+    val sizes = asg.groupBy("cluster").count().as[(Int, Long)].collect().toMap
     assert(sizes.values.sum === 6L)
   }
 
   test("fit is deterministic under a fixed seed") {
-    val a1 = ClusterPipeline.fit(corpus, k = 3, seed = 123, vocabSize = 100)
-      ._1.select("doc_id", "cluster").collect()
+    val a1 = ModelPipeline.fit(corpus, k = 3, seed = 123, vocabSize = 100)
+      .assignments.select("doc_id", "cluster").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toMap
-    val a2 = ClusterPipeline.fit(corpus, k = 3, seed = 123, vocabSize = 100)
-      ._1.select("doc_id", "cluster").collect()
+    val a2 = ModelPipeline.fit(corpus, k = 3, seed = 123, vocabSize = 100)
+      .assignments.select("doc_id", "cluster").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toMap
     assert(a1 === a2)
   }
 
   test("withinss is non-negative and covers every cluster") {
-    val (asg, _, model) = ClusterPipeline.fit(corpus, k = 3, seed = 123, vocabSize = 100)
+    val fm = ModelPipeline.fit(corpus, k = 3, seed = 123, vocabSize = 100)
+    val (asg, model) = (fm.assignments, fm.model)
     val w = ClusterPipeline.withinss(asg, model).collect()
       .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
     assert(w.length === 3)

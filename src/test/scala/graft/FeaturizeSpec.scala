@@ -2,6 +2,7 @@ package graft
 
 import graft.features.Featurize
 import org.apache.spark.ml.linalg.SparseVector
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Featurization over the FIXTURES A3 micro-corpus (3 docs, each its own
@@ -14,6 +15,13 @@ class FeaturizeSpec extends SparkSpec {
     (2L, "health medicine treatment disease"),
     (3L, "technology innovation ai machine learning")
   ).toDF("doc_id", "text")
+
+  /** (features, vocab): the TF-IDF vectors over the top-n vocabulary. */
+  private def vectors(docs: DataFrame, n: Int): (DataFrame, DataFrame) = {
+    val w = Featurize.tfidf(Featurize.termCounts(Featurize.docTerms(docs)), docs)
+    val vocab = Featurize.topVocab(w, n)
+    (Featurize.vectors(w, vocab, n), vocab)
+  }
 
   test("docTerms emits 1+2+3-grams per doc") {
     val terms = Featurize.docTerms(corpus).collect()
@@ -48,7 +56,7 @@ class FeaturizeSpec extends SparkSpec {
   }
 
   test("vectors builds per-doc sparse rows over the fixed vocabulary") {
-    val (feats, vocab, _) = Featurize.features(corpus, vocabSize = 30)
+    val (feats, vocab) = vectors(corpus, 30)
     assert(vocab.count() === 30)
     val byDoc = feats.collect()
       .map(r => (r.getLong(0), r.getAs[SparseVector]("features"))).toMap
@@ -60,7 +68,7 @@ class FeaturizeSpec extends SparkSpec {
 
   test("vectors drops docs with no in-vocab terms (P4 non-empty filter)") {
     val docs = corpus.union(Seq((4L, "")).toDF("doc_id", "text"))
-    val (feats, _, _) = Featurize.features(docs, vocabSize = 30)
+    val (feats, _) = vectors(docs, 30)
     assert(feats.select("doc_id").as[Long].collect().toSet === Set(1L, 2L, 3L))
   }
 }

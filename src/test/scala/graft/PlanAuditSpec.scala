@@ -41,26 +41,31 @@ class PlanAuditSpec extends SparkSpec {
 
   test("widenForFanout widens a narrow scan, no-ops on wide scans and non-scans") {
     import org.apache.spark.sql.functions.col
-    val docs = graft.sources.Tables.documents(spark, sfTiny)
-      .select(col("doc_id"), col("text"))
-    // a tiny parquet scan gets repartitioned to at least the configured
-    // shuffle width (floored there, so the assertion holds at any CPU count)
-    val widened = graft.sources.Scans.widenForFanout(docs, col("doc_id"))
-    assert(widened.rdd.getNumPartitions > 1)
-    // a plan with an upstream aggregation is returned untouched —
-    // widening it would re-shuffle (and, via .rdd, double-execute) work
-    // that already sized its own parallelism
-    val agged = docs.groupBy(col("doc_id")).count()
-    assert(graft.sources.Scans.widenForFanout(agged, col("doc_id")) eq agged)
-    // a scan whose estimated split count already covers the cluster is
-    // returned untouched (simulated by shrinking the split size)
-    val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    // the widening target is the session's shuffle width, which follows
+    // the CPU count: pin it, so the plan shapes hold on any machine
+    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try {
-      val wideScan = graft.sources.Tables.documents(spark, sfTiny)
+      val docs = graft.sources.Tables.documents(spark, sfTiny)
         .select(col("doc_id"), col("text"))
-      assert(graft.sources.Scans.widenForFanout(wideScan, col("doc_id")) eq wideScan)
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+      // a tiny parquet scan gets repartitioned to the shuffle width
+      val widened = graft.sources.Scans.widenForFanout(docs, col("doc_id"))
+      assert(widened.rdd.getNumPartitions > 1)
+      // a plan with an upstream aggregation is returned untouched —
+      // widening it would re-shuffle (and, via .rdd, double-execute) work
+      // that already sized its own parallelism
+      val agged = docs.groupBy(col("doc_id")).count()
+      assert(graft.sources.Scans.widenForFanout(agged, col("doc_id")) eq agged)
+      // a scan whose estimated split count already covers the cluster is
+      // returned untouched (simulated by shrinking the split size)
+      val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+      try {
+        val wideScan = graft.sources.Tables.documents(spark, sfTiny)
+          .select(col("doc_id"), col("text"))
+        assert(graft.sources.Scans.widenForFanout(wideScan, col("doc_id")) eq wideScan)
+      } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
   }
 
   test("d02: corpus materialized once — the self-join re-reads no parquet") {
@@ -351,7 +356,10 @@ class PlanAuditSpec extends SparkSpec {
       // the same machinery a multi-GB hot partition trips in production
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      // skew is judged against the median shuffle partition, so the
+      // width must not follow the CPU count (at 2 the median is the hot one)
+      "spark.sql.shuffle.partitions" -> "8")
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {

@@ -65,14 +65,7 @@ class SharedBuildSpec extends SparkSpec {
   }
 
   test("both source scans fail on a copy of src/main that adds a second site") {
-    val main = new java.io.File("src/main/scala").toPath
-    val copy = java.nio.file.Files.createTempDirectory("mainsrc")
-    for (f <- MainSources.files()) {
-      val to = copy.resolve(main.relativize(f.toPath))
-      java.nio.file.Files.createDirectories(to.getParent)
-      java.nio.file.Files.copy(f.toPath, to)
-    }
-    java.nio.file.Files.writeString(copy.resolve("graft/Mutant.scala"),
+    val copy = MainSources.copyWith("Mutant.scala",
       """package graft
         |object Mutant {
         |  def f(s: org.apache.spark.sql.SparkSession, d: String, dir: String) =
@@ -81,10 +74,10 @@ class SharedBuildSpec extends SparkSpec {
         |        s"ivf|mutant|$d") { 1 }
         |}
         |""".stripMargin)
-    val keys = memoKeyOffenders(copy.toFile)
+    val keys = memoKeyOffenders(copy)
     assert(keys.exists(o => o.startsWith("'ivf'") && o.contains("Mutant.scala")),
       s"second ivf site not reported: $keys")
-    val layout = layoutOffenders(copy.toFile)
+    val layout = layoutOffenders(copy)
     assert(layout.exists(_.contains("Mutant.scala")),
       s"codes/_SUCCESS outside IvfStore not reported: $layout")
   }

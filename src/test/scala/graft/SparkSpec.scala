@@ -28,6 +28,19 @@ object MainSources {
     sources(root)
   }
 
+  /** A temp copy of the tree with one more file, `graft/<name>`. */
+  def copyWith(name: String, source: String): java.io.File = {
+    val main = new java.io.File("src/main/scala").toPath
+    val copy = java.nio.file.Files.createTempDirectory("mainsrc")
+    for (f <- files()) {
+      val to = copy.resolve(main.relativize(f.toPath))
+      java.nio.file.Files.createDirectories(to.getParent)
+      java.nio.file.Files.copy(f.toPath, to)
+    }
+    java.nio.file.Files.writeString(copy.resolve(s"graft/$name"), source)
+    copy.toFile
+  }
+
   def lines(f: java.io.File): IndexedSeq[String] = {
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.readAllLines(f.toPath).asScala.toIndexedSeq
