@@ -48,8 +48,7 @@ object ModelPipeline {
     * materialized once per session. */
   def counts(s: SparkSession, d: String): DataFrame =
     Intermediates.memo(s, s"counts|$d") {
-      Featurize.termCounts(Featurize.docTerms(Tables.documents(s, d)))
-        .localCheckpoint()
+      Featurize.counts(Tables.documents(s, d)).localCheckpoint()
     }
 
   /** Shared quanteda TF-IDF weights relation for a dataset dir. */
@@ -63,7 +62,7 @@ object ModelPipeline {
           precomputedCounts: Option[DataFrame] = None,
           precomputedWeights: Option[DataFrame] = None): Fitted = {
     val counts = precomputedCounts.getOrElse(
-      Featurize.termCounts(Featurize.docTerms(docs)).localCheckpoint())
+      Featurize.counts(docs).localCheckpoint())
     val docTerms = counts.select(col("doc_id"), col("term"))
     // weights feeds topVocab, the vector assembly, AND every downstream
     // fm.weights consumer — reuse the session materialization when the
@@ -71,11 +70,7 @@ object ModelPipeline {
     // per consumer)
     val weights = precomputedWeights.getOrElse(Featurize.tfidf(counts, docs))
     val vocab = Featurize.topVocab(weights, vocabSize).localCheckpoint()
-    val vocabTerms = {
-      val arr = new Array[String](vocab.count().toInt)
-      vocab.collect().foreach(r => arr(r.getInt(1)) = r.getString(0))
-      arr
-    }
+    val vocabTerms = vocab.collect().sortBy(_.getInt(1)).map(_.getString(0))
     val feats = Featurize.vectors(weights, vocab, vocabSize).localCheckpoint()
     val model = new KMeans().setK(k).setSeed(seed)
       .setFeaturesCol("features").setPredictionCol("cluster")
@@ -145,29 +140,15 @@ object ModelPipeline {
       .orderBy(col("cluster"))
 
   /** M10 + A10: the refiner pipeline (ref runPhase1Pipeline
-    * 04_cluster_refiner.R:726-774) — coherence → conditional split
-    * (`breakClusters` ≙ the reference's break_clusters flag) → top
-    * terms → deterministic labels → the labeled coherence report
-    * (cluster, n_docs, coherence, label) sorted best-first (ref
-    * 02_build_models.R:790-853). A cluster whose label is missing gets
-    * "Unlabeled" — warn-don't-fail (ref 04_cluster_refiner.R:626-628). */
-  def refinerReport(docs: DataFrame, k: Int = 15, seed: Long = 123,
-                    vocabSize: Int = 2000,
-                    params: LdaSplitter.Params = LdaSplitter.Params(),
-                    breakClusters: Boolean = true): DataFrame = {
-    val fm = fit(docs, k, seed, vocabSize)
-    val asg =
-      if (breakClusters) split(fm, params)
-      else fm.assignments.select(col("doc_id"), col("cluster"))
-    reportFrom(fm, asg)
-  }
-
-  /** Dir-keyed refiner report over the shared fit/split. */
+    * 04_cluster_refiner.R:726-774), the shared fit/split's report. */
   def refinerReport(s: SparkSession, d: String, k: Int, seed: Long,
                     params: LdaSplitter.Params): DataFrame =
     reportFrom(fitted(s, d, k, seed), splitAssignments(s, d, params, k, seed))
 
-  private def reportFrom(fm: Fitted, asg: DataFrame): DataFrame = {
+  /** The labeled coherence report (cluster, n_docs, coherence, label) of
+    * a fit and its assignments, best-first (ref 02_build_models.R:790-853);
+    * a cluster with no label gets "Unlabeled" (ref 04_cluster_refiner.R:626-628). */
+  private[graft] def reportFrom(fm: Fitted, asg: DataFrame): DataFrame = {
     val asgSlim = asg.select(col("doc_id"), col("cluster"))
     // tiny (≤ clusters × 5 rows) but read by coherence AND labels —
     // materialize to avoid re-running the weights join per consumer

@@ -1,7 +1,9 @@
 package graft.api
 
 import graft.features.Featurize
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.clustering.KMeansModel
+import org.apache.spark.ml.linalg.SparseVector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,13 +22,26 @@ import org.apache.spark.sql.functions._
   *              predict inconsistency; the engine uses one weighting on
   *              both sides, §7.4-style single-config decision.)
   *
-  * Predict-time vocab matching ≙ dfm_match: terms outside the training
-  * vocabulary drop out via the join; missing terms zero-fill via the
-  * sparse representation.
+  * Predict-time vocab matching ≙ dfm_match, per document row: each
+  * doc's [[Featurize.ngramCounts]] meet the broadcast vocabulary map —
+  * OOV terms drop, missing terms zero-fill — so a predict is one narrow
+  * stage, with no shuffle and no vocabulary scan. `doc_id` is the
+  * documents' key: rows sharing one are predicted apart, never merged.
   */
 object ModelStore {
 
-  final case class Saved(model: KMeansModel, vocab: DataFrame, vocabSize: Int)
+  /** `terms`: `vocab` as a broadcast term → (idx, log10(n_docs / df)) map. */
+  final case class Saved(model: KMeansModel, vocab: DataFrame, vocabSize: Int,
+                         terms: Broadcast[Map[String, (Int, Double)]])
+
+  /** Predict-time vectors take the dimensionality from the centers, which
+    * can exceed the realized vocabulary (vocabSize > distinct terms). */
+  private def saved(model: KMeansModel, vocab: DataFrame): Saved = {
+    val terms = vocab.select("term", "idx", "df", "n_docs").collect().map(r =>
+      r.getString(0) -> (r.getInt(1), StrictMath.log10(r.getDouble(3) / r.getLong(2))))
+    Saved(model, vocab, model.clusterCenters.head.size,
+      vocab.sparkSession.sparkContext.broadcast(terms.toMap))
+  }
 
   /** S9 versioned path convention: f(cluster count, date) — matches the
     * reference's `{k}_topic_{kind}.rds` naming intent
@@ -50,11 +65,10 @@ object ModelStore {
   }
 
   /** An in-memory [[Saved]] over a fit — the no-disk twin of
-    * save-then-load (dimension from the centers, like [[load]]). */
+    * save-then-load. */
   def inMemory(model: KMeansModel, vocab: DataFrame, counts: DataFrame,
                docs: DataFrame): Saved =
-    Saved(model, vocabWithStats(vocab, counts, docs),
-      model.clusterCenters.head.size)
+    saved(model, vocabWithStats(vocab, counts, docs))
 
   /** Persist model + weighted vocabulary. `counts` and `docs` are the
     * TRAINING corpus relations the df/N statistics derive from. */
@@ -71,33 +85,28 @@ object ModelStore {
   def isSaved(dir: String): Boolean =
     new java.io.File(s"$dir/vocab/_SUCCESS").isFile
 
-  def load(spark: SparkSession, dir: String): Saved = {
-    val vocab = spark.read.parquet(s"$dir/vocab")
-    val model =
-      org.apache.spark.ml.clustering.GraftKMeansIO.load(s"$dir/kmeans")
-    // predict-time vectors must match the TRAINING dimensionality, which
-    // can exceed the realized vocabulary (vocabSize > distinct terms) —
-    // the centers carry the authoritative dimension
-    Saved(model, vocab, model.clusterCenters.head.size)
-  }
+  def load(spark: SparkSession, dir: String): Saved =
+    saved(org.apache.spark.ml.clustering.GraftKMeansIO.load(s"$dir/kmeans"),
+      spark.read.parquet(s"$dir/vocab"))
 
-  /** V9 predict-time vectorization: tokens → counts → vocab match
-    * (train-vocab join; OOV terms drop, missing terms zero-fill) →
-    * train-corpus quanteda weighting → SparseVector. */
-  def vectorize(docs: DataFrame, saved: Saved,
-                textCol: String = "text"): DataFrame = {
-    val counts = Featurize.termCounts(Featurize.docTerms(docs, textCol))
-    val weights = counts.join(saved.vocab, "term")
-      .withColumn("weight", col("cnt") * log10(col("n_docs") / col("df")))
-      .select(col("doc_id"), col("term"), col("weight"))
-    Featurize.vectors(weights, saved.vocab.select(col("term"), col("idx")),
-      saved.vocabSize)
+  /** V9 predict-time vectorization, per document row: 1-3-gram counts →
+    * vocab match (OOV terms drop, missing terms zero-fill) → train-corpus
+    * weighting cnt · log10(n_docs / df) → sorted SparseVector. A doc with
+    * no in-vocab term is dropped. */
+  def vectorize(docs: DataFrame, saved: Saved): DataFrame = {
+    val (terms, size) = (saved.terms, saved.vocabSize)
+    val toVector = udf { (words: Seq[String]) =>
+      val hits = Featurize.ngramCounts(words).toArray.flatMap { case (t, c) =>
+        terms.value.get(t).map { case (i, idf) => i -> c * idf } }.sortBy(_._1)
+      if (hits.isEmpty) null
+      else new SparseVector(size, hits.map(_._1), hits.map(_._2))
+    }
+    docs.select(col("doc_id"), toVector(Featurize.wordsCol(col("text"))).as("features"))
+      .filter(col("features").isNotNull)
   }
 
   /** M8 nearest-centroid prediction: (doc_id, cluster). */
-  def predict(docs: DataFrame, saved: Saved,
-              textCol: String = "text"): DataFrame =
-    saved.model.transform(vectorize(docs, saved, textCol))
-      .select(col("doc_id"),
-        col(saved.model.getPredictionCol).as("cluster"))
+  def predict(docs: DataFrame, saved: Saved): DataFrame =
+    saved.model.transform(vectorize(docs, saved))
+      .select(col("doc_id"), col(saved.model.getPredictionCol).as("cluster"))
 }

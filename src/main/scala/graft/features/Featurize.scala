@@ -18,9 +18,10 @@ import org.apache.spark.sql.functions._
   *  - stays sparse end to end (the reference accidentally densifies at
   *    02_build_models.R:177 — we deliberately don't).
   *
-  * Scale: everything before vector assembly is (doc, term) rows — shuffle
-  * keys are terms/docs with bounded skew; the vocabulary index (≤ vocabSize
-  * entries) is the only driver-side collect, broadcast back.
+  * Scale: n-grams are counted inside each document's row, so the DFM
+  * costs no shuffle; after it, shuffle keys are terms/docs with bounded
+  * skew. `doc_id` is the documents' key: rows sharing one are counted
+  * apart, never merged.
   */
 object Featurize {
 
@@ -29,25 +30,31 @@ object Featurize {
     filter(TextFunctions.tokens(textCol),
       t => !t.isin(TextFunctions.stopWords: _*))
 
-  /** Explode 1+2+3-gram terms per document (quanteda tokens ngrams=1:3,
-    * space-joined; ref 02_build_models.R:162). */
-  def docTerms(docs: DataFrame, textCol: String = "text",
-               idCol: String = "doc_id"): DataFrame = {
-    // widen a narrow scan before the 1-3-gram fanout (no-op at scale —
-    // see Scans.widenForFanout)
-    val wide = graft.sources.Scans.widenForFanout(
-      docs.select(col(idCol), col(textCol)), col(idCol))
-    val toks = wide.select(col(idCol).as("doc_id"), wordsCol(col(textCol)).as("w1"))
-    val g3 = TextFunctions.withNgrams(
-      TextFunctions.withNgrams(toks, "w1", "w2", 2), "w1", "w3", 3)
-    g3.select(col("doc_id"),
-        explode(concat(col("w1"), col("w2"), col("w3"))).as("term"))
-      .filter(col("term") =!= "")
+  /** The per-row term-count kernel: a document's stopword-filtered
+    * tokens → its 1+2+3-gram counts, space-joined like `NGram` (quanteda
+    * tokens ngrams=1:3; ref 02_build_models.R:162). Training explodes it
+    * ([[counts]]); serving looks it up in a broadcast vocabulary
+    * ([[graft.api.ModelStore.vectorize]]). Null tokens have no terms. */
+  def ngramCounts(words: Seq[String]): collection.Map[String, Long] = {
+    val counts = collection.mutable.HashMap.empty[String, Long]
+    val w = Option(words).fold(Array.empty[String])(_.toArray)
+    for (n <- 1 to 3; i <- 0 to w.length - n) {
+      val term = w.slice(i, i + n).mkString(" ")
+      counts(term) = counts.getOrElse(term, 0L) + 1L
+    }
+    counts
   }
 
-  /** (doc_id, term, cnt) counts — the DFM in relational form (V3). */
-  def termCounts(docTerms: DataFrame): DataFrame =
-    docTerms.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("cnt"))
+  private val ngramCountsUdf = udf(ngramCounts _)
+
+  /** (doc_id, term, cnt) counts — the DFM in relational form (V3): the
+    * kernel exploded per row, with no (doc_id, term)-keyed shuffle. */
+  def counts(docs: DataFrame): DataFrame =
+    // widen a narrow scan before the fanout (a no-op at scale)
+    graft.sources.Scans.widenForFanout(
+        docs.select(col("doc_id"), col("text")), col("doc_id"))
+      .select(col("doc_id"), explode(ngramCountsUdf(wordsCol(col("text")))))
+      .select(col("doc_id"), col("key").as("term"), col("value").as("cnt"))
 
   /** quanteda dfm_tfidf: weight = cnt · log10(N / df) (V5). N arrives as
     * a broadcast 1-row aggregate — no separate eager count() scan. The

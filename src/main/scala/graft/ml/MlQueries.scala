@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
 object MlQueries {
 
   /** Shared CTE chain: 1-3-gram terms → counts → quanteda tf-idf weights
-    * (≙ [[Featurize.docTerms]]/[[Featurize.termCounts]]/[[Featurize.tfidf]]),
+    * (≙ [[Featurize.counts]]/[[Featurize.tfidf]]),
     * parametric on the corpus CTE/table (`table`) and a CTE-name suffix
     * (`sfx`) so one oracle can run the chain over TWO corpora (m18's
     * pre-takedown union vs the survivor corpus) without name clashes.
@@ -436,7 +436,7 @@ object MlQueries {
     * identity, m11 pins the predict path on a planted closed-form
     * corpus), but WHICH sampled docs survive prediction is fully
     * relational: the predict path drops exactly the docs with no
-    * term in the train vocabulary ([[graft.features.Featurize.vectors]]'
+    * term in the train vocabulary ([[graft.api.ModelStore.vectorize]]'
     * documented OOV behavior), and the train vocabulary is the same
     * mass-ranked top-2000 m03 hash-matches. Anchored on the SAMPLE
     * (left join) so a dropped doc is a flagged row, not a missing one:
@@ -524,7 +524,7 @@ object MlQueries {
     val p2 = ModelStore.predict(sample, mem)
       .withColumnRenamed("cluster", "c_mem")
     // left-join from the SAMPLE with null-safe equality: a doc the
-    // predict path drops (no in-vocab terms — Featurize.vectors'
+    // predict path drops (no in-vocab terms — ModelStore.vectorize's
     // documented behavior) still emits a row, and it is `ok` only when
     // BOTH paths dropped it identically (null <=> null). An inner join
     // would silently delete such docs from the compare while the oracle
@@ -880,7 +880,7 @@ object MlQueries {
         // planted doc's counts (per-doc term counts are disjoint by
         // doc_id), so the pre-takedown fit re-tokenizes ONE document
         val unionCounts = ModelPipeline.counts(s, d).unionByName(
-          Featurize.termCounts(Featurize.docTerms(planted)))
+          Featurize.counts(planted))
           .localCheckpoint()
         ModelPipeline.fit(union, k = 15, seed = 123, vocabSize = 2000,
           Some(unionCounts))

@@ -1529,7 +1529,8 @@ object EventStreams {
     *
     * 100 TB shape: a model rollout to a live prediction fleet is one
     * pointer file — no stream restart, no data movement; per batch
-    * the predict is batch-tokens ⋈ broadcast vocabulary + a map-only
+    * the predict is one map-only stage: each row's 1-3-gram counts
+    * looked up in the loaded model's broadcast vocabulary, then the
     * nearest-centroid transform. */
   def streamModelFlip(s: SparkSession, d: String): DataFrame = {
     import graft.api.{ModelStore, ServePointer}

@@ -18,13 +18,13 @@ class FeaturizeSpec extends SparkSpec {
 
   /** (features, vocab): the TF-IDF vectors over the top-n vocabulary. */
   private def vectors(docs: DataFrame, n: Int): (DataFrame, DataFrame) = {
-    val w = Featurize.tfidf(Featurize.termCounts(Featurize.docTerms(docs)), docs)
+    val w = Featurize.tfidf(Featurize.counts(docs), docs)
     val vocab = Featurize.topVocab(w, n)
     (Featurize.vectors(w, vocab, n), vocab)
   }
 
   test("docTerms emits 1+2+3-grams per doc") {
-    val terms = Featurize.docTerms(corpus).collect()
+    val terms = Featurize.counts(corpus).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val byDoc = terms.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     // 4 words -> 4 + 3 + 2 = 9 n-grams; 5 words -> 5 + 4 + 3 = 12
@@ -36,8 +36,7 @@ class FeaturizeSpec extends SparkSpec {
   }
 
   test("tfidf weight is cnt * log10(N/df)") {
-    val w = Featurize.tfidf(
-      Featurize.termCounts(Featurize.docTerms(corpus)), corpus)
+    val w = Featurize.tfidf(Featurize.counts(corpus), corpus)
     val got = w.filter(col("term") === "finance").select("weight")
       .as[Double].collect().head
     // every term appears in exactly 1 of 3 docs with cnt 1
@@ -45,8 +44,7 @@ class FeaturizeSpec extends SparkSpec {
   }
 
   test("topVocab assigns dense mass-descending ids with term tiebreak") {
-    val w = Featurize.tfidf(
-      Featurize.termCounts(Featurize.docTerms(corpus)), corpus)
+    val w = Featurize.tfidf(Featurize.counts(corpus), corpus)
     val vocab = Featurize.topVocab(w, 30).orderBy("idx").collect()
       .map(r => (r.getString(0), r.getInt(1)))
     assert(vocab.length === 30) // 9 + 9 + 12 distinct terms

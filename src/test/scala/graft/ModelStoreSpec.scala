@@ -1,6 +1,10 @@
 package graft
 
 import graft.api.{ModelPipeline, ModelStore}
+import graft.features.Featurize
+import graft.functions.TextFunctions
+import org.apache.spark.ml.linalg.{SparseVector, Vectors}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Save → load → predict round-trip (SURVEY S7/S8/S9 + M8/V9): a
@@ -116,5 +120,67 @@ class ModelStoreSpec extends SparkSpec {
     val out = ModelStore.predict(newDocs, saved).collect()
     assert(out.length === 1)
     assert(out.head.getLong(0) === 99L)
+  }
+
+  /** The relational DFM: exploded 1-3-grams grouped by (doc_id, term).
+    * The n-grams come from the expression form of `NGram`, which (unlike
+    * `NGram` itself) accepts a null token array. */
+  private def relationalCounts(docs: DataFrame): DataFrame = {
+    val w1 = Featurize.wordsCol(col("text"))
+    docs.select(col("doc_id"), explode(concat(w1,
+        TextFunctions.ngrams(w1, 2), TextFunctions.ngrams(w1, 3))).as("term"))
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("cnt"))
+  }
+
+  /** The relational vectors: counts ⋈ vocab, weighted cnt · log10(n_docs / df)
+    * in Spark, grouped by doc. */
+  private def relationalVectors(docs: DataFrame, saved: ModelStore.Saved)
+      : Map[Long, SparseVector] =
+    relationalCounts(docs).join(saved.vocab, "term")
+      .groupBy(col("doc_id"))
+      .agg(collect_list(struct(col("idx"),
+        (col("cnt") * log10(col("n_docs") / col("df"))).as("w"))).as("iw"))
+      .collect().map { r =>
+        val iw = r.getSeq[org.apache.spark.sql.Row](1)
+          .map(x => x.getInt(0) -> x.getDouble(1)).sortBy(_._1)
+        r.getLong(0) -> Vectors.sparse(saved.vocabSize, iw.map(_._1).toArray,
+          iw.map(_._2).toArray).asInstanceOf[SparseVector]
+      }.toMap
+
+  /** Exact, bit-level: size, indices and the raw bits of every value. */
+  private def bits(v: SparseVector) =
+    (v.size, v.indices.toSeq, v.values.toSeq.map(java.lang.Double.doubleToRawLongBits))
+
+  test("the per-row kernel equals the relational DFM and vectors on edge cases") {
+    // "shared" is in every training doc: idf 0, an explicit zero weight
+    val train = corpus.select(col("doc_id"), concat(col("text"), lit(" shared")).as("text"))
+    val fm = ModelPipeline.fit(train, k = 2, seed = 123, vocabSize = 100)
+    val dir = java.nio.file.Files.createTempDirectory("graft-model").toString
+    ModelStore.save(dir, fm.model, fm.vocab, fm.counts, train)
+    val cases = Seq(
+      (1L, null: String),                                   // null text
+      (2L, "the and of was"),                               // stopwords only
+      (3L, "energy"),                                       // 1 token
+      (4L, "energy battery"),                               // 2 tokens
+      (5L, "power battery power battery power battery"),    // repeated n-grams
+      (6L, "quantum energy blockchain battery power"),      // OOV terms mixed in
+      (7L, "quantum blockchain zebra"),                     // no in-vocab term
+      (8L, "Energy, battery! renewable-power storage"),     // the clean chain
+      (9L, "shared power shared"))                          // zero-idf term
+    val docs = cases.toDF("doc_id", "text")
+    def rowsOf(df: DataFrame) = df.select(col("doc_id"), col("term"), col("cnt"))
+      .as[(Long, String, Long)].collect().sorted.toSeq
+    assert(rowsOf(Featurize.counts(docs)) === rowsOf(relationalCounts(docs)))
+    assert(rowsOf(Featurize.counts(train)) === rowsOf(relationalCounts(train)))
+    for (saved <- Seq(ModelStore.load(spark, dir),
+                      ModelStore.inMemory(fm.model, fm.vocab, fm.counts, train))) {
+      val got = ModelStore.vectorize(docs, saved).collect()
+        .map(r => r.getLong(0) -> bits(r.getAs[SparseVector](1))).toMap
+      val want = relationalVectors(docs, saved).view.mapValues(bits).toMap
+      assert(got === want)
+      // docs 1 and 2 have no terms, doc 7 no in-vocabulary term: dropped
+      assert(got.keySet === Set(3L, 4L, 5L, 6L, 8L, 9L))
+      assert(got(9L)._3.contains(0L), "the zero weight must stay explicit")
+    }
   }
 }

@@ -675,4 +675,43 @@ class PlanAuditSpec extends SparkSpec {
     assert(!paths.exists(_.contains("/append/")),
       s"d30 probe reads the retired append root: $paths")
   }
+
+  /** A model fit on the tiny corpus, saved and loaded back, and a
+    * 50-doc batch scanned from parquet (the serving shape). */
+  private lazy val served = {
+    import org.apache.spark.sql.functions.col
+    import graft.api.{ModelPipeline, ModelStore}
+    val fm = ModelPipeline.fitted(spark, sfTiny)
+    val docs = graft.sources.Tables.documents(spark, sfTiny)
+    val dir = java.nio.file.Files.createTempDirectory("graft-model").toString
+    ModelStore.save(dir, fm.model, fm.vocab, fm.counts, docs)
+    val lo = docs.agg(org.apache.spark.sql.functions.min(col("doc_id"))).head().getLong(0)
+    (ModelStore.load(spark, dir), docs.filter(col("doc_id") < lo + 50))
+  }
+
+  test("predict on a loaded model is one narrow stage: no Exchange, no vocab scan") {
+    val (saved, batch) = served
+    val pred = graft.api.ModelStore.predict(batch, saved)
+    assert(pred.collect().nonEmpty)
+    val p = pred.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"), s"predict plans a shuffle:\n$p")
+    assert("FileScan".r.findAllIn(p).size === 1, s"predict scans more than its batch:\n$p")
+  }
+
+  test("one predict call submits exactly one Spark job") {
+    val (saved, batch) = served
+    val (_, jobs) = recordJobs() {
+      graft.api.ModelStore.predict(batch, saved)
+        .write.format("noop").mode("overwrite").save()
+    }
+    assert(jobs.count(inBody) === 1)
+  }
+
+  test("the training counts plan has no (doc_id, term)-keyed shuffle") {
+    val counts = graft.features.Featurize.counts(graft.sources.Tables.documents(spark, sfTiny))
+    val p = counts.queryExecution.executedPlan.toString
+    assert("hashpartitioning\\(doc_id#\\d+L?, term#".r.findFirstIn(p).isEmpty,
+      s"counts shuffles on (doc_id, term):\n$p")
+    assert(counts.count() > 0)
+  }
 }

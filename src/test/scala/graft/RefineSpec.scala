@@ -3,12 +3,10 @@ package graft
 import graft.features.Featurize
 import graft.refine.{CosineMerge, LdaSplitter, ModelRefresh, Renumber}
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import scala.concurrent.duration._
-import scala.jdk.CollectionConverters._
 
 /** Split/merge/renumber/refresh semantics over the FIXTURES A2 corpus
   * (6 docs, 3 latent topics, initial clusters [1,1,2,2,2,2] — ref
@@ -31,8 +29,7 @@ class RefineSpec extends SparkSpec {
 
   /** The fixture corpus's (doc_id, features) count vectors and vocab. */
   private def fixtureVectors: (DataFrame, Array[String]) = {
-    val docTerms = Featurize.docTerms(corpus)
-    val counts = Featurize.termCounts(docTerms)
+    val counts = Featurize.counts(corpus)
     val weights = Featurize.tfidf(counts, corpus)
     val vocab = Featurize.topVocab(weights, 100)
     val vocabTerms = {
@@ -91,11 +88,12 @@ class RefineSpec extends SparkSpec {
   }
 
   test("refinerReport produces a labeled coherence report (M10/A10)") {
-    val report = graft.api.ModelPipeline.refinerReport(
-      corpus, k = 3, seed = 123, vocabSize = 100,
-      params = graft.refine.LdaSplitter.Params(
+    import graft.api.ModelPipeline
+    val fm = ModelPipeline.fit(corpus, k = 3, seed = 123, vocabSize = 100)
+    val report = ModelPipeline.reportFrom(fm, ModelPipeline.split(fm,
+      graft.refine.LdaSplitter.Params(
         kRange = 2 to 2, coherenceThreshold = -10.0, // no split: all coherent enough
-        minDocsForSplit = 2, maxIter = 10, subsamplingRate = 1.0))
+        minDocsForSplit = 2, maxIter = 10, subsamplingRate = 1.0)))
       .collect()
     assert(report.length === 3)
     report.foreach { r =>
@@ -207,36 +205,6 @@ class RefineSpec extends SparkSpec {
 
   private def byDoc(df: DataFrame): Map[Long, Int] =
     df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-
-  /** Every job start seen while `body` runs, plus a settle period after
-    * it; jobs submitted inside `body` carry the local property
-    * `graft.test.probe`. The bus delivers events in order, so once a
-    * sentinel job submitted afterwards is seen, every earlier one is. */
-  private def recordJobs[T](settle: FiniteDuration = Duration.Zero)(body: => T)
-      : (T, Seq[SparkListenerJobStart]) = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { seen.add(e); () }
-    }
-    def probe(e: SparkListenerJobStart) =
-      Option(e.properties).map(_.getProperty("graft.test.probe")).orNull
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.test.probe", "body")
-      val out = try body finally sc.setLocalProperty("graft.test.probe", null)
-      Thread.sleep(settle.toMillis)
-      sc.setLocalProperty("graft.test.probe", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.probe", null)
-      val until = System.nanoTime() + 30.seconds.toNanos
-      while (!seen.asScala.exists(probe(_) == "sentinel") && System.nanoTime() < until)
-        Thread.sleep(20)
-      (out, seen.asScala.toSeq.filter(probe(_) != "sentinel"))
-    } finally sc.removeSparkListener(listener)
-  }
-
-  private def inBody(e: SparkListenerJobStart): Boolean =
-    Option(e.properties).exists(_.getProperty("graft.test.probe") == "body")
 
   test("the split submits at most maxIter + 6 Spark jobs") {
     // MLlib's optimizer spent 2·maxIter + 2 jobs per (cluster, k) fit:

@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for all suites (getOrCreate — one session
   * per forked test JVM; never stopped so suites can run in any order). */
@@ -13,6 +17,36 @@ trait SparkSpec extends AnyFunSuite {
 
   /** sf0.001 corpus dir (smallest driver-generated test data). */
   val sfTiny = "/root/testdata/sf0.001"
+
+  /** Every job start seen while `body` runs, plus a settle period after
+    * it; jobs submitted inside `body` carry the local property
+    * `graft.test.probe`. The bus delivers events in order, so once a
+    * sentinel job submitted afterwards is seen, every earlier one is. */
+  protected def recordJobs[T](settle: FiniteDuration = Duration.Zero)(body: => T)
+      : (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { seen.add(e); () }
+    }
+    def probe(e: SparkListenerJobStart) =
+      Option(e.properties).map(_.getProperty("graft.test.probe")).orNull
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.probe", "body")
+      val out = try body finally sc.setLocalProperty("graft.test.probe", null)
+      Thread.sleep(settle.toMillis)
+      sc.setLocalProperty("graft.test.probe", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.probe", null)
+      val until = System.nanoTime() + 30.seconds.toNanos
+      while (!seen.asScala.exists(probe(_) == "sentinel") && System.nanoTime() < until)
+        Thread.sleep(20)
+      (out, seen.asScala.toSeq.filter(probe(_) != "sentinel"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  protected def inBody(e: SparkListenerJobStart): Boolean =
+    Option(e.properties).exists(_.getProperty("graft.test.probe") == "body")
 }
 
 /** The `src/main/scala` tree, for the source-scan guard tests (suites
