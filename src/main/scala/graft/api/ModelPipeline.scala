@@ -29,12 +29,13 @@ import org.apache.spark.sql.functions._
 object ModelPipeline {
 
   /** Everything downstream stages need, fitted once. `counts` is the
-    * single materialization point: every downstream stage (weights,
-    * vocab, vectors, coherence presence) derives from it, so the
+    * single materialization point of the DFM: weights, vocab, the df/N
+    * statistics and coherence presence all derive from it, so the
     * tokenize→ngram→count subtree runs exactly once per pipeline instead
     * of once per stage. `docTerms` for coherence is counts-projected —
     * coherence binarizes anyway, and counts already holds distinct
-    * (doc, term) pairs. */
+    * (doc, term) pairs. The K-means input (`assignments.features`) and the
+    * split's raw `countVectors` come from predict's [[Featurize.vectorize]]. */
   final case class Fitted(
       docTerms: DataFrame,    // (doc_id, term) distinct pairs
       counts: DataFrame,      // (doc_id, term, cnt), checkpointed
@@ -42,6 +43,7 @@ object ModelPipeline {
       vocab: DataFrame,       // (term, idx)
       vocabTerms: Array[String],
       assignments: DataFrame, // (doc_id, cluster, features)
+      countVectors: DataFrame, // (doc_id, features), lazy
       model: org.apache.spark.ml.clustering.KMeansModel)
 
   /** Shared (doc_id, term, cnt) DFM relation for a dataset dir —
@@ -64,19 +66,21 @@ object ModelPipeline {
     val counts = precomputedCounts.getOrElse(
       Featurize.counts(docs).localCheckpoint())
     val docTerms = counts.select(col("doc_id"), col("term"))
-    // weights feeds topVocab, the vector assembly, AND every downstream
-    // fm.weights consumer — reuse the session materialization when the
-    // caller has one (the lazy tfidf join would otherwise re-execute
-    // per consumer)
+    // weights feeds topVocab AND every downstream fm.weights consumer —
+    // reuse the session materialization when the caller has one (the
+    // lazy tfidf join would otherwise re-execute per consumer)
     val weights = precomputedWeights.getOrElse(Featurize.tfidf(counts, docs))
     val vocab = Featurize.topVocab(weights, vocabSize).localCheckpoint()
-    val vocabTerms = vocab.collect().sortBy(_.getInt(1)).map(_.getString(0))
-    val feats = Featurize.vectors(weights, vocab, vocabSize).localCheckpoint()
+    // the df/N relation save persists, collected once
+    val terms = Featurize.termIndex(ModelStore.vocabWithStats(vocab, counts, docs))
+    val vocabTerms = terms.value.toArray.sortBy(_._2._1).map(_._1)
+    val text = Featurize.widen(docs)
+    val feats = Featurize.vectorize(text, terms, vocabSize, Featurize.TfIdf).localCheckpoint()
     val model = new KMeans().setK(k).setSeed(seed)
       .setFeaturesCol("features").setPredictionCol("cluster")
       .fit(feats)
-    Fitted(docTerms, counts, weights, vocab, vocabTerms,
-      model.transform(feats), model)
+    Fitted(docTerms, counts, weights, vocab, vocabTerms, model.transform(feats),
+      Featurize.vectorize(text, terms, vocabTerms.length, Featurize.RawCount), model)
   }
 
   /** Dir-keyed fitted pipeline, shared across every query in the
@@ -101,10 +105,8 @@ object ModelPipeline {
   def split(fm: Fitted, params: LdaSplitter.Params): DataFrame = {
     val scores = coherence(fm, params.topM).collect()
       .map(r => r.getInt(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    val countVecs = Featurize.countVectors(fm.counts, fm.vocab,
-      fm.vocabTerms.length)
     val updated = LdaSplitter.split(
-      countVecs, fm.assignments.select(col("doc_id"), col("cluster")),
+      fm.countVectors, fm.assignments.select(col("doc_id"), col("cluster")),
       scores, fm.vocabTerms, params)
     // materialize once: every downstream consumer (top terms, coherence,
     // merge centers, stats, labels) re-reads the split assignments, and

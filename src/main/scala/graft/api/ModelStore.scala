@@ -3,7 +3,6 @@ package graft.api
 import graft.features.Featurize
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.clustering.KMeansModel
-import org.apache.spark.ml.linalg.SparseVector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,11 +21,11 @@ import org.apache.spark.sql.functions._
   *              predict inconsistency; the engine uses one weighting on
   *              both sides, §7.4-style single-config decision.)
   *
-  * Predict-time vocab matching ≙ dfm_match, per document row: each
-  * doc's [[Featurize.ngramCounts]] meet the broadcast vocabulary map —
-  * OOV terms drop, missing terms zero-fill — so a predict is one narrow
-  * stage, with no shuffle and no vocabulary scan. `doc_id` is the
-  * documents' key: rows sharing one are predicted apart, never merged.
+  * Vocab matching ≙ dfm_match, per document row, in training and predict
+  * alike: [[Featurize.vectorize]] meets each doc's n-gram counts with the
+  * broadcast vocabulary map (OOV terms drop, missing terms zero-fill), so
+  * a predict is one narrow stage with no shuffle and no vocabulary scan.
+  * `doc_id` is the documents' key: rows sharing one are predicted apart.
   */
 object ModelStore {
 
@@ -36,12 +35,8 @@ object ModelStore {
 
   /** Predict-time vectors take the dimensionality from the centers, which
     * can exceed the realized vocabulary (vocabSize > distinct terms). */
-  private def saved(model: KMeansModel, vocab: DataFrame): Saved = {
-    val terms = vocab.select("term", "idx", "df", "n_docs").collect().map(r =>
-      r.getString(0) -> (r.getInt(1), StrictMath.log10(r.getDouble(3) / r.getLong(2))))
-    Saved(model, vocab, model.clusterCenters.head.size,
-      vocab.sparkSession.sparkContext.broadcast(terms.toMap))
-  }
+  private def saved(model: KMeansModel, vocab: DataFrame): Saved =
+    Saved(model, vocab, model.clusterCenters.head.size, Featurize.termIndex(vocab))
 
   /** S9 versioned path convention: f(cluster count, date) — matches the
     * reference's `{k}_topic_{kind}.rds` naming intent
@@ -50,16 +45,16 @@ object ModelStore {
   def versionedDir(base: String, k: Int, date: java.time.LocalDate): String =
     s"$base/${k}_topic_model_$date"
 
-  /** The df/N-weighted vocabulary relation [[save]] persists —
-    * exposed so an IN-MEMORY [[Saved]] can be constructed from a fit
+  /** The df/N-weighted vocabulary relation [[save]] persists, which the
+    * fit's vector index and an IN-MEMORY [[Saved]] also read
     * (the s09 round-trip row compares the loaded store's predictions
     * against predictions through this identical in-memory relation,
     * isolating exactly the disk round-trip). `counts` and `docs` are
     * the TRAINING corpus relations the df/N statistics derive from. */
   def vocabWithStats(vocab: DataFrame, counts: DataFrame,
                      docs: DataFrame): DataFrame = {
-    val df = counts.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val n = docs.agg(count(lit(1)).cast("double").as("n_docs"))
+    val (df, n) = Featurize.docFreq(
+      counts.join(broadcast(vocab.select(col("term"))), Seq("term"), "left_semi"), docs)
     vocab.join(df, "term").crossJoin(broadcast(n))
       .select(col("term"), col("idx"), col("df"), col("n_docs"))
   }
@@ -89,21 +84,10 @@ object ModelStore {
     saved(org.apache.spark.ml.clustering.GraftKMeansIO.load(s"$dir/kmeans"),
       spark.read.parquet(s"$dir/vocab"))
 
-  /** V9 predict-time vectorization, per document row: 1-3-gram counts →
-    * vocab match (OOV terms drop, missing terms zero-fill) → train-corpus
-    * weighting cnt · log10(n_docs / df) → sorted SparseVector. A doc with
-    * no in-vocab term is dropped. */
-  def vectorize(docs: DataFrame, saved: Saved): DataFrame = {
-    val (terms, size) = (saved.terms, saved.vocabSize)
-    val toVector = udf { (words: Seq[String]) =>
-      val hits = Featurize.ngramCounts(words).toArray.flatMap { case (t, c) =>
-        terms.value.get(t).map { case (i, idf) => i -> c * idf } }.sortBy(_._1)
-      if (hits.isEmpty) null
-      else new SparseVector(size, hits.map(_._1), hits.map(_._2))
-    }
-    docs.select(col("doc_id"), toVector(Featurize.wordsCol(col("text"))).as("features"))
-      .filter(col("features").isNotNull)
-  }
+  /** V9 predict-time vectorization: the training kernel, weighted
+    * cnt · log10(n_docs / df), over the batch as given (not widened). */
+  def vectorize(docs: DataFrame, saved: Saved): DataFrame =
+    Featurize.vectorize(docs, saved.terms, saved.vocabSize, Featurize.TfIdf)
 
   /** M8 nearest-centroid prediction: (doc_id, cluster). */
   def predict(docs: DataFrame, saved: Saved): DataFrame =

@@ -1,7 +1,8 @@
 package graft.features
 
 import graft.functions.TextFunctions
-import org.apache.spark.ml.linalg.{SparseVector, Vectors}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.ml.linalg.SparseVector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,10 +19,9 @@ import org.apache.spark.sql.functions._
   *  - stays sparse end to end (the reference accidentally densifies at
   *    02_build_models.R:177 — we deliberately don't).
   *
-  * Scale: n-grams are counted inside each document's row, so the DFM
-  * costs no shuffle; after it, shuffle keys are terms/docs with bounded
-  * skew. `doc_id` is the documents' key: rows sharing one are counted
-  * apart, never merged.
+  * Scale: a document's n-grams and its vector are computed inside its own
+  * row, with no shuffle; shuffle keys are terms, with bounded skew.
+  * `doc_id` is the documents' key: rows sharing one are counted apart.
   */
 object Featurize {
 
@@ -32,9 +32,9 @@ object Featurize {
 
   /** The per-row term-count kernel: a document's stopword-filtered
     * tokens → its 1+2+3-gram counts, space-joined like `NGram` (quanteda
-    * tokens ngrams=1:3; ref 02_build_models.R:162). Training explodes it
-    * ([[counts]]); serving looks it up in a broadcast vocabulary
-    * ([[graft.api.ModelStore.vectorize]]). Null tokens have no terms. */
+    * tokens ngrams=1:3; ref 02_build_models.R:162). [[counts]] explodes
+    * it; [[vectorize]] looks it up in a broadcast vocabulary, for the
+    * K-means input, the LDA split and predict. Null tokens have no terms. */
   def ngramCounts(words: Seq[String]): collection.Map[String, Long] = {
     val counts = collection.mutable.HashMap.empty[String, Long]
     val w = Option(words).fold(Array.empty[String])(_.toArray)
@@ -47,25 +47,32 @@ object Featurize {
 
   private val ngramCountsUdf = udf(ngramCounts _)
 
+  /** Training's (doc_id, text), widened for the fanout if a narrow scan. */
+  def widen(docs: DataFrame): DataFrame =
+    graft.sources.Scans.widenForFanout(
+      docs.select(col("doc_id"), col("text")), col("doc_id"))
+
   /** (doc_id, term, cnt) counts — the DFM in relational form (V3): the
     * kernel exploded per row, with no (doc_id, term)-keyed shuffle. */
   def counts(docs: DataFrame): DataFrame =
-    // widen a narrow scan before the fanout (a no-op at scale)
-    graft.sources.Scans.widenForFanout(
-        docs.select(col("doc_id"), col("text")), col("doc_id"))
+    widen(docs)
       .select(col("doc_id"), explode(ngramCountsUdf(wordsCol(col("text")))))
       .select(col("doc_id"), col("key").as("term"), col("value").as("cnt"))
 
-  /** quanteda dfm_tfidf: weight = cnt · log10(N / df) (V5). N arrives as
-    * a broadcast 1-row aggregate — no separate eager count() scan. The
-    * term→df join is pinned to shuffle-hash: the df relation is one row
-    * per DISTINCT 1-3-gram (grows with the corpus — never truly small),
-    * and its compressed size sits under the auto-broadcast threshold
-    * while the driver-side HashedRelation build of that many long string
-    * keys is slow, GC-heavy, and wildly variable. */
+  /** quanteda's df/N rule, for TF-IDF and the saved vocabulary: (term, df)
+    * over `counts`, and N as a lazy 1-row (n_docs) aggregate of `docs`. */
+  def docFreq(counts: DataFrame, docs: DataFrame): (DataFrame, DataFrame) =
+    (counts.groupBy(col("term")).agg(count(lit(1)).as("df")),
+     docs.agg(count(lit(1)).cast("double").as("n_docs")))
+
+  /** quanteda dfm_tfidf: weight = cnt · log10(N / df) (V5), [[docFreq]]'s
+    * N broadcast. The term→df join is pinned to shuffle-hash: the df
+    * relation is one row per DISTINCT 1-3-gram (grows with the corpus —
+    * never truly small), and its compressed size sits under the
+    * auto-broadcast threshold while the driver-side HashedRelation build
+    * of that many long string keys is slow, GC-heavy, and wildly variable. */
   def tfidf(counts: DataFrame, docs: DataFrame): DataFrame = {
-    val n = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-    val df = counts.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val (df, n) = docFreq(counts, docs)
     counts.join(df.hint("shuffle_hash"), "term")
       .crossJoin(broadcast(n))
       .withColumn("weight", col("cnt") * log10(col("n_docs") / col("df")))
@@ -92,27 +99,33 @@ object Featurize {
       .select(col("term"), col("idx"))
   }
 
-  private val toSparse =
-    udf { (size: Int, idx: Seq[Int], vals: Seq[Double]) =>
-      val pairs = idx.zip(vals).sortBy(_._1).toArray
-      Vectors.sparse(size, pairs.map(_._1), pairs.map(_._2)).asInstanceOf[SparseVector]
-    }
+  /** [[vectorize]]'s weightings of a term's (cnt, idf): TF-IDF for K-means
+    * and serving, the raw count for the DTM an LDA fit consumes. */
+  val TfIdf: (Long, Double) => Double = (cnt, idf) => cnt * idf
+  val RawCount: (Long, Double) => Double = (cnt, _) => cnt.toDouble
 
-  private def assemble(df: DataFrame, vocab: DataFrame, vocabSize: Int,
-                       valCol: Column): DataFrame =
-    df.join(vocab, "term")
-      .groupBy(col("doc_id"))
-      .agg(collect_list(col("idx")).as("is"), collect_list(valCol).as("vs"))
-      .select(col("doc_id"), toSparse(lit(vocabSize), col("is"), col("vs")).as("features"))
+  /** [[vectorize]]'s index: the vocabulary's (term, idx, df, n_docs) rows
+    * collected once into a broadcast term → (idx, log10(n_docs / df)) map. */
+  def termIndex(stats: DataFrame): Broadcast[Map[String, (Int, Double)]] = {
+    val terms = stats.select("term", "idx", "df", "n_docs").collect().map(r =>
+      r.getString(0) -> (r.getInt(1), StrictMath.log10(r.getDouble(3) / r.getLong(2))))
+    stats.sparkSession.sparkContext.broadcast(terms.toMap)
+  }
 
-  /** Assemble per-doc SparseVector TF-IDF features over the fixed
-    * vocabulary. Docs with no in-vocab terms are dropped (non-empty-doc
-    * filter P4 — ref 04_cluster_refiner.R:33-35). */
-  def vectors(weights: DataFrame, vocab: DataFrame, vocabSize: Int): DataFrame =
-    assemble(weights, vocab, vocabSize, col("weight"))
-
-  /** Assemble per-doc SparseVector term-COUNT features (the DTM an LDA
-    * fit consumes — topic models want counts, not TF-IDF weights). */
-  def countVectors(counts: DataFrame, vocab: DataFrame, vocabSize: Int): DataFrame =
-    assemble(counts, vocab, vocabSize, col("cnt").cast("double"))
+  /** The one document → SparseVector kernel (V9; ≙ dfm_match per row): a
+    * doc's [[ngramCounts]] looked up in `terms` (OOV terms drop), weighted,
+    * sorted by index, zero weights kept; a doc with no in-vocab term drops
+    * (P4 — ref 04_cluster_refiner.R:33-35). Training passes [[widen]]ed docs. */
+  def vectorize(docs: DataFrame, terms: Broadcast[Map[String, (Int, Double)]],
+                size: Int, weight: (Long, Double) => Double): DataFrame = {
+    // nondeterministic only so the null filter cannot re-run it per doc
+    val toVector = udf { (words: Seq[String]) =>
+      val hits = ngramCounts(words).toArray.flatMap { case (t, c) =>
+        terms.value.get(t).map { case (i, idf) => i -> weight(c, idf) } }.sortBy(_._1)
+      if (hits.isEmpty) null
+      else new SparseVector(size, hits.map(_._1), hits.map(_._2))
+    }.asNondeterministic()
+    docs.select(col("doc_id"), toVector(wordsCol(col("text"))).as("features"))
+      .filter(col("features").isNotNull)
+  }
 }

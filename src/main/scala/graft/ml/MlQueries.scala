@@ -585,7 +585,7 @@ object MlQueries {
 
   /** m12 — K-means FRAME invariants under the oracle: the fit must
     * assign exactly the vectorizable docs (those with ≥ 1 top-2000-vocab
-    * term — [[Featurize.vectors]] drops the rest), carry all k centers,
+    * term — [[Featurize.vectorize]] drops the rest), carry all k centers,
     * and produce non-negative within-cluster SSQs. The per-cluster stats
     * stay rows-only (m06 — Lloyd's result isn't SQL-expressible); this
     * row pins the frame any correct fit must fill, with the doc count

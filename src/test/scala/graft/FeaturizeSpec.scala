@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.ModelStore
 import graft.features.Featurize
 import org.apache.spark.ml.linalg.SparseVector
 import org.apache.spark.sql.DataFrame
@@ -18,9 +19,10 @@ class FeaturizeSpec extends SparkSpec {
 
   /** (features, vocab): the TF-IDF vectors over the top-n vocabulary. */
   private def vectors(docs: DataFrame, n: Int): (DataFrame, DataFrame) = {
-    val w = Featurize.tfidf(Featurize.counts(docs), docs)
-    val vocab = Featurize.topVocab(w, n)
-    (Featurize.vectors(w, vocab, n), vocab)
+    val counts = Featurize.counts(docs)
+    val vocab = Featurize.topVocab(Featurize.tfidf(counts, docs), n)
+    val terms = Featurize.termIndex(ModelStore.vocabWithStats(vocab, counts, docs))
+    (Featurize.vectorize(docs, terms, n, Featurize.TfIdf), vocab)
   }
 
   test("docTerms emits 1+2+3-grams per doc") {
@@ -68,5 +70,48 @@ class FeaturizeSpec extends SparkSpec {
     val docs = corpus.union(Seq((4L, "")).toDF("doc_id", "text"))
     val (feats, _) = vectors(docs, 30)
     assert(feats.select("doc_id").as[Long].collect().toSet === Set(1L, 2L, 3L))
+  }
+
+  // ---- one document → vector kernel in src/main ----------------------------
+
+  private val kernelHome = "features/Featurize.scala"
+  private val scanned = Seq("features", "api", "refine", "cluster")
+
+  /** What builds a SparseVector in code (comments are not scanned). */
+  private val buildsSparse = """new\s+SparseVector\b|Vectors\.sparse\b|\.(toSparse|compressed)\b""".r
+
+  private def vectorOffenders(root: java.io.File): Seq[String] = {
+    val hits = for {
+      f <- MainSources.files(root)
+      if scanned.exists(d => f.getPath.contains(s"/graft/$d/"))
+      (line, i) <- MainSources.lines(f).zipWithIndex
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("//")
+      if buildsSparse.findFirstIn(code).isDefined
+    } yield (f.getPath, i + 1)
+    val (home, away) = hits.partition(_._1.endsWith(kernelHome))
+    away.map { case (f, l) => s"SparseVector built at $f:$l" } ++
+      (if (home.size == 1) Nil else Seq(s"SparseVector built ${home.size} times in $kernelHome"))
+  }
+
+  test("only the one kernel in Featurize builds a SparseVector in features/api/refine/cluster") {
+    val offenders = vectorOffenders(new java.io.File("src/main/scala"))
+    assert(offenders.isEmpty, s"document vectors built outside the kernel: ${offenders.mkString("; ")}")
+  }
+
+  test("the vector scan fails on a copy of src/main that adds a second assembly") {
+    val copy = MainSources.copyWith("refine/Mutant.scala",
+      """package graft.refine
+        |object Mutant {
+        |  val toSparse = org.apache.spark.sql.functions.udf {
+        |    (size: Int, idx: Seq[Int], vals: Seq[Double]) =>
+        |      org.apache.spark.ml.linalg.Vectors.sparse(size, idx.toArray, vals.toArray)
+        |  }
+        |}
+        |""".stripMargin)
+    val offenders = vectorOffenders(copy)
+    assert(offenders.exists(o => o.startsWith("SparseVector built at") && o.contains("Mutant.scala")),
+      s"second assembly not reported: $offenders")
+    assert(offenders.forall(_.contains("Mutant.scala")), offenders)
   }
 }

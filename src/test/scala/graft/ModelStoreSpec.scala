@@ -4,7 +4,7 @@ import graft.api.{ModelPipeline, ModelStore}
 import graft.features.Featurize
 import graft.functions.TextFunctions
 import org.apache.spark.ml.linalg.{SparseVector, Vectors}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Save → load → predict round-trip (SURVEY S7/S8/S9 + M8/V9): a
@@ -132,20 +132,26 @@ class ModelStoreSpec extends SparkSpec {
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("cnt"))
   }
 
-  /** The relational vectors: counts ⋈ vocab, weighted cnt · log10(n_docs / df)
-    * in Spark, grouped by doc. */
-  private def relationalVectors(docs: DataFrame, saved: ModelStore.Saved)
-      : Map[Long, SparseVector] =
-    relationalCounts(docs).join(saved.vocab, "term")
+  /** The TF-IDF weight cnt · log10(n_docs / df), in Spark. */
+  private val tfidf = col("cnt") * log10(col("n_docs") / col("df"))
+
+  /** The relational vectors: counts ⋈ vocab (term, idx, df, n_docs), each
+    * entry valued `w` in Spark, grouped by doc, `size` wide. */
+  private def relationalVectors(docs: DataFrame, vocab: DataFrame, size: Int,
+                                w: Column): Map[Long, SparseVector] =
+    relationalCounts(docs).join(vocab, "term")
       .groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("idx"),
-        (col("cnt") * log10(col("n_docs") / col("df"))).as("w"))).as("iw"))
+      .agg(collect_list(struct(col("idx"), w.as("w"))).as("iw"))
       .collect().map { r =>
         val iw = r.getSeq[org.apache.spark.sql.Row](1)
           .map(x => x.getInt(0) -> x.getDouble(1)).sortBy(_._1)
-        r.getLong(0) -> Vectors.sparse(saved.vocabSize, iw.map(_._1).toArray,
+        r.getLong(0) -> Vectors.sparse(size, iw.map(_._1).toArray,
           iw.map(_._2).toArray).asInstanceOf[SparseVector]
       }.toMap
+
+  private def bitsOf(vectors: DataFrame) =
+    vectors.select(col("doc_id"), col("features")).collect()
+      .map(r => r.getLong(0) -> bits(r.getAs[SparseVector](1))).toMap
 
   /** Exact, bit-level: size, indices and the raw bits of every value. */
   private def bits(v: SparseVector) =
@@ -174,13 +180,27 @@ class ModelStoreSpec extends SparkSpec {
     assert(rowsOf(Featurize.counts(train)) === rowsOf(relationalCounts(train)))
     for (saved <- Seq(ModelStore.load(spark, dir),
                       ModelStore.inMemory(fm.model, fm.vocab, fm.counts, train))) {
-      val got = ModelStore.vectorize(docs, saved).collect()
-        .map(r => r.getLong(0) -> bits(r.getAs[SparseVector](1))).toMap
-      val want = relationalVectors(docs, saved).view.mapValues(bits).toMap
+      val got = bitsOf(ModelStore.vectorize(docs, saved))
+      val want = relationalVectors(docs, saved.vocab, saved.vocabSize, tfidf)
+        .view.mapValues(bits).toMap
       assert(got === want)
       // docs 1 and 2 have no terms, doc 7 no in-vocabulary term: dropped
       assert(got.keySet === Set(3L, 4L, 5L, 6L, 8L, 9L))
       assert(got(9L)._3.contains(0L), "the zero weight must stay explicit")
     }
+    // training side: the K-means input the fit carries and the LDA split's
+    // count vectors are the same kernel, over the training corpus — also
+    // over one that holds the edge cases (doc ids shifted past train's)
+    val withCases = train.union(docs.withColumn("doc_id", col("doc_id") + 100))
+    for ((t, f) <- Seq(train -> fm,
+                       withCases -> ModelPipeline.fit(withCases, k = 2, seed = 123, vocabSize = 100))) {
+      val mem = ModelStore.inMemory(f.model, f.vocab, f.counts, t)
+      assert(bitsOf(f.assignments) ===
+        relationalVectors(t, mem.vocab, mem.vocabSize, tfidf).view.mapValues(bits).toMap)
+      assert(bitsOf(f.countVectors) === relationalVectors(t, mem.vocab, f.vocabTerms.length,
+        col("cnt").cast("double")).view.mapValues(bits).toMap)
+    }
+    assert(bitsOf(fm.assignments).values.exists(_._3.contains(0L)),
+      "the zero-idf term must stay an explicit zero in the K-means input")
   }
 }

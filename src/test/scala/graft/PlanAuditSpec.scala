@@ -714,4 +714,66 @@ class PlanAuditSpec extends SparkSpec {
       s"counts shuffles on (doc_id, term):\n$p")
     assert(counts.count() > 0)
   }
+
+  /** Every physical node of an executed plan, AQE query stages included. */
+  private object Nodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    def of(p: org.apache.spark.sql.execution.SparkPlan) =
+      collectWithSubqueries(p) { case n => n }
+  }
+
+  test("the K-means input and the LDA count vectors plan no join, no aggregate, no shuffle but the widening, one kernel call per doc") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.concurrent.duration._
+    import scala.jdk.CollectionConverters._
+    // the fit checkpoints its K-means input: take its executed plan from
+    // the localCheckpoint action (its output is (doc_id, features)); the
+    // sentinel action after the fit flushes every earlier event
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { seen.add(f -> qe); () }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.listenerManager.register(listener)
+    val fm = try {
+      val fm = graft.api.ModelPipeline.fit(graft.sources.Tables.documents(spark, sfTiny),
+        k = 5, seed = 123, vocabSize = 200)
+      fm.countVectors.write.format("noop").mode("overwrite").save()
+      spark.range(1).toDF("sentinel").collect()
+      val until = System.nanoTime() + 30.seconds.toNanos
+      while (!seen.asScala.exists(_._2.analyzed.output.map(_.name) == Seq("sentinel")) &&
+          System.nanoTime() < until)
+        Thread.sleep(20)
+      fm
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
+    }
+    val kmeansIn = seen.asScala.toSeq.collect {
+      case ("localCheckpoint", qe) if qe.analyzed.output.map(_.name) == Seq("doc_id", "features") =>
+        qe.executedPlan
+    }
+    assert(kmeansIn.size === 1, s"expected one checkpointed K-means input, saw ${kmeansIn.size}")
+    assert(Nodes.of(kmeansIn.head).count(_.isInstanceOf[ShuffleExchangeExec]) === 1,
+      s"the K-means input is not widened:\n${kmeansIn.head}")
+    for ((what, p: SparkPlan) <- Seq("K-means input" -> kmeansIn.head,
+                                      "LDA count vectors" -> fm.countVectors.queryExecution.executedPlan)) {
+      val nodes = Nodes.of(p)
+      assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), s"$what plans a join:\n$p")
+      assert(!nodes.exists(_.isInstanceOf[BaseAggregateExec]), s"$what plans an aggregate:\n$p")
+      assert(!nodes.exists {
+        case f: FilterExec => f.condition.exists(_.isInstanceOf[ScalaUDF])
+        case _ => false
+      }, s"$what evaluates the vector kernel in a filter as well as its projection:\n$p")
+      val shuffles = nodes.collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.forall(_.shuffleOrigin == REPARTITION_BY_NUM),
+        s"$what plans a shuffle other than the widening repartition:\n$p")
+    }
+  }
 }

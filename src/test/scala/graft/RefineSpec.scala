@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.ModelStore
 import graft.features.Featurize
 import graft.refine.{CosineMerge, LdaSplitter, ModelRefresh, Renumber}
 import org.apache.spark.ml.linalg.Vectors
@@ -30,15 +31,10 @@ class RefineSpec extends SparkSpec {
   /** The fixture corpus's (doc_id, features) count vectors and vocab. */
   private def fixtureVectors: (DataFrame, Array[String]) = {
     val counts = Featurize.counts(corpus)
-    val weights = Featurize.tfidf(counts, corpus)
-    val vocab = Featurize.topVocab(weights, 100)
-    val vocabTerms = {
-      val n = vocab.count().toInt
-      val arr = new Array[String](n)
-      vocab.collect().foreach(r => arr(r.getInt(1)) = r.getString(0))
-      arr
-    }
-    (Featurize.countVectors(counts, vocab, vocabTerms.length), vocabTerms)
+    val vocab = Featurize.topVocab(Featurize.tfidf(counts, corpus), 100)
+    val terms = Featurize.termIndex(ModelStore.vocabWithStats(vocab, counts, corpus))
+    val vocabTerms = terms.value.toArray.sortBy(_._2._1).map(_._1)
+    (Featurize.vectorize(corpus, terms, vocabTerms.length, Featurize.RawCount), vocabTerms)
   }
 
   test("Renumber.dense maps sorted distinct ids to a dense 0-based bijection") {
