@@ -4,7 +4,7 @@ import graft.QueryDef
 import graft.api.DocIndexStore
 import graft.functions.TextFunctions
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -165,10 +165,10 @@ object DedupOps {
     * XxHash64Function steps as `min(xxhash64(lit(i), shingle))`), and
     * NO corpus-scale (doc_id, shingle) shuffle — at 100 TB the index
     * build's widest stage becomes a scan. */
-  private def minhashSignatures(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      graft.expressions.MinHashSignature
-        .minhashSignature(col("toks"), MinHashFns).as("sig"))
+  private def minhashSignatures(docs: DataFrame, carried: Seq[Column])
+      : DataFrame =
+    docs.select(carried :+ graft.expressions.MinHashSignature
+      .minhashSignature(col("toks"), MinHashFns).as("sig"): _*)
 
   /** Buckets larger than this are skipped as degenerate (boilerplate
     * shingle sets) — standard LSH guard that bounds the candidate join at
@@ -198,30 +198,32 @@ object DedupOps {
       .localCheckpoint()
 
   /** ROW-LOCAL twin of [[minhashBands]] for streaming probes (s27):
-    * the signature kernel is row-local by construction (r14 — both
-    * paths now run the IDENTICAL [[minhashSignatures]] projection, so
-    * the probe side computes the SAME buckets the stored index was
-    * built with by shared definition, with the row-for-row equality
-    * additionally pinned by spec). The stream variant skips
+    * the signature kernel is row-local by construction (both builders
+    * run [[bandRelation]], so the probe computes the buckets the stored
+    * index was built with; a spec pins the row-for-row equality). The
+    * stream variant skips
     * [[graft.sources.Scans.widenForFanout]] (micro-batches size their
     * own parallelism) and localCheckpoint (illegal on a stream; the
     * relation is consumed once per micro-batch anyway) — both
-    * batch-side materialization choices, not band math. */
+    * batch-side materialization choices, not band math. The input's
+    * columns other than `text` ride along on every band row (a probe's
+    * verify key, [[Gates.nearDupHits]]). */
   private[graft] def minhashBandsRowLocal(documents: DataFrame): DataFrame =
-    bandRelation(documents.select(col("doc_id"), col("text")))
+    bandRelation(documents)
 
-  /** shingle → signature → (doc_id, band, bucket), one definition for
-    * both band builders. */
+  /** shingle → signature → (doc_id, …, band, bucket), one definition for
+    * both band builders; `docs`' columns other than `text` are carried. */
   private def bandRelation(docs: DataFrame): DataFrame = {
+    val carried = docs.columns.filter(_ != "text").map(col).toSeq
     val tokenized = docs
-      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("words"))
+      .select(carried :+ TextFunctions.tokens(col("text")).as("words"): _*)
     val sigs = minhashSignatures(
       TextFunctions.withNgrams(tokenized, "words", "shingles", 3)
-        .select(col("doc_id"), array_distinct(col("shingles")).as("toks"))
-        .filter(size(col("toks")) > 0))
-    sigs.select(col("doc_id"), posexplode(
-        array((0 until Bands).map(b =>
-          xxhash64(slice(col("sig"), b * RowsPerBand + 1, RowsPerBand))): _*)))
+        .select(carried :+ array_distinct(col("shingles")).as("toks"): _*)
+        .filter(size(col("toks")) > 0), carried)
+    val bands = posexplode(array((0 until Bands).map(b =>
+      xxhash64(slice(col("sig"), b * RowsPerBand + 1, RowsPerBand))): _*))
+    sigs.select(carried :+ bands: _*)
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
   }
 
@@ -767,15 +769,9 @@ object DedupOps {
   def incrementalDedup(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val off = plantOffset(maxIdOf(docs, "doc_id"))
-    val existing = docs.filter(col("doc_id") % 2 === 0)
-    val resubmitted = existing.filter(col("doc_id") < 100)
-      .select((col("doc_id") + lit(off)).as("doc_id"), col("text"))
-    val incoming = docs.filter(col("doc_id") % 2 === 1)
-      .unionByName(resubmitted)
-    val seen = existing
-      .select(md5(col("text").cast("binary")).as("text_hash")).distinct()
-    incoming.withColumn("text_hash", md5(col("text").cast("binary")))
-      .join(seen, Seq("text_hash"), "left_anti")
+    Gates.exactFlags(passageIncomingBatch(docs, off),
+        Gates.ledger(docs.filter(col("doc_id") % 2 === 0)))
+      .filter(!col("exact"))
       .select(col("doc_id"))
       .orderBy(col("doc_id"))
   }
@@ -841,12 +837,16 @@ object DedupOps {
   /** d11's incoming batch (odd docs plus evens < 200 re-fetched at
     * +off) — factored so the s38 stream stages the IDENTICAL relation
     * the batch rows probe. */
-  private[graft] def lshIncomingBatch(docs: DataFrame, off: Long): DataFrame = {
-    val refetched = docs
-      .filter(col("doc_id") % 2 === 0 && col("doc_id") < 200)
-      .select((col("doc_id") + lit(off)).as("doc_id"), col("text"))
-    docs.filter(col("doc_id") % 2 === 1).unionByName(refetched)
-  }
+  private[graft] def lshIncomingBatch(docs: DataFrame, off: Long): DataFrame =
+    refetchIncrement(docs, off, 200)
+
+  /** Odd docs plus evens below `below` re-fetched verbatim at +off. */
+  private def refetchIncrement(docs: DataFrame, off: Long,
+      below: Int): DataFrame =
+    docs.filter(col("doc_id") % 2 === 1)
+      .unionByName(docs
+        .filter(col("doc_id") % 2 === 0 && col("doc_id") < below)
+        .select((col("doc_id") + lit(off)).as("doc_id"), col("text")))
 
   /** The probe body over an ARBITRARY incoming relation — shared by
     * [[probePlantedAgainst]] (batch rows) and s38's per-micro-batch
@@ -1119,20 +1119,7 @@ object DedupOps {
     val eval = docs.filter(col("doc_id") % 97 === 0)
     val leaked = eval.select((col("doc_id") + lit(off)).as("doc_id"), col("text"))
     val corpus = docs.filter(col("doc_id") % 97 =!= 0).unionByName(leaked)
-    // ml.feature.NGram fast path (compiled sliding window) — the
-    // interpreted higher-order ngrams() expression costs ~50× more on a
-    // corpus-wide pass (same output; see TextFunctions.withNgrams)
-    def shingles(df: DataFrame): DataFrame =
-      TextFunctions.withNgrams(
-          df.select(col("doc_id"),
-            TextFunctions.tokens(col("text")).as("toks")),
-          "toks", "shs", 5)
-        .select(col("doc_id"), explode(col("shs")).as("sh"))
-    val evalShingles = shingles(eval).select(col("sh")).distinct()
-    shingles(corpus).join(broadcast(evalShingles), "sh")
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("sh")).as("n_shingle_hits"))
-      .orderBy(col("doc_id"))
+    Gates.gramHits(corpus, Gates.evalGrams(eval)).orderBy(col("doc_id"))
   }
 
   private[graft] val decontaminateSql = {
@@ -1375,7 +1362,9 @@ object DedupOps {
     * shared-probe discipline at passage grain: the incoming batch
     * slices itself, joins the index's DISTINCT hash set (membership —
     * index multiplicity must not inflate the per-doc counts), and
-    * rolls up per incoming doc. */
+    * rolls up per incoming doc. Also c08/s34's passage gate
+    * ([[Gates.passageHits]]): stream-legal on the increment side (the
+    * distinct is the static index's), unsorted — callers sort. */
   private[graft] def probePassagesAgainst(incoming: DataFrame,
       index: DataFrame): DataFrame = {
     val known = index.select(col("h")).distinct()
@@ -1388,16 +1377,13 @@ object DedupOps {
         sum(coalesce(col("__known"), lit(0L))).as("n_known"))
       .select(col("doc_id"), col("n_passages"), col("n_known"),
         round(col("n_known") / col("n_passages"), 6).as("known_frac"))
-      .orderBy(col("doc_id"))
   }
 
-  /** d17's incoming batch (odd docs plus evens < 100 re-fetched at
-    * +off) — shared by d17/d26/d27 so the three maintenance states
-    * probe the identical batch. */
+  /** d08/d17's incoming batch (odd docs plus evens < 100 re-fetched at
+    * +off) — shared by d08/d17/d26/d27/d31 and their streamed twins
+    * s14/s32/s39 so every state probes the identical batch. */
   private[graft] def passageIncomingBatch(docs: DataFrame, off: Long): DataFrame =
-    docs.filter(col("doc_id") % 2 === 1)
-      .unionByName(docs.filter(col("doc_id") % 2 === 0 && col("doc_id") < 100)
-        .select((col("doc_id") + lit(off)).as("doc_id"), col("text")))
+    refetchIncrement(docs, off, 100)
 
   /** d17 — INCREMENTAL passage dedup against the STORED corpus
     * passage-hash index (completes the incremental trio: d08 exact,
@@ -1410,18 +1396,9 @@ object DedupOps {
     * passage count, how many of those passages the stored index already
     * holds, and the known fraction — a re-fetched doc is provably
     * known_frac = 1 (every passage of an even doc is in the index by
-    * construction), which the spec pins.
-    *
-    * r16 re-plumb (the r15 verdict's #1 gap): the index side is now a
-    * SHIPPED ARTIFACT — [[graft.api.DocIndexStore.Passage]], built once
-    * per session (the artifact is the probe's INPUT, e21's billing)
-    * and LOADED per invocation — where every prior round rebuilt
-    * `passageInstancesFrom(existing)` from the full corpus inside
-    * every invocation: correct at bench SFs, but a full-corpus
-    * tokenize per increment at 100 TB. The oracle is unchanged — a
-    * lossy save, a load-path schema drift, or hash drift between the
-    * build and probe paths now breaks THIS row's hash instead of a
-    * crawl increment under-counting known content in production.
+    * construction), which the spec pins. The index side is a
+    * shipped artifact ([[graft.api.DocIndexStore.Passage]], built once
+    * per session, loaded per invocation).
     *
     * 100 TB shape: batch passages ⋈ LOADED index on the uniform
     * 128-bit hash (batch ⋈ index, never corpus ⋈ corpus — d11's
@@ -1437,6 +1414,7 @@ object DedupOps {
       pointerServed(s, DocIndexStore.Passage,
         graft.sources.TmpDirs.artifactRoot(s, d, "d17"),
         docs.filter(col("doc_id") % 2 === 0)))
+      .orderBy(col("doc_id"))
   }
 
 
@@ -1511,6 +1489,7 @@ object DedupOps {
     probePassagesAgainst(passageIncomingBatch(docs, off),
       DocIndexStore.Passage.load(s, dir).unionByName(
         DocIndexStore.Passage.committedAppends(s, appendRoot)))
+      .orderBy(col("doc_id"))
   }
 
 
@@ -1544,6 +1523,7 @@ object DedupOps {
     probePassagesAgainst(passageIncomingBatch(docs, off),
       foldTakedown(s, DocIndexStore.Passage, baseDir, appendRoot, root,
         existing.filter(col("doc_id") < 50).select(col("doc_id"))))
+      .orderBy(col("doc_id"))
   }
 
 
@@ -1578,6 +1558,7 @@ object DedupOps {
           existing.filter(col("doc_id") < 50).select(col("doc_id")), 0L)
     }
     probePassagesAgainst(passageIncomingBatch(docs, off), pas.load(s, dir))
+      .orderBy(col("doc_id"))
   }
 
   /** Passage-hash fanout guard for d18's pair join: a passage shared by

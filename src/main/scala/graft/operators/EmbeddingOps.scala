@@ -1898,9 +1898,10 @@ object EmbeddingOps {
     * ([[probeCellsRowLocal]] — s29's kernel), equi-joins the index
     * relation on the cell id, and flags the query when any probed
     * candidate scores ≥ [[AdmitTau]] exact cosine. Emits one row per
-    * qualifying (query, candidate) — NO distinct, so the plan stays
-    * STATELESS on a streaming input (callers dedup: batch callers with
-    * `.distinct()`, streaming callers after the drain). */
+    * qualifying (query, candidate) as the query's `vec_id` — NO
+    * distinct, so the plan stays STATELESS on a streaming input (the
+    * vec side's semantic gate; [[Gates.firstGate]] dedups, batch or
+    * after the drain). */
   private[graft] def semanticGateCandidates(s: SparkSession,
       queries: DataFrame, indexRel: DataFrame,
       model: org.apache.spark.ml.clustering.KMeansModel): DataFrame = {
@@ -1927,7 +1928,7 @@ object EmbeddingOps {
         Seq("cell"))
       .filter(round(fastCosine(col("q_emb"), col("s_emb")), 6)
         >= AdmitTau)
-      .select(col("q_id"))
+      .select(col("q_id").as("vec_id"))
   }
 
   private[graft] def semanticGateHits(s: SparkSession, queries: DataFrame,
@@ -1997,7 +1998,7 @@ object EmbeddingOps {
   /** The vec-admission base ARTIFACT (the c09-family serving index —
     * built once per session under the c09 root, loaded per caller) and
     * the vec plant offset. Shared by c09's waterfall, c11's handoff,
-    * and c12's multimodal pair admission. */
+    * c12's multimodal pair admission and their streamed twins s35/s37. */
   private[graft] def vecAdmissionArtifact(s: SparkSession, d: String)
       : (IvfIndex, Long) = {
     val shared = sharedIndex(s, d, Geometry.Base)
@@ -2008,31 +2009,15 @@ object EmbeddingOps {
     (graft.api.IvfStore.load(s, dir), off)
   }
 
-  /** c09's two vec gates over an ARBITRARY (vec_id, embedding)
-    * increment — returns (vec_id, embedding, gate) with gate ∈
-    * {1_exact, 2_semantic, admitted}, attribution = first gate that
-    * fires. ONE definition for c09's planted increment and c12's
-    * paired increment, so the gate math cannot drift between the
-    * single-space and multimodal admission paths. */
+  /** c09's two vec gates over a static (vec_id, embedding) increment
+    * — returns (vec_id, embedding, gate) with gate ∈ {1_exact,
+    * 2_semantic, admitted}. c09's planted increment and c12's paired
+    * one call this; s35/s37 drain the same two gates and attribute
+    * through the same [[Gates.vecFirstGate]]. */
   private[graft] def vecGateAttribution(s: SparkSession, batch: DataFrame,
-      base: DataFrame, loaded: IvfIndex): DataFrame = {
-    // gate 1: exact-bytes ledger (hash candidates, equality verify)
-    val exactHits = batch.withColumn("eh", xxhash64(col("embedding")))
-      .join(base.select(col("embedding").as("s_emb"))
-        .withColumn("eh", xxhash64(col("s_emb"))), Seq("eh"))
-      .filter(col("embedding") === col("s_emb"))
-      .select(col("vec_id")).distinct().withColumn("__exact", lit(1))
-    // gate 2: semantic near-dup vs the LOADED artifact
-    val semHits = semanticGateHits(s, batch, loaded.assigned, loaded.model)
-      .select(col("q_id").as("vec_id")).withColumn("__sem", lit(1))
-    batch
-      .join(exactHits, Seq("vec_id"), "left")
-      .join(semHits, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("embedding"),
-        when(col("__exact") === 1, "1_exact")
-          .when(col("__sem") === 1, "2_semantic")
-          .otherwise("admitted").as("gate"))
-  }
+      base: DataFrame, loaded: IvfIndex): DataFrame =
+    Gates.vecFirstGate(batch, Gates.vecExactFlags(batch, base),
+      semanticGateCandidates(s, batch, loaded.assigned, loaded.model))
 
   /** c09's attributed increment WITH its commit, memoized per session
     * — the shared artifact between c09's histogram row and c11's
@@ -2079,13 +2064,9 @@ object EmbeddingOps {
       (col("vec_id") + lit(4 * off)).as("vec_id"),
       scaledEmb.as("embedding"))
     val r2 = semanticGateHits(s, resub, serveRel, loaded.model)
-    val phase2 = r2.agg(count(lit(1)).as("n_rejected"))
-      .crossJoin(broadcast(admitted.agg(count(lit(1)).as("n_adm"))))
-      .select(lit(2L).as("phase"),
-        lit("1_resubmit_semantic").as("stage"),
-        col("n_adm").as("n_in"), col("n_rejected"),
-        (col("n_adm") - col("n_rejected")).as("n_admitted"))
-    phase1.unionByName(phase2).orderBy(col("phase"), col("stage"))
+    phase1
+      .unionByName(PackOps.resubmissionRow("1_resubmit_semantic", admitted, r2))
+      .orderBy(col("phase"), col("stage"))
   }
 
   /** c09's oracle: pure planted arithmetic — the gates' outcomes are

@@ -1574,9 +1574,9 @@ object PackOps {
     * core, factored out so the spec can pin every PLANTED class to its
     * gate by id. Returns (doc_id, text, gate) with gate ∈
     * {1_exact_store, 2_exact_intra, 3_neardup, 4_passage, 5_decontam,
-    * admitted}; attribution is the FIRST gate that fires (the gates
-    * are per-doc predicates against the store, so order only resolves
-    * attribution, never membership). Also builds (once per session)
+    * admitted} ([[Gates.firstGate]] over the [[Gates]] s34 drains,
+    * plus c08's own intra-batch keep-first). Also builds (once per
+    * session)
     * the two LOADED serving artifacts the batch probes — the
     * waterfall's INPUT indexes, e21's billing discipline. */
   private[graft] def admissionAttributed(s: SparkSession,
@@ -1587,101 +1587,29 @@ object PackOps {
 
   private def admissionAttributedBuild(s: SparkSession,
       d: String): DataFrame = {
-    import graft.functions.TextFunctions
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val off = DedupOps.plantOffset(DedupOps.maxIdOf(docs, "doc_id"))
     val existing = docs.filter(col("doc_id") % 2 === 0)
-    val root = graft.sources.TmpDirs.artifactRoot(s, d, "c08")
-    val date = java.time.LocalDate.ofEpochDay(0)
-    val lshDir = graft.api.DocIndexStore.Lsh.versionedDir(s"$root/lsh", date)
-    graft.api.DocIndexStore.Lsh.saveOnce(lshDir, existing)
-    val pasDir =
-      graft.api.DocIndexStore.Passage.versionedDir(s"$root/passage", date)
-    graft.api.DocIndexStore.Passage.saveOnce(pasDir, existing)
-
-    // the incoming crawl increment: organic odds plus four planted
-    // reject classes at disjoint plantOffset multiples
+    val (lshDir, pasDir) = Gates.admissionStores(s, d, existing)
     val wide = graft.sources.Scans.widenForFanout(docs, col("doc_id"))
-    val wideEx = wide.filter(col("doc_id") % 2 === 0)
-    val batch = wide.filter(col("doc_id") % 2 === 1)
-      .unionByName(wideEx.filter(col("doc_id") < 100)
-        .select((col("doc_id") + lit(off)).as("doc_id"), col("text")))
-      .unionByName(wideEx
-        .filter(col("doc_id") >= 100 && col("doc_id") < 200)
-        .select((col("doc_id") + lit(2 * off)).as("doc_id"),
-          upper(col("text")).as("text")))
-      .unionByName(wideEx
-        .filter(col("doc_id") >= 200 && col("doc_id") < 250)
-        .select((col("doc_id") + lit(3 * off)).as("doc_id"),
-          admitQuoteText.as("text")))
-      .unionByName(wide.filter(col("doc_id") % 97 === 0)
-        .select((col("doc_id") + lit(4 * off)).as("doc_id"),
-          concat(lit("leak "), col("text")).as("text")))
-      .localCheckpoint()
-
-    // gate 1: exact digest vs the stored-corpus ledger (d08's shape)
-    val seen = existing
-      .select(md5(col("text").cast("binary")).as("th")).distinct()
-    val withDigest = batch
-      .withColumn("th", md5(col("text").cast("binary")))
-    // gate 2 (intra): keep-first per digest WITHIN the batch
-    val keepFirst = withDigest.groupBy(col("th"))
-      .agg(min(col("doc_id")).as("__keep"))
-    // gate 3: LSH candidates vs the LOADED band index, VERIFIED by
-    // cleaned-text identity (candidate → verify, the production shape;
-    // identical cleaned tokens ⇒ identical signature ⇒ the pair shares
-    // every band bucket, so the candidate join surfaces each verified
-    // pair — the same stored-side census margin d11/d21 witness)
-    def cleanKey: Column =
-      md5(TextFunctions.cleanText(col("text")).cast("binary"))
-    val cands = DedupOps.minhashBands(batch)
-      .select(col("doc_id").as("in_id"), col("band"), col("bucket"))
-      .join(graft.api.DocIndexStore.Lsh.load(s, lshDir)
-        .select(col("doc_id").as("src_id"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .select(col("in_id"), col("src_id")).distinct()
-    val nearHit = cands
-      .join(batch.select(col("doc_id").as("in_id"), cleanKey.as("ick")),
-        Seq("in_id"))
-      .join(existing.select(col("doc_id").as("src_id"), cleanKey.as("sck")),
-        Seq("src_id"))
-      .filter(col("ick") === col("sck"))
-      .select(col("in_id").as("doc_id")).distinct()
-      .withColumn("__near", lit(1))
-    // gate 4: passage membership vs the LOADED passage index — a doc
-    // at least half of whose passages are already held is quarantined
-    val pasHit = DedupOps.probePassagesAgainst(batch,
-        graft.api.DocIndexStore.Passage.load(s, pasDir))
-      .filter(col("n_known") * 2 >= col("n_passages"))
-      .select(col("doc_id")).withColumn("__pas", lit(1))
-    // gate 5: held-out benchmark 5-gram overlap (d09's shape)
-    def grams(df: DataFrame): DataFrame =
-      TextFunctions.withNgrams(
-          df.select(col("doc_id"),
-            TextFunctions.tokens(col("text")).as("toks")),
-          "toks", "shs", 5)
-        .select(col("doc_id"), explode(col("shs")).as("sh"))
-    val evalGrams = grams(wide.filter(col("doc_id") % 97 === 0))
-      .select(col("sh")).distinct()
-    val contHit = grams(batch).join(broadcast(evalGrams), "sh")
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("sh")).as("nh"))
-      .filter(col("nh") >= DecontamMinHits)
-      .select(col("doc_id")).withColumn("__cont", lit(1))
-
-    withDigest
-      .join(seen.withColumn("__seen", lit(1)), Seq("th"), "left")
-      .join(keepFirst, Seq("th"))
-      .join(nearHit, Seq("doc_id"), "left")
-      .join(pasHit, Seq("doc_id"), "left")
-      .join(contHit, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("text"),
-        when(col("__seen") === 1, "1_exact_store")
-          .when(col("doc_id") =!= col("__keep"), "2_exact_intra")
-          .when(col("__near") === 1, "3_neardup")
-          .when(col("__pas") === 1, "4_passage")
-          .when(col("__cont") === 1, "5_decontam")
-          .otherwise("admitted").as("gate"))
+    val batch = Gates.admissionIncrement(wide, off).localCheckpoint()
+    // keep-first per digest WITHIN the batch: batch-only (a stream has
+    // no arrival order to keep first by), so it is c08's own entry
+    val withDigest = batch.withColumn("th", Gates.digest)
+    val intraHits = withDigest
+      .join(withDigest.groupBy(col("th")).agg(min(col("doc_id")).as("__keep")),
+        Seq("th"))
+      .filter(col("doc_id") =!= col("__keep"))
+    Gates.firstGate(batch, "doc_id", Seq(
+        "1_exact_store" ->
+          Gates.exactFlags(batch, Gates.ledger(existing)).filter(col("exact")),
+        "2_exact_intra" -> intraHits,
+        "3_neardup" -> Gates.nearDupHits(batch,
+          graft.api.DocIndexStore.Lsh.load(s, lshDir), existing),
+        "4_passage" -> Gates.passageHits(DedupOps.probePassagesAgainst(batch,
+          graft.api.DocIndexStore.Passage.load(s, pasDir))),
+        "5_decontam" -> Gates.decontamHits(Gates.gramHits(batch,
+          Gates.evalGrams(wide.filter(col("doc_id") % 97 === 0))))))
       .localCheckpoint()
   }
 
@@ -1715,6 +1643,17 @@ object PackOps {
         (col("n_total") - col("rej_before") - col("n_rej"))
           .as("n_admitted"))
   }
+
+  /** A phase-2 resubmission row — c08/c09/c12's witness that a commit
+    * is load-bearing: `universe` resubmitted, `rejected` (key-distinct)
+    * the members a gate still rejects. */
+  private[graft] def resubmissionRow(stage: String, universe: DataFrame,
+      rejected: DataFrame): DataFrame =
+    rejected.agg(count(lit(1)).as("n_rejected"))
+      .crossJoin(broadcast(universe.agg(count(lit(1)).as("n_in"))))
+      .select(lit(2L).as("phase"), lit(stage).as("stage"),
+        col("n_in"), col("n_rejected"),
+        (col("n_in") - col("n_rejected")).as("n_admitted"))
 
   /** c08 — composed crawl-ADMISSION audit: the ingest twin of c07's
     * composed delete, and the composition every training-data
@@ -1762,12 +1701,10 @@ object PackOps {
     * relation. Winnow-grain admission is d28's row; the vec-keyed
     * embedding side is e15/s26's (separate key space). */
   def crawlAdmission(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.TextFunctions
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val off = DedupOps.plantOffset(DedupOps.maxIdOf(docs, "doc_id"))
     val existing = docs.filter(col("doc_id") % 2 === 0)
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "c08")
-    val date = java.time.LocalDate.ofEpochDay(0)
     val attributed = admissionAttributed(s, d)
     val admitted = attributed.filter(col("gate") === "admitted")
       .select(col("doc_id"), col("text"))
@@ -1784,64 +1721,31 @@ object PackOps {
     graft.api.DocIndexStore.Lsh.appendBatch(s"$root/lsh_app", admitted, 0L)
     graft.api.DocIndexStore.Passage.appendBatch(s"$root/pas_app", admitted, 0L)
 
-    def cleanKey: Column =
-      md5(TextFunctions.cleanText(col("text")).cast("binary"))
-    val admTotal = admitted.agg(count(lit(1)).as("n_adm"))
-    def phase2Row(stage: String, rejected: DataFrame): DataFrame =
-      rejected.agg(count(lit(1)).as("n_rejected"))
-        .crossJoin(broadcast(admTotal))
-        .select(lit(2L).as("phase"), lit(stage).as("stage"),
-          col("n_adm").as("n_in"), col("n_rejected"),
-          (col("n_adm") - col("n_rejected")).as("n_admitted"))
-
+    val (lshDir, pasDir) = Gates.admissionStores(s, d, existing)
+    val stored = existing.unionByName(admitted)
     // (a) verbatim re-submission → the digest ledger now includes the
     // admitted batch; everything dies at the exact gate
-    val ledger = existing
-      .select(md5(col("text").cast("binary")).as("th"))
-      .unionByName(admitted
-        .select(md5(col("text").cast("binary")).as("th")))
-      .distinct()
-    val r2a = admitted.withColumn("th", md5(col("text").cast("binary")))
-      .join(ledger, Seq("th"), "left_semi")
+    val r2a = Gates.exactFlags(admitted, Gates.ledger(stored))
+      .filter(col("exact"))
     // (b) uppercased variants → base ∪ APPENDED band rows + verify
     val variants = admitted.select(
       (col("doc_id") + lit(5 * off)).as("doc_id"),
       upper(col("text")).as("text"))
-    val lshDir = graft.api.DocIndexStore.Lsh.versionedDir(
-      s"$root/lsh", date)
     val lshServe = graft.api.DocIndexStore.Lsh.load(s, lshDir).unionByName(
       graft.api.DocIndexStore.Lsh.committedAppends(s, s"$root/lsh_app"))
-    val storeClean = existing
-      .select(col("doc_id").as("src_id"), cleanKey.as("sck"))
-      .unionByName(admitted
-        .select(col("doc_id").as("src_id"), cleanKey.as("sck")))
-    val r2b = DedupOps.minhashBands(variants)
-      .select(col("doc_id").as("in_id"), col("band"), col("bucket"))
-      .join(lshServe
-        .select(col("doc_id").as("src_id"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .select(col("in_id"), col("src_id")).distinct()
-      .join(variants.select(col("doc_id").as("in_id"), cleanKey.as("ick")),
-        Seq("in_id"))
-      .join(storeClean, Seq("src_id"))
-      .filter(col("ick") === col("sck"))
-      .select(col("in_id")).distinct()
+    val r2b = Gates.nearDupHits(variants, lshServe, stored).distinct()
     // (c) quotations of admitted docs → base ∪ APPENDED passage hashes
     val quotes = admitted.select(
       (col("doc_id") + lit(6 * off)).as("doc_id"),
       admitQuoteText.as("text"))
-    val pasDir = graft.api.DocIndexStore.Passage.versionedDir(
-      s"$root/passage", date)
     val pasServe = graft.api.DocIndexStore.Passage.load(s, pasDir).unionByName(
       graft.api.DocIndexStore.Passage.committedAppends(s, s"$root/pas_app"))
-    val r2c = DedupOps.probePassagesAgainst(quotes, pasServe)
-      .filter(col("n_known") * 2 >= col("n_passages"))
-      .select(col("doc_id"))
+    val r2c = Gates.passageHits(DedupOps.probePassagesAgainst(quotes, pasServe))
 
     phase1
-      .unionByName(phase2Row("1_resubmit_exact", r2a))
-      .unionByName(phase2Row("2_variant_neardup", r2b))
-      .unionByName(phase2Row("3_quote_passage", r2c))
+      .unionByName(resubmissionRow("1_resubmit_exact", admitted, r2a))
+      .unionByName(resubmissionRow("2_variant_neardup", admitted, r2b))
+      .unionByName(resubmissionRow("3_quote_passage", admitted, r2c))
       .orderBy(col("phase"), col("stage"))
   }
 
@@ -2147,10 +2051,10 @@ object PackOps {
        |FROM k GROUP BY shard ORDER BY shard""".stripMargin
   }
 
-  /** c12 — composed MULTIMODAL pair admission (r16 verdict ask #5,
-    * c04's conjunction discipline applied to c08 × c09: a multimodal
-    * crawl increment ships (document, embedding) PAIRS, and rejection
-    * in EITHER key space vetoes the PAIR — a clean document whose
+  /** c12 — composed MULTIMODAL pair admission (c04's conjunction
+    * discipline applied to c08 × c09: a multimodal crawl increment
+    * ships (document, embedding) PAIRS, and rejection in EITHER key
+    * space vetoes the PAIR — a clean document whose
     * embedding is a re-embed must not enter the doc store, and a novel
     * embedding whose document is a quotation must not enter the vec
     * store):
@@ -2166,10 +2070,10 @@ object PackOps {
     *     (b joins the embeddings table).
     *   gates — the doc side is c08's FULL waterfall
     *     ([[admissionAttributed]], shared memo); the vec side is c09's
-    *     two gates ([[graft.operators.EmbeddingOps.vecGateAttribution]]
-    *     — ONE definition with c09) against the loaded c09-family
-    *     artifact. Phase 1 reports the CONJUNCTION matrix: one row per
-    *     realized (doc_gate, vec_gate) combination; a pair is admitted
+    *     two gates ([[graft.operators.EmbeddingOps.vecGateAttribution]],
+    *     c09's own call) against the loaded c09-family artifact.
+    *     Phase 1 reports the CONJUNCTION matrix: one row per realized
+    *     (doc_gate, vec_gate) combination; a pair is admitted
     *     only when BOTH sides are.
     *   commit — admitted pairs' docs enter the LSH store and their
     *     vecs the IVF store through the stores' own append manifests
@@ -2260,12 +2164,10 @@ object PackOps {
     }
 
   def multimodalAdmission(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.TextFunctions
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val existing = docs.filter(col("doc_id") % 2 === 0)
     val (loaded, offV) = EmbeddingOps.vecAdmissionArtifact(s, d)
     val root = graft.sources.TmpDirs.artifactRoot(s, d, "c12")
-    val date = java.time.LocalDate.ofEpochDay(0)
     val (pairs, offD, _) = pairAttributed(s, d)
     val bothAdmit = col("doc_gate") === "admitted" &&
       col("vec_gate") === "admitted"
@@ -2280,8 +2182,7 @@ object PackOps {
         when(bothAdmit, col("n")).otherwise(lit(0L)).as("n_admitted"))
 
     // ---- the PAIR commit: both stores, c12's own append roots.
-    // Memoized per session (optimization r20 — admissionVecCommitted's
-    // own posture on the pair grain): the admitted sets are pure
+    // Memoized per session: the admitted sets are pure
     // functions of the memoized `pairs` checkpoint and the commits are
     // batchId-CAS'd no-ops on replay, so a later run re-paying the two
     // eager checkpoints + commit probes buys nothing. Billed to the
@@ -2300,33 +2201,12 @@ object PackOps {
       }
 
     // ---- phase 2: the four resubmission witnesses
-    def cleanKey: Column =
-      md5(TextFunctions.cleanText(col("text")).cast("binary"))
-    val lshDir = graft.api.DocIndexStore.Lsh.versionedDir(
-      s"${graft.sources.TmpDirs.artifactRoot(s, d, "c08")}/lsh", date)
+    val (lshDir, _) = Gates.admissionStores(s, d, existing)
     val lshServe = graft.api.DocIndexStore.Lsh.load(s, lshDir).unionByName(
       graft.api.DocIndexStore.Lsh.committedAppends(s, s"$root/lsh_app"))
-    val storeClean = existing
-      .select(col("doc_id").as("src_id"), cleanKey.as("sck"))
-      .unionByName(admDocs
-        .select(col("doc_id").as("src_id"), cleanKey.as("sck")))
     def docNeardupRejected(probe: DataFrame): DataFrame =
-      // row-local bands (optimization r20): the probe's band relation
-      // is consumed exactly ONCE here, so minhashBands' eager
-      // localCheckpoint (built for d03's self-join) was a pure extra
-      // driver-synchronous job per probe per run — the row-local twin
-      // is the identical signature math minus the materialization
-      DedupOps.minhashBandsRowLocal(probe)
-        .select(col("doc_id").as("in_id"), col("band"), col("bucket"))
-        .join(lshServe
-          .select(col("doc_id").as("src_id"), col("band"), col("bucket")),
-          Seq("band", "bucket"))
-        .select(col("in_id"), col("src_id")).distinct()
-        .join(probe.select(col("doc_id").as("in_id"), cleanKey.as("ick")),
-          Seq("in_id"))
-        .join(storeClean, Seq("src_id"))
-        .filter(col("ick") === col("sck"))
-        .select(col("in_id")).distinct()
+      Gates.nearDupHits(probe, lshServe, existing.unionByName(admDocs))
+        .distinct()
     val serveRel = loaded.assigned
       .select(col("vec_id"), col("embedding"), col("cell"))
       .unionByName(graft.api.IvfStore
@@ -2335,13 +2215,6 @@ object PackOps {
     val scaledSub = transform(col("embedding"), v => v * lit(0.999f))
     def vecSemRejected(probe: DataFrame): DataFrame =
       EmbeddingOps.semanticGateHits(s, probe, serveRel, loaded.model)
-    def phase2Row(stage: String, universe: DataFrame,
-        rejected: DataFrame): DataFrame =
-      rejected.agg(count(lit(1)).as("n_rejected"))
-        .crossJoin(broadcast(universe.agg(count(lit(1)).as("n_in"))))
-        .select(lit(2L).as("phase"), lit(stage).as("stage"),
-          col("n_in"), col("n_rejected"),
-          (col("n_in") - col("n_rejected")).as("n_admitted"))
     val vetoDocs = pairs
       .filter(col("doc_gate") === "admitted" &&
         col("vec_gate") =!= "admitted")
@@ -2364,10 +2237,10 @@ object PackOps {
       scaledSub.as("embedding")))
 
     phase1
-      .unionByName(phase2Row("1_resubmit_doc", admDocs, r1))
-      .unionByName(phase2Row("2_resubmit_vec", admVecs, r2))
-      .unionByName(phase2Row("3_vetoed_doc_uncommitted", vetoDocs, r3))
-      .unionByName(phase2Row("4_vetoed_vec_uncommitted", vetoVecs, r4))
+      .unionByName(resubmissionRow("1_resubmit_doc", admDocs, r1))
+      .unionByName(resubmissionRow("2_resubmit_vec", admVecs, r2))
+      .unionByName(resubmissionRow("3_vetoed_doc_uncommitted", vetoDocs, r3))
+      .unionByName(resubmissionRow("4_vetoed_vec_uncommitted", vetoVecs, r4))
       .orderBy(col("phase"), col("stage"))
   }
 

@@ -304,7 +304,7 @@ object EventStreams {
       EphemeralCheckpoints.dirs.subSet(from, to).clear()
     } catch { case _: ReflectiveOperationException => }
 
-  private def runToMemory(df: DataFrame, mode: String, prefix: String,
+  private[graft] def runToMemory(df: DataFrame, mode: String, prefix: String,
                           requireSingleBatch: Boolean = false): DataFrame = {
     val q = startToMemory(df, mode, prefix)
     q.awaitTermination()
@@ -631,10 +631,10 @@ object EventStreams {
     * crawl re-fetches of already-stored content under fresh ids, d08's
     * exact scenario — is digest-anti-joined per micro-batch against the
     * STATIC stored digest index, emitting only novel doc ids. The
-    * anti-join is stream-static left-outer + null filter: STATELESS
-    * (nothing buffers across batches; the index is broadcast per
-    * micro-batch), so the streaming plan carries no state store at all
-    * and the batch oracle (d08's SQL) transfers row-for-row. This is
+    * anti-join is d08's exact gate ([[graft.operators.Gates.exactFlags]],
+    * a stream-static left-outer join) + a flag filter: STATELESS
+    * (nothing buffers across batches), so the streaming plan carries
+    * no state store at all and the batch oracle (d08's SQL) transfers row-for-row. This is
     * the at-ingest dedup every 100 TB pipeline runs before anything
     * else touches a new crawl shard; the stored index at scale is the
     * bucketed digest table (s12) rather than a broadcast. */
@@ -644,18 +644,11 @@ object EventStreams {
       .select(col("doc_id"), col("text"))
     val off = graft.operators.DedupOps.plantOffset(
       graft.operators.DedupOps.maxIdOf(docsStatic, "doc_id"))
-    val stream = readDocuments(ss, d).select(col("doc_id"), col("text"))
-    val incoming = stream.filter(col("doc_id") % 2 === 1)
-      .unionByName(stream
-        .filter(col("doc_id") % 2 === 0 && col("doc_id") < 100)
-        .select((col("doc_id") + lit(off)).as("doc_id"), col("text")))
-    val seen = docsStatic.filter(col("doc_id") % 2 === 0)
-      .select(md5(col("text").cast("binary")).as("text_hash")).distinct()
-      .withColumn("__seen", lit(1))
-    val novel = incoming
-      .withColumn("text_hash", md5(col("text").cast("binary")))
-      .join(broadcast(seen), Seq("text_hash"), "left_outer")
-      .filter(col("__seen").isNull)
+    val incoming = graft.operators.DedupOps.passageIncomingBatch(
+      readDocuments(ss, d).select(col("doc_id"), col("text")), off)
+    val novel = graft.operators.Gates.exactFlags(incoming,
+        graft.operators.Gates.ledger(docsStatic.filter(col("doc_id") % 2 === 0)))
+      .filter(!col("exact"))
       .select(col("doc_id"))
     runToMemory(novel, "append", "s14_stream_ingest_dedup")
       .orderBy(col("doc_id"))
@@ -860,37 +853,20 @@ object EventStreams {
     * verbatim: same planted leaks, same shingle definition, same
     * hit counts. */
   def streamDecontaminate(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.TextFunctions
     val ss = streamSession(s)
     val batchDocs = graft.sources.Tables.documents(ss, d)
       .select(col("doc_id"), col("text"))
     val off = graft.operators.DedupOps.plantOffset(
       graft.operators.DedupOps.maxIdOf(batchDocs, "doc_id"))
-    def shingles(df: DataFrame): DataFrame =
-      TextFunctions.withNgrams(
-          df.select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks")),
-          "toks", "shs", 5)
-        .select(col("doc_id"), explode(col("shs")).as("sh"))
-    val evalShingles = shingles(batchDocs.filter(col("doc_id") % 97 === 0))
-      .select(col("sh")).distinct()
     val stream = readDocuments(ss, d).select(col("doc_id"), col("text"))
     val incoming = stream.filter(col("doc_id") % 97 =!= 0)
       .unionByName(stream.filter(col("doc_id") % 97 === 0)
         .select((col("doc_id") + lit(off)).as("doc_id"), col("text")))
-    // distinct-ness is established IN-ROW (array_distinct before the
-    // explode): each doc is one stream row, so its shingle set dedups
-    // inside the row and the roll-up is a PLAIN count — streaming
-    // forbids countDistinct, and this shape needs no second stateful
-    // operator to work around it
-    val hits = TextFunctions.withNgrams(
-        incoming.select(col("doc_id"),
-          TextFunctions.tokens(col("text")).as("toks")),
-        "toks", "shs", 5)
-      .select(col("doc_id"),
-        explode(array_distinct(col("shs"))).as("sh"))
-      .join(broadcast(evalShingles), "sh")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_shingle_hits"))
+    // d09's gate verbatim: its in-row distinct makes the roll-up a
+    // plain count, which a stream allows (countDistinct it forbids)
+    val hits = graft.operators.Gates.gramHits(incoming,
+      graft.operators.Gates.evalGrams(
+        batchDocs.filter(col("doc_id") % 97 === 0)))
     runToMemory(hits, "complete", "s25_stream_decon")
       .orderBy(col("doc_id"))
   }
@@ -1651,22 +1627,11 @@ object EventStreams {
     val dir = graft.api.DocIndexStore.Passage.versionedDir(
       root, java.time.LocalDate.ofEpochDay(0))
     graft.api.DocIndexStore.Passage.saveOnce(dir, existing)
-    val known = graft.api.DocIndexStore.Passage.load(ss, dir)
-      .select(col("h")).distinct().withColumn("__known", lit(1L))
-    val stream = readDocuments(ss, d).select(col("doc_id"), col("text"))
-    val incoming = stream.filter(col("doc_id") % 2 === 1)
-      .unionByName(stream
-        .filter(col("doc_id") % 2 === 0 && col("doc_id") < 100)
-        .select((col("doc_id") + lit(off)).as("doc_id"), col("text")))
-    val agg = graft.operators.DedupOps.passageInstancesFrom(incoming)
-      .select(col("doc_id"), md5(col("passage").cast("binary")).as("h"))
-      .join(known, Seq("h"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_passages"),
-        sum(coalesce(col("__known"), lit(0L))).as("n_known"))
+    val agg = graft.operators.DedupOps.probePassagesAgainst(
+      graft.operators.DedupOps.passageIncomingBatch(
+        readDocuments(ss, d).select(col("doc_id"), col("text")), off),
+      graft.api.DocIndexStore.Passage.load(ss, dir))
     runToMemory(agg, "complete", "s32_stream_passage_probe")
-      .select(col("doc_id"), col("n_passages"), col("n_known"),
-        round(col("n_known") / col("n_passages"), 6).as("known_frac"))
       .orderBy(col("doc_id"))
   }
 
@@ -1738,8 +1703,8 @@ object EventStreams {
     *   - exact — digest left-join against the stored ledger (s14's
     *     stateless shape; also emits the per-doc universe relation);
     *   - near-dup — row-local bands ⋈ loaded band index, VERIFIED by
-    *     cleaned-key equality against static dimensions (stateless
-    *     append of candidate pairs; the distinct is batch work after
+    *     the in-row cleaned-text key against the stored docs' keys
+    *     (stateless append of hits; the distinct is batch work after
     *     the drain);
     *   - passage — batch passages ⋈ loaded membership set, per-doc
     *     complete-mode roll-up (s32's shape);
@@ -1753,7 +1718,9 @@ object EventStreams {
     * recomputes the intra-free attribution (a batch-internal twin
     * falls through to later gates or double-admits, exactly as the
     * closed form states). Composition + histogram are batch work over
-    * the drained sinks.
+    * the drained sinks. The gates are batch c08's own
+    * ([[graft.operators.Gates]]), so the two waterfalls differ only in
+    * the keep-first entry of c08's attribution list.
     *
     * 100 TB shape: every probe is stream ⋈ static store on a uniform
     * key; the stateful stages hold per-doc counters for the increment
@@ -1762,156 +1729,52 @@ object EventStreams {
   def streamAdmission(s: SparkSession, d: String): DataFrame = {
     import graft.operators.PackOps
     val ss = streamSession(s)
-    val attributed = streamDocAttribution(ss, d)
-    PackOps.admissionHistogram(ss, attributed,
+    val (streams, compose) = docGateStreams(ss, d)
+    PackOps.admissionHistogram(ss, compose(runAllToMemory(streams)),
       Seq("1_exact_store", "2_neardup", "3_passage", "4_decontam"))
       .orderBy(col("stage"))
   }
 
-  /** c08's increment construction over EITHER the batch table (static
-    * dims) or the stream (the probes) — ONE definition shared by
-    * s34's waterfall and s37's pair stream. */
-  private def admissionIncrement(f: DataFrame, off: Long): DataFrame = {
-    import graft.operators.PackOps
-    f.filter(col("doc_id") % 2 === 1)
-      .unionByName(f
-        .filter(col("doc_id") % 2 === 0 && col("doc_id") < 100)
-        .select((col("doc_id") + lit(off)).as("doc_id"), col("text")))
-      .unionByName(f
-        .filter(col("doc_id") % 2 === 0 &&
-          col("doc_id") >= 100 && col("doc_id") < 200)
-        .select((col("doc_id") + lit(2 * off)).as("doc_id"),
-          upper(col("text")).as("text")))
-      .unionByName(f
-        .filter(col("doc_id") % 2 === 0 &&
-          col("doc_id") >= 200 && col("doc_id") < 250)
-        .select((col("doc_id") + lit(3 * off)).as("doc_id"),
-          PackOps.admitQuoteText.as("text")))
-      .unionByName(f.filter(col("doc_id") % 97 === 0)
-        .select((col("doc_id") + lit(4 * off)).as("doc_id"),
-          concat(lit("leak "), col("text")).as("text")))
-  }
-
-  /** s34's four-gate STREAMED doc attribution — (doc_id, gate) over
-    * the drained sinks, intra-free (see the s34 doc for why). Factored
-    * so s37's multimodal pair stream runs the IDENTICAL doc-side
-    * gates: the single-space and pair-composed live paths cannot
-    * drift. */
-  private def streamDocAttribution(ss: SparkSession,
-      d: String): DataFrame = {
-    val (streams, compose) = docGateStreams(ss, d)
-    compose(runAllToMemory(streams))
-  }
-
-  /** The four gate drains + their post-drain composition, factored so
-    * callers choose the drain schedule: s34 drains exactly these four,
-    * s37 appends its two vec-gate drains to the SAME concurrent batch
-    * (guide §2.6) — the gate PLANS stay the identical single
-    * definition either way. Returns (stream definitions in gate order,
-    * composition over the drained tables in that order). */
+  /** The four doc-gate drains ([[graft.operators.Gates]], c08's gates
+    * over the streamed increment) + their post-drain attribution to
+    * (doc_id, gate), intra-free (see the s34 doc for why), factored so
+    * callers choose the drain schedule: s34 drains exactly
+    * these four, s37 appends its two vec-gate drains to the SAME
+    * concurrent batch (guide §2.6). Returns (stream definitions in
+    * gate order, composition over the drained tables in that order). */
   private def docGateStreams(ss: SparkSession, d: String)
       : (Seq[(DataFrame, String, String)], Seq[DataFrame] => DataFrame) = {
-    import graft.operators.{DedupOps, PackOps}
-    import graft.functions.TextFunctions
+    import graft.operators.{DedupOps, Gates}
     val docs = graft.sources.Tables.documents(ss, d)
       .select(col("doc_id"), col("text"))
     val off = DedupOps.plantOffset(DedupOps.maxIdOf(docs, "doc_id"))
     val existing = docs.filter(col("doc_id") % 2 === 0)
-    // c08's session artifacts — one build, two consumers (the batch
-    // and streaming waterfalls probe the identical stores)
-    val root = graft.sources.TmpDirs.artifactRoot(ss, d, "c08")
-    val date = java.time.LocalDate.ofEpochDay(0)
-    val lshDir = graft.api.DocIndexStore.Lsh.versionedDir(
-      s"$root/lsh", date)
-    graft.api.DocIndexStore.Lsh.saveOnce(lshDir, existing)
-    val pasDir = graft.api.DocIndexStore.Passage.versionedDir(
-      s"$root/passage", date)
-    graft.api.DocIndexStore.Passage.saveOnce(pasDir, existing)
-
-    def plantedBatch(f: DataFrame): DataFrame = admissionIncrement(f, off)
-
-    def cleanKey =
-      md5(TextFunctions.cleanText(col("text")).cast("binary"))
-    val seen = existing
-      .select(md5(col("text").cast("binary")).as("th"))
-      .distinct().withColumn("__seen", lit(1))
-    // the increment's own clean keys: a static dimension — the stream
-    // is the delivery vehicle, the verifier's side tables are data
-    val inClean = plantedBatch(docs)
-      .select(col("doc_id").as("in_id"), cleanKey.as("ick"))
-    val srcClean = existing
-      .select(col("doc_id").as("src_id"), cleanKey.as("sck"))
-
-    val incoming = plantedBatch(
-      readDocuments(ss, d).select(col("doc_id"), col("text")))
-
-    // gate 1 (stateless): exact flag + the universe
-    val universeStream = (
-      incoming.withColumn("th", md5(col("text").cast("binary")))
-        .join(seen, Seq("th"), "left")
-        .select(col("doc_id"), coalesce(col("__seen"), lit(0)).as("seen")),
-      "append", "s34_universe")
-    // gate 2 (stateless): verified near-dup candidates
-    val nearPairsStream = (
-      DedupOps.minhashBandsRowLocal(incoming)
-        .select(col("doc_id").as("in_id"), col("band"), col("bucket"))
-        .join(graft.api.DocIndexStore.Lsh.load(ss, lshDir)
-          .select(col("doc_id").as("src_id"), col("band"), col("bucket")),
-          Seq("band", "bucket"))
-        .join(inClean, Seq("in_id"))
-        .join(srcClean, Seq("src_id"))
-        .filter(col("ick") === col("sck"))
-        .select(col("in_id")),
-      "append", "s34_near")
-    // gate 3 (complete): passage membership roll-up
-    val known = graft.api.DocIndexStore.Passage.load(ss, pasDir)
-      .select(col("h")).distinct().withColumn("__known", lit(1L))
-    val pasAggStream = (
-      DedupOps.passageInstancesFrom(incoming)
-        .select(col("doc_id"), md5(col("passage").cast("binary")).as("h"))
-        .join(known, Seq("h"), "left")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("np"),
-          sum(coalesce(col("__known"), lit(0L))).as("nk")),
-      "complete", "s34_passage")
-    // gate 4 (complete): benchmark 5-gram overlap
-    val evalGrams = TextFunctions.withNgrams(
-        docs.filter(col("doc_id") % 97 === 0)
-          .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks")),
-        "toks", "shs", 5)
-      .select(explode(col("shs")).as("sh")).distinct()
-    val contAggStream = (
-      TextFunctions.withNgrams(
-          incoming.select(col("doc_id"),
-            TextFunctions.tokens(col("text")).as("toks")),
-          "toks", "shs", 5)
-        .select(col("doc_id"), explode(array_distinct(col("shs"))).as("sh"))
-        .join(broadcast(evalGrams), "sh")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nh")),
-      "complete", "s34_decontam")
-
-    // composition: batch work over the drained sinks
+    // c08's session artifacts: the batch and streamed waterfalls probe
+    // the identical stores
+    val (lshDir, pasDir) = Gates.admissionStores(ss, d, existing)
+    val incoming = Gates.admissionIncrement(
+      readDocuments(ss, d).select(col("doc_id"), col("text")), off)
+    val streams = Seq(
+      (Gates.exactFlags(incoming, Gates.ledger(existing)),
+        "append", "s34_universe"),
+      (Gates.nearDupHits(incoming,
+        graft.api.DocIndexStore.Lsh.load(ss, lshDir), existing),
+        "append", "s34_near"),
+      (DedupOps.probePassagesAgainst(incoming,
+        graft.api.DocIndexStore.Passage.load(ss, pasDir)),
+        "complete", "s34_passage"),
+      (Gates.gramHits(incoming,
+        Gates.evalGrams(docs.filter(col("doc_id") % 97 === 0))),
+        "complete", "s34_decontam"))
     val compose = (drained: Seq[DataFrame]) => {
-      val Seq(universe, nearPairs, pasAgg, contAgg) = drained
-      universe
-        .join(nearPairs.select(col("in_id").as("doc_id")).distinct()
-          .withColumn("__near", lit(1)), Seq("doc_id"), "left")
-        .join(pasAgg.filter(col("nk") * 2 >= col("np"))
-          .select(col("doc_id")).withColumn("__pas", lit(1)),
-          Seq("doc_id"), "left")
-        .join(contAgg.filter(col("nh") >= PackOps.DecontamMinHits)
-          .select(col("doc_id")).withColumn("__cont", lit(1)),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("seen") === 1, "1_exact_store")
-            .when(col("__near") === 1, "2_neardup")
-            .when(col("__pas") === 1, "3_passage")
-            .when(col("__cont") === 1, "4_decontam")
-            .otherwise("admitted").as("gate"))
+      val Seq(exact, near, pas, cont) = drained
+      Gates.firstGate(exact.select(col("doc_id")), "doc_id", Seq(
+        "1_exact_store" -> exact.filter(col("exact")),
+        "2_neardup" -> near,
+        "3_passage" -> Gates.passageHits(pas),
+        "4_decontam" -> Gates.decontamHits(cont)))
     }
-    (Seq(universeStream, nearPairsStream, pasAggStream, contAggStream),
-      compose)
+    (streams, compose)
   }
 
   /** s35 — STREAMING embedding admission (c09's gates on the live
@@ -1925,58 +1788,37 @@ object EventStreams {
     *
     *   - exact — 64-bit-hash left-join against the stored corpus with
     *     the array-equality verify carried per row (multi-row on hash
-    *     collisions; the per-id max is batch work after the drain);
+    *     collisions; the dedup is batch work after the drain);
     *   - semantic — s29's row-local probe cells over the broadcast
     *     quantizer, cell equi-join, exact cosine ≥ τ
     *     ([[graft.operators.EmbeddingOps.semanticGateCandidates]] —
     *     the distinct-free emission exists for exactly this plan).
     *
-    * Composition + histogram are batch work over the drained sinks;
-    * c09's planted closed form transfers (phase 1, reshaped). The
+    * Both are batch c09's gates, attributed after the drain by the
+    * same [[graft.operators.Gates.vecFirstGate]]; the histogram is
+    * batch work over the drained sinks too. c09's planted closed form
+    * transfers (phase 1, reshaped). The
     * COMMIT half of the live path is s26's witnessed row.
     *
     * 100 TB shape: both gates are stream ⋈ static on uniform keys
     * (64-bit hash / cell id); nothing stateful rides the stream. */
   def streamEmbeddingAdmission(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.{EmbeddingOps, PackOps}
+    import graft.operators.{EmbeddingOps, Gates, PackOps}
     val ss = streamSession(s)
     val base = graft.sources.Tables.embeddings(ss, d)
       .select(col("vec_id"), col("embedding"))
-    val shared = EmbeddingOps.sharedIndex(ss, d, EmbeddingOps.Geometry.Base)
-    val off = shared.off
     // c09's session artifact — one build, two consumers
-    val root = graft.sources.TmpDirs.artifactRoot(ss, d, "c09")
-    val dir = graft.api.IvfStore.versionedDir(
-      root, shared.cells, java.time.LocalDate.ofEpochDay(0))
-    graft.api.IvfStore.saveOnce(dir, shared.index)
-    val loaded = graft.api.IvfStore.load(ss, dir)
-
+    val (loaded, off) = EmbeddingOps.vecAdmissionArtifact(ss, d)
     val incoming = EmbeddingOps.admissionVecBatch(
       readEmbeddings(ss, d).select(col("vec_id"), col("embedding")), off)
     // both gates are independent drains — one concurrent batch
     // (guide §2.6), identical plans and results
-    val Seq(universe, semHits) = runAllToMemory(Seq(
-      // gate 1 (stateless): hash candidates + per-row equality verify
-      (incoming.withColumn("eh", xxhash64(col("embedding")))
-        .join(base.select(col("embedding").as("s_emb"))
-          .withColumn("eh", xxhash64(col("s_emb"))), Seq("eh"), "left")
-        .select(col("vec_id"),
-          when(col("embedding") === col("s_emb"), 1).otherwise(0)
-            .as("ex")),
-        "append", "s35_universe"),
-      // gate 2 (stateless): semantic candidates vs the LOADED artifact
+    val Seq(exact, semHits) = runAllToMemory(Seq(
+      (Gates.vecExactFlags(incoming, base), "append", "s35_universe"),
       (EmbeddingOps.semanticGateCandidates(ss, incoming,
-        loaded.assigned, loaded.model),
-        "append", "s35_sem")))
-
-    val attributed = universe.groupBy(col("vec_id"))
-      .agg(max(col("ex")).as("ex"))
-      .join(semHits.select(col("q_id").as("vec_id")).distinct()
-        .withColumn("__sem", lit(1)), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("ex") === 1, "1_exact")
-          .when(col("__sem") === 1, "2_semantic")
-          .otherwise("admitted").as("gate"))
+        loaded.assigned, loaded.model), "append", "s35_sem")))
+    val attributed = Gates.vecFirstGate(
+      exact.select(col("vec_id")).distinct(), exact, semHits)
     PackOps.admissionHistogram(ss, attributed,
       Seq("1_exact", "2_semantic"))
       .orderBy(col("stage"))
@@ -1986,13 +1828,14 @@ object EventStreams {
     * completing the admission lattice: single-space batch c08/c09,
     * single-space stream s34/s35, composed batch c12, composed stream
     * HERE): the (document, embedding) pair increment arrives as a
-    * stream — the doc members through [[streamDocAttribution]]'s
-    * four intra-free gates (the IDENTICAL plans s34 drains, one
-    * definition), the vec submissions derived per-row by c12's shared
-    * pairing rule ([[graft.operators.PackOps.pairVecAssignment]] — a
-    * stateless stream-static join on the base id) and gated by c09's
-    * two stream-shaped plans (s35's: hash + equality verify carried
-    * per row; the distinct-free semantic candidate emission). The
+    * stream — the doc members through s34's four intra-free gate
+    * drains ([[docGateStreams]]), the vec submissions derived per-row
+    * by c12's shared pairing rule
+    * ([[graft.operators.PackOps.pairVecAssignment]] — a stateless
+    * stream-static join on the base id) and gated by the two vec
+    * gates s35 drains ([[graft.operators.Gates.vecExactFlags]] and the
+    * distinct-free semantic candidate emission). Every gate and both
+    * attributions are the batch rows' own ([[graft.operators.Gates]]). The
     * conjunction matrix — rejection in EITHER key space vetoes the
     * pair — is batch work over the drained sinks. c12's closed form
     * transfers with the intra-free doc attribution; the COMMIT half of
@@ -2004,7 +1847,7 @@ object EventStreams {
     * hash); the pair join rides the stream row-locally; state is
     * increment-sized per-doc counters only. */
   def streamMultimodalAdmission(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.{DedupOps, EmbeddingOps, PackOps}
+    import graft.operators.{DedupOps, EmbeddingOps, Gates, PackOps}
     val ss = streamSession(s)
     val docs = graft.sources.Tables.documents(ss, d)
       .select(col("doc_id"), col("text"))
@@ -2012,42 +1855,28 @@ object EventStreams {
     val baseE = graft.sources.Tables.embeddings(ss, d)
       .select(col("vec_id"), col("embedding"))
     val (loaded, offV) = EmbeddingOps.vecAdmissionArtifact(ss, d)
-    // doc side: the four streamed gates, shared with s34 verbatim
-    // (ONE definition — docGateStreams); vec side: the pair
-    // submissions ride the SAME document stream. All six gates are
-    // independent drains, so they run as ONE concurrent batch
-    // (guide §2.6) — plans and results identical to sequential drains.
+    // doc side: s34's four streamed gates (docGateStreams); vec side:
+    // the pair submissions ride the SAME document stream. All six
+    // gates are independent drains, so they run as ONE concurrent
+    // batch (guide §2.6) — plans and results identical to sequential
+    // drains.
     val (docStreams, composeDoc) = docGateStreams(ss, d)
     val vecStream = PackOps.pairVecAssignment(
-      admissionIncrement(
+      Gates.admissionIncrement(
         readDocuments(ss, d).select(col("doc_id"), col("text")), offD)
         .select(col("doc_id")),
       baseE, offD, offV)
       .select(col("vec_id"), col("embedding"))
     val drained = runAllToMemory(docStreams ++ Seq(
-      // gate 1 (stateless): hash candidates + per-row equality verify
-      (vecStream.withColumn("eh", xxhash64(col("embedding")))
-        .join(baseE.select(col("embedding").as("s_emb"))
-          .withColumn("eh", xxhash64(col("s_emb"))), Seq("eh"), "left")
-        .select(col("vec_id"),
-          when(col("embedding") === col("s_emb"), 1).otherwise(0)
-            .as("ex")),
-        "append", "s37_exact"),
-      // gate 2 (stateless): semantic candidates vs the LOADED artifact
+      (Gates.vecExactFlags(vecStream, baseE), "append", "s37_exact"),
       (EmbeddingOps.semanticGateCandidates(ss, vecStream,
-        loaded.assigned, loaded.model),
-        "append", "s37_sem")))
+        loaded.assigned, loaded.model), "append", "s37_sem")))
     val docAttr = composeDoc(drained.take(4))
     val (vecExact, vecSem) = (drained(4), drained(5))
     // composition: the conjunction matrix over the drained sinks
-    val vecGate = vecExact.groupBy(col("vec_id"))
-      .agg(max(col("ex")).as("ex"))
-      .join(vecSem.select(col("q_id").as("vec_id")).distinct()
-        .withColumn("__sem", lit(1)), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("ex") === 1, "1_exact")
-          .when(col("__sem") === 1, "2_semantic")
-          .otherwise("admitted").as("vec_gate"))
+    val vecGate = Gates.vecFirstGate(
+        vecExact.select(col("vec_id")).distinct(), vecExact, vecSem)
+      .withColumnRenamed("gate", "vec_gate")
     val pairs = PackOps.pairVecAssignment(
       docAttr.select(col("doc_id"), col("gate").as("doc_gate")),
       baseE, offD, offV)
@@ -2112,7 +1941,7 @@ object EventStreams {
   }
 
   /** s27 — STREAMING near-dup probe against the STORED LSH band index
-    * (d20 on the live path, r13 verdict ask #6 — the LSH side of s26):
+    * (d20 on the live path — the LSH side of s26):
     * the existing corpus's pruned band index is persisted through
     * [[graft.api.DocIndexStore.Lsh]] and loaded back; the incoming
     * document stream — d11's exact scenario, novel docs plus re-fetched
@@ -2146,11 +1975,8 @@ object EventStreams {
     graft.api.DocIndexStore.Lsh.saveOnce(dir, existing)
     val loaded = graft.api.DocIndexStore.Lsh.load(ss, dir)
       .select(col("doc_id").as("src_id"), col("band"), col("bucket"))
-    val stream = readDocuments(ss, d).select(col("doc_id"), col("text"))
-    val incoming = stream.filter(col("doc_id") % 2 === 1)
-      .unionByName(stream
-        .filter(col("doc_id") % 2 === 0 && col("doc_id") < 200)
-        .select((col("doc_id") + lit(off)).as("doc_id"), col("text")))
+    val incoming = graft.operators.DedupOps.lshIncomingBatch(
+      readDocuments(ss, d).select(col("doc_id"), col("text")), off)
     val hits = graft.operators.DedupOps.minhashBandsRowLocal(incoming)
       .select(col("doc_id").as("in_id"), col("band"), col("bucket"))
       .join(loaded, Seq("band", "bucket"))

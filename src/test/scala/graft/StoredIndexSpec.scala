@@ -391,6 +391,7 @@ class StoredIndexSpec extends SparkSpec {
         graft.operators.DedupOps.passageIncomingBatch(docs, off),
         graft.operators.DedupOps.passageHashIndex(
           docs.filter(col("doc_id") % 2 === 0)))
+      .orderBy(col("doc_id"))
       .collect().map(_.toSeq).toSeq
     assert(want.nonEmpty)
     val a = graft.operators.DedupOps.incrementalPassageDedup(spark, sfTiny)
@@ -414,6 +415,7 @@ class StoredIndexSpec extends SparkSpec {
         graft.operators.DedupOps.passageIncomingBatch(docs, off),
         graft.operators.DedupOps.passageHashIndex(
           docs.filter(col("doc_id") % 2 === 0 && col("doc_id") >= 50)))
+      .orderBy(col("doc_id"))
       .collect().map(_.toSeq).toSeq
     assert(want.nonEmpty)
     val got = graft.operators.DedupOps
