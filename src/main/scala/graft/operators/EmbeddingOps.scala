@@ -3,7 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.expressions.VectorExpressions.{arrayDot, arrayMaxAbs, arrayNorm, arrayQuantError, fastCosine}
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the embeddings table (`ARRAY<FLOAT>` columns) —
@@ -402,38 +402,22 @@ object EmbeddingOps {
     * nearest cells of a prebuilt index. At scale the cell assignment is
     * the partition key — a probe touches IvfProbes/IvfCells of the data
     * instead of all of it. Rows-only (k-means-dependent); the
-    * brute-force e01 is the exact baseline. */
-  /** A query's probe set: its `probes` nearest quantizer cells by center
-    * distance (the query's own cell is always included — its center is
-    * nearest by definition). Driver-side over the k cell centers. */
-  private[graft] def probedCells(index: IvfIndex, queryId: Long,
-                                 probes: Int): Seq[Int] = {
-    import org.apache.spark.ml.linalg.{Vector, Vectors}
-    val qFeatures = index.assigned.filter(col("vec_id") === queryId)
-      .select(col("features")).collect().head.getAs[Vector](0)
-    index.model.clusterCenters.zipWithIndex
-      .sortBy { case (c, _) => Vectors.sqdist(c, qFeatures) }
-      .take(probes).map(_._2).toIndexedSeq
-  }
-
-  def ivfTopK(index: IvfIndex, queryId: Long, k: Int,
-              probes: Int = IvfProbes): DataFrame = {
-    val probed = probedCells(index, queryId, probes)
-    val qEmb = index.assigned.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("q_emb"))
-    index.assigned
-      .filter(col("cell").isin(probed.toIndexedSeq: _*) && col("vec_id") =!= queryId)
-      .crossJoin(broadcast(qEmb))
-      .select(col("vec_id"),
-        round(fastCosine(col("embedding"), col("q_emb")), 6).as("cos_sim"))
+    * brute-force e01 is the exact baseline. One query through the exact
+    * scorer ([[exactCandidates]]), its page cut by a plain sort + limit
+    * (one query needs no per-query window). The candidates are cut to
+    * the query's probe cells first, so the scorer's cell repartition
+    * moves IvfProbes/cells of the index for one lookup, not all of it. */
+  def ivfTopK(index: IvfIndex, queryId: Long, k: Int): DataFrame = {
+    val s = index.assigned.sparkSession
+    val query = index.assigned.filter(col("vec_id") === queryId)
+    val cells = probedQueries(s, index.model, query).select(col("cell"))
+    exactCandidates(s, index.model, index.assigned
+        .filter(col("vec_id") =!= queryId)
+        .join(broadcast(cells), Seq("cell"), "left_semi"), query)
+      .select(col("vec_id"), col("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(k)
   }
-
-  /** Build-then-probe convenience (test fixtures). */
-  def ivfTopK(emb: DataFrame, queryId: Long, k: Int,
-              cells: Int, probes: Int): DataFrame =
-    ivfTopK(ivfBuild(emb, cells), queryId, k, probes)
 
   /** Corpus row count, memoized per dataset alongside the index memos:
     * quantizer sizing needs it BEFORE the build (the memo key pins the
@@ -510,9 +494,8 @@ object EmbeddingOps {
   def annIvf(s: SparkSession, d: String): DataFrame =
     ivfTopK(sharedIndex(s, d, Geometry.Base).index, queryId = 0, k = 20)
 
-  /** e05 — IVF probe BOUND contract (closes the last rows-only gap the
-    * r9 verdict named): the deterministic exact side is e01's
-    * brute-force top-20 for query 0 (oracle-pinned ids and cosines);
+  /** e05 — IVF probe BOUND contract: the deterministic exact side is
+    * e01's brute-force top-20 for query 0 (oracle-pinned ids and cosines);
     * the engine side probes the REAL shared IVF index ([[annIvf]]'s
     * memoized build — same quantizer, same probe code) and each exact
     * neighbor is flagged `in_ivf_or_unprobed`:
@@ -533,14 +516,17 @@ object EmbeddingOps {
     * both run the same memoized index, so the sweep builds it once. */
   def annIvfBound(s: SparkSession, d: String): DataFrame = {
     val index = sharedIndex(s, d, Geometry.Base).index
-    val probed = probedCells(index, queryId = 0, IvfProbes)
+    val probed = probedQueries(s, index.model,
+        index.assigned.filter(col("vec_id") === 0))
+      .select(col("cell"), lit(1).as("__probed"))
     val found = ivfTopK(index, queryId = 0, k = 20)
       .select(col("vec_id"), lit(1).as("__found"))
     knnBruteForce(s, d)
       .join(found, Seq("vec_id"), "left")
       .join(index.assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
+      .join(probed, Seq("cell"), "left")
       .select(col("vec_id"), col("cos_sim"),
-        when(col("__found").isNotNull || !col("cell").isin(probed: _*), 1)
+        when(col("__found").isNotNull || col("__probed").isNull, 1)
           .otherwise(0).as("in_ivf_or_unprobed"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
   }
@@ -588,20 +574,15 @@ object EmbeddingOps {
   /** Every [[BatchQueryMod]]-th base vector is a query in e13's batch. */
   private[graft] val BatchQueryMod = 20L
 
-  /** e13 — BATCH ANN serving: the production query path e05's
-    * one-query probe cannot scale to. e05 assigns a query's probe
-    * cells DRIVER-SIDE (collect the query, sort the centers) — right
-    * for interactive lookups, a driver bottleneck for the offline
-    * serving shape where a MILLION queries arrive as a table
-    * (recommendation backfills, eval-set retrieval, dedup-against-
-    * index). Here the whole batch is answered in ONE plan, no driver
-    * loop anywhere: probe assignment is relational — queries ×
-    * broadcast centers (a cells-sized relation with |c|² precomputed;
-    * on the unit sphere ‖f−c‖² = 1+|c|²−2f·c, the codegen'd ArrayDot
-    * kernel), ranked per query by (sqdist, cell) and cut at
-    * [[IvfProbes]] — then candidates come from ONE cell equi-join
-    * against the shared index (never query × corpus), scored exactly,
-    * and the per-query argmax is a query-partitioned window.
+  /** e13 — BATCH ANN serving: the offline serving shape where a
+    * MILLION queries arrive as a table (recommendation backfills,
+    * eval-set retrieval, dedup-against-index). The whole batch is
+    * answered in ONE plan through the serve kernels, no driver loop
+    * anywhere: each query's probe cells are ranked in its own row over
+    * broadcast centers ([[probeCellsRowLocal]]), candidates come from
+    * ONE cell equi-join against the shared index (never query ×
+    * corpus) and are scored exactly ([[exactCandidates]]), and the
+    * per-query argmax is one aggregation ([[top1]]).
     *
     * Contract (e07's planted discipline — nothing k-means-dependent is
     * emitted): over the planted union, every query's top-1 is its
@@ -614,92 +595,35 @@ object EmbeddingOps {
     * argmax surfaces as a wrong id or a missing query row. Full DuckDB
     * oracle: one row per query.
     *
-    * 100 TB shape: the probe-rank relation is queries × cells with a
-    * cells-sized broadcast (cells grows as n/256 — at [[IvfMaxCells]]
-    * the broadcast is ~32 MB of centers, still a broadcast); the
-    * candidate join shuffles on the cell id like e10's pair pass; the
-    * two windows partition by query_id. Nothing data-scale touches
-    * the driver — the batch can be arbitrarily large. */
+    * 100 TB shape: the probe is a cells-sized broadcast (cells grows as
+    * n/256 — at [[IvfMaxCells]] ~32 MB of centers, still a broadcast);
+    * the candidate join shuffles on the cell id like e10's pair pass;
+    * the argmax aggregates by query_id. Nothing data-scale touches the
+    * driver — the batch can be arbitrarily large. */
   def annBatchServe(s: SparkSession, d: String): DataFrame = {
     val shared = sharedIndex(s, d, Geometry.Planted)
     batchServeAgainst(shared.index, shared.off)
   }
 
-  /** The e13 serve plan against an ARBITRARY index — shared verbatim by
-    * e13 (in-session index), e14 (loaded-from-disk index), and e15
-    * (loaded index + appended increment), so the three rows run ONE
-    * code path and their common closed-form oracle transfers: a lossy
-    * save, an assignment drift, or a lost appended cell breaks the
-    * respective row's hash instead of a serving job months later. */
-  /** The batch query selection + relational probe assignment shared by
-    * e13/e14/e15's exact re-rank and e16's PQ-ADC re-rank: queries are
-    * every [[BatchQueryMod]]-th base vector, probe cells ranked by
-    * unit-sphere ‖f−c‖² = 1+‖c‖²−2f·c against broadcast centers and
-    * cut at [[IvfProbes]]. Returns (queries, probes): one row per
-    * query carrying its feature array + raw embedding, and one row per
-    * (query, probed cell). */
-  private def batchProbes(index: IvfIndex, off: Long)
-      : (DataFrame, DataFrame) = {
-    val s = index.assigned.sparkSession
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val centers = index.model.clusterCenters.zipWithIndex.map {
-      case (c, i) =>
-        val a = c.toArray
-        (i, a, a.map(v => v * v).sum)
-    }.toSeq.toDF("cell", "c_arr", "c_norm2")
-    val queries = index.assigned
+  /** e13's query batch against an index over base ∪ planted copies:
+    * every [[BatchQueryMod]]-th base vector, as (vec_id, embedding). */
+  private def batchQueries(index: IvfIndex, off: Long): DataFrame =
+    index.assigned
       .filter(col("vec_id") < off && col("vec_id") % BatchQueryMod === 0)
-      .select(col("vec_id").as("query_id"),
-        org.apache.spark.ml.functions.vector_to_array(col("features"))
-          .as("q_feat"),
-        col("embedding").as("q_emb"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("sqd"), col("cell"))
-    val probes = queries.crossJoin(broadcast(centers))
-      .withColumn("sqd", lit(1.0) + col("c_norm2") -
-        lit(2.0) * arrayDot(col("q_feat"), col("c_arr")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= IvfProbes)
-      .select(col("query_id"), col("q_emb"), col("cell"))
-    (queries, probes)
-  }
+      .select(col("vec_id"), col("embedding"))
 
-  /** The ranked candidate relation behind the batch serve: probed-cell
-    * candidates scored exactly, per-query rank by (cos desc, vec_id) —
-    * cut at `k`. ONE kernel for e13/e14/e15's top-1 projection and
-    * e18's top-k list, so the top-k path is provably the same plan the
-    * closed-form top-1 rows pin. */
-  private[graft] def batchServeTopKAgainst(index: IvfIndex, off: Long,
-      k: Int): DataFrame =
-    topKFromProbes(index, batchProbes(index, off)._2, k)
-
-  /** The serve ranking given an already-computed probe relation — lets
-    * e18 share ONE probe sub-plan between its serve side and its
-    * probed-cell flag instead of planning the queries × centers window
-    * twice (r14 review). */
-  private def topKFromProbes(index: IvfIndex, probes: DataFrame,
-      k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    probes
-      .join(index.assigned.select(col("vec_id"), col("embedding"),
-        col("cell")), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(fastCosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
-  }
-
+  /** The e13 serve plan against an ARBITRARY index — shared verbatim by
+    * e13 (in-session index), e14 (loaded-from-disk index), e15 (loaded
+    * index + appended increment) and every later store row, so they run
+    * ONE code path and their common closed-form oracle transfers: a
+    * lossy save, an assignment drift, or a lost appended cell breaks
+    * the respective row's hash instead of a serving job months later. */
   private[graft] def batchServeAgainst(index: IvfIndex, off: Long): DataFrame =
-    batchServeTopKAgainst(index, off, 1)
-      .select(col("query_id"), col("vec_id").as("top1_id"), col("cos_sim"))
-      .orderBy(col("query_id"))
+    serveQueriesAgainst(index.assigned.sparkSession, index,
+      batchQueries(index, off)).orderBy(col("query_id"))
 
   /** Shared by e13/e14/e15 — the closed-form serve contract. CORPUS
-    * ASSUMPTION (r12 ADVICE): "top-1 = the planted twin" additionally
+    * ASSUMPTION: "top-1 = the planted twin" additionally
     * relies on no NATIVE vector being an exact duplicate of a query
     * vector — an exact native duplicate would also score cosine 1.0
     * and, with a smaller vec_id, win the (cos desc, vec_id asc)
@@ -904,13 +828,13 @@ object EmbeddingOps {
     * scored by ADC TABLE LOOKUP against the M×K codebooks instead of
     * exact cosine — the memory/bandwidth shape that serves billions of
     * vectors (codes are M small ints per vector; raw embeddings never
-    * ride the scoring join). Fully relational: the per-query lookup
-    * table is queries × broadcast (m, code, centroid) rows scoring
-    * ‖c‖² − 2·q_m·c (the per-query ‖q_m‖² terms are constant across
+    * ride the scoring join). Through the serve kernels: each query row
+    * carries its own lookup table of ‖c‖² − 2·q_m·c over the broadcast
+    * codebooks (the per-query ‖q_m‖² terms are constant across
     * candidates and cancel in the argmin), candidates come from the
-    * shared IVF index's probed cells, codes unpivot to (m, code) rows
-    * and join the LUT, and the per-(query, candidate) ADC is one sum
-    * over M partials with a query-partitioned argmin.
+    * shared IVF index's probed cells, the per-(query, candidate) ADC is
+    * M carried-array lookups summed in a fixed m order
+    * ([[adcCandidates]]), and the argmin is [[top1]].
     *
     * Contract (e13's closed form carried through the quantization):
     * the planted twin shares the query's cell AND its full PQ code
@@ -926,7 +850,7 @@ object EmbeddingOps {
     * exact-cosine column.
     *
     * 100 TB shape: codebooks are (M×K×dim/M) doubles — kilobytes,
-    * broadcast; the LUT is |batch|×M×K rows; the scoring join moves
+    * broadcast; the LUT is M×K doubles per query row; the scoring join moves
     * M-int code rows instead of full embeddings (the 16-64× bandwidth
     * reduction that IS the point of PQ); everything partitions by
     * query_id or the cell key. */
@@ -959,34 +883,24 @@ object EmbeddingOps {
   }
 
   /** The e16 ADC serve plan against ARBITRARY (index, codebooks, codes)
-    * — shared verbatim by e16 (in-session PQ) and e17 (loaded-from-disk
-    * PQ), so the two rows run ONE code path and the common closed-form
-    * oracle transfers: a lossy codebook save, a code-column drift, or a
-    * truncated subspace breaks e17's hash instead of a serving job
-    * months later. The collision precondition is asserted on the codes
-    * relation actually being SERVED (for e17: the loaded one). */
+    * — shared verbatim by e16 (in-session PQ), e17 (loaded-from-disk
+    * PQ) and every later PQ store row, so they run ONE code path and
+    * the common closed-form oracle transfers: a lossy codebook save, a
+    * code-column drift, or a truncated subspace breaks e17's hash
+    * instead of a serving job months later. */
   private[graft] def adcServe(index: IvfIndex, pq: PqModel,
       codes: DataFrame, off: Long): DataFrame =
-    adcRank(index, pq, codes, off)
-      .filter(col("rn") === 1)
-      .select(col("query_id"), col("vec_id").as("top1_id"))
-      .orderBy(col("query_id"))
+    adcServeQueriesAgainst(index.assigned.sparkSession, index.model, pq,
+      codes, batchQueries(index, off)).orderBy(col("query_id"))
 
-  /** The full ADC-ranked candidate relation (query_id, vec_id, adc,
-    * rn) behind [[adcServe]] — e16/e17 project rn = 1 (the closed-form
-    * twin), e19 cuts an rn ≤ R SHORTLIST for exact re-ranking (the
-    * IVFADC-R serve). One kernel: the shortlist path is provably the
-    * same scoring join the top-1 rows pin. */
   /** Loud precondition on a freshly ENCODED corpus: no NATIVE vector
     * may share a query's full code (it would tie the twin's ADC and win
     * the id tie-break on a correct engine — the e13 corpus assumption,
     * asserted instead of assumed because quantization makes collisions
     * more likely than exact-duplicate vectors). Asserted ONCE where the
     * codes are produced (the build memos), never inside the serve
-    * plan's build (r14 verdict item 6: the eager count was one extra
-    * Spark job per e16/e17/e19/s28 invocation; a deployment asserts at
-    * code-write time — appends are exempt structurally, their vec_ids
-    * sit above `off`). Serves against LOADED codes inherit the
+    * plan's build (a deployment asserts at code-write time — appends
+    * are exempt structurally, their vec_ids sit above `off`). Serves against LOADED codes inherit the
     * write-time check through the round-trip rows' hash contracts. */
   private[graft] def assertNoQueryCodeCollisions(codes: DataFrame,
       off: Long): Unit = {
@@ -1004,42 +918,6 @@ object EmbeddingOps {
       s"pq encode: native vector(s) ${collisions.mkString(", ")} share a " +
         "query's full PQ code — the closed-form twin contract does not " +
         "hold on this corpus")
-  }
-
-  private[graft] def adcRank(index: IvfIndex, pq: PqModel,
-      codes: DataFrame, off: Long): DataFrame = {
-    val s = index.assigned.sparkSession
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val dim = index.model.clusterCenters.head.size
-    val sub = dim / PqSubspaces
-    val (queries, probes) = batchProbes(index, off)
-    val cents = (for {
-      m <- 0 until PqSubspaces
-      (c, k) <- pq.models(m).clusterCenters.zipWithIndex
-    } yield {
-      val a = c.toArray
-      (m, k, a, a.map(v => v * v).sum)
-    }).toDF("m", "code", "c_arr", "c_norm2")
-    val lut = queries.select(col("query_id"), col("q_feat"))
-      .crossJoin(broadcast(cents))
-      .select(col("query_id"), col("m"), col("code"),
-        (col("c_norm2") - lit(2.0) * arrayDot(
-          slice(col("q_feat"), col("m") * lit(sub) + lit(1), lit(sub)),
-          col("c_arr"))).as("d2"))
-    val stackExpr = s"stack(${PqSubspaces}, " +
-      (0 until PqSubspaces).map(m => s"$m, code$m").mkString(", ") +
-      ") as (m, code)"
-    val cand = probes.select(col("query_id"), col("cell"))
-      .join(codes, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), expr(stackExpr))
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc"), col("vec_id"))
-    cand.join(lut, Seq("query_id", "m", "code"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("d2")).as("adc"))
-      .withColumn("rn", row_number().over(wTop))
   }
 
   private[graft] val annIvfPqServeSql =
@@ -1322,46 +1200,6 @@ object EmbeddingOps {
       graft.api.IvfStore.minusTombstones(codes, s, tombRoot), off)
   }
 
-  /** The stateless ADC CANDIDATE kernel against LOADED (quantizer,
-    * codebooks, codes) for an ARBITRARY (vec_id, embedding) query
-    * relation — s31's streaming stages factored so the live path and
-    * s42's per-batch pointer-resolved serve run ONE plan: row-local
-    * probe cells + row-local ADC LUT over the broadcast codebooks, one
-    * equi-join on the cell key against code rows (M small ints — raw
-    * embeddings never ride the scoring join). Emits (query_id, vec_id,
-    * adc); callers aggregate the (adc, vec_id) argmin — streaming
-    * callers in complete mode, batch callers with a plain groupBy. */
-  private[graft] def adcCandidates(s: SparkSession,
-      model: org.apache.spark.ml.clustering.KMeansModel, pq: PqModel,
-      servedCodes: DataFrame, queries: DataFrame): DataFrame = {
-    val m = PqSubspaces
-    val k = PqCodes
-    val topP = probeCellsRowLocal(s, model, IvfProbes)
-    val lut = adcLutRowLocal(s, pq)
-    val adcExpr = (0 until m)
-      .map(mi => element_at(col("lut"), col(s"code$mi") + lit(mi * k + 1)))
-      .reduce(_ + _)
-    queries
-      .select(col("vec_id").as("query_id"),
-        toFeatures(col("embedding")).as("q_feat"))
-      .withColumn("lut", lut(col("q_feat")))
-      .withColumn("cell", explode(topP(col("q_feat"))))
-      .select(col("query_id"), col("lut"), col("cell"))
-      .join(servedCodes, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), adcExpr.as("adc"))
-  }
-
-  /** The batch (adc, vec_id)-argmin tail over [[adcCandidates]] —
-    * s42's per-micro-batch serve. */
-  private[graft] def adcServeQueriesAgainst(s: SparkSession,
-      model: org.apache.spark.ml.clustering.KMeansModel, pq: PqModel,
-      servedCodes: DataFrame, queries: DataFrame): DataFrame =
-    adcCandidates(s, model, pq, servedCodes, queries)
-      .groupBy(col("query_id"))
-      .agg(min(struct(col("adc"), col("vec_id"))).as("m"))
-      .select(col("query_id"), col("m.vec_id").as("top1_id"))
-
   /** s42's oracle: the PQ serve phase-split across the mid-drain flip —
     * phase 1 serves the UNFOLDED double-planted artifact (every query
     * answers its byte-identical +off twin — shared full code, id
@@ -1569,31 +1407,6 @@ object EmbeddingOps {
        |    vec_id + ($offSql), 1.0 FROM q)
        |SELECT phase, query_id, top1_id, cos_sim
        |FROM phases ORDER BY phase, query_id""".stripMargin
-  }
-
-  /** e13's serve for an ARBITRARY (vec_id, embedding) query relation
-    * against a loaded index — probe cells assigned ROW-LOCALLY over
-    * broadcast centers ([[probeCellsRowLocal]], s29's window-free
-    * kernel) so the plan is safe on a streaming micro-batch; the
-    * per-query argmax is one max(struct) with the (cos desc, vec_id
-    * asc) tie-break. Shared by s36's per-micro-batch pointer serve. */
-  private[graft] def serveQueriesAgainst(s: SparkSession, index: IvfIndex,
-      queries: DataFrame): DataFrame = {
-    val topP = probeCellsRowLocal(s, index.model, IvfProbes)
-    queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        toFeatures(col("embedding")).as("q_feat"))
-      .withColumn("cell", explode(topP(col("q_feat"))))
-      .join(index.assigned.select(col("vec_id"), col("embedding"),
-        col("cell")), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(fastCosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-      .groupBy(col("query_id"))
-      .agg(max(struct(col("cos_sim"), (-col("vec_id")).as("neg_id")))
-        .as("m"))
-      .select(col("query_id"), (-col("m.neg_id")).as("top1_id"),
-        col("m.cos_sim").as("cos_sim"))
   }
 
   /** s36's oracle — e27's closed form restricted to its first two
@@ -1893,43 +1706,20 @@ object EmbeddingOps {
   private[graft] val AdmitTau = 0.95
 
   /** The multi-probe semantic gate shared by c09's two phases and
-    * s35's live path: each query row assigns its [[IvfProbes]] nearest
-    * cells ROW-LOCALLY over the broadcast quantizer
-    * ([[probeCellsRowLocal]] — s29's kernel), equi-joins the index
-    * relation on the cell id, and flags the query when any probed
-    * candidate scores ≥ [[AdmitTau]] exact cosine. Emits one row per
-    * qualifying (query, candidate) as the query's `vec_id` — NO
-    * distinct, so the plan stays STATELESS on a streaming input (the
-    * vec side's semantic gate; [[Gates.firstGate]] dedups, batch or
-    * after the drain). */
+    * s35's live path: the exact serve scorer ([[exactCandidates]]) over
+    * the index relation, kept where a probed candidate scores ≥
+    * [[AdmitTau]]. A stored vector under the query's own id counts as a
+    * candidate: a re-embed resubmitted under an indexed id is caught
+    * here. Emits one row per qualifying (query, candidate) as
+    * the query's `vec_id` — NO distinct, so the plan stays STATELESS on
+    * a streaming input (the vec side's semantic gate;
+    * [[Gates.firstGate]] dedups, batch or after the drain). */
   private[graft] def semanticGateCandidates(s: SparkSession,
       queries: DataFrame, indexRel: DataFrame,
-      model: org.apache.spark.ml.clustering.KMeansModel): DataFrame = {
-    val probeUdf = probeCellsRowLocal(s, model, IvfProbes)
-    // The probe join's work is CANDIDATE-PAIR compute (every (query
-    // probe, cell member) pair pays an exact 64-dim cosine), not bytes
-    // — AQE's size-based partition coalescing sees a few MB of shuffle
-    // and folds the join to 1-2 partitions, serializing ~quarter-billion
-    // cosine evaluations at sf0.1 (measured: c09 steady 3.3 s → 1.5 s
-    // with coalescing off; optimization r20, guide §2.5 "compute skew
-    // the byte stats can't see"). Pinning BOTH sides with an explicit
-    // repartition on the join key keeps the width at the session's
-    // parallelism (scale-adaptive, not a constant) — user-specified
-    // widths are exactly what AQE's coalescer leaves alone, and the
-    // join reuses these exchanges, so no shuffle is added.
-    val p = s.sparkContext.defaultParallelism
-    queries
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        toFeatures(col("embedding")).as("q_feat"))
-      .withColumn("cell", explode(probeUdf(col("q_feat"))))
-      .repartition(p, col("cell"))
-      .join(indexRel.select(col("cell"), col("vec_id").as("s_id"),
-        col("embedding").as("s_emb")).repartition(p, col("cell")),
-        Seq("cell"))
-      .filter(round(fastCosine(col("q_emb"), col("s_emb")), 6)
-        >= AdmitTau)
-      .select(col("q_id").as("vec_id"))
-  }
+      model: org.apache.spark.ml.clustering.KMeansModel): DataFrame =
+    exactCandidates(s, model, indexRel, queries)
+      .filter(col("cos_sim") >= AdmitTau)
+      .select(col("query_id").as("vec_id"))
 
   private[graft] def semanticGateHits(s: SparkSession, queries: DataFrame,
       indexRel: DataFrame,
@@ -2121,12 +1911,11 @@ object EmbeddingOps {
   val ServeTopK = 10
 
   /** e18 — TOP-K batch serving under the e05/X10 bound-contract
-    * discipline at batch scale (r13 verdict ask #2: e13-e16 all cut at
-    * rank 1, but real retrieval — RAG context assembly, k-NN
-    * recommendation backfills, dedup-against-index review queues —
-    * consumes top-k LISTS): the REAL serve path runs
-    * [[batchServeTopKAgainst]] (the same kernel whose k=1 projection
-    * e13/e14/e15 pin) for the WHOLE batch, and the emitted rows are the
+    * discipline at batch scale (real retrieval — RAG context assembly,
+    * k-NN recommendation backfills, dedup-against-index review queues
+    * — consumes top-k LISTS): the REAL serve path runs the exact scorer
+    * e13/e14/e15 pin ([[exactCandidates]]) for the WHOLE batch, cut by
+    * [[topK]] instead of [[top1]], and the emitted rows are the
     * deterministic EXACT top-[[ServeTopK]] per window query (brute
     * force over the planted union, rounded cosine, vec_id tie-break —
     * e01's discipline batched) with each exact neighbor flagged
@@ -2157,13 +1946,12 @@ object EmbeddingOps {
   def annTopkServeBound(s: SparkSession, d: String): DataFrame = {
     val shared = sharedIndex(s, d, Geometry.Planted)
     val (index, off) = (shared.index, shared.off)
-    // ONE probe sub-plan feeds both the serve side and the flag
-    val probes = batchProbes(index, off)._2
-    val served = topKFromProbes(index, probes, ServeTopK)
+    val queries = batchQueries(index, off)
+    val served = topK(exactCandidates(s, index.model, index.assigned,
+        queries), ServeTopK, col("cos_sim"))
       .select(col("query_id"), col("vec_id"), lit(1).as("__served"))
-    val probed = probes
+    val probed = probedQueries(s, index.model, queries)
       .select(col("query_id"), col("cell"), lit(1).as("__probed"))
-      .distinct()
     exactWindowTopK(index, off)
       .join(served, Seq("query_id", "vec_id"), "left")
       .join(probed, Seq("query_id", "cell"), "left")
@@ -2180,20 +1968,14 @@ object EmbeddingOps {
     * neighbor's cell carried for the probe-flag join. Window-capped so
     * the exact pass stays bounded at every SF. */
   private def exactWindowTopK(index: IvfIndex, off: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val queriesWin = index.assigned
-      .filter(col("vec_id") < off && col("vec_id") % BatchQueryMod === 0 &&
-        col("vec_id") < VerifyWindow.MaxId)
+    val queriesWin = batchQueries(index, off)
+      .filter(col("vec_id") < VerifyWindow.MaxId)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    index.assigned.select(col("vec_id"), col("embedding"), col("cell"))
-      .crossJoin(broadcast(queriesWin))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(fastCosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= ServeTopK)
+    topK(index.assigned.select(col("vec_id"), col("embedding"), col("cell"))
+        .crossJoin(broadcast(queriesWin))
+        .select(col("query_id"), col("vec_id"), col("cell"),
+          serveCosine.as("cos_sim")), ServeTopK, col("cos_sim"))
+      .withColumnRenamed("rn", "rank")
   }
 
   /** ADC shortlist depth for e19's re-rank stage (R ≫ k: the shortlist
@@ -2230,24 +2012,18 @@ object EmbeddingOps {
     * back to raw vectors — an equi-join on vec_id, the only stage that
     * touches embeddings, sized by the shortlist, not the corpus. */
   def annIvfPqRerank(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (index, pq, codes, off) = sharedPq(s, d, Geometry.Planted)
-    val shortlist = adcRank(index, pq, codes, off)
-      .filter(col("rn") <= AdcShortlist)
+    val queries = batchQueries(index, off)
+    val shortlist = topK(adcCandidates(s, index.model, pq, codes, queries),
+        AdcShortlist, -col("adc"))
       .select(col("query_id"), col("vec_id"))
-    val qEmb = index.assigned
-      .filter(col("vec_id") < off && col("vec_id") % BatchQueryMod === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    val served = shortlist
-      .join(index.assigned.select(col("vec_id"), col("embedding")),
-        Seq("vec_id"))
-      .join(qEmb, Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(fastCosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= ServeTopK)
+    val served = topK(shortlist
+        .join(index.assigned.select(col("vec_id"), col("embedding")),
+          Seq("vec_id"))
+        .join(queries.select(col("vec_id").as("query_id"),
+          col("embedding").as("q_emb")), Seq("query_id"))
+        .select(col("query_id"), col("vec_id"), serveCosine.as("cos_sim")),
+        ServeTopK, col("cos_sim"))
       .select(col("query_id"), col("vec_id"), lit(1).as("__served"))
     val short = shortlist.select(col("query_id"), col("vec_id"),
       lit(1).as("__short"))
@@ -2380,28 +2156,40 @@ object EmbeddingOps {
       .select(col("src"), col("dst"))
   }
 
-  /** ROW-LOCAL probe-set function over broadcast quantizer centers:
-    * each query's `probes` nearest cells by (sqdist, cell) — the same
-    * ranking [[batchProbes]] computes relationally, reduced in-row so a
-    * STREAMING query plan stays stateless (s29: no window, no
-    * per-query shuffle before the candidate join). The closed-form
-    * serve contract needs only rank 1 — the query's own cell, the
-    * deterministic argmin both formulations share; deeper ranks agree
-    * up to floating-point ties on equidistant centers. Cells-sized
-    * broadcast, the [[probeAssignments]] shape generalized to any
-    * probe depth. */
-  /** Per-(app, model) broadcast cache for [[probeCellsRowLocal]] (r15
-    * ADVICE): a long-lived session invoking the streaming serve rows
-    * repeatedly would otherwise accumulate one undestroyed centers
-    * broadcast per invocation. KMeansModel uids are unique per fit, so
-    * the key cannot alias two center sets; entries die with the JVM
-    * (broadcasts are invalidated when their SparkContext stops, which
-    * is also when the app id stops being reachable). */
-  private val centerBroadcasts = new java.util.concurrent.ConcurrentHashMap[
-    String,
-    org.apache.spark.broadcast.Broadcast[
-      Array[org.apache.spark.ml.linalg.Vector]]]()
-
+  /** The IVF SERVE KERNELS. Every ANN serve composes them, batch rows
+    * and streamed rows alike:
+    *
+    *  - [[probeCellsRowLocal]] — the one probe ranking;
+    *  - [[probedQueries]] — a query relation under its probe cells;
+    *  - [[exactCandidates]] — the one exact scorer, (query_id, vec_id,
+    *    cos_sim) over the probed cells' vectors;
+    *  - [[adcCandidates]] — the one ADC scorer, (query_id, vec_id, adc)
+    *    over the probed cells' codes;
+    *  - [[top1]] — the one top-1 tail, a max(struct) per query.
+    *
+    * Queries are any (vec_id, embedding) relation. STREAM-LEGAL: no
+    * kernel body holds a window, `distinct`, `orderBy` or
+    * `localCheckpoint`, so each runs unchanged on a static relation or
+    * on a streaming micro-batch — s29/s31 drain [[top1]] in complete
+    * mode, s36/s41/s42 run it inside each foreachBatch, and the batch
+    * rows add only their final ORDER BY. The batch-only [[topK]] window
+    * sits outside the contract: it cuts e18's served list, e19's
+    * shortlist and re-rank and the exact side of both. Both tails rank
+    * a higher-is-better score with ties to the smaller vec_id (an ADC
+    * caller passes −adc).
+    *
+    * Both tails drop a query's own id as a candidate; the scorers keep
+    * it, so the semantic gate still matches a resubmitted vector
+    * against a stored copy under the same id.
+    *
+    * This one is the probe ranking: each query's `probes` nearest cells
+    * by (sqdist, cell) over broadcast quantizer centers, reduced in the
+    * query's own row (no window, no per-query shuffle before the
+    * candidate join). A bounded insertion keeps the best `probes` in
+    * one pass over the centers, O(cells · probes) with no per-center
+    * allocation; the strict `<` keeps an equal distance behind the
+    * smaller cell. The closed-form serve contracts need only rank 1
+    * — the query's own cell. Cells-sized broadcast. */
   private[graft] def probeCellsRowLocal(s: SparkSession,
       model: org.apache.spark.ml.clustering.KMeansModel,
       probes: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
@@ -2410,10 +2198,104 @@ object EmbeddingOps {
       s"${s.sparkContext.applicationId}|${model.uid}",
       _ => s.sparkContext.broadcast(model.clusterCenters))
     udf { f: Vector =>
-      centers.value.zipWithIndex
-        .map { case (c, i) => (Vectors.sqdist(c, f), i) }
-        .sortBy(identity).take(probes).map(_._2).toSeq
+      val cs = centers.value
+      val dist = new Array[Double](probes)
+      val cell = new Array[Int](probes)
+      var n = 0
+      var i = 0
+      while (i < cs.length) {
+        val c = cs(i)
+        val x = Vectors.sqdist(c, f)
+        var j = n
+        while (j > 0 && x < dist(j - 1)) j -= 1
+        if (j < probes) {
+          val moved = math.min(n, probes - 1) - j
+          System.arraycopy(dist, j, dist, j + 1, moved)
+          System.arraycopy(cell, j, cell, j + 1, moved)
+          dist(j) = x
+          cell(j) = i
+          n = math.min(n + 1, probes)
+        }
+        i += 1
+      }
+      cell.take(n).toSeq
     }
+  }
+
+  /** Per-(app, model) broadcast cache for [[probeCellsRowLocal]]: a
+    * long-lived session invoking the serve rows repeatedly would
+    * otherwise accumulate one undestroyed centers broadcast per
+    * invocation. KMeansModel uids are unique per fit, so the key cannot
+    * alias two center sets; entries die with the JVM (broadcasts are
+    * invalidated when their SparkContext stops, which is also when the
+    * app id stops being reachable). */
+  private val centerBroadcasts = new java.util.concurrent.ConcurrentHashMap[
+    String,
+    org.apache.spark.broadcast.Broadcast[
+      Array[org.apache.spark.ml.linalg.Vector]]]()
+
+  /** A (vec_id, embedding) query relation under its `probes` nearest
+    * cells: one (query_id, q_emb, q_feat, cell) row per probed cell,
+    * plus whatever `perQuery` adds to the query row before the explode
+    * (computed once per query, not once per probed cell). */
+  private[graft] def probedQueries(s: SparkSession,
+      model: org.apache.spark.ml.clustering.KMeansModel, queries: DataFrame,
+      probes: Int = IvfProbes,
+      perQuery: DataFrame => DataFrame = identity): DataFrame = {
+    val topP = probeCellsRowLocal(s, model, probes)
+    perQuery(queries
+        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
+          toFeatures(col("embedding")).as("q_feat")))
+      .withColumn("cell", explode(topP(col("q_feat"))))
+  }
+
+  /** The serve cosine of a query (`q_emb`) and a candidate
+    * (`embedding`), rounded as the oracles round it. */
+  private val serveCosine: Column =
+    round(fastCosine(col("q_emb"), col("embedding")), 6)
+
+  /** The one EXACT scorer: every candidate in the query's
+    * [[IvfProbes]] probed cells of `indexRel` (cell, vec_id, embedding),
+    * scored by [[serveCosine]] — (query_id, vec_id, cos_sim).
+    *
+    * The probe join's work is candidate-pair compute (every (query
+    * probe, cell member) pair pays an exact 64-dim cosine), not bytes:
+    * AQE's size-based coalescing sees a few MB of shuffle and would
+    * fold the join to 1-2 partitions, serializing the cosines (compute
+    * skew the byte stats can't see). An explicit
+    * repartition of BOTH sides on the join key keeps the width at the
+    * session's parallelism — user-specified widths are what AQE's
+    * coalescer leaves alone, and the join reuses these exchanges. */
+  private[graft] def exactCandidates(s: SparkSession,
+      model: org.apache.spark.ml.clustering.KMeansModel, indexRel: DataFrame,
+      queries: DataFrame): DataFrame = {
+    val p = s.sparkContext.defaultParallelism
+    probedQueries(s, model, queries)
+      .repartition(p, col("cell"))
+      .join(indexRel.select(col("cell"), col("vec_id"), col("embedding"))
+        .repartition(p, col("cell")), Seq("cell"))
+      .select(col("query_id"), col("vec_id"), serveCosine.as("cos_sim"))
+  }
+
+  /** The one ADC scorer against (quantizer, codebooks, codes): each
+    * probed query row carries its ADC lookup table ([[adcLutRowLocal]])
+    * and equi-joins the code rows of its cell (M small ints — raw
+    * embeddings never ride the scoring join); the ADC is M carried-array
+    * lookups summed in a fixed m order, so candidates holding identical
+    * codes tie exactly. Emits (query_id, vec_id, adc). */
+  private[graft] def adcCandidates(s: SparkSession,
+      model: org.apache.spark.ml.clustering.KMeansModel, pq: PqModel,
+      servedCodes: DataFrame, queries: DataFrame): DataFrame = {
+    val lut = adcLutRowLocal(s, pq)
+    val adcExpr = (0 until PqSubspaces)
+      .map(mi => element_at(col("lut"),
+        col(s"code$mi") + lit(mi * PqCodes + 1)))
+      .reduce(_ + _)
+    probedQueries(s, model, queries,
+        perQuery = _.withColumn("lut", lut(col("q_feat"))))
+      .select(col("query_id"), col("lut"), col("cell"))
+      .join(servedCodes, Seq("cell"))
+      .select(col("query_id"), col("vec_id"), adcExpr.as("adc"))
   }
 
   /** Per-(app, codebooks) broadcast cache for [[adcLutRowLocal]] —
@@ -2425,15 +2307,10 @@ object EmbeddingOps {
 
   /** ROW-LOCAL ADC lookup-table function over broadcast PQ codebooks:
     * each query row carries its flattened M×K table of
-    * d2[m][k] = ‖c_mk‖² − 2·q_m·c_mk — the same per-query LUT
-    * [[adcRank]] builds relationally (queries × broadcast centroid
-    * rows), reduced in-row so a STREAMING ADC plan stays stateless:
-    * no per-query LUT join before the candidate join, no window (s29's
-    * posture carried through the quantization). The per-query ‖q_m‖²
-    * terms are constant across candidates and cancel in the argmin,
-    * exactly as in the batch kernel. Kilobytes broadcast (M×K
-    * centroids); the carried column is M×K doubles per query row —
-    * 128 values at the shipped geometry. */
+    * d2[m][k] = ‖c_mk‖² − 2·q_m·c_mk. The per-query ‖q_m‖² terms are
+    * constant across candidates and cancel in the argmin. Kilobytes
+    * broadcast (M×K centroids); the carried column is M×K doubles per
+    * query row — 128 values at the shipped geometry. */
   private[graft] def adcLutRowLocal(s: SparkSession, pq: PqModel)
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
     import org.apache.spark.ml.linalg.Vector
@@ -2471,36 +2348,54 @@ object EmbeddingOps {
     }
   }
 
-  /** Per-vector two-nearest-cell PROBE relation (cell, vec_id,
-    * embedding — two rows per vector): the e10 pair pass's boundary
-    * multi-probe. Computed over the index's normalized features against
-    * the quantizer's broadcast centers — the same O(n·k) dot-product
-    * shape as the k-means assignment itself, so the probe build never
-    * dominates the build it extends (at [[IvfMaxCells]] × 64 dims the
-    * broadcast is ~32 MB; past that a production index is a two-level
-    * quantizer anyway, see [[IvfMaxCells]]). */
-  private[graft] def probeAssignments(index: IvfIndex): DataFrame = {
-    import org.apache.spark.ml.linalg.{Vector, Vectors}
-    val centers = index.assigned.sparkSession.sparkContext
-      .broadcast(index.model.clusterCenters)
-    val top2 = udf { f: Vector =>
-      val cs = centers.value
-      var b1 = -1; var b2 = -1
-      var d1 = Double.MaxValue; var d2 = Double.MaxValue
-      var i = 0
-      while (i < cs.length) {
-        val dd = Vectors.sqdist(cs(i), f)
-        if (dd < d1) { d2 = d1; b2 = b1; d1 = dd; b1 = i }
-        else if (dd < d2) { d2 = dd; b2 = i }
-        i += 1
-      }
-      if (b2 < 0) Seq(b1) else Seq(b1, b2)
-    }
-    index.assigned
-      .select(col("vec_id"), col("embedding"),
-        explode(top2(col("features"))).as("cell"))
-      .select(col("cell"), col("vec_id"), col("embedding"))
+  /** The one TOP-1 tail: per query, the candidate other than the query
+    * itself with the highest `score`, ties to the smaller vec_id — one
+    * max(struct) aggregation, stream-legal (a complete-mode streaming
+    * aggregation or a plain batch groupBy). Emits (query_id, top1_id,
+    * score). */
+  private[graft] def top1(cand: DataFrame, score: Column): DataFrame =
+    cand.filter(col("vec_id") =!= col("query_id")).groupBy(col("query_id"))
+      .agg(max(struct(score.as("score"), (-col("vec_id")).as("neg_id")))
+        .as("m"))
+      .select(col("query_id"), (-col("m.neg_id")).as("top1_id"),
+        col("m.score").as("score"))
+
+  /** The exact top-1 serve of an ARBITRARY (vec_id, embedding) query
+    * relation against an index: (query_id, top1_id, cos_sim). Batch
+    * rows, s29's stream and s36/s41's per-micro-batch serves. */
+  private[graft] def serveQueriesAgainst(s: SparkSession, index: IvfIndex,
+      queries: DataFrame): DataFrame =
+    top1(exactCandidates(s, index.model, index.assigned, queries),
+      col("cos_sim")).withColumnRenamed("score", "cos_sim")
+
+  /** The ADC top-1 serve of an ARBITRARY query relation against
+    * (quantizer, codebooks, codes): (query_id, top1_id). Batch rows,
+    * s31's stream and s42's per-micro-batch serve. */
+  private[graft] def adcServeQueriesAgainst(s: SparkSession,
+      model: org.apache.spark.ml.clustering.KMeansModel, pq: PqModel,
+      servedCodes: DataFrame, queries: DataFrame): DataFrame =
+    top1(adcCandidates(s, model, pq, servedCodes, queries), -col("adc"))
+      .select(col("query_id"), col("top1_id"))
+
+  /** The one batch TOP-K window: per query, the `k` candidates other
+    * than the query itself with the highest `score`, ties to the
+    * smaller vec_id, ranked 1.. in `rn`. Batch-only — a window is not
+    * stream-legal. */
+  private[graft] def topK(cand: DataFrame, k: Int, score: Column): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    cand.filter(col("vec_id") =!= col("query_id"))
+      .withColumn("rn", row_number().over(Window
+        .partitionBy(col("query_id")).orderBy(score.desc, col("vec_id"))))
+      .filter(col("rn") <= k)
   }
+
+  /** e10's probe side: every indexed vector under each of its TWO
+    * nearest cells, as (cell, vec_id, embedding) rows. */
+  private[graft] def cellProbes(index: IvfIndex): DataFrame =
+    probedQueries(index.assigned.sparkSession, index.model, index.assigned,
+        probes = 2)
+      .select(col("cell"), col("query_id").as("vec_id"),
+        col("q_emb").as("embedding"))
 
   /** Boundary multi-probe pair pass (replaces single-probe in e10): the
     * PRIMARY assignment joins each vector's TWO nearest cells on the
@@ -2509,33 +2404,21 @@ object EmbeddingOps {
     * set — the pairs the single-probe design provably sacrificed
     * (SemDeDup's documented blind spot). Cost is ≤ 2× the single-probe
     * pass (one side stays 1×, the probe side is 2×), not the 4× of
-    * duplicating both sides; the residual blind spot shrinks to pairs
-    * whose cell sets overlap ONLY in both SECOND cells (two boundary
-    * vectors leaning toward each other from two different primaries),
-    * plus guard-excluded cells as before. Emitted pairs are
+    * duplicating both sides; the residual blind spot is pairs whose
+    * cell sets overlap ONLY in both SECOND cells (two boundary vectors
+    * leaning toward each other from two different primaries), plus
+    * guard-excluded cells as before. A census over the shipped corpus
+    * (SCALE.md, the second-cell-only residue table) found that class
+    * empty at the 0.95 operating threshold. Emitted pairs are
     * canonicalized (least, greatest) and deduplicated — a same-cell
     * pair meets in up to two shared cells and both orientations. The
     * guard stays keyed on primary loads: probe-side load is ≤ 2× the
-    * primary load, so admitted-cell work stays O(cap²) bounded.
-    *
-    * `bothSides = true` probes BOTH sides (probes ⋈ probes): the
-    * second-cell-only residue — two boundary vectors from different
-    * primaries leaning toward the same third cell — is recovered too,
-    * at ≤ 4× the single-probe pair cost (both sides 2×). Off by
-    * default: the r11 census over the real corpus (SCALE.md, e10
-    * blind-spot table) found ZERO organic pairs of any class at the
-    * 0.95 operating threshold, an empty second-cell-only class down to
-    * cosine 0.6 at 1× (one pair at 10×), and the class only populating
-    * (~6% of pairs) at cosine 0.5 — far below any dedup semantics. The
-    * default spends 2×, not 4×; a corpus whose geometry differs flips
-    * the flag with one argument. */
+    * primary load, so admitted-cell work stays O(cap²) bounded. */
   private[graft] def multiProbeEdges(primary: DataFrame, probes: DataFrame,
                                      nTotal: Long, nCells: Int,
-                                     threshold: Double = 0.95,
-                                     bothSides: Boolean = false): DataFrame = {
+                                     threshold: Double = 0.95): DataFrame = {
     val ok = admittedCells(primary, nTotal, nCells)
-    val aSide = if (bothSides) probes else primary
-    val a = aSide.join(ok, Seq("cell"))
+    val a = primary.join(ok, Seq("cell"))
       .select(col("cell"), col("vec_id").as("u"), col("embedding").as("a_emb"))
     val b = probes.join(ok, Seq("cell"))
       .select(col("cell"), col("vec_id").as("v"), col("embedding").as("b_emb"))
@@ -2551,16 +2434,15 @@ object EmbeddingOps {
     val labels = graft.api.Intermediates.memo(s, s"semdedup|$d") {
       val shared = sharedIndex(s, d, Geometry.Planted)
       val (index, nBase) = (shared.index, shared.n)
-      // boundary multi-probe (r9 verdict item 2): the pair pass joins
-      // each vector's TWO nearest cells, so boundary-straddling
-      // near-dups are no longer sacrificed; membership for
-      // representative selection stays single-cell (the components are
-      // keyed on vec_id, not cells)
+      // boundary multi-probe: the pair pass joins each vector's TWO
+      // nearest cells, so boundary-straddling near-dups are not
+      // sacrificed; membership for representative selection stays
+      // single-cell (the components are keyed on vec_id, not cells)
       val edges = multiProbeEdges(
         index.assigned.select(col("cell"), col("vec_id"), col("embedding")),
-        probeAssignments(index), shared.rows, shared.cells).localCheckpoint()
-      // Loud planting invariants (ADVICE r7): the closed-form oracle is
-      // only valid when the edge set is EXACTLY the planted twins.
+        cellProbes(index), shared.rows, shared.cells).localCheckpoint()
+      // Loud planting invariants: the closed-form oracle is only valid
+      // when the edge set is EXACTLY the planted twins.
       val nonPlanted = edges
         .filter(col("dst") =!= col("src") + lit(shared.off)).count()
       require(nonPlanted == 0,

@@ -1001,21 +1001,15 @@ object EventStreams {
     graft.operators.EmbeddingOps.adcServe(li, lp, codesAll, off)
   }
 
-  /** s29 — STREAMING QUERY-SIDE ANN serve (the serving fleet's live
-    * path, r14 verdict ask #3: ingest-side streaming was complete —
-    * s26/s28 — but the path a deployed retrieval fleet actually runs,
-    * a QUERY stream answered per micro-batch against the LOADED
-    * artifact, was unwitnessed): the e13-family union index is
-    * persisted and loaded (e14's artifact posture); queries arrive as
-    * a vector STREAM (every [[graft.operators.EmbeddingOps
-    * .BatchQueryMod]]-th base vector); each micro-batch runs
-    * stream-static and STATELESS until the final roll-up — probe cells
-    * are assigned ROW-LOCALLY over broadcast centers
-    * ([[graft.operators.EmbeddingOps.probeCellsRowLocal]] — the same
-    * (sqdist, cell) ranking as the batch plan, no window on the
-    * stream), candidates come from the stream-static equi-join on the
-    * cell key against the loaded index, scoring is the shared codegen'd
-    * cosine kernel, and the per-query argmax is ONE complete-mode
+  /** s29 — STREAMING QUERY-SIDE ANN serve (the path a deployed
+    * retrieval fleet actually runs: a QUERY stream answered per
+    * micro-batch against the LOADED artifact): the e13-family union
+    * index is persisted and loaded (e14's artifact posture); queries
+    * arrive as a vector STREAM (every [[graft.operators.EmbeddingOps
+    * .BatchQueryMod]]-th base vector) and run the batch rows' own serve
+    * ([[graft.operators.EmbeddingOps.serveQueriesAgainst]]): row-local
+    * probe cells, the stream-static cell equi-join against the loaded
+    * index, the exact scorer, and the top-1 tail as ONE complete-mode
     * aggregation (queries-sized state, s27's posture). e13's
     * closed-form oracle transfers row-for-row: every streamed query's
     * top-1 is its planted twin at cosine 1.0.
@@ -1036,56 +1030,31 @@ object EventStreams {
     // created once per session, loaded per invocation
     graft.api.IvfStore.saveOnce(dir, index)
     val loaded = graft.api.IvfStore.load(ss, dir)
-    val static = loaded.assigned
-      .select(col("vec_id"), col("embedding"), col("cell"))
-    val topP = graft.operators.EmbeddingOps.probeCellsRowLocal(
-      ss, loaded.model, graft.operators.EmbeddingOps.IvfProbes)
-    val qStream = readEmbeddings(ss, d)
-      .filter(col("vec_id") %
-        graft.operators.EmbeddingOps.BatchQueryMod === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        graft.operators.EmbeddingOps.toFeatures(col("embedding"))
-          .as("q_feat"))
-      .withColumn("cell", explode(topP(col("q_feat"))))
-    val cand = qStream.join(static, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(graft.expressions.VectorExpressions.fastCosine(
-          col("q_emb"), col("embedding")), 6).as("cos_sim"))
-    val agg = cand.groupBy(col("query_id"))
-      .agg(max(struct(col("cos_sim"), (-col("vec_id")).as("neg_id")))
-        .as("m"))
-    runToMemory(agg, "complete", "s29_stream_ann_serve")
-      .select(col("query_id"), (-col("m.neg_id")).as("top1_id"),
-        col("m.cos_sim").as("cos_sim"))
+    val served = graft.operators.EmbeddingOps.serveQueriesAgainst(ss, loaded,
+      readEmbeddings(ss, d).filter(col("vec_id") %
+        graft.operators.EmbeddingOps.BatchQueryMod === 0))
+    runToMemory(served, "complete", "s29_stream_ann_serve")
       .orderBy(col("query_id"))
   }
 
   /** s31 — STREAMING QUERY-SIDE PQ/ADC serve (the compressed-corpus
-    * serving fleet's live path, r15 verdict ask #3: s29 witnessed the
-    * raw-IVF query stream — exact cosine on probed cells — but a PQ
-    * fleet serves CODES through the ADC kernel, and that query path
-    * was unwitnessed): the e24 double-planted IVF-PQ artifact is
-    * persisted and LOADED (e17's artifact posture); the selective
-    * takedown set is committed to the tombstone log and honored on the
-    * static side ([[graft.api.IvfStore.minusTombstones]] — the live
-    * path serves the post-takedown corpus); queries arrive as a vector
-    * STREAM and each micro-batch runs stream-static and STATELESS
-    * until the final roll-up:
+    * serving fleet's live path: a PQ fleet serves CODES through the ADC
+    * scorer): the e24 double-planted IVF-PQ artifact is persisted and
+    * LOADED (e17's artifact posture); the selective takedown set is
+    * committed to the tombstone log and honored on the static side
+    * ([[graft.api.IvfStore.minusTombstones]] — the live path serves the
+    * post-takedown corpus); queries arrive as a vector STREAM and run
+    * the batch rows' own ADC serve
+    * ([[graft.operators.EmbeddingOps.adcServeQueriesAgainst]]):
     *
-    *  - probe cells assigned ROW-LOCALLY over broadcast centers
-    *    ([[graft.operators.EmbeddingOps.probeCellsRowLocal]] — s29's
-    *    window-free discipline);
-    *  - each query row CARRIES its flattened M×K ADC lookup table
-    *    ([[graft.operators.EmbeddingOps.adcLutRowLocal]] — the same
-    *    per-query LUT the batch kernel builds relationally, reduced
-    *    in-row so no LUT join precedes the candidate join);
-    *  - candidates come from the stream-static cell equi-join against
-    *    the loaded, tombstone-filtered CODES (M small ints per row —
-    *    raw embeddings never ride the scoring join, PQ's point);
+    *  - probe cells and the flattened M×K ADC lookup table computed in
+    *    each query's own row;
+    *  - candidates from the stream-static cell equi-join against the
+    *    loaded, tombstone-filtered CODES (M small ints per row — raw
+    *    embeddings never ride the scoring join, PQ's point);
     *  - the ADC sum is M carried-array lookups per candidate, and the
-    *    per-query argmin is ONE complete-mode min(struct(adc, vec_id))
-    *    (queries-sized state, s27/s29's posture).
+    *    per-query argmin is the top-1 tail as ONE complete-mode
+    *    aggregation (queries-sized state, s27/s29's posture).
     *
     * The closed form carries through both quantized stages: both twins
     * hold the query's full code, their ADC ties at the global minimum,
@@ -1115,16 +1084,11 @@ object EventStreams {
     graft.api.IvfStore.appendTombstones(tombRoot,
       graft.operators.EmbeddingOps.tombstoneIds(base, off), 0L)
     val servedCodes = graft.api.IvfStore.minusTombstones(lc, ss, tombRoot)
-    // the stateless candidate kernel is SHARED with s42's per-batch
-    // pointer-resolved serve (one plan — the live paths cannot drift)
-    val cand = graft.operators.EmbeddingOps.adcCandidates(ss, li.model,
-      lp, servedCodes,
+    val served = graft.operators.EmbeddingOps.adcServeQueriesAgainst(ss,
+      li.model, lp, servedCodes,
       readEmbeddings(ss, d).filter(col("vec_id") %
         graft.operators.EmbeddingOps.BatchQueryMod === 0))
-    val agg = cand.groupBy(col("query_id"))
-      .agg(min(struct(col("adc"), col("vec_id"))).as("m"))
-    runToMemory(agg, "complete", "s31_stream_pq_serve")
-      .select(col("query_id"), col("m.vec_id").as("top1_id"))
+    runToMemory(served, "complete", "s31_stream_pq_serve")
       .orderBy(col("query_id"))
   }
 
@@ -1143,8 +1107,8 @@ object EventStreams {
     * re-resolves the pointer (one kilobyte read — versioned dirs are
     * immutable, so every batch is internally consistent against
     * whichever version it resolved), serves its batch through
-    * [[graft.operators.EmbeddingOps.serveQueriesAgainst]] (s29's
-    * row-local probe kernel), and commits the result exactly-once
+    * [[graft.operators.EmbeddingOps.serveQueriesAgainst]] (the batch
+    * rows' and s29's serve), and commits the result exactly-once
     * through ExportCommit; the v1→v2 adoption lands at the batch-1
     * boundary — BETWEEN micro-batches, never inside one.
     *
@@ -1261,8 +1225,7 @@ object EventStreams {
       // adopt is a replay no-op — the flip is safe under batch replay
       _ => { graft.api.ServePointer.adopt(s"$root/pointer", v2); () },
       (batch, dir) => EmbeddingOps.serveQueriesAgainst(ss,
-        graft.api.IvfStore.load(ss, dir), batch)
-        .select(col("query_id"), col("top1_id"), col("cos_sim")))
+        graft.api.IvfStore.load(ss, dir), batch))
       .orderBy(col("phase"), col("query_id"))
   }
 
@@ -1418,8 +1381,7 @@ object EventStreams {
         saveBase())(graft.api.IvfStore.appendTombstones(_,
           EmbeddingOps.tombstoneIds(base, off), 0L)),
       (batch, dir) => EmbeddingOps.serveQueriesAgainst(ss,
-        graft.api.IvfStore.load(ss, dir), batch)
-        .select(col("query_id"), col("top1_id"), col("cos_sim")))
+        graft.api.IvfStore.load(ss, dir), batch))
       .orderBy(col("phase"), col("query_id"))
   }
 
@@ -1432,10 +1394,10 @@ object EventStreams {
     * compaction ([[graft.api.IvfStore.compactPqAppends]] — codes AND
     * assigned sides both folded, e25's janitor path); each micro-batch
     * loads the pointer-resolved artifact and serves through the SAME
-    * stateless ADC candidate kernel s31's always-on path runs
-    * ([[graft.operators.EmbeddingOps.adcCandidates]] — row-local probe
-    * + LUT, cell equi-join over M-small-int code rows), with the
-    * (adc, vec_id) argmin as plain per-batch aggregation. Phase 1 must
+    * ADC serve s31's always-on path and the batch PQ rows run
+    * ([[graft.operators.EmbeddingOps.adcServeQueriesAgainst]] —
+    * row-local probe + LUT, cell equi-join over M-small-int code rows,
+    * the top-1 tail as plain per-batch aggregation). Phase 1 must
     * answer every query's +off twin from the unfolded codes, phase 2
     * e24's takedown-flipped form from the fold — a serve that caches
     * codes across the flip or a fold that leaves one tombstoned code
@@ -1789,8 +1751,9 @@ object EventStreams {
     *   - exact — 64-bit-hash left-join against the stored corpus with
     *     the array-equality verify carried per row (multi-row on hash
     *     collisions; the dedup is batch work after the drain);
-    *   - semantic — s29's row-local probe cells over the broadcast
-    *     quantizer, cell equi-join, exact cosine ≥ τ
+    *   - semantic — the serve rows' exact scorer (row-local probe
+    *     cells over the broadcast quantizer, cell equi-join), kept at
+    *     cosine ≥ τ
     *     ([[graft.operators.EmbeddingOps.semanticGateCandidates]] —
     *     the distinct-free emission exists for exactly this plan).
     *

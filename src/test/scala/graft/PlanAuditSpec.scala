@@ -463,21 +463,17 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("s29: the stream-side serve plan carries no window and no sort-merge join") {
-    // audit the BATCH twin of the stream plan (same operators; streams
-    // cannot be .explain'd post-hoc through the memory sink): probe
-    // cells row-local (UDF+explode), candidates via cell equi-join
+    // audit the function the stream runs, over a static query relation
+    // (same operators; streams cannot be .explain'd post-hoc through the
+    // memory sink): probe cells row-local (UDF+explode), candidates via
+    // cell equi-join, top-1 tail
     import org.apache.spark.sql.functions._
     val base = graft.sources.Tables.embeddings(spark, sfTiny)
       .select(col("vec_id"), col("embedding"))
     val index = graft.operators.EmbeddingOps.sharedIndex(spark, sfTiny,
       graft.operators.EmbeddingOps.Geometry.Planted).index
-    val topP = graft.operators.EmbeddingOps.probeCellsRowLocal(
-      spark, index.model, graft.operators.EmbeddingOps.IvfProbes)
-    val q = base.filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"),
-        graft.operators.EmbeddingOps.toFeatures(col("embedding")).as("qf"))
-      .withColumn("cell", explode(topP(col("qf"))))
-      .join(index.assigned.select(col("vec_id"), col("cell")), Seq("cell"))
+    val q = graft.operators.EmbeddingOps.serveQueriesAgainst(spark, index,
+      base.filter(col("vec_id") % 20 === 0))
     val p = q.queryExecution.executedPlan.toString
     assert(!p.contains("Window"), "row-local probe plan grew a window")
     assert(!p.contains("SortMergeJoin"),
@@ -508,9 +504,10 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("s31: the streaming ADC serve plan is window-free and honors tombstones by broadcast") {
-    // audit the BATCH twin of the stream plan (s29's technique): probe
-    // cells + carried LUT row-local, candidates via cell equi-join
-    // against tombstone-filtered codes, ADC as carried-array lookups
+    // audit the function the stream runs, over a static query relation
+    // (s29's technique): probe cells + carried LUT row-local, candidates
+    // via cell equi-join against tombstone-filtered codes, ADC as
+    // carried-array lookups, top-1 tail
     import org.apache.spark.sql.functions._
     val base = graft.sources.Tables.embeddings(spark, sfTiny)
       .select(col("vec_id"), col("embedding"))
@@ -520,21 +517,8 @@ class PlanAuditSpec extends SparkSpec {
     graft.api.IvfStore.appendTombstones(tombRoot,
       graft.operators.EmbeddingOps.tombstoneIds(base, off), 0L)
     val served = graft.api.IvfStore.minusTombstones(codes, spark, tombRoot)
-    val topP = graft.operators.EmbeddingOps.probeCellsRowLocal(
-      spark, index.model, graft.operators.EmbeddingOps.IvfProbes)
-    val lutU = graft.operators.EmbeddingOps.adcLutRowLocal(spark, pq)
-    val m = graft.operators.EmbeddingOps.PqSubspaces
-    val k = graft.operators.EmbeddingOps.PqCodes
-    val adcExpr = (0 until m)
-      .map(mi => element_at(col("lut"), col(s"code$mi") + lit(mi * k + 1)))
-      .reduce(_ + _)
-    val q = base.filter(col("vec_id") % 20 === 0)
-      .select(col("vec_id").as("query_id"),
-        graft.operators.EmbeddingOps.toFeatures(col("embedding")).as("qf"))
-      .withColumn("lut", lutU(col("qf")))
-      .withColumn("cell", explode(topP(col("qf"))))
-      .join(served, Seq("cell"))
-      .select(col("query_id"), col("vec_id"), adcExpr.as("adc"))
+    val q = graft.operators.EmbeddingOps.adcServeQueriesAgainst(spark,
+      index.model, pq, served, base.filter(col("vec_id") % 20 === 0))
     val p = q.queryExecution.executedPlan.toString
     assert(!p.contains("Window"), "row-local ADC plan grew a window")
     assert("BroadcastHashJoin .*LeftAnti".r.findFirstIn(p).isDefined,
@@ -553,6 +537,13 @@ class PlanAuditSpec extends SparkSpec {
       "c08 grew a window")
     assert(!plan("c09_embedding_admission").contains("Window"),
       "c09 grew a window")
+  }
+
+  test("e13: the batch top-1 serve is window-free") {
+    // the per-query argmax is the shared max(struct) tail, not a
+    // query-partitioned window cut at rank 1
+    assert(!plan("e13_ann_batch_serve").contains("Window"),
+      "e13's top-1 grew a window")
   }
 
   test("e27: each phase's serve physically reads the dir its pointer adoption named") {
@@ -593,8 +584,6 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("c12/d30: the composed pair admission and the LSH janitor probe stay window-free") {
-    // (e28's serve is e13's batch kernel — its per-query ranking
-    // window is that plan's own pinned shape, not a regression)
     assert(!plan("c12_multimodal_admission").contains("Window"),
       "c12 grew a window")
     assert(!plan("d30_lsh_janitor_cycle").contains("Window"),

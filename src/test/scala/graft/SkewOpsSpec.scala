@@ -34,6 +34,29 @@ class SkewOpsSpec extends SparkSpec {
     assert(salted === plain)
   }
 
+  test("the row-local probe ranking equals a full (sqdist, cell) sort of the centers") {
+    import spark.implicits._
+    import org.apache.spark.ml.linalg.{Vector, Vectors}
+    val rnd = new scala.util.Random(11)
+    val emb = (0 until 160)
+      .map(i => (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val index = EmbeddingOps.ivfBuild(emb, cells = 16)
+    val centers = index.model.clusterCenters
+    // depths below, at and past the cell count
+    for (probes <- Seq(1, 2, 4, 16, 20)) {
+      val rank = EmbeddingOps.probeCellsRowLocal(spark, index.model, probes)
+      index.assigned.select(col("features"), rank(col("features")))
+        .collect().foreach { r =>
+          val f = r.getAs[Vector](0)
+          val want = centers.zipWithIndex
+            .map { case (c, i) => (Vectors.sqdist(c, f), i) }
+            .sortBy(identity).take(probes).map(_._2).toSeq
+          assert(r.getSeq[Int](1) === want, s"probes = $probes")
+        }
+    }
+  }
+
   test("IVF ANN recalls planted near-neighbors (structured fixture)") {
     import spark.implicits._
     // 8 well-separated direction clusters × 25 members; query = vec 0 in
@@ -52,8 +75,8 @@ class SkewOpsSpec extends SparkSpec {
       (i.toLong, v)
     }
     val emb = rows.toDF("vec_id", "embedding")
-    val got = EmbeddingOps.ivfTopK(emb, queryId = 0, k = 20,
-        cells = EmbeddingOps.IvfCells, probes = EmbeddingOps.IvfProbes)
+    val index = EmbeddingOps.ivfBuild(emb, cells = EmbeddingOps.IvfCells)
+    val got = EmbeddingOps.ivfTopK(index, queryId = 0, k = 20)
       .collect().map(_.getLong(0))
     assert(got.head === 1L, s"planted twin not top-1: ${got.take(5).toSeq}")
     // most of the query's own cluster should surface in the top-20
@@ -126,7 +149,7 @@ class SkewOpsSpec extends SparkSpec {
       index0.assigned.unionByName(twins.select(index0.assigned.columns.map(col): _*)),
       index0.model)
     // each twin's probe set reaches across the boundary
-    val probes = EmbeddingOps.probeAssignments(index)
+    val probes = EmbeddingOps.cellProbes(index)
       .filter(col("vec_id") >= 1000L)
       .select(col("vec_id"), col("cell")).collect()
       .groupBy(_.getLong(0)).map { case (k, v) => k -> v.map(_.getInt(1)).toSet }
@@ -138,7 +161,7 @@ class SkewOpsSpec extends SparkSpec {
     val single = pairs(EmbeddingOps.withinCellEdges(primary,
       nTotal = 202, nCells = 8, threshold = 0.95))
     val multi = pairs(EmbeddingOps.multiProbeEdges(primary,
-      EmbeddingOps.probeAssignments(index),
+      EmbeddingOps.cellProbes(index),
       nTotal = 202, nCells = 8, threshold = 0.95))
     assert(!single.contains((1000L, 1001L)),
       "single-probe unexpectedly found the cross-cell pair — fixture stale")
@@ -148,8 +171,7 @@ class SkewOpsSpec extends SparkSpec {
     assert(single.subsetOf(multi), s"multi lost pairs: ${single.diff(multi)}")
   }
 
-  test("second-cell-only pair: default multi-probe misses it (documented " +
-      "residue), bothSides probing recovers it") {
+  test("second-cell-only pair: the multi-probe pass misses it (documented residue)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // The residual blind spot's EXISTENCE proof (r10 verdict item 6):
@@ -186,7 +208,7 @@ class SkewOpsSpec extends SparkSpec {
     val cellU = index0.model.predict(feat(u))
     val cellW = index0.model.predict(feat(w))
     assert(cellU !== cellW, "fixture degenerate: twins share a primary")
-    val probes0 = EmbeddingOps.probeAssignments(EmbeddingOps.IvfIndex(
+    val probes0 = EmbeddingOps.cellProbes(EmbeddingOps.IvfIndex(
         index0.assigned.unionByName(
           Seq((1000L, u, feat(u), cellU), (1001L, w, feat(w), cellW))
             .toDF("vec_id", "embedding", "features", "cell")
@@ -212,18 +234,11 @@ class SkewOpsSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val deflt = pairs(EmbeddingOps.multiProbeEdges(primary,
-      EmbeddingOps.probeAssignments(index), nTotal = 152, nCells = 3,
+      EmbeddingOps.cellProbes(index), nTotal = 152, nCells = 3,
       threshold = 0.95))
-    val both = pairs(EmbeddingOps.multiProbeEdges(primary,
-      EmbeddingOps.probeAssignments(index), nTotal = 152, nCells = 3,
-      threshold = 0.95, bothSides = true))
     assert(!deflt.contains((1000L, 1001L)),
       "default multi-probe found the second-cell-only pair — the " +
         "documented residue no longer exists; update the doc and census")
-    assert(both.contains((1000L, 1001L)),
-      s"bothSides probing missed the second-cell-only pair")
-    // bothSides strictly extends the default (same threshold/guard)
-    assert(deflt.subsetOf(both), s"bothSides lost pairs: ${deflt.diff(both)}")
   }
 
   test("semantic-dedup pair pass excludes degenerate hot cells") {
@@ -254,7 +269,7 @@ class SkewOpsSpec extends SparkSpec {
       s"planted small-cell pairs missing: $edges")
   }
 
-  test("e13 batch serving agrees with e05's driver-side probe path per query") {
+  test("e13 batch serving agrees with the brute-force top-1 per query") {
     import spark.implicits._
     // the registered row's closed-form contract: every query's top-1 is
     // its planted twin at cosine 1.0, query universe = base ids % 20
@@ -270,16 +285,78 @@ class SkewOpsSpec extends SparkSpec {
     val offs = out.map(t => t._2 - t._1).distinct
     assert(offs.length === 1)
     val off = offs.head
-    // DIFFERENTIAL: the relational probe assignment must reach the same
-    // answer as e05's driver-side probedCells path on the same union
+    // REFERENCE: the exact brute-force top-1 over the whole union (no
+    // index, no probe) must name the same neighbor at the same cosine
     val union = base.unionByName(
       base.withColumn("vec_id", col("vec_id") + lit(off)))
-    val cells = EmbeddingOps.Geometry.Planted.cellsFor(base.count())
-    out.take(3).foreach { case (q, want, _) =>
-      val got = EmbeddingOps.ivfTopK(union, q, k = 1,
-        cells = cells, probes = EmbeddingOps.IvfProbes)
-        .collect().head.getLong(0)
-      assert(got === want, s"query $q: batch=$want driver=$got")
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble)))
+    def cos(a: Seq[Double], b: Seq[Double]): Double = {
+      val dot = a.zip(b).map { case (x, y) => x * y }.sum
+      dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
     }
+    val byId = union.toMap
+    out.take(3).foreach { case (q, want, c) =>
+      val (got, best) = union.filter(_._1 != q)
+        .map { case (id, v) => (id, cos(byId(q), v)) }
+        .minBy { case (id, x) => (-x, id) }
+      assert(got === want, s"query $q: served=$want brute force=$got")
+      assert(math.abs(best - c) < 1e-6, s"query $q: cosine $c vs $best")
+    }
+  }
+
+  // ---- one IVF serve kernel in src/main ------------------------------------
+
+  /** Code that marks a serve kernel's definition (comments and
+    * stripMargin SQL are not scanned). */
+  private val kernelSignatures = Seq(
+    "probe ranking" -> "Vectors.sqdist(c, f)",
+    "serve cosine" -> """round(fastCosine(col("q_emb"), col("embedding")), 6)""",
+    "ADC lookup table" -> "n2 - 2.0 * dot",
+    "top-1 tail" -> """(-col("vec_id")).as("neg_id")""")
+
+  private def kernelOffenders(root: java.io.File): Seq[String] = {
+    val hits = for {
+      f <- MainSources.files(root)
+      (line, i) <- MainSources.lines(f).zipWithIndex
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("//") && !code.startsWith("|")
+      (what, sig) <- kernelSignatures
+      if code.contains(sig)
+    } yield (what, s"${f.getPath}:${i + 1}")
+    kernelSignatures.flatMap { case (what, _) =>
+      val at = hits.filter(_._1 == what).map(_._2)
+      if (at.size == 1) Nil else Seq(s"$what on ${at.size} lines: ${at.mkString(", ")}")
+    }
+  }
+
+  test("src/main defines each IVF serve kernel once") {
+    val offenders = kernelOffenders(new java.io.File("src/main/scala"))
+    assert(offenders.isEmpty, s"serve kernel copies in src/main: ${offenders.mkString("; ")}")
+  }
+
+  test("the serve kernel scan fails on a copy of src/main that adds a second serve path") {
+    val copy = MainSources.copyWith("operators/Mutant.scala",
+      """package graft.operators
+        |import graft.expressions.VectorExpressions.fastCosine
+        |import org.apache.spark.ml.linalg.{Vector, Vectors}
+        |import org.apache.spark.sql.DataFrame
+        |import org.apache.spark.sql.functions._
+        |object Mutant {
+        |  def probe(cs: Array[Vector], f: Vector): Seq[Int] =
+        |    cs.zipWithIndex.map { case (c, i) => (Vectors.sqdist(c, f), i) }
+        |      .sortBy(identity).take(4).map(_._2).toSeq
+        |  def lut(n2: Double, dot: Double): Double = n2 - 2.0 * dot
+        |  def serve(probed: DataFrame, index: DataFrame): DataFrame =
+        |    probed.join(index, Seq("cell"))
+        |      .select(col("query_id"), col("vec_id"),
+        |        round(fastCosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
+        |      .groupBy(col("query_id"))
+        |      .agg(max(struct(col("cos_sim"), (-col("vec_id")).as("neg_id"))).as("m"))
+        |}
+        |""".stripMargin)
+    val offenders = kernelOffenders(copy)
+    for (what <- Seq("probe ranking", "serve cosine", "ADC lookup table", "top-1 tail"))
+      assert(offenders.exists(o => o.startsWith(s"$what on 2 lines") &&
+        o.contains("Mutant.scala")), s"second $what not reported: $offenders")
   }
 }
