@@ -12,16 +12,21 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
 
 /** JVM-local in-memory backing store for [[EphemeralCheckpointFileManager]].
   *
-  * Why this exists (optimization r20, guide §1.2/§5 — remove work the
-  * result provably never needs): every bounded drain pays two
+  * Why this exists (guide §1.2/§5 — remove work the result provably
+  * never needs): every bounded drain pays two
   * fsync'd filesystem commits per micro-batch (offset WAL + commit log,
   * ~85 ms measured at sf0.1) plus one state-store delta write per state
   * partition — durability plumbing for a checkpoint that is *transient
   * by construction*. The engine's streaming checkpoints are either
-  * (a) Spark temp checkpoints (memory-sink drains): created under the
-  * JVM's temp dir and deleted by Spark itself at query stop, or
-  * (b) explicit paths under `TmpDirs.artifactRoot`: keyed on the Spark
-  * `applicationId` and removed by a JVM shutdown hook. In BOTH cases a
+  * (a) Spark temp checkpoints (the writer names no checkpoint: the
+  * memory-sink drains): created under the JVM's temp dir, dropped by
+  * [[EventStreams.drain]] as soon as the query finishes (and deleted by
+  * Spark itself at query stop), or (b) checkpoints the caller named
+  * (s11, s16, s22, s26, s28, s30 and the pointer-flip drain): paths
+  * keyed on the Spark `applicationId` (under `TmpDirs.artifactRoot` or
+  * the JVM's temp dir), KEPT here until the family boundary so a
+  * re-run over one resumes from its committed offsets, and removed from
+  * disk by a JVM shutdown hook. In BOTH cases a
   * checkpoint can never outlive the JVM, so recovery-after-JVM-death was
   * never in the fault-tolerance envelope; the only semantics the rows
   * witness — in-session stop/restart replay, exactly-once foreachBatch
@@ -39,10 +44,9 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * leaves it at the default, which matches what these bounded
   * temp-checkpoint drains get from local disk today).
   *
-  * Hygiene: Spark deletes a temp checkpoint through the file manager at
-  * query stop, so the map self-cleans on the normal path;
-  * [[EventStreams.releaseSinks]] clears any crash leftovers at family
-  * boundaries when no stream is active.
+  * Hygiene: temp checkpoints leave the map when their drain finishes;
+  * [[EventStreams.releaseSinks]] clears the named ones and any crash
+  * leftovers at family boundaries when no stream is active.
   */
 object EphemeralCheckpoints {
   // Sorted maps so list()/exists()/delete() are prefix-range scans
@@ -80,6 +84,16 @@ object EphemeralCheckpoints {
   def bytesHeld: Long = files.values.asScala.iterator.map(_.length.toLong).sum
 
   def clear(): Unit = { files.clear(); dirs.clear() }
+
+  /** Drop the checkpoint at `root` and everything under it. */
+  def drop(root: String): Unit = {
+    val k = key(new Path(root))
+    files.remove(k)
+    dirs.remove(k)
+    val (from, to) = subtree(k)
+    files.subMap(from, to).clear()
+    dirs.subSet(from, to).clear()
+  }
 
   /** Random-access view over one committed checkpoint file — the
     * Seekable/PositionedReadable surface `FSDataInputStream` requires. */
@@ -183,14 +197,7 @@ final class EphemeralCheckpointFileManager(root: Path, conf: Configuration)
     }
   }
 
-  override def delete(path: Path): Unit = {
-    val k = key(path)
-    files.remove(k)
-    dirs.remove(k)
-    val (from, to) = subtree(k)
-    files.subMap(from, to).clear()
-    dirs.subSet(from, to).clear()
-  }
+  override def delete(path: Path): Unit = drop(path.toString)
 
   override def isLocal: Boolean = true
 

@@ -1,8 +1,10 @@
 package graft.streaming
 
 import graft.QueryDef
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Structured Streaming surface (SURVEY §2.12): the reference is strictly
   * batch, but its chunk-file protocol (process chunks independently,
@@ -92,33 +94,6 @@ object EventStreams {
       .select(col("user_id"), col("w.start").as("session_start"),
         col("n_events"))
 
-  /** Accumulated per-user state (n_events, sum_value). */
-  final case class UserState(n: Long, sum: Double)
-
-  /** Custom arbitrary state via mapGroupsWithState: per-user running
-    * totals that survive across micro-batches — the KeyValueGroupedDataset
-    * state path for semantics the built-in windowed aggregations can't
-    * express (cross-batch accumulators, custom eviction policies). State
-    * is per-key and partitioned by the grouping key: at cluster scale it
-    * shards with the shuffle like any keyed aggregation. */
-  def runningUserTotals(events: DataFrame): Dataset[(Long, Long, Double)] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id").cast("long"), col("value").cast("double"))
-      .as[(Long, Double)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[UserState, (Long, Long, Double)](
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
-        (user, rows, state) =>
-          val prev = state.getOption.getOrElse(UserState(0L, 0.0))
-          val next = rows.foldLeft(prev) { case (s, (_, v)) =>
-            UserState(s.n + 1, s.sum + v)
-          }
-          state.update(next)
-          (user, next.n, next.sum)
-      }
-  }
-
   private val sinkCounter = new java.util.concurrent.atomic.AtomicInteger(0)
   private val lastSink =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -146,7 +121,7 @@ object EventStreams {
     * query planned concurrently (PackOps' prefix scan reads that conf
     * for its partition count) can no longer observe the narrowed
     * width. One clone per parent session, memoized, so memory-sink
-    * temp views stay in one catalog and [[runToMemory]]'s
+    * temp views stay in one catalog and [[memorySink]]'s
     * predecessor-dropping keeps working. */
   private def streamSession(parent: SparkSession): SparkSession =
     streamSessionCache.computeIfAbsent(parent, p => {
@@ -156,10 +131,10 @@ object EventStreams {
           .getOrElse(StreamStateMaxPartitions),
         StreamStateMaxPartitions)
       ss.conf.set("spark.sql.shuffle.partitions", cap.toString)
-      // JVM-transient checkpoints through the in-memory manager
-      // (optimization r20 — see EphemeralCheckpoints for why this is
-      // semantics-preserving for every checkpoint this engine creates,
-      // and the opt-out for deployments with durable checkpoint storage)
+      // JVM-transient checkpoints through the in-memory manager (see
+      // EphemeralCheckpoints for why this is semantics-preserving for
+      // every checkpoint this engine creates, and the opt-out for
+      // deployments with durable checkpoint storage)
       if (scala.util.Try(
           p.conf.get("spark.graft.streaming.ephemeralCheckpoints"))
           .getOrElse("true").toBoolean)
@@ -168,15 +143,6 @@ object EventStreams {
       ss
     })
 
-  /** Drive a streaming transform to completion (`Trigger.AvailableNow`)
-    * into a memory sink and return the drained table.
-    *
-    * Sink names are counter-suffixed so repeated runs never collide,
-    * and the PREVIOUS run's sink of the same prefix is dropped first:
-    * memory sinks hold their full result in driver memory and are
-    * invisible to `clearCache`. Dropping only the predecessor is safe —
-    * by the time a query re-runs, the prior run's result has been fully
-    * materialized by the harness. */
   /** Drop every retained memory-sink table in the parent's stream-clone
     * catalog. Each sink holds its full result rows on the driver and is
     * invisible to `clearCache` (it is a temp view over an in-memory
@@ -192,46 +158,43 @@ object EventStreams {
       lastSink.values.forEach(v => clone.catalog.dropTempView(v))
       lastSink.clear()
       clone.catalog.clearCache()
-      // orphan sweep: per-query unload (below) already covers the
-      // normal path; this catches providers of queries that died
-      // before their unload ran. Scoped to runIds THIS helper issued
-      // (r12 ADVICE): loadedProviders is process-global, so a
-      // liveness-only filter would unload a live stateful query
-      // started on any OTHER session in the JVM (a test session, a
-      // second parent) mid-batch. Liveness is unioned across EVERY
-      // (parent, clone) pair this helper has ever served — not just
-      // the sweeping caller's — so a concurrent runToMemory query on
-      // a second parent is live here too, not a false orphan.
-      // Issued-and-not-active is then exact: foreign queries are
-      // never touched, our live queries on any session survive, and a
-      // died-before-unload query of ours is still reclaimed.
-      val sessions = {
-        val b = Seq.newBuilder[SparkSession]
-        streamSessionCache.synchronized {
-          streamSessionCache.forEach((p, c) => { b += p; b += c })
-        }
-        (b.result() :+ parent :+ clone).distinct
-      }
-      val active = sessions.flatMap(_.streams.active.map(_.runId)).toSet
-      loadedProviderIds.filter(id => issuedRunIds.contains(id.queryRunId) &&
-          !active.contains(id.queryRunId))
-        .foreach(unloadProvider)
-      // ephemeral-checkpoint leftovers: the normal path self-cleans
-      // (Spark deletes a finished temp checkpoint through the manager),
-      // so anything still held here belongs to a query that died before
-      // its delete — reclaimable once nothing is active
-      if (active.isEmpty) EphemeralCheckpoints.clear()
     }
+    // orphan sweep: [[drain]]'s per-query unload covers the normal
+    // path; this catches providers of drains that died before their
+    // unload ran, on any session. Scoped to the runIds the drain issued:
+    // loadedProviders is process-global, so a liveness-only filter
+    // would unload a live stateful query started outside the drain (a
+    // test session, a second parent) mid-batch. Liveness is unioned
+    // across EVERY (parent, clone) pair this helper has ever served —
+    // not just the sweeping caller's — so a concurrent drain on a
+    // second parent is live here too, not a false orphan.
+    // Issued-and-not-active is then exact: foreign queries are never
+    // touched, our live queries on any session survive, and a
+    // died-before-unload drain of ours is still reclaimed.
+    val sessions = {
+      val b = Seq.newBuilder[SparkSession]
+      streamSessionCache.synchronized {
+        streamSessionCache.forEach((p, c) => { b += p; b += c })
+      }
+      (b.result() :+ parent).distinct
+    }
+    val active = sessions.flatMap(_.streams.active.map(_.runId)).toSet
+    loadedProviderIds.filter(id => issuedRunIds.contains(id.queryRunId) &&
+        !active.contains(id.queryRunId))
+      .foreach(unloadProvider)
+    // ephemeral-checkpoint leftovers: [[drain]] drops a temp checkpoint
+    // itself, so what is still held here is a named checkpoint (kept on
+    // purpose until now) or one of a query that died before its drop —
+    // reclaimable once nothing is active
+    if (active.isEmpty) EphemeralCheckpoints.clear()
   }
 
-  /** Every streaming runId [[runToMemory]] ever started in this JVM —
-    * the exact scope of the orphan sweep above. */
+  /** Every streaming runId [[drain]] ever started in this JVM — the
+    * exact scope of the orphan sweep above. */
   private val issuedRunIds =
     java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
 
-  /** Per-provider state-store unload (r12 — replaces the former
-    * process-global `StateStore.stop()` and retires its documented
-    * sequential-execution assumption): a finished query's providers are
+  /** Per-provider state-store unload: a finished query's providers are
     * identified by the provider id's `queryRunId` — exact, no
     * checkpoint-path normalization — and only THOSE are closed and
     * removed. Concurrent streaming queries are untouched
@@ -249,8 +212,8 @@ object EventStreams {
     * reflectively (the public API can unload a known id via
     * `removeFromLoadedProvidersAndClose` but cannot list ids); the
     * lookup is resolved once and falls back to the coarse global
-    * `stop()` if a Spark upgrade renames the member — degraded to
-    * exactly the old harness-only behavior, never silently leaking. */
+    * `stop()` if a Spark upgrade renames the member — never silently
+    * leaking. */
   private[graft] def unloadProvidersOf(runId: java.util.UUID): Unit =
     loadedProviderIds.filter(_.queryRunId == runId).foreach(unloadProvider)
 
@@ -283,90 +246,87 @@ object EventStreams {
     }
   }
 
-  /** Eagerly drop a finished bounded drain's ephemeral-checkpoint
-    * entries. Spark deletes a temp checkpoint through the file manager
-    * when the query stops, but that delete runs in the stream thread's
-    * cleanup AFTER awaitTermination returns — dropping here keeps the
-    * in-memory namespace from carrying a race-lost subtree to the end
-    * of the family. Best-effort reflection (wrapper → StreamExecution →
-    * resolvedCheckpointRoot); a miss degrades to the family-boundary
-    * clear. */
-  private def dropEphemeralCheckpoint(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+  /** The root of `q`'s checkpoint if Spark created it as a temp
+    * checkpoint (the writer named no `checkpointLocation` — the memory
+    * sinks); None for a checkpoint the caller named. Read reflectively
+    * (wrapper → StreamExecution's `deleteCheckpointOnStop`, the flag
+    * Spark itself deletes by); a miss reads as named, which leaves the
+    * entries to the family-boundary clear. */
+  private[graft] def tempCheckpoint(q: StreamingQuery): Option[String] =
     try {
       val exec = q.getClass.getMethod("streamingQuery").invoke(q)
-      val root = exec.getClass.getMethod("resolvedCheckpointRoot")
-        .invoke(exec).asInstanceOf[String]
-      EphemeralCheckpoints.files.remove(root)
-      val (from, to) = EphemeralCheckpoints.subtree(
-        new org.apache.hadoop.fs.Path(root).toUri.getPath)
-      EphemeralCheckpoints.files.subMap(from, to).clear()
-      EphemeralCheckpoints.dirs.subSet(from, to).clear()
-    } catch { case _: ReflectiveOperationException => }
+        .asInstanceOf[StreamExecution]
+      val temp = classOf[StreamExecution].getDeclaredField("deleteCheckpointOnStop")
+      temp.setAccessible(true)
+      Option.when(temp.getBoolean(exec))(exec.resolvedCheckpointRoot)
+    } catch { case _: ReflectiveOperationException => None }
 
-  private[graft] def runToMemory(df: DataFrame, mode: String, prefix: String,
-                          requireSingleBatch: Boolean = false): DataFrame = {
-    val q = startToMemory(df, mode, prefix)
-    q.awaitTermination()
-    // the finished query's temp-checkpoint providers are orphans from
-    // here on — unload before the caller's timing window closes
-    unloadProvidersOf(q.runId)
-    dropEphemeralCheckpoint(q)
-    // Loud precondition for parity rows whose batch-analog oracle is
-    // only valid when the whole source lands in ONE data micro-batch
-    // (AvailableNow is documented to split large scans): a silent
-    // multi-batch run could mis-order events across batches and fail
-    // the oracle with no hint at the cause. Failing here names the fix.
-    if (requireSingleBatch) {
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      require(dataBatches <= 1,
-        s"$prefix: oracle assumes one data micro-batch, got $dataBatches " +
-          "(AvailableNow split the scan) — pre-sort the source by ts for " +
-          "this parity row or raise the per-trigger file/byte cap")
-    }
-    df.sparkSession.table(q.name)
-  }
-
-  /** Start one bounded drain without awaiting it (the shared half of
-    * [[runToMemory]] / [[runAllToMemory]]): counter-suffixed sink name,
-    * predecessor-sink drop, runId bookkeeping. */
-  private def startToMemory(df: DataFrame, mode: String, prefix: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val s = df.sparkSession
-    val name = s"${prefix}_${sinkCounter.incrementAndGet()}"
-    Option(lastSink.put(prefix, name)).foreach(s.catalog.dropTempView(_))
-    val q = df.writeStream.outputMode(mode).format("memory").queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    issuedRunIds.add(q.runId)
-    q
-  }
-
-  /** Drive several INDEPENDENT bounded drains to completion
-    * concurrently and return their drained tables in order (guide
-    * §2.6 — overlap independent jobs: the admission rows' gate drains
-    * read separate sources into separate sinks with no cross-drain
-    * dependency, so running them back-to-back leaves the cluster idle
-    * through every drain's bring-up and straggler tail; started
-    * together, one drain's scheduling gaps are back-filled by the
-    * others'. Results are unchanged — each drain's sink is a function
-    * of its own source only; Spark schedules concurrent jobs FIFO).
-    * Queries are started in order on the caller's thread, so sink
-    * naming and predecessor-dropping stay deterministic. */
-  private def runAllToMemory(streams: Seq[(DataFrame, String, String)])
-      : Seq[DataFrame] = {
-    val qs = streams.map { case (df, mode, prefix) =>
-      startToMemory(df, mode, prefix)
+  /** The one bounded drain: every streamed row's query starts and
+    * finishes here, in these steps:
+    *
+    *  - Each writer gets `Trigger.AvailableNow` (drain what the source
+    *    holds now, then stop) and is started, in order, on the
+    *    caller's thread.
+    *  - Its runId is issued to [[releaseSinks]]' orphan sweep at once,
+    *    so a query that dies later is still reclaimed.
+    *  - Each query is then awaited in turn; a failed one throws here,
+    *    its providers left to the orphan sweep.
+    *  - Its state providers are unloaded ([[unloadProvidersOf]]) before
+    *    the caller's timing window closes.
+    *  - A checkpoint Spark created as a temp checkpoint (the writer
+    *    named no `checkpointLocation`: the memory sinks) is dropped
+    *    from [[EphemeralCheckpoints]]. Spark deletes it too, but in the
+    *    stream thread's cleanup AFTER the await returns; dropping here
+    *    keeps the in-memory namespace from carrying a race-lost subtree
+    *    to the family boundary. A checkpoint the caller named (s11,
+    *    s16, s22, s26, s28, s30, [[pointerFlipDrain]]) is KEPT until
+    *    the family boundary: a re-run over it resumes from its
+    *    committed offsets and commits no new data batch — s11's
+    *    idempotent re-run.
+    *  - The finished queries come back in writer order; each one's
+    *    `recentProgress` is its per-batch record.
+    *
+    * Several writers drain concurrently (guide §2.6 — overlap
+    * independent jobs: the admission rows' gate drains read separate
+    * sources into separate sinks, so started together one drain's
+    * bring-up and straggler gaps are back-filled by the others'; each
+    * sink is a function of its own source only, and Spark schedules
+    * the jobs FIFO). */
+  private[graft] def drain(writers: DataStreamWriter[_]*): Seq[StreamingQuery] = {
+    val qs = writers.map { w =>
+      val q = w.trigger(Trigger.AvailableNow()).start()
+      issuedRunIds.add(q.runId)
+      q
     }
     qs.foreach { q =>
       q.awaitTermination()
       unloadProvidersOf(q.runId)
-      dropEphemeralCheckpoint(q)
+      tempCheckpoint(q).foreach(EphemeralCheckpoints.drop)
     }
-    qs.zip(streams).map { case (q, (df, _, _)) =>
-      df.sparkSession.table(q.name)
-    }
+    qs
   }
+
+  /** A memory-sink writer for [[drain]]. Sink names are counter-suffixed
+    * so repeated runs never collide, and the PREVIOUS run's sink of the
+    * same prefix is dropped first: memory sinks hold their full result
+    * in driver memory and are invisible to `clearCache`. Dropping only
+    * the predecessor is safe — by the time a query re-runs, the prior
+    * run's result has been fully materialized by the harness. */
+  private def memorySink(df: DataFrame, mode: String, prefix: String)
+      : DataStreamWriter[Row] = {
+    val name = s"${prefix}_${sinkCounter.incrementAndGet()}"
+    Option(lastSink.put(prefix, name)).foreach(df.sparkSession.catalog.dropTempView(_))
+    df.writeStream.outputMode(mode).format("memory").queryName(name)
+  }
+
+  /** A drained memory sink as a batch table. */
+  private def table(q: StreamingQuery): DataFrame = q.sparkSession.table(q.name)
+
+  /** Drive one streaming transform to completion into a memory sink and
+    * return the drained table. */
+  private[graft] def runToMemory(df: DataFrame, mode: String, prefix: String)
+      : DataFrame =
+    table(drain(memorySink(df, mode, prefix)).head)
 
   /** s02 — the streaming CORRECTNESS row: [[hourlyCounts]] driven to
     * completion over the events table with `Trigger.AvailableNow` into an
@@ -534,19 +494,33 @@ object EventStreams {
     * and mis-assign the follower to the previous session — session
     * membership itself is tie-order-free (same-second gaps are 0), only
     * the two windows' order consistency matters. */
-  def streamClosedSessions(s: SparkSession, d: String): DataFrame =
-    runToMemory(
-        closedSessions(readEvents(streamSession(s), d), gapSec = 1800,
-          idleFlush = false).toDF(),
-        // single-batch precondition enforced: the sessionizer orders
-        // events within each micro-batch slice only, so the batch-analog
-        // oracle is valid iff the whole file source lands in one data
-        // batch (it does — one parquet file; the require turns a future
-        // multi-batch split into a named failure, not a hash mystery)
-        "append", "s10_closed_sessions", requireSingleBatch = true)
+  def streamClosedSessions(s: SparkSession, d: String): DataFrame = {
+    val Seq(q) = drain(memorySink(
+      closedSessions(readEvents(streamSession(s), d), gapSec = 1800,
+        idleFlush = false).toDF(),
+      "append", "s10_closed_sessions"))
+    requireOneDataBatch(q, "s10_closed_sessions")
+    table(q)
       .select(col("user_id"), col("start_sec"), col("end_sec"),
         col("n_events"), round(col("sum_value"), 2).as("sum_value"))
       .orderBy(col("user_id"), col("start_sec"))
+  }
+
+  /** s10's single-batch precondition: the sessionizer orders events
+    * within each micro-batch slice only, so the batch-analog oracle is
+    * valid iff the whole file source lands in ONE data micro-batch (it
+    * does — one parquet file). AvailableNow is documented to split large
+    * scans, and a silent multi-batch run could mis-order events across
+    * batches and fail the oracle with no hint at the cause; failing
+    * here names the fix. */
+  private[graft] def requireOneDataBatch(q: StreamingQuery, row: String)
+      : Unit = {
+    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+    require(dataBatches <= 1,
+      s"$row: oracle assumes one data micro-batch, got $dataBatches " +
+        "(AvailableNow split the scan) — pre-sort the source by ts for " +
+        "this parity row or raise the per-trigger file/byte cap")
+  }
 
   private val streamClosedSessionsSql =
     """WITH x AS (
@@ -593,14 +567,9 @@ object EventStreams {
       s"graft_s11_sink_${s.sparkContext.applicationId}_" +
         Integer.toHexString(d.hashCode)).getAbsolutePath
     val agg = hourlyCounts(readEvents(ss, d))
-    val q = agg
-      .writeStream.outputMode("append").format("parquet")
+    drain(agg.writeStream.outputMode("append").format("parquet")
       .option("path", s"$dir/out")
-      .option("checkpointLocation", s"$dir/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    unloadProvidersOf(q.runId)
+      .option("checkpointLocation", s"$dir/chk"))
     // explicit schema (the streaming plan's own): a corpus whose span
     // never closes a window leaves the sink with zero data files, and a
     // schema-inferring read would crash where the oracle cleanly
@@ -890,10 +859,10 @@ object EventStreams {
       model: org.apache.spark.ml.clustering.KMeansModel): Unit =
     graft.api.IvfStore.appendBatch(root, batch.toDF(), batchId, model)
 
-  /** s26 — STREAMING index append (e15 on the live path, r13 verdict
-    * ask #4: a continuously-crawling pipeline's vectors arrive as a
-    * stream and must reach the STORED IVF index without a refit): the
-    * base-corpus index is persisted through [[graft.api.IvfStore]]
+  /** s26 — STREAMING index append (e15 on the live path: a
+    * continuously-crawling pipeline's vectors arrive as a stream and
+    * must reach the STORED IVF index without a refit): the base-corpus
+    * index is persisted through [[graft.api.IvfStore]]
     * (e14's artifact), the increment — the id-shifted planted copy —
     * arrives as a vector STREAM, and each micro-batch is appended to
     * the store via [[appendIndexBatch]] (loaded-quantizer assignment +
@@ -924,15 +893,10 @@ object EventStreams {
     val appendRoot = s"$root/append"
     val stream = readEmbeddings(ss, d)
       .select((col("vec_id") + lit(off)).as("vec_id"), col("embedding"))
-    val q = stream.writeStream
-      .foreachBatch((batch: Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
+    drain(stream.writeStream
+      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
         appendIndexBatch(appendRoot, batch, batchId, loaded.model))
-      .option("checkpointLocation", s"$root/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    unloadProvidersOf(q.runId)
+      .option("checkpointLocation", s"$root/chk"))
     val full = graft.operators.EmbeddingOps.IvfIndex(
       loaded.assigned
         .select(col("vec_id"), col("embedding"), col("features"), col("cell"))
@@ -983,16 +947,11 @@ object EventStreams {
     val appendRoot = s"$root/append"
     val stream = readEmbeddings(ss, d)
       .select((col("vec_id") + lit(off)).as("vec_id"), col("embedding"))
-    val q = stream.writeStream
-      .foreachBatch((batch: Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
+    drain(stream.writeStream
+      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
         graft.api.IvfStore.appendPqBatch(appendRoot, batch.toDF(),
           batchId, li.model, lp))
-      .option("checkpointLocation", s"$root/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    unloadProvidersOf(q.runId)
+      .option("checkpointLocation", s"$root/chk"))
     val codeCols = Seq(col("vec_id"), col("cell")) ++
       (0 until m).map(i => col(s"code$i"))
     val codesAll = lc.select(codeCols: _*)
@@ -1092,39 +1051,8 @@ object EventStreams {
       .orderBy(col("query_id"))
   }
 
-  /** s36 — MID-STREAM POINTER FLIP (live reload, r16 verdict ask #2:
-    * e27 witnessed adoption/rollback between BATCH serves and e25 that
-    * a pinned reader is isolated from a concurrent fold, but a serving
-    * fleet is a QUERY STREAM, and the missing witness is an adoption
-    * landing BETWEEN micro-batches of one continuous drain): the e27
-    * artifact pair — v1 the double-planted index, v2 its
-    * tombstone-folded compaction — sits behind one
-    * [[graft.api.ServePointer]]; the query set arrives as a file
-    * stream forced to (at least) two micro-batches
-    * (`maxFilesPerTrigger=1` over two identical query files — the
-    * batches carry the SAME queries, so the output pins WHEN each
-    * answer changed, not which rows landed where); each foreachBatch
-    * re-resolves the pointer (one kilobyte read — versioned dirs are
-    * immutable, so every batch is internally consistent against
-    * whichever version it resolved), serves its batch through
-    * [[graft.operators.EmbeddingOps.serveQueriesAgainst]] (the batch
-    * rows' and s29's serve), and commits the result exactly-once
-    * through ExportCommit; the v1→v2 adoption lands at the batch-1
-    * boundary — BETWEEN micro-batches, never inside one.
-    *
-    * e27's closed form reshaped to the stream: batch-0 rows must
-    * answer from v1 (+off everywhere), batch-1 rows from v2 (the
-    * takedown flip exactly on queries ≡ 0 mod 2·BatchQueryMod). A
-    * foreachBatch that caches the resolved dir across batches, an
-    * adoption that tears mid-batch, or a replay that re-serves under
-    * the wrong version each break a phase's rows.
-    *
-    * 100 TB shape: the flip moves one pointer file while the drain is
-    * live — zero data movement, no stream restart; per batch the serve
-    * is |batch| × IvfProbes cell probes against an immutable versioned
-    * artifact, and the per-batch result commit is the manifest CAS. */
   /** The shared MID-STREAM POINTER-FLIP drain (s36's shape generalized
-    * across store families — r17 verdict ask #4): stage `queries` as
+    * across store families): stage `queries` as
     * two identical files so `maxFilesPerTrigger=1` yields two
     * deterministic micro-batches carrying the SAME query set (file
     * order irrelevant — the s36 recipe); adopt v1 at day 0 (replays
@@ -1166,11 +1094,10 @@ object EventStreams {
       graft.api.ServePointer.adopt(ptr, v1) // day 0 — replays keep the flip
     val v1n = java.nio.file.Paths.get(v1).toAbsolutePath.normalize().toString
     val resultsRoot = s"$root/results"
-    val q = ss.readStream.schema(queries.schema)
+    drain(ss.readStream.schema(queries.schema)
       .option("maxFilesPerTrigger", "1").parquet(qdir)
       .writeStream
-      .foreachBatch((batch: Dataset[org.apache.spark.sql.Row],
-          batchId: Long) => {
+      .foreachBatch((batch: Dataset[Row], batchId: Long) => {
         // the rollout lands AT the batch-1 boundary — between
         // micro-batches, never inside one
         if (batchId >= 1) flip(batchId)
@@ -1185,11 +1112,7 @@ object EventStreams {
         }
         ()
       })
-      .option("checkpointLocation", s"$root/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    unloadProvidersOf(q.runId)
+      .option("checkpointLocation", s"$root/chk"))
     require(graft.api.ServePointer.history(ptr).size == 2,
       "pointer-flip drain: the adoption must land between the two " +
         "micro-batches — a single-batch drain means the rate limit " +
@@ -1198,6 +1121,37 @@ object EventStreams {
     ss.read.parquet(dirs: _*)
   }
 
+  /** s36 — MID-STREAM POINTER FLIP (live reload:
+    * e27 witnessed adoption/rollback between BATCH serves and e25 that
+    * a pinned reader is isolated from a concurrent fold, but a serving
+    * fleet is a QUERY STREAM, and the missing witness is an adoption
+    * landing BETWEEN micro-batches of one continuous drain): the e27
+    * artifact pair — v1 the double-planted index, v2 its
+    * tombstone-folded compaction — sits behind one
+    * [[graft.api.ServePointer]]; the query set arrives as a file
+    * stream forced to (at least) two micro-batches
+    * (`maxFilesPerTrigger=1` over two identical query files — the
+    * batches carry the SAME queries, so the output pins WHEN each
+    * answer changed, not which rows landed where); each foreachBatch
+    * re-resolves the pointer (one kilobyte read — versioned dirs are
+    * immutable, so every batch is internally consistent against
+    * whichever version it resolved), serves its batch through
+    * [[graft.operators.EmbeddingOps.serveQueriesAgainst]] (the batch
+    * rows' and s29's serve), and commits the result exactly-once
+    * through ExportCommit; the v1→v2 adoption lands at the batch-1
+    * boundary — BETWEEN micro-batches, never inside one.
+    *
+    * e27's closed form reshaped to the stream: batch-0 rows must
+    * answer from v1 (+off everywhere), batch-1 rows from v2 (the
+    * takedown flip exactly on queries ≡ 0 mod 2·BatchQueryMod). A
+    * foreachBatch that caches the resolved dir across batches, an
+    * adoption that tears mid-batch, or a replay that re-serves under
+    * the wrong version each break a phase's rows.
+    *
+    * 100 TB shape: the flip moves one pointer file while the drain is
+    * live — zero data movement, no stream restart; per batch the serve
+    * is |batch| × IvfProbes cell probes against an immutable versioned
+    * artifact, and the per-batch result commit is the manifest CAS. */
   def streamPointerFlip(s: SparkSession, d: String): DataFrame = {
     import graft.operators.EmbeddingOps
     import graft.sources.ExportCommit
@@ -1692,7 +1646,7 @@ object EventStreams {
     import graft.operators.PackOps
     val ss = streamSession(s)
     val (streams, compose) = docGateStreams(ss, d)
-    PackOps.admissionHistogram(ss, compose(runAllToMemory(streams)),
+    PackOps.admissionHistogram(ss, compose(drain(streams: _*).map(table)),
       Seq("1_exact_store", "2_neardup", "3_passage", "4_decontam"))
       .orderBy(col("stage"))
   }
@@ -1702,10 +1656,10 @@ object EventStreams {
     * (doc_id, gate), intra-free (see the s34 doc for why), factored so
     * callers choose the drain schedule: s34 drains exactly
     * these four, s37 appends its two vec-gate drains to the SAME
-    * concurrent batch (guide §2.6). Returns (stream definitions in
+    * concurrent batch (guide §2.6). Returns (memory-sink writers in
     * gate order, composition over the drained tables in that order). */
   private def docGateStreams(ss: SparkSession, d: String)
-      : (Seq[(DataFrame, String, String)], Seq[DataFrame] => DataFrame) = {
+      : (Seq[DataStreamWriter[Row]], Seq[DataFrame] => DataFrame) = {
     import graft.operators.{DedupOps, Gates}
     val docs = graft.sources.Tables.documents(ss, d)
       .select(col("doc_id"), col("text"))
@@ -1717,15 +1671,15 @@ object EventStreams {
     val incoming = Gates.admissionIncrement(
       readDocuments(ss, d).select(col("doc_id"), col("text")), off)
     val streams = Seq(
-      (Gates.exactFlags(incoming, Gates.ledger(existing)),
+      memorySink(Gates.exactFlags(incoming, Gates.ledger(existing)),
         "append", "s34_universe"),
-      (Gates.nearDupHits(incoming,
+      memorySink(Gates.nearDupHits(incoming,
         graft.api.DocIndexStore.Lsh.load(ss, lshDir), existing),
         "append", "s34_near"),
-      (DedupOps.probePassagesAgainst(incoming,
+      memorySink(DedupOps.probePassagesAgainst(incoming,
         graft.api.DocIndexStore.Passage.load(ss, pasDir)),
         "complete", "s34_passage"),
-      (Gates.gramHits(incoming,
+      memorySink(Gates.gramHits(incoming,
         Gates.evalGrams(docs.filter(col("doc_id") % 97 === 0))),
         "complete", "s34_decontam"))
     val compose = (drained: Seq[DataFrame]) => {
@@ -1776,10 +1730,10 @@ object EventStreams {
       readEmbeddings(ss, d).select(col("vec_id"), col("embedding")), off)
     // both gates are independent drains — one concurrent batch
     // (guide §2.6), identical plans and results
-    val Seq(exact, semHits) = runAllToMemory(Seq(
-      (Gates.vecExactFlags(incoming, base), "append", "s35_universe"),
-      (EmbeddingOps.semanticGateCandidates(ss, incoming,
-        loaded.assigned, loaded.model), "append", "s35_sem")))
+    val Seq(exact, semHits) = drain(
+      memorySink(Gates.vecExactFlags(incoming, base), "append", "s35_universe"),
+      memorySink(EmbeddingOps.semanticGateCandidates(ss, incoming,
+        loaded.assigned, loaded.model), "append", "s35_sem")).map(table)
     val attributed = Gates.vecFirstGate(
       exact.select(col("vec_id")).distinct(), exact, semHits)
     PackOps.admissionHistogram(ss, attributed,
@@ -1830,10 +1784,10 @@ object EventStreams {
         .select(col("doc_id")),
       baseE, offD, offV)
       .select(col("vec_id"), col("embedding"))
-    val drained = runAllToMemory(docStreams ++ Seq(
-      (Gates.vecExactFlags(vecStream, baseE), "append", "s37_exact"),
-      (EmbeddingOps.semanticGateCandidates(ss, vecStream,
-        loaded.assigned, loaded.model), "append", "s37_sem")))
+    val drained = drain(docStreams ++ Seq(
+      memorySink(Gates.vecExactFlags(vecStream, baseE), "append", "s37_exact"),
+      memorySink(EmbeddingOps.semanticGateCandidates(ss, vecStream,
+        loaded.assigned, loaded.model), "append", "s37_sem")): _*).map(table)
     val docAttr = composeDoc(drained.take(4))
     val (vecExact, vecSem) = (drained(4), drained(5))
     // composition: the conjunction matrix over the drained sinks
@@ -1857,7 +1811,7 @@ object EventStreams {
   }
 
   /** s30 — STREAMING tombstone ingestion (e21 on the live path,
-    * completing the r15 takedown lifecycle: deletion events — DMCA
+    * completing the takedown lifecycle: deletion events — DMCA
     * notices, GDPR requests, recrawl removals — arrive as a STREAM in
     * a deployment, not as a batch job): the e21 double-planted index
     * is persisted and loaded; the takedown set (every other query's
@@ -1888,15 +1842,10 @@ object EventStreams {
       .filter(col("vec_id") %
         (2 * graft.operators.EmbeddingOps.BatchQueryMod) === 0)
       .select((col("vec_id") + lit(off)).as("vec_id"))
-    val q = takedown.writeStream
-      .foreachBatch((batch: Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
+    drain(takedown.writeStream
+      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
         graft.api.IvfStore.appendTombstones(tombRoot, batch.toDF(), batchId))
-      .option("checkpointLocation", s"$root/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    unloadProvidersOf(q.runId)
+      .option("checkpointLocation", s"$root/chk"))
     graft.operators.EmbeddingOps.batchServeAgainst(
       graft.operators.EmbeddingOps.IvfIndex(
         graft.api.IvfStore.minusTombstones(loaded.assigned, ss, tombRoot),
@@ -2073,19 +2022,14 @@ object EventStreams {
           Integer.toHexString(d.hashCode)).getAbsolutePath)
     val shardsRoot = s"$base/shards"
     val src = graft.operators.PackOps.exportAssigned(readDocuments(ss, d))
-    val q = src.writeStream
-      .foreachBatch((batch: Dataset[org.apache.spark.sql.Row],
-          batchId: Long) => {
+    drain(src.writeStream
+      .foreachBatch((batch: Dataset[Row], batchId: Long) => {
         graft.sources.ExportCommit.commitOnce(shardsRoot, batchId)(
           batch.write.partitionBy("shard")
             .option("compression", "gzip").json(_))
         ()
       })
-      .option("checkpointLocation", s"$base/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    unloadProvidersOf(q.runId)
+      .option("checkpointLocation", s"$base/chk"))
     graft.operators.PackOps.manifestFrom(
       graft.sources.ExportCommit.readCommitted(ss, shardsRoot, src.schema))
   }
@@ -2109,14 +2053,10 @@ object EventStreams {
         Integer.toHexString(d.hashCode)).getAbsolutePath
     val src = readEvents(ss, d).select(col("user_id"),
       unix_micros(col("ts")).as("us"), col("event_id"), col("value"))
-    val q = src.writeStream
-      .foreachBatch((batch: Dataset[org.apache.spark.sql.Row],
-          batchId: Long) => upsertLatest(batch, dir, batchId))
-      .option("checkpointLocation", s"$dir/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    unloadProvidersOf(q.runId)
+    drain(src.writeStream
+      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
+        upsertLatest(batch, dir, batchId))
+      .option("checkpointLocation", s"$dir/chk"))
     val v = prevStoreVersion(dir, Long.MaxValue).getOrElse(
       throw new IllegalStateException(
         s"s16: no store version written under $dir — empty source?"))

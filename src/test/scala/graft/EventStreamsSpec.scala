@@ -2,9 +2,10 @@ package graft
 
 import graft.streaming.EventStreams
 import java.sql.Timestamp
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, StreamingQueryListener}
 
 /** Streaming operators fed through MemoryStream micro-batches, compared
   * against their batch analogs on the same data. */
@@ -108,24 +109,6 @@ class EventStreamsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.contains((7L, 2L)), s"first session missing: $got")
     assert(got.contains((7L, 1L)), s"second session missing: $got")
-  }
-
-  test("mapGroupsWithState accumulates per-user totals across micro-batches") {
-    val in = MemoryStream[(Long, Timestamp, Long, Double)]
-    val events = in.toDF().toDF("event_id", "ts", "user_id", "value")
-    val q = EventStreams.runningUserTotals(events)
-      .toDF("user_id", "n_events", "sum_value")
-      .writeStream.format("memory").queryName("running")
-      .outputMode("update").start()
-    in.addData((1L, ts(0), 7L, 1.0), (2L, ts(1), 7L, 2.0), (3L, ts(2), 9L, 5.0))
-    q.processAllAvailable()
-    in.addData((4L, ts(3), 7L, 4.0)) // second batch: state must carry over
-    q.processAllAvailable()
-    q.stop()
-    val last = spark.sql(
-      "SELECT user_id, max(n_events) AS n, max(sum_value) AS s FROM running GROUP BY user_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(last === Set((7L, 3L, 7.0), (9L, 1L, 5.0)))
   }
 
   test("flatMapGroupsWithState emits each closed session exactly once") {
@@ -615,5 +598,133 @@ class EventStreamsSpec extends SparkSpec {
     // restart with nothing pending: a no-op, not a replay
     runOnce()
     assert(sink() === Seq(1L, 2L, 3L, 4L, 5L))
+  }
+
+  // ---- the one bounded drain ------------------------------------------------
+
+  test("s10's single-batch check fails a drain whose source lands in two data micro-batches") {
+    val root = java.nio.file.Files.createTempDirectory("graft_two_batches").toString
+    for (id <- Seq(1L, 2L))
+      Seq(id).toDF("id").coalesce(1).write.mode("append").parquet(s"$root/src")
+    val Seq(q) = EventStreams.drain(spark.readStream.schema("id LONG")
+      .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
+      .writeStream.format("memory").queryName("two_data_batches"))
+    assert(spark.table("two_data_batches").count() === 2L)
+    val e = intercept[IllegalArgumentException](
+      EventStreams.requireOneDataBatch(q, "s10_closed_sessions"))
+    assert(e.getMessage.contains("s10_closed_sessions: oracle assumes one data micro-batch, got 2"),
+      e.getMessage)
+    assert(e.getMessage.contains("pre-sort the source by ts"), "the message must name the fix")
+  }
+
+  test("a drain whose foreachBatch sink throws fails loudly, and releaseSinks reclaims its state providers") {
+    val root = java.nio.file.Files.createTempDirectory("graft_orphan").toString
+    Seq((1L, ts(0)), (2L, ts(1)), (1L, ts(2))).toDF("k", "ts")
+      .coalesce(1).write.parquet(s"$root/src")
+    val started = new java.util.concurrent.LinkedBlockingQueue[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.add(e.runId)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val failed = try intercept[StreamingQueryException] {
+      EventStreams.drain(spark.readStream.schema("k LONG, ts TIMESTAMP")
+        .parquet(s"$root/src")
+        .withWatermark("ts", "1 hour")
+        .groupBy(col("k")).agg(count(lit(1)).as("n"))
+        .writeStream.outputMode("update")
+        .foreachBatch((batch: Dataset[Row], _: Long) => {
+          batch.collect()
+          throw new IllegalStateException("sink failed after materializing its batch")
+        })
+        .option("checkpointLocation", s"$root/chk"))
+    } finally spark.streams.removeListener(listener)
+    assert(Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("sink failed")), failed)
+    val run = started.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+    assert(run != null, "the drain's query never started")
+    def loaded = EventStreams.loadedProviderIds.filter(_.queryRunId == run)
+    assert(loaded.nonEmpty, "the failed drain's state providers were never loaded")
+    EventStreams.releaseSinks(spark)
+    assert(loaded.isEmpty, s"releaseSinks left the failed drain's providers loaded: $loaded")
+  }
+
+  test("a drain keeps a named checkpoint, so a re-run commits no data batch, and drops a temp one") {
+    import graft.streaming.EphemeralCheckpointFileManager
+    import org.apache.hadoop.fs.Path
+    val eph = spark.newSession()
+    eph.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[EphemeralCheckpointFileManager].getName)
+    val root = java.nio.file.Files.createTempDirectory("graft_drain_chk").toString
+    Seq(1L, 2L, 3L).toDF("id").coalesce(1).write.parquet(s"$root/src")
+    def source = eph.readStream.schema("id LONG").parquet(s"$root/src")
+    def appendDrain(): StreamingQuery = EventStreams.drain(source.writeStream
+      .format("parquet").option("path", s"$root/out")
+      .option("checkpointLocation", s"$root/chk")).head
+    def out = eph.read.schema("id LONG").parquet(s"$root/out").as[Long].collect().sorted.toSeq
+    def dataBatches(q: StreamingQuery) = q.recentProgress.count(_.numInputRows > 0)
+    val held = new EphemeralCheckpointFileManager(new Path(root), new org.apache.hadoop.conf.Configuration())
+    val first = appendDrain()
+    assert(dataBatches(first) === 1)
+    assert(out === Seq(1L, 2L, 3L))
+    assert(EventStreams.tempCheckpoint(first).isEmpty, "a named checkpoint read as a temp one")
+    assert(held.exists(new Path(s"$root/chk")), "the named checkpoint was dropped")
+    // s11's idempotent re-run: the source is already committed
+    val again = appendDrain()
+    assert(dataBatches(again) === 0, "the re-run over the named checkpoint re-committed data")
+    assert(out === Seq(1L, 2L, 3L))
+    val mem = EventStreams.drain(source.writeStream.format("memory")
+      .queryName("drain_temp_checkpoint")).head
+    assert(eph.table("drain_temp_checkpoint").count() === 3L)
+    val temp = EventStreams.tempCheckpoint(mem)
+    assert(temp.nonEmpty, "a memory sink's checkpoint did not read as a temp one")
+    assert(!held.exists(new Path(temp.get)), s"the temp checkpoint ${temp.get} is still held")
+  }
+
+  /** Code that starts or awaits a bounded streaming query (comment lines
+    * are not scanned). */
+  private val drainSignatures = Seq("awaitTermination(", "Trigger.AvailableNow()")
+
+  private def drainOffenders(root: java.io.File): Seq[String] = {
+    val hits = for {
+      f <- MainSources.files(root)
+      (line, i) <- MainSources.lines(f).zipWithIndex
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("//") && !code.startsWith("/*")
+      sig <- drainSignatures
+      if code.contains(sig)
+    } yield (sig, s"${f.getPath}:${i + 1}")
+    drainSignatures.flatMap { sig =>
+      val at = hits.filter(_._1 == sig).map(_._2)
+      if (at.size == 1) Nil else Seq(s"$sig on ${at.size} lines: ${at.mkString(", ")}")
+    }
+  }
+
+  test("src/main starts and awaits every bounded streaming query in one drain") {
+    val offenders = drainOffenders(new java.io.File("src/main/scala"))
+    assert(offenders.isEmpty, s"drain copies in src/main: ${offenders.mkString("; ")}")
+  }
+
+  test("the drain scan fails on a copy of src/main that adds an inline drain") {
+    val copy = MainSources.copyWith("streaming/Mutant.scala",
+      """package graft.streaming
+        |import org.apache.spark.sql.DataFrame
+        |import org.apache.spark.sql.streaming.Trigger
+        |object Mutant {
+        |  def inlineDrain(df: DataFrame, chk: String): Unit = {
+        |    val q = df.writeStream.format("noop")
+        |      .option("checkpointLocation", chk)
+        |      .trigger(Trigger.AvailableNow())
+        |      .start()
+        |    q.awaitTermination()
+        |  }
+        |}
+        |""".stripMargin)
+    val offenders = drainOffenders(copy)
+    for (sig <- drainSignatures)
+      assert(offenders.exists(o => o.startsWith(s"$sig on 2 lines") && o.contains("Mutant.scala")),
+        s"second '$sig' not reported: $offenders")
   }
 }
