@@ -213,10 +213,11 @@ object Bench {
         firstR, firstW, steadyR, steadyW)
     }
     // Registry-growth canary for the whole-stage-codegen class cache:
-    // the sweep's total compile count is the session's distinct-plan
-    // working set while the cache holds (every plan compiles once); a
-    // working set past capacity recompiles on every run and the count
-    // balloons. Guard at 80% capacity so the registry outgrowing the
+    // the sweep's total compile count is the session's distinct-class
+    // working set while the cache holds (the driver, local tasks and the
+    // stream clone share one class loader, so each class compiles once
+    // per JVM); a working set past capacity recompiles on every run and
+    // the count balloons. Guard at 80% capacity so the registry outgrowing the
     // cache is named before eviction churn skews family timings.
     val compiled = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount

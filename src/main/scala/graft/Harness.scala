@@ -14,12 +14,17 @@ object Harness {
 
   /** The engine's local session: `local[SPARK_GRAFT_CPUS]`, default 4.
     * Every entry point reads the thread count here, so a plan dumped or
-    * profiled by a tool is partitioned like the one Verify ran. */
+    * profiled by a tool is partitioned like the one Verify ran. Local
+    * tasks load classes through the driver's loader, so each generated
+    * class compiles once per JVM, not once on the driver and again in a
+    * task (see `GraftTaskLoader`). */
   def session(appName: Option[String] = None): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val b = SparkSession.builder().master(s"local[$cpus]")
     val spark = Sessions.configure(appName.fold(b)(b.appName), cpus)
       .getOrCreate()
+    if (spark.sparkContext.isLocal)
+      org.apache.spark.executor.GraftTaskLoader.shareDriverLoader()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

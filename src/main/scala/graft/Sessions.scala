@@ -13,15 +13,23 @@ object Sessions {
       // math rewrites to the codegen'd ArrayDot kernel
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.adaptive.enabled", "true")
+      // One task class loader for every session. With isolation on, each
+      // session (the stream clone too) gets its own task loader, and the
+      // codegen cache, keyed on the loader, compiles each class once per
+      // session. The engine adds no session-scoped artifacts (no
+      // addArtifact or addJar), so one loader serves every session.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // The generated-class cache (Janino output) defaults to 100
       // entries — smaller than this library's registry working set.
       // Past that point every additional query family EVICTS earlier
       // plans and each re-run recompiles from scratch (the m-family ran
-      // +52% from recompilation churn alone; SCALE.md postmortem). At
-      // ~17 compiled classes per registered query, 8192 carries the
-      // registry past 300 queries at a 20/query allowance; Bench and
-      // QueryRegistrySpec watch it. Cost is driver heap for compiled
-      // classes — tens of MB.
+      // +52% from recompilation churn alone; SCALE.md postmortem). One
+      // pass of the 226-query registry compiles ~9 classes per query
+      // (2,065 at sf0.01); the ~17 per query once measured here counted
+      // most classes twice, before the driver and local tasks shared one
+      // class loader. 8192 carries the registry past 300 queries at a
+      // 20/query allowance; Bench and QueryRegistrySpec watch it. Cost
+      // is driver heap for compiled classes — tens of MB.
       .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

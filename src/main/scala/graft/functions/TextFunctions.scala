@@ -188,19 +188,7 @@ object TextFunctions {
     new org.apache.spark.ml.feature.NGram()
       .setN(n).setInputCol(inCol).setOutputCol(outCol).transform(df)
 
-  /** F10 comma-join of a token array (ref 02_build_models.R:82). */
-  def joinTokens(c: Column): Column = array_join(c, ", ")
-
   /** F12 label prefix arithmetic (ref 02_build_models.R:632,764). */
-  def clusterLabel(id: Column): Column = concat(lit("Cluster_"), id)
   def clusterId(label: Column): Column =
     regexp_replace(label, "^Cluster_", "").cast("int")
-
-  /** F7 regex field extraction — capture-group form of the reference's
-    * lookbehind extracts (ref 01_extract_features.R:277-279). */
-  def extractField(c: Column, field: String, next: String): Column = {
-    val pat = java.util.regex.Pattern.quote(field + ": ") +
-      "(.*?)" + java.util.regex.Pattern.quote(" " + next + ":")
-    regexp_extract(c, pat, 1)
-  }
 }

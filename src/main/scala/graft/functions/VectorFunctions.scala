@@ -23,9 +23,4 @@ object VectorFunctions {
 
   /** cos(a,b) = a·b / (‖a‖‖b‖) — ref ...optimised_clusters.R:863. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** Squared Euclidean distance (ref 02_build_models.R:441). */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (d(x) - d(y)) * (d(x) - d(y))),
-      lit(0.0), (acc, v) => acc + v)
 }

@@ -2073,58 +2073,13 @@ object EmbeddingOps {
   private val annIvfPqRerankSql =
     exactTopkOracleSql("in_served_or_unshortlisted")
 
-  /** e10 — PRODUCTION semantic dedup (the SemDeDup shape, d10's
-    * composition for the embedding modality): the FULL corpus is
-    * cell-partitioned by the real IVF coarse quantizer ([[ivfBuild]] —
-    * shared memo with e07, it is the same index), near-duplicate edges
-    * are generated by an all-pairs cosine pass WITHIN each cell only
-    * (an equi-join on the cell id — never a corpus×corpus cross join),
-    * and the ≥ 0.95 pair graph collapses through the d07 connected
-    * components to one representative per component. The cell count
-    * grows with the corpus ([[ivfCellsFor]]: n/[[IvfTargetCellSize]],
-    * the SemDeDup regime) so per-cell work is O(targetCellSize²) at
-    * ANY n and the pair pass stays linear overall; a degenerate-cell
-    * guard (16× the mean cell load, mirroring
-    * [[DedupOps.scaledBucketCap]]) excludes any hot cell the quantizer
-    * mis-balances, so one collapsed cell can never go quadratic — its
-    * vectors simply keep themselves, logged loudly. The pair pass is
-    * boundary MULTI-PROBE ([[multiProbeEdges]]): each vector's two
-    * nearest cells are probed, so near-dups straddling a cell boundary
-    * — single-probe SemDeDup's documented blind spot — are recovered at
-    * ≤ 2× pair-pass cost (the planted proof below only relies on
-    * same-cell recall, which the quantizer guarantees for identical
-    * vectors; the boundary gain is proved by its own planted fixture in
-    * SkewOpsSpec); production would feed the e09
-    * int8 vectors through the same plan to shrink the cell shuffle 4×.
-    *
-    * Oracle (planted clique-collapse proof, closed form): corpus ∪
-    * id-shifted identical copy ⇒ every copy lands in its original's
-    * cell (deterministic nearest-center of identical features), every
-    * planted pair scores cosine 1.0 ≥ 0.95, and NO native pair
-    * qualifies (max native cosine ≤ 0.61 at every shipped SF, measured;
-    * isotropic 64-dim noise keeps it far from 0.95 at any n) — so the
-    * components are exactly the planted twins: base rows keep
-    * (component = own id), copies collapse onto their originals. Both
-    * planting assumptions are now ASSERTED on the edge set (one count
-    * over the tiny edge frame): a native/cross pair that qualifies, a
-    * zero-norm embedding whose planted edge vanishes (cosine null), or
-    * a guard-dropped cell each fail loudly with the violated assumption
-    * named, instead of as a bare downstream hash mismatch. */
-  /** The guarded within-cell pair pass behind [[semanticDedup]]:
-    * all-pairs cosine ≥ `threshold` restricted to each cell of a
-    * (cell, vec_id, embedding) assignment. Degenerate-cell guard: a
-    * cell past 16× the mean load (floor 4× the target cell size) is
-    * the quantizer failing on that region (duplicate-heavy or
-    * collapsed data), and its all-pairs pass would be the one
-    * quadratic stage in the plan — excluded cells keep their vectors
-    * un-deduped (self-component): graceful degradation, loudly logged.
-    * The guard count is near-free (a 1-column agg over ids). */
-  /** The degenerate-cell guard shared by both pair passes: cells past
-    * 16× the mean PRIMARY load (floor 4× the target cell size) are the
-    * quantizer failing on a region, and their all-pairs pass would be
-    * the one quadratic stage in the plan — excluded cells keep their
-    * vectors un-deduped (self-component): graceful degradation, loudly
-    * logged. The count is near-free (a 1-column agg over ids). */
+  /** The degenerate-cell guard of the pair pass ([[multiProbeEdges]]):
+    * cells past 16× the mean PRIMARY load (floor 4× the target cell
+    * size) are the quantizer failing on a region, and their all-pairs
+    * pass would be the one quadratic stage in the plan — excluded cells
+    * keep their vectors un-deduped (self-component): graceful
+    * degradation, loudly logged. The count is near-free (a 1-column agg
+    * over ids). */
   private def admittedCells(primary: DataFrame, nTotal: Long,
                             nCells: Int): DataFrame = {
     val cap = DedupOps.scaledBucketCap(nTotal, nCells.toLong,
@@ -2140,20 +2095,6 @@ object EmbeddingOps {
       System.err.println(s"[semdedup] $hot/$nCells cells exceed the " +
         s"degenerate-cell cap ($cap) and are excluded from the pair pass")
     cellSizes.filter(col("cell_n") <= cap).select(col("cell"))
-  }
-
-  private[graft] def withinCellEdges(assigned: DataFrame, nTotal: Long,
-                                     nCells: Int,
-                                     threshold: Double = 0.95): DataFrame = {
-    val cells = assigned.join(admittedCells(assigned, nTotal, nCells), Seq("cell"))
-    val a = cells.select(col("cell"), col("vec_id").as("src"),
-      col("embedding").as("a_emb"))
-    val b = cells.select(col("cell"), col("vec_id").as("dst"),
-      col("embedding").as("b_emb"))
-    a.join(b, Seq("cell"))
-      .filter(col("src") < col("dst"))
-      .filter(fastCosine(col("a_emb"), col("b_emb")) >= threshold)
-      .select(col("src"), col("dst"))
   }
 
   /** The IVF SERVE KERNELS. Every ANN serve composes them, batch rows
@@ -2430,6 +2371,43 @@ object EmbeddingOps {
       .distinct()
   }
 
+  /** e10 — PRODUCTION semantic dedup (the SemDeDup shape, d10's
+    * composition for the embedding modality): the FULL corpus is
+    * cell-partitioned by the real IVF coarse quantizer ([[ivfBuild]] —
+    * shared memo with e07, it is the same index), near-duplicate edges
+    * are generated by an all-pairs cosine pass WITHIN each cell only
+    * (an equi-join on the cell id — never a corpus×corpus cross join),
+    * and the ≥ 0.95 pair graph collapses through the d07 connected
+    * components to one representative per component. The cell count
+    * grows with the corpus ([[ivfCellsFor]]: n/[[IvfTargetCellSize]],
+    * the SemDeDup regime) so per-cell work is O(targetCellSize²) at
+    * ANY n and the pair pass stays linear overall; a degenerate-cell
+    * guard (16× the mean cell load, mirroring
+    * [[DedupOps.scaledBucketCap]]) excludes any hot cell the quantizer
+    * mis-balances, so one collapsed cell can never go quadratic — its
+    * vectors simply keep themselves, logged loudly. The pair pass is
+    * boundary MULTI-PROBE ([[multiProbeEdges]]): each vector's two
+    * nearest cells are probed, so near-dups straddling a cell boundary
+    * — single-probe SemDeDup's documented blind spot — are recovered at
+    * ≤ 2× pair-pass cost (the planted proof below only relies on
+    * same-cell recall, which the quantizer guarantees for identical
+    * vectors; the boundary gain is proved by its own planted fixture in
+    * SkewOpsSpec); production would feed the e09
+    * int8 vectors through the same plan to shrink the cell shuffle 4×.
+    *
+    * Oracle (planted clique-collapse proof, closed form): corpus ∪
+    * id-shifted identical copy ⇒ every copy lands in its original's
+    * cell (deterministic nearest-center of identical features), every
+    * planted pair scores cosine 1.0 ≥ 0.95, and NO native pair
+    * qualifies (max native cosine ≤ 0.61 at every shipped SF, measured;
+    * isotropic 64-dim noise keeps it far from 0.95 at any n) — so the
+    * components are exactly the planted twins: base rows keep
+    * (component = own id), copies collapse onto their originals. Both
+    * planting assumptions are now ASSERTED on the edge set (one count
+    * over the tiny edge frame): a native/cross pair that qualifies, a
+    * zero-norm embedding whose planted edge vanishes (cosine null), or
+    * a guard-dropped cell each fail loudly with the violated assumption
+    * named, instead of as a bare downstream hash mismatch. */
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
     val labels = graft.api.Intermediates.memo(s, s"semdedup|$d") {
       val shared = sharedIndex(s, d, Geometry.Planted)

@@ -305,55 +305,6 @@ object ExportCommit {
     existed
   }
 
-  /** Retire exactly the FOLDED batches from a LIVE append root (r18
-    * verdict ask #4 — the writer-vs-janitor race): a maintenance day
-    * that folds a manifest SNAPSHOT must not retire the whole root,
-    * because an append committed after the snapshot would be deleted
-    * with it — a lost batch ([[retireRoot]] stays the quiesced-family
-    * primitive; [[graft.api.ServePointer.retireFoldedDebt]] composes
-    * with whichever fits the family's writer discipline). This
-    * publishes a new manifest version WITHOUT the retired entries via
-    * the same createLink CAS [[commitBatch]] uses — a racing committer
-    * serializes before or after the retirement, never inside it — and
-    * deletes the retired data dirs only AFTER the shrunken manifest is
-    * durable (a crash in between leaks bytes, never correctness: the
-    * dirs are unreferenced and the next [[gcStaging]]-style sweep or
-    * retirement replay removes them). Returns true when a new manifest
-    * version was published; replays (all ids already gone) are no-ops.
-    *
-    * Ordering contract (same as [[retireRoot]]'s): retire a batch only
-    * after the upstream writer's checkpoint passed it — the retired
-    * ids leave the manifest, so a pre-checkpoint replay of a retired
-    * batch would recommit it and the next fold would double it. */
-  def retireBatches(root: String, batchIds: Set[Long]): Boolean = {
-    if (batchIds.isEmpty) return false
-    val rootPath = Paths.get(root).toAbsolutePath.normalize()
-    while (true) {
-      latest(root) match {
-        case None => return false
-        case Some(m0) =>
-          val (gone, keep) =
-            m0.entries.partition(e => batchIds.contains(e.batchId))
-          if (gone.isEmpty) return false // replay: already retired
-          val next = m0.version + 1
-          val tmp = Files.createTempFile(rootPath, ".manifest", ".tmp")
-          try {
-            Durable.writeString(tmp, render(Manifest(next, keep)))
-            try {
-              Files.createLink(rootPath.resolve(s"manifest-v$next.json"), tmp)
-              Durable.fsyncDir(rootPath)
-              gone.foreach(e =>
-                deleteRec(new File(rootPath.resolve(e.dir).toString)))
-              return true
-            } catch {
-              case _: FileAlreadyExistsException => () // racing commit; retry
-            }
-          } finally Files.deleteIfExists(tmp)
-      }
-    }
-    false // unreachable
-  }
-
   /** Most recent mtime in a tree — a writer still producing files
     * keeps refreshing it, so the age gate sees activity anywhere in
     * the staged dir, not just at its root. */

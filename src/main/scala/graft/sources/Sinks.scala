@@ -43,16 +43,4 @@ object Sinks {
   def writeConsolidated(df: DataFrame, dir: String): Unit =
     df.coalesce(1)
       .write.mode("overwrite").option("header", "true").csv(dir)
-
-  /** Bucketed + sorted table write: pay the shuffle ONCE at write time;
-    * every later join/aggregation between co-bucketed tables on the
-    * bucket key runs with no exchange (and no sort, thanks to sortBy) —
-    * the pre-partitioning-reuse pattern that matters most at 100 TB,
-    * where fact⋈fact shuffles dominate. Exchange elimination is
-    * asserted in SinksSpec. */
-  def writeBucketed(df: DataFrame, tableName: String, key: String,
-                    numBuckets: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, key).sortBy(key)
-      .saveAsTable(tableName)
 }

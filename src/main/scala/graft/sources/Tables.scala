@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Schema'd readers for the driver test corpus (TESTDATA.md).
   *
@@ -76,22 +76,6 @@ object Tables {
     normalizeEventTime(apply(s, d, "events"))
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
-
-  /** Typed variants (SURVEY §1.3): case-class encoders over the stable
-    * corpus relations — column-name/type errors surface at analysis
-    * time instead of deep in a job. */
-  def documentsDs(s: SparkSession, d: String): Dataset[graft.schema.Document] = {
-    import s.implicits._
-    documents(s, d).as[graft.schema.Document]
-  }
-  def eventsDs(s: SparkSession, d: String): Dataset[graft.schema.Event] = {
-    import s.implicits._
-    events(s, d).as[graft.schema.Event]
-  }
-  def embeddingsDs(s: SparkSession, d: String): Dataset[graft.schema.Embedding] = {
-    import s.implicits._
-    embeddings(s, d).as[graft.schema.Embedding]
-  }
 
   /** CSV scan with explicit schema — fail-fast replacement for the
     * reference's inferred `read.csv` (ref 01_extract_features.R:463). */

@@ -6,6 +6,8 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
+import scala.util.control.NonFatal
+
 /** Structured Streaming surface (SURVEY §2.12): the reference is strictly
   * batch, but its chunk-file protocol (process chunks independently,
   * consolidate later, resume after failure — ref
@@ -270,7 +272,10 @@ object EventStreams {
     *  - Its runId is issued to [[releaseSinks]]' orphan sweep at once,
     *    so a query that dies later is still reclaimed.
     *  - Each query is then awaited in turn; a failed one throws here,
-    *    its providers left to the orphan sweep.
+    *    its providers left to the orphan sweep. When a start or an
+    *    await throws, every other query of the call is stopped, awaited,
+    *    unloaded and released as below before the first failure is
+    *    rethrown, so none keeps running unawaited.
     *  - Its state providers are unloaded ([[unloadProvidersOf]]) before
     *    the caller's timing window closes.
     *  - A checkpoint Spark created as a temp checkpoint (the writer
@@ -293,17 +298,27 @@ object EventStreams {
     * sink is a function of its own source only, and Spark schedules
     * the jobs FIFO). */
   private[graft] def drain(writers: DataStreamWriter[_]*): Seq[StreamingQuery] = {
-    val qs = writers.map { w =>
-      val q = w.trigger(Trigger.AvailableNow()).start()
-      issuedRunIds.add(q.runId)
-      q
-    }
-    qs.foreach { q =>
+    val qs = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+    def finish(q: StreamingQuery): Unit = {
       q.awaitTermination()
       unloadProvidersOf(q.runId)
       tempCheckpoint(q).foreach(EphemeralCheckpoints.drop)
     }
-    qs
+    var failed: StreamingQuery = null
+    try {
+      writers.foreach { w =>
+        val q = w.trigger(Trigger.AvailableNow()).start()
+        issuedRunIds.add(q.runId)
+        qs += q
+      }
+      qs.foreach { q => failed = q; finish(q); failed = null }
+      qs.toSeq
+    } catch { case NonFatal(first) =>
+      def quietly(body: => Unit): Unit =
+        try body catch { case NonFatal(e) => first.addSuppressed(e) }
+      qs.filterNot(_ eq failed).foreach { q => quietly(q.stop()); quietly(finish(q)) }
+      throw first
+    }
   }
 
   /** A memory-sink writer for [[drain]]. Sink names are counter-suffixed

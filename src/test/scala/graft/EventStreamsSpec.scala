@@ -404,14 +404,6 @@ class EventStreamsSpec extends SparkSpec {
     assert(rows(EventStreams.streamExportManifest(spark, sfTiny)) === got)
   }
 
-  test("typed Dataset readers expose the corpus entities") {
-    val docs = graft.sources.Tables.documentsDs(spark, sfTiny)
-    val first = docs.head()
-    assert(first.n_chars === first.text.length)
-    assert(graft.sources.Tables.eventsDs(spark, sfTiny).head().event_id >= 0L)
-    assert(graft.sources.Tables.embeddingsDs(spark, sfTiny).head().embedding.nonEmpty)
-  }
-
   test("s24 streaming as-of enrichment equals the batch q35 operator row-for-row") {
     val got = EventStreams.streamAsofEnrich(spark, sfTiny)
       .collect().map(_.toSeq).toSeq
@@ -649,6 +641,54 @@ class EventStreamsSpec extends SparkSpec {
     assert(loaded.nonEmpty, "the failed drain's state providers were never loaded")
     EventStreams.releaseSinks(spark)
     assert(loaded.isEmpty, s"releaseSinks left the failed drain's providers loaded: $loaded")
+  }
+
+  test("a drain whose first query fails stops and releases every other query of the call") {
+    import java.util.concurrent.{CountDownLatch, LinkedBlockingQueue, TimeUnit}
+    val root = java.nio.file.Files.createTempDirectory("graft_drain_fail").toString
+    Seq((1L, ts(0)), (2L, ts(1)), (1L, ts(2))).toDF("k", "ts")
+      .coalesce(1).write.parquet(s"$root/src")
+    // the second query has loaded its state and blocks until stopped;
+    // only then does the first one's sink throw
+    val secondLoaded = new CountDownLatch(1)
+    def writer(name: String)(sink: Dataset[Row] => Unit) =
+      spark.readStream.schema("k LONG, ts TIMESTAMP").parquet(s"$root/src")
+        .withWatermark("ts", "1 hour")
+        .groupBy(col("k")).agg(count(lit(1)).as("n"))
+        .writeStream.outputMode("update")
+        .foreachBatch((batch: Dataset[Row], _: Long) => sink(batch))
+        .option("checkpointLocation", s"$root/$name")
+    val first = writer("first") { batch =>
+      batch.collect()
+      secondLoaded.await(60, TimeUnit.SECONDS)
+      throw new IllegalStateException("first sink failed")
+    }
+    val second = writer("second") { batch =>
+      batch.collect()
+      secondLoaded.countDown()
+      new CountDownLatch(1).await(60, TimeUnit.SECONDS)
+    }
+    val started = new LinkedBlockingQueue[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.add(e.runId)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val failed = try intercept[StreamingQueryException](EventStreams.drain(first, second))
+      finally spark.streams.removeListener(listener)
+    assert(Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("first sink failed")), failed)
+    val runs = Seq.fill(2)(started.poll(30, TimeUnit.SECONDS))
+    assert(!runs.contains(null), s"both queries of the call must start: $runs")
+    val active = spark.streams.active.map(_.runId).toSet
+    assert(runs.forall(r => !active.contains(r)), s"a query of the failed call is still active: $active")
+    def loaded = EventStreams.loadedProviderIds.filter(id => runs.contains(id.queryRunId))
+    // start order is event order: the drain itself released the second
+    assert(loaded.forall(_.queryRunId == runs.head), s"the stopped query kept its providers: $loaded")
+    EventStreams.releaseSinks(spark)
+    assert(loaded.isEmpty, s"releaseSinks left providers of the failed call loaded: $loaded")
   }
 
   test("a drain keeps a named checkpoint, so a re-run commits no data batch, and drops a temp one") {

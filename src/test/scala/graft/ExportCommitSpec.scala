@@ -166,177 +166,6 @@ class ExportCommitSpec extends SparkSpec {
     ServePointer.retireFoldedDebt(ptr, v2, Seq(debt)) // idempotent re-entry
   }
 
-  test("writer-vs-janitor race property: live appends race the maintenance day; no committed append lost, no batch folded twice (seeded multi-trial, r18 ask #4)") {
-    // The crash-point property kills ONE sequential lifecycle; this
-    // races a live WRITER against the janitor: thread A commits
-    // batches while thread B snapshots the manifest, folds the
-    // snapshot, adopts the fold, and retires EXACTLY the folded batch
-    // ids (retireBatches — retiring the whole root would delete any
-    // append that landed after the snapshot). Legal history asserted
-    // per trial: the post-race manifest holds precisely the unfolded
-    // batches; fold ∪ residual equals the sequential oracle as a
-    // multiset (nothing lost, nothing doubled); the pointer never
-    // names a torn artifact; a SECOND quiesced maintenance day drains
-    // the residual to exactly the oracle.
-    import graft.api.ServePointer
-    def vals(b: Long, rng: scala.util.Random): Seq[String] =
-      (0 until 1 + rng.nextInt(3)).map(i => s"b$b-$i-${rng.nextInt(100)}")
-    def writeVals(r: String, b: Long, vs: Seq[String]): Unit = {
-      val st = ExportCommit.stage(r, b)
-      new java.io.File(st).mkdirs()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(st, "vals.txt"), vs.mkString(","))
-      ExportCommit.commitBatch(r, b, st); ()
-    }
-    def readDirVals(dd: String): Seq[String] = {
-      val p = java.nio.file.Paths.get(dd, "vals.txt")
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.readString(p).split(",").toSeq.filter(_.nonEmpty)
-      else Seq.empty
-    }
-    def foldDay(r: String, art: String, ptr: String, name: String,
-        base: Seq[String]): Set[Long] = {
-      // snapshot → fold → _SUCCESS → adopt → retire the FOLDED ids
-      val snap = ExportCommit.latest(r)
-        .map(_.entries).getOrElse(Seq.empty)
-      val folded = base ++ snap.flatMap(e => readDirVals(
-        java.nio.file.Paths.get(r).resolve(e.dir).toString))
-      val v = s"$art/$name"
-      new java.io.File(v).mkdirs()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(v, "data.txt"), folded.sorted.mkString(","))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(v, "_SUCCESS"), "")
-      ServePointer.adopt(ptr, v)
-      ExportCommit.retireBatches(r, snap.map(_.batchId).toSet)
-      snap.map(_.batchId).toSet
-    }
-    for (seed <- 0 until 8) {
-      val rng = new scala.util.Random(seed)
-      val r = root(); val art = root(); val ptr = root()
-      val base = Seq("base-0", "base-1")
-      val v1 = s"$art/v1"
-      new java.io.File(v1).mkdirs()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(v1, "data.txt"), base.sorted.mkString(","))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(v1, "_SUCCESS"), "")
-      ServePointer.adopt(ptr, v1)
-      val nBatches = 4 + rng.nextInt(3)
-      val all = (0 until nBatches)
-        .map(b => b.toLong -> vals(b.toLong, rng)).toMap
-      val janDelay = rng.nextInt(8)
-      @volatile var folded: Set[Long] = Set.empty
-      @volatile var err: Option[Throwable] = None
-      val writer = new Thread(() =>
-        try all.toSeq.sortBy(_._1).foreach { case (b, vs) =>
-          writeVals(r, b, vs); Thread.sleep(rng.nextInt(3).toLong)
-        } catch { case t: Throwable => err = Some(t) })
-      val janitor = new Thread(() =>
-        try { Thread.sleep(janDelay.toLong)
-          folded = foldDay(r, art, ptr, "v2", base)
-        } catch { case t: Throwable => err = Some(t) })
-      writer.start(); janitor.start()
-      writer.join(30000); janitor.join(30000)
-      assert(err.isEmpty, s"seed $seed: race threw $err")
-      // pointer names a COMPLETE artifact (never torn)
-      val cur = ServePointer.current(ptr).get
-      assert(new java.io.File(cur, "_SUCCESS").isFile,
-        s"seed $seed: pointer names a torn artifact")
-      // legal history: the manifest holds exactly the unfolded batches
-      val residualIds = ExportCommit.latest(r)
-        .map(_.batchIds).getOrElse(Set.empty)
-      assert(residualIds === all.keySet -- folded,
-        s"seed $seed: committed appends lost or resurrected")
-      // fold ∪ residual = the sequential oracle, as a multiset
-      def curVals = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(cur, "data.txt"))
-        .split(",").toSeq.filter(_.nonEmpty)
-      val residualVals = ExportCommit.committedDirs(r).flatMap(readDirVals)
-      val oracle = (base ++ all.values.flatten).sorted
-      assert((curVals ++ residualVals).sorted === oracle,
-        s"seed $seed: serve after the race lost or doubled a batch")
-      // a second, quiesced maintenance day drains the residual
-      foldDay(r, art, ptr, "v3", curVals)
-      val cur2 = ServePointer.current(ptr).get
-      val served2 = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(cur2, "data.txt"))
-        .split(",").toSeq.filter(_.nonEmpty).sorted
-      assert(served2 === oracle,
-        s"seed $seed: post-drain serve disagrees with the oracle")
-      assert(ExportCommit.latest(r).forall(_.entries.isEmpty),
-        s"seed $seed: drained manifest still names batches")
-    }
-  }
-
-  test("two concurrent compactions racing the same fold: pointer CAS serializes them; retirement fires exactly once (r18 ask #4)") {
-    import graft.api.ServePointer
-    for (seed <- 0 until 6) {
-      val rng = new scala.util.Random(100 + seed)
-      val r = root(); val art = root(); val ptr = root()
-      val base = Seq("base")
-      val v1 = s"$art/v1"
-      new java.io.File(v1).mkdirs()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(v1, "data.txt"), base.mkString(","))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(v1, "_SUCCESS"), "")
-      ServePointer.adopt(ptr, v1)
-      for (b <- 0L until 3L) {
-        val st = ExportCommit.stage(r, b)
-        new java.io.File(st).mkdirs()
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(st, "vals.txt"), s"b$b")
-        ExportCommit.commitBatch(r, b, st)
-      }
-      // both janitors fold the SAME snapshot into their own attempt
-      // dirs (unique staging names — the dir write never races), then
-      // race the pointer CAS and the batch retirement
-      val snap = ExportCommit.latest(r).get
-      val foldedVals = (base ++ snap.entries.flatMap(e =>
-        java.nio.file.Files.readString(java.nio.file.Paths.get(r)
-          .resolve(e.dir).resolve("vals.txt")).split(","))).sorted
-      val retired = new java.util.concurrent.atomic.AtomicInteger(0)
-      @volatile var err: Option[Throwable] = None
-      val gate = new java.util.concurrent.CountDownLatch(1)
-      val ts = Seq("a", "b").map(tag => new Thread(() =>
-        try {
-          val v = s"$art/fold_$tag"
-          new java.io.File(v).mkdirs()
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(v, "data.txt"),
-            foldedVals.mkString(","))
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(v, "_SUCCESS"), "")
-          gate.await()
-          if (rng.nextBoolean()) Thread.sleep(1)
-          ServePointer.adopt(ptr, v)
-          if (ExportCommit.retireBatches(r, snap.batchIds))
-            retired.incrementAndGet()
-          ()
-        } catch { case t: Throwable => err = Some(t) }))
-      ts.foreach(_.start()); gate.countDown(); ts.foreach(_.join(30000))
-      assert(err.isEmpty, s"seed $seed: race threw $err")
-      // the adoptions serialized: dense history, every version names a
-      // complete artifact, the final serve is the fold's content
-      val hist = ServePointer.history(ptr)
-      assert(hist.map(_._1) === (1 to hist.size),
-        s"seed $seed: pointer history not dense")
-      hist.foreach { case (_, dd) =>
-        assert(new java.io.File(dd, "_SUCCESS").isFile,
-          s"seed $seed: adopted version names a torn artifact") }
-      val served = java.nio.file.Files.readString(java.nio.file.Paths
-          .get(ServePointer.current(ptr).get, "data.txt"))
-        .split(",").toSeq.sorted
-      assert(served === foldedVals, s"seed $seed: serve content drifted")
-      // the batch retirement fired EXACTLY once (the loser no-opped)
-      assert(retired.get === 1,
-        s"seed $seed: retirement fired ${retired.get} times")
-      assert(ExportCommit.latest(r).forall(_.entries.isEmpty))
-      assert(ExportCommit.committedDirs(r).isEmpty)
-    }
-  }
-
   test("history/retirable tolerate versions pruned by a concurrent janitor (r17 ADVICE)") {
     import graft.api.ServePointer
     val art = root(); val ptr = root()

@@ -39,9 +39,11 @@ class QueryRegistrySpec extends SparkSpec {
     // 1.5-2.5x with zero source diff. Bench measures the real compile
     // count per sweep (its canary); this is the STRUCTURAL half — the
     // registry cannot grow past the cache even at a generous
-    // plans-per-query allowance (r14 calibration: 2835 compiled
-    // classes for a 169-query sweep ≈ 17/query incl. shared builds;
-    // 20 is the guarded ceiling). Fails at build time, naming the knob.
+    // plans-per-query allowance (r14 calibration: 2835 compiles for a
+    // 169-query sweep ≈ 17/query incl. shared builds; that count held
+    // most classes twice, a driver compile and a task recompile under a
+    // second class loader, which one shared loader now removes; 20 stays
+    // the guarded ceiling). Fails at build time, naming the knob.
     // SparkSpec's session is built through Sessions.local → configure,
     // so the conf read here IS the configured sweep value
     val cacheMax =

@@ -74,31 +74,6 @@ class SinksSpec extends SparkSpec {
     assert(sys.forall(_ % 10 === 3))
   }
 
-  test("co-bucketed join runs with no shuffle exchange (bucketing scale path)") {
-    // the in-memory catalog is fresh per JVM but the warehouse dirs
-    // persist on disk — clear leftover locations from earlier runs
-    Seq("docs_bucketed_a", "docs_bucketed_b").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(loc)
-      }
-    }
-    val docs = Tables.documents(spark, sfTiny).select("doc_id", "source", "n_chars")
-    Sinks.writeBucketed(docs, "docs_bucketed_a", "doc_id", 8)
-    Sinks.writeBucketed(docs.select("doc_id", "n_chars"), "docs_bucketed_b", "doc_id", 8)
-    val joined = spark.table("docs_bucketed_a").hint("merge")
-      .join(spark.table("docs_bucketed_b"), "doc_id")
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("SortMergeJoin"), plan.take(500))
-    assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n${plan.take(800)}")
-    assert(joined.count() === docs.count())
-  }
-
   test("multimodal decode: schema, determinism, and dimensionality") {
     val media = Multimodal.ppmTable(Tables.documents(spark, sfTiny).limit(30))
     assert(media.schema("content").dataType === BinaryType)

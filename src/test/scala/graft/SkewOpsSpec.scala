@@ -158,7 +158,8 @@ class SkewOpsSpec extends SparkSpec {
     val primary = index.assigned.select(col("cell"), col("vec_id"), col("embedding"))
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val single = pairs(EmbeddingOps.withinCellEdges(primary,
+    // probing only each vector's primary cell is the single-probe pass
+    val single = pairs(EmbeddingOps.multiProbeEdges(primary, primary,
       nTotal = 202, nCells = 8, threshold = 0.95))
     val multi = pairs(EmbeddingOps.multiProbeEdges(primary,
       EmbeddingOps.cellProbes(index),
@@ -258,7 +259,7 @@ class SkewOpsSpec extends SparkSpec {
       }
     }
     val assigned = (hot ++ small).toDF("cell", "vec_id", "embedding")
-    val edges = EmbeddingOps.withinCellEdges(assigned, nTotal = 1160,
+    val edges = EmbeddingOps.multiProbeEdges(assigned, assigned, nTotal = 1160,
         nCells = 200, threshold = 0.999999)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // the hot cell contributes NOTHING (guard) — without it this set

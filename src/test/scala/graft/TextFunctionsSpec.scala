@@ -110,15 +110,4 @@ class TextFunctionsSpec extends SparkSpec {
     assert(got.contains("niche's"))
     assert(got.contains("how is it"), "real contraction must still expand")
   }
-
-  test("extractField pulls the span between field markers") {
-    val got = Seq("Domain: Energy Systems Level 1: Storage Level 2: Batteries")
-      .toDF("text")
-      .select(
-        TextFunctions.extractField(col("text"), "Domain", "Level 1").as("d"),
-        TextFunctions.extractField(col("text"), "Level 1", "Level 2").as("l1"))
-      .collect().head
-    assert(got.getString(0) === "Energy Systems")
-    assert(got.getString(1) === "Storage")
-  }
 }
