@@ -6,12 +6,15 @@ import graft.features.Featurize
 import graft.refine.{CosineMerge, LdaSplitter, ModelRefresh, Renumber}
 import graft.sources.Tables
 import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end modeling pipeline (SURVEY §3.2 entry point 2 + §2.9
   * M9/M10): featurize → K-means → coherence → adaptive LDA split →
-  * renumber → refresh → cosine merge → renumber → refresh → report.
+  * dense renumber → summary → cosine merge and renumber as one relabel →
+  * withinss → report. Every per-cluster step after the split reads one
+  * collected k-row summary ([[ModelRefresh.summary]]).
   * Mirrors the reference's optimize_clusters_with_coherence
   * (ref ...optimised_clusters.R:831-900) and runPhase1Pipeline
   * (ref 04_cluster_refiner.R:726-774) as one driver-orchestrated
@@ -32,12 +35,11 @@ object ModelPipeline {
     * single materialization point of the DFM: weights, vocab, the df/N
     * statistics and coherence presence all derive from it, so the
     * tokenize→ngram→count subtree runs exactly once per pipeline instead
-    * of once per stage. `docTerms` for coherence is counts-projected —
-    * coherence binarizes anyway, and counts already holds distinct
-    * (doc, term) pairs. The K-means input (`assignments.features`) and the
-    * split's raw `countVectors` come from predict's [[Featurize.vectorize]]. */
+    * of once per stage. Coherence reads counts' (doc_id, term) pairs —
+    * it binarizes anyway, and counts already holds distinct pairs. The
+    * K-means input (`assignments.features`) and the split's raw
+    * `countVectors` come from predict's [[Featurize.vectorize]]. */
   final case class Fitted(
-      docTerms: DataFrame,    // (doc_id, term) distinct pairs
       counts: DataFrame,      // (doc_id, term, cnt), checkpointed
       weights: DataFrame,     // (doc_id, term, weight)
       vocab: DataFrame,       // (term, idx)
@@ -65,7 +67,6 @@ object ModelPipeline {
           precomputedWeights: Option[DataFrame] = None): Fitted = {
     val counts = precomputedCounts.getOrElse(
       Featurize.counts(docs).localCheckpoint())
-    val docTerms = counts.select(col("doc_id"), col("term"))
     // weights feeds topVocab AND every downstream fm.weights consumer —
     // reuse the session materialization when the caller has one (the
     // lazy tfidf join would otherwise re-execute per consumer)
@@ -79,7 +80,7 @@ object ModelPipeline {
     val model = new KMeans().setK(k).setSeed(seed)
       .setFeaturesCol("features").setPredictionCol("cluster")
       .fit(feats)
-    Fitted(docTerms, counts, weights, vocab, vocabTerms, model.transform(feats),
+    Fitted(counts, weights, vocab, vocabTerms, model.transform(feats),
       Featurize.vectorize(text, terms, vocabTerms.length, Featurize.RawCount), model)
   }
 
@@ -96,66 +97,98 @@ object ModelPipeline {
     * census job, run when called; the result is a local relation. */
   def coherence(fm: Fitted, topM: Int = 5): DataFrame =
     ProbCoherence.perCluster(
-      fm.docTerms,
+      fm.counts.select(col("doc_id"), col("term")),
       fm.assignments.select(col("doc_id"), col("cluster")),
       ClusterPipeline.topTerms(fm.weights, fm.assignments, topM))
 
-  /** Adaptive LDA split of low-coherence clusters, then dense renumber.
-    * Returns refreshed (doc_id, cluster, features). */
-  def split(fm: Fitted, params: LdaSplitter.Params): DataFrame = {
+  /** A split's assignments (doc_id, cluster, features), checkpointed,
+    * and their [[ModelRefresh.summary]]. */
+  final case class Split(assignments: DataFrame, summary: ModelRefresh.Summary)
+
+  /** Adaptive LDA split of low-coherence clusters, then dense renumber. */
+  def split(fm: Fitted, params: LdaSplitter.Params): Split = {
     val scores = coherence(fm, params.topM).collect()
       .map(r => r.getInt(0) -> (r.getDouble(1), r.getLong(2))).toMap
     val updated = LdaSplitter.split(
       fm.countVectors, fm.assignments.select(col("doc_id"), col("cluster")),
       scores, fm.vocabTerms, params)
     // materialize once: every downstream consumer (top terms, coherence,
-    // merge centers, stats, labels) re-reads the split assignments, and
+    // summary, merge, withinss) re-reads the split assignments, and
     // re-evaluating the LDA-transform/renumber/union DAG per consumer
     // multiplies the whole split cost by the consumer count
-    Renumber.dense(updated)
+    val asg = Renumber.dense(updated)
       .join(fm.assignments.select(col("doc_id"), col("features")), "doc_id")
       .localCheckpoint()
+    Split(asg, ModelRefresh.summary(asg))
   }
 
-  /** Dir-keyed split assignments over the dir-keyed fit — one LDA sweep
-    * per (dataset, params) per session. */
-  def splitAssignments(s: SparkSession, d: String, params: LdaSplitter.Params,
-                       k: Int = 15, seed: Long = 123,
-                       vocabSize: Int = 2000): DataFrame =
+  /** Dir-keyed split over the dir-keyed fit — one LDA sweep and one
+    * summary per (dataset, params) per session. */
+  private def splitOf(s: SparkSession, d: String, params: LdaSplitter.Params,
+                      k: Int, seed: Long, vocabSize: Int = 2000): Split =
     Intermediates.memo(s, s"split|$d|$k|$seed|$vocabSize|$params") {
       split(fitted(s, d, k, seed, vocabSize), params)
     }
 
-  /** Cosine merge of redundant clusters, then dense renumber. */
-  def merge(assignments: DataFrame, threshold: Double = 0.9): DataFrame = {
-    val centers = CosineMerge.collectCenters(assignments)
-    val mm = CosineMerge.mergeMap(centers, threshold)
-    Renumber.dense(CosineMerge.apply(assignments, mm))
+  /** The dir-keyed split's assignments (doc_id, cluster, features). */
+  def splitAssignments(s: SparkSession, d: String, params: LdaSplitter.Params,
+                       k: Int = 15, seed: Long = 123,
+                       vocabSize: Int = 2000): DataFrame =
+    splitOf(s, d, params, k, seed, vocabSize).assignments
+
+  /** A merge: the merge map (old id → representative), the merged
+    * assignments with dense ids, and their summary. */
+  final case class Merged(map: Map[Int, Int], assignments: DataFrame,
+                          summary: ModelRefresh.Summary) {
+    def centers: Map[Int, Vector] = summary.map { case (c, (_, v)) => c -> v }
+  }
+
+  /** Cosine merge of redundant clusters, then dense renumber, as one
+    * relabel of `asg` (doc_id, cluster, features) whose summary is
+    * `summary`. The merged summary is folded on the driver: a merged
+    * cluster's size is its members' total, and its center, the
+    * size-weighted mean of theirs, is the mean of their union. */
+  def merge(asg: DataFrame, summary: ModelRefresh.Summary,
+            threshold: Double = 0.9): Merged = {
+    val mm = CosineMerge.mergeMap(summary.map { case (c, (_, v)) => c -> v.toArray }, threshold)
+    val dense = Renumber.denseMap(mm.values)
+    val ids = mm.map { case (c, r) => c -> dense(r) }
+    val folded = summary.toSeq.sortBy(_._1).groupBy(m => ids(m._1)).map { case (to, members) =>
+      val n = members.map(_._2._1).sum
+      val center = new Array[Double](members.head._2._2.size)
+      members.foreach { case (_, (m, v)) => v.foreachActive((i, x) => center(i) += m * x) }
+      to -> (n, Vectors.dense(center.map(_ / n)))
+    }
+    Merged(mm, ModelRefresh.relabel(asg, ids), folded)
   }
 
   /** Full optimization over the shared fit/split materializations:
     * split → merge → per-cluster stats (cluster, n_docs, withinss),
-    * ordered. */
+    * ordered by cluster. One data pass once the split is built. */
   def optimize(s: SparkSession, d: String, k: Int, seed: Long,
-               params: LdaSplitter.Params, mergeThreshold: Double): DataFrame =
-    ModelRefresh.stats(merge(splitAssignments(s, d, params, k, seed), mergeThreshold))
-      .orderBy(col("cluster"))
+               params: LdaSplitter.Params, mergeThreshold: Double): DataFrame = {
+    val split = splitOf(s, d, params, k, seed)
+    val merged = merge(split.assignments, split.summary, mergeThreshold)
+    ModelRefresh.withinss(merged.assignments, merged.centers)
+  }
 
   /** M10 + A10: the refiner pipeline (ref runPhase1Pipeline
     * 04_cluster_refiner.R:726-774), the shared fit/split's report. */
   def refinerReport(s: SparkSession, d: String, k: Int, seed: Long,
                     params: LdaSplitter.Params): DataFrame =
-    reportFrom(fitted(s, d, k, seed), splitAssignments(s, d, params, k, seed))
+    reportFrom(fitted(s, d, k, seed), splitOf(s, d, params, k, seed))
 
   /** The labeled coherence report (cluster, n_docs, coherence, label) of
-    * a fit and its assignments, best-first (ref 02_build_models.R:790-853);
+    * a fit and a split of it, best-first (ref 02_build_models.R:790-853);
     * a cluster with no label gets "Unlabeled" (ref 04_cluster_refiner.R:626-628). */
-  private[graft] def reportFrom(fm: Fitted, asg: DataFrame): DataFrame = {
-    val asgSlim = asg.select(col("doc_id"), col("cluster"))
+  private[graft] def reportFrom(fm: Fitted, split: Split): DataFrame = {
+    val spark = split.assignments.sparkSession
+    import spark.implicits._
+    val asgSlim = split.assignments.select(col("doc_id"), col("cluster"))
     // tiny (≤ clusters × 5 rows) but read by coherence AND labels —
     // materialize to avoid re-running the weights join per consumer
     val top = ClusterPipeline.topTerms(fm.weights, asgSlim, 5).localCheckpoint()
-    val coh = ProbCoherence.perCluster(fm.docTerms, asgSlim, top)
+    val coh = ProbCoherence.perCluster(fm.counts.select(col("doc_id"), col("term")), asgSlim, top)
     val labels = top.filter(col("rnk") <= 3)
       .groupBy(col("cluster"))
       .agg(array_join(
@@ -165,11 +198,11 @@ object ModelPipeline {
     // coherence output: perCluster needs ≥ 2 scored top terms to form a
     // pair, so a degenerate cluster (one distinct present term) would
     // silently vanish from an inner-joined report, taking its docs with
-    // it. Left-joining from the sizes relation conserves the corpus by
+    // it. Left-joining from the split's sizes conserves the corpus by
     // construction — such a cluster reports a null coherence (no score,
     // sorted last) instead of disappearing, the same warn-don't-fail
     // stance as the "Unlabeled" fallback.
-    val sizes = asgSlim.groupBy(col("cluster")).agg(count(lit(1)).as("n_docs"))
+    val sizes = split.summary.toSeq.map { case (c, (n, _)) => (c, n) }.toDF("cluster", "n_docs")
     sizes
       .join(coh.select(col("cluster"), col("coherence")), Seq("cluster"), "left")
       .join(broadcast(labels), Seq("cluster"), "left")

@@ -1,30 +1,18 @@
 package graft.cluster
 
-import org.apache.spark.ml.clustering.KMeansModel
-import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Per-cluster statistics of the K-means stage (SURVEY §2.9 M1,
-  * §2.4 A2-A5, §2.5 T2/T3), re-expressing the reference's
-  * apply_clustering + update_kmeans_model (ref 02_build_models.R:183-190,
-  * 391-450). The fit itself is [[graft.api.ModelPipeline.fit]]: MLlib
-  * KMeans (Lloyd) replaces R's Hartigan-Wong — identical assignments are
-  * not guaranteed; correctness is invariants + fixed-seed
-  * reproducibility (SURVEY §7.4.3).
+/** Per-cluster top terms of the K-means stage (SURVEY §2.9 M1,
+  * §2.5 T2/T3), re-expressing the reference's apply_clustering
+  * (ref 02_build_models.R:183-190). The fit itself is
+  * [[graft.api.ModelPipeline.fit]]: MLlib KMeans (Lloyd) replaces R's
+  * Hartigan-Wong — identical assignments are not guaranteed; correctness
+  * is invariants + fixed-seed reproducibility (SURVEY §7.4.3). Sizes and
+  * within-cluster SSQ (A4/A5) are [[graft.refine.ModelRefresh]]'s.
   */
 object ClusterPipeline {
-
-  /** A5 within-cluster sum of squares against broadcast centers. */
-  def withinss(assignments: DataFrame, model: KMeansModel): DataFrame = {
-    val centers = model.clusterCenters
-    val sq = udf { (c: Int, v: Vector) => Vectors.sqdist(v, centers(c)) }
-    assignments
-      .withColumn("sq", sq(col("cluster"), col("features")))
-      .groupBy(col("cluster"))
-      .agg(round(sum(col("sq")), 4).as("withinss"), count(lit(1)).as("n_docs"))
-  }
 
   /** T3 top-k terms per cluster by summed TF-IDF mass (ref
     * extract_cluster_terms 02_build_models.R:617-642). Ranks on the

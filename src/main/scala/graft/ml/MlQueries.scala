@@ -5,6 +5,7 @@ import graft.cluster.ClusterPipeline
 import graft.coherence.ProbCoherence
 import graft.features.Featurize
 import graft.oracle.DuckFragments
+import graft.refine.ModelRefresh
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,9 +21,9 @@ import org.apache.spark.sql.functions._
   * the real seeded fits, with the seed-specific internals engine-side
   * and their deterministic FRAMES (center universe, conservation
   * totals, density/non-negativity/idempotence flags) emitted as fully
-  * oracle-bound rows (the m09 r10 pattern — since r11 every row in this
-  * family is hash-checked; ref 02_build_models.R:775-787 documents the
-  * same model-frame fields as the persisted contract).
+  * oracle-bound rows, so every row in this family is hash-checked
+  * (ref 02_build_models.R:775-787 documents the same model-frame fields
+  * as the persisted contract).
   */
 object MlQueries {
 
@@ -174,15 +175,14 @@ object MlQueries {
     * k=15 → per-cluster size + within-cluster SSQ (ref apply_clustering +
     * update_kmeans_model 02_build_models.R:183-190, 391-450).
     *
-    * BOUND FRAME ROW since r11 (the m09 r10 pattern, ending the
-    * `no_oracle` convention — r10 verdict item 1): Lloyd's iterations
-    * aren't SQL-expressible, so the seed-specific sizes and SSQs stay
-    * engine-side (ClusterPipelineSpec pins seed determinism; m12 pins
-    * the fit frame), and the registry row emits, per CENTER id, the
-    * invariants any correct fit must satisfy. The row universe is
-    * anchored on the MODEL's centers 0..k−1 — k = 15 is a query
-    * PARAMETER, so unlike a data-dependent cluster count the universe
-    * is identical at every SF (the m09 r10 coupling lesson):
+    * A bound frame row: Lloyd's iterations aren't SQL-expressible, so
+    * the seed-specific sizes and SSQs stay engine-side
+    * (ClusterPipelineSpec pins seed determinism; m12 pins the fit
+    * frame), and the registry row emits, per CENTER id, the invariants
+    * any correct fit must satisfy. The row universe is anchored on the
+    * MODEL's centers 0..k−1 — k = 15 is a query PARAMETER, so unlike a
+    * data-dependent cluster count the universe is identical at every
+    * SF:
     *
     *  - ssq_ok: within-cluster SSQ ≥ 0 per populated cluster (an empty
     *    cluster — legal for Lloyd — has no stats row and passes null);
@@ -195,7 +195,7 @@ object MlQueries {
     *    (corpus conservation, m12's formula). */
   def kmeansStats(s: SparkSession, d: String): DataFrame = {
     val fm = graft.api.ModelPipeline.fitted(s, d, k = 15, seed = 123)
-    val stats = ClusterPipeline.withinss(fm.assignments, fm.model)
+    val stats = ModelRefresh.withinss(fm.assignments, modelCenters(fm))
     val k = fm.model.clusterCenters.length
     val inv = stats.agg(
       sum(col("n_docs")).as("n_docs_total"),
@@ -213,6 +213,10 @@ object MlQueries {
       .orderBy(col("cluster"))
   }
 
+  /** The fitted model's own centers, by cluster id. */
+  private def modelCenters(fm: graft.api.ModelPipeline.Fitted) =
+    fm.model.clusterCenters.zipWithIndex.map { case (v, c) => c -> v }.toMap
+
   /** m06's oracle: the center universe 0..14 (parameter-fixed, valid at
     * any SF), flags pinned to 1, and the conserved total reproduced
     * relationally (m12's vectorizable-doc formula). */
@@ -227,28 +231,6 @@ object MlQueries {
       |FROM (SELECT unnest(generate_series(0, 14)) AS c) ids
       |ORDER BY cluster""".stripMargin
 
-  /** m07 — M2-M7 + J2/J3: the full optimization pipeline — featurize →
-    * K-means → coherence gate → adaptive-k LDA split (theta-argmax
-    * reassignment) → dense renumber → cosine merge → refreshed stats
-    * (ref optimize_clusters_with_coherence
-    * ...optimised_clusters.R:831-900). threshold=0.5 forces the split
-    * attempt on the synthetic corpus's low-coherence catch-all cluster
-    * (the corpus is topic-free bag-of-words, so the LDA usually finds one
-    * dominant topic and the reassignment is a no-op — the structured A2
-    * fixture in RefineSpec proves real splits).
-    *
-    * BOUND FRAME ROW since r11 (r10 verdict item 1, "m13's formula but
-    * as the row itself"): the iterative LDA/K-means fits aren't
-    * SQL-expressible, so the per-cluster stats stay engine-side and the
-    * row emits the frame invariants the sweep must satisfy — the
-    * conserved doc total (oracle-relational, m12's formula), dense
-    * renumbering, SSQ non-negativity, PLUS the cross-stage conservation
-    * check m13 does not carry: Σ n_docs after split→merge→refresh must
-    * equal the FITTED assignment count (a split or merge that drops or
-    * duplicates docs breaks this before it breaks the oracle total).
-    * m13 predates this conversion and pins the same sweep through its
-    * own aggregate — kept for series continuity; the two rows share the
-    * memoized sweep, so the marginal cost is one aggregation. */
   /** Dense-universe aggregate flag shared by m07/m08/m09/m13: the
     * cluster ids of the aggregated relation are exactly 0..k'−1,
     * pinned without fixing the engine-specific k'. */
@@ -263,6 +245,26 @@ object MlQueries {
     kRange = 2 to 3, coherenceThreshold = 0.5, minDocsForSplit = 10,
     maxIter = 5)
 
+  /** m07 — M2-M7 + J2/J3: the full optimization pipeline — featurize →
+    * K-means → coherence gate → adaptive-k LDA split (theta-argmax
+    * reassignment) → dense renumber → cosine merge → refreshed stats
+    * (ref optimize_clusters_with_coherence
+    * ...optimised_clusters.R:831-900). threshold=0.5 forces the split
+    * attempt on the synthetic corpus's low-coherence catch-all cluster
+    * (the corpus is topic-free bag-of-words, so the LDA usually finds one
+    * dominant topic and the reassignment is a no-op — the structured A2
+    * fixture in RefineSpec proves real splits).
+    *
+    * A bound frame row: the iterative LDA/K-means fits aren't
+    * SQL-expressible, so the per-cluster stats stay engine-side and the
+    * row emits the frame invariants the sweep must satisfy — the
+    * conserved doc total (oracle-relational, m12's formula), dense
+    * renumbering, SSQ non-negativity, PLUS the cross-stage conservation
+    * check m13 does not carry: Σ n_docs after split→merge→refresh must
+    * equal the FITTED assignment count (a split or merge that drops or
+    * duplicates docs breaks this before it breaks the oracle total).
+    * m13 pins the same sweep through its own aggregate; the two rows
+    * share the memoized sweep, so the marginal cost is one aggregation. */
   def ldaOptimize(s: SparkSession, d: String): DataFrame = {
     val fitN = graft.api.ModelPipeline.fitted(s, d, k = 15, seed = 123)
       .assignments.agg(count(lit(1)).as("fit_docs"))
@@ -287,27 +289,25 @@ object MlQueries {
 
   /** m08 — M6/M7/J3: cosine centroid merge + dense renumber + refreshed
     * stats over the seeded K-means fit (no LDA stage — isolates the
-    * merge/renumber/refresh path).
+    * merge/renumber/refresh path). It composes the same summary and
+    * merge that [[graft.api.ModelPipeline.optimize]] uses.
     *
-    * BOUND FRAME ROW since r11 (r10 verdict item 1): the merge choices
-    * depend on the seed-specific centers, so the per-cluster stats stay
-    * engine-side and the row emits the invariants ANY correct
-    * first-wins chained merge (ref ...optimised_clusters.R:861-879)
-    * must satisfy:
+    * A bound frame row: the merge choices depend on the seed-specific
+    * centers, so the per-cluster stats stay engine-side and the row
+    * emits the invariants ANY correct first-wins chained merge (ref
+    * ...optimised_clusters.R:861-879) must satisfy:
     *
     *  - map_mono_ok / map_total_ok: the merge MAP only ever retargets
     *    DOWNWARD (each update sets mm(x) to an i strictly below its
     *    current value — the i<j scan order's signature; a reversed or
     *    corrupted retarget breaks it) and stays total over the center
     *    universe (a dropped cluster id breaks it). Deliberately NOT
-    *    pinned: map idempotence (mm∘mm = mm) — the r10 verdict's
-    *    suggested "merging twice changes nothing" flag — because
-    *    first-wins CHAINING legally violates it: cos(1,2) > t and
-    *    cos(2,3) > t with cos(1,3) ≤ t yields mm = {2→1, 3→2}, the
-    *    reference's documented semantics (§7.4.4 — chaining, not
-    *    transitive closure), so an idempotence flag would flip red on
-    *    a legal center configuration at some future corpus — the same
-    *    data-coupling trap m09's r10 universe had;
+    *    pinned: map idempotence (mm∘mm = mm, "merging twice changes
+    *    nothing") — first-wins CHAINING legally violates it:
+    *    cos(1,2) > t and cos(2,3) > t with cos(1,3) ≤ t yields
+    *    mm = {2→1, 3→2}, the reference's documented semantics (§7.4.4 —
+    *    chaining, not transitive closure), so an idempotence flag would
+    *    flip red on a legal center configuration at some future corpus;
     *  - k_le_fit_ok: merging never grows the cluster count past the
     *    fitted k;
     *  - dense_ok / nonneg_ok: post-merge renumbering is dense 0..k''−1
@@ -316,18 +316,16 @@ object MlQueries {
     *    the merge moves docs between clusters, never drops or
     *    duplicates them. */
   def clusterMerge(s: SparkSession, d: String): DataFrame = {
-    import graft.refine.{CosineMerge, Renumber}
     import s.implicits._
     val fm = graft.api.ModelPipeline.fitted(s, d, k = 15, seed = 123)
-    val centers = CosineMerge.collectCenters(fm.assignments)
-    val mm = CosineMerge.mergeMap(centers, threshold = 0.9)
-    // k-row map algebra, evaluated IN the executed plan (r11 ADVICE —
-    // formerly driver-side booleans baked as literals at construction):
-    // the merge map and center universe become k-row local relations
-    // and the mono/totality flags aggregate over their full-outer
-    // alignment, so re-executing the returned DataFrame re-checks them.
-    val mmDf = mm.toSeq.toDF("x", "r")
-    val uni = centers.keySet.toSeq.toDF("cid")
+    val summary = ModelRefresh.summary(fm.assignments)
+    val merged = graft.api.ModelPipeline.merge(fm.assignments, summary, threshold = 0.9)
+    // k-row map algebra, evaluated IN the executed plan: the merge map
+    // and center universe become k-row local relations and the
+    // mono/totality flags aggregate over their full-outer alignment, so
+    // re-executing the returned DataFrame re-checks them.
+    val mmDf = merged.map.toSeq.toDF("x", "r")
+    val uni = summary.keySet.toSeq.toDF("cid")
     val mapFlags = mmDf
       .join(uni.withColumnRenamed("cid", "xk"),
         col("x") === col("xk"), "full_outer")
@@ -345,8 +343,7 @@ object MlQueries {
         min(when(col("r").isNull || col("r") <= col("x"), 1).otherwise(0))
           .as("map_mono_ok"))
     val fitN = fm.assignments.agg(count(lit(1)).as("fit_docs"))
-    graft.refine.ModelRefresh.stats(
-        Renumber.dense(CosineMerge.apply(fm.assignments, mm)))
+    ModelRefresh.withinss(merged.assignments, merged.centers)
       .agg(sum(col("n_docs")).as("n_docs"),
         denseIdsAgg.as("dense_ok"),
         min(when(col("withinss") >= 0, 1).otherwise(0)).as("nonneg_ok"),
@@ -375,14 +372,10 @@ object MlQueries {
 
   /** m09 — M10/A10: the refiner pipeline — coherence-gated split, top
     * terms, deterministic labels, labeled report sorted best-first.
-    * The registry row emits the report's OWN per-cluster rows (r9
-    * verdict item 4), each graded by invariant flags the oracle pins.
+    * The registry row emits the report's OWN per-cluster rows, each
+    * graded by invariant flags the oracle pins.
     *
-    * SF-DECOUPLED since r11 (r10 verdict item 5 — the r10 shape's
-    * closed-form 0..14 oracle universe silently assumed the coherence
-    * gate stays quiet, true at sf0.01 but not sf0.1 where k'=17, so a
-    * regenerated correctness corpus would have flipped m09 red for a
-    * non-bug). The row universe is now the FITTED center ids 0..14 —
+    * SF-decoupled: the row universe is the FITTED center ids 0..14 —
     * k = 15 is a query parameter, and the split-only path (no merge,
     * ref 04_cluster_refiner.R:743-748) renumbers densely and never
     * shrinks the count below the fitted k, so ids 0..14 exist in the
@@ -391,7 +384,7 @@ object MlQueries {
     * `dense_ok` flag pins the FULL report universe relationally (dense
     * 0..k'−1 with k' ≥ 15) — the gate firing changes k', never the
     * flag, and a dropped/duplicated/non-dense id flips it to a red
-    * row at any SF. Per-row flags as in r10: coherence within its
+    * row at any SF. Per-row flags: coherence within its
     * algebraic [−1,1] range (null legal — an unscorable cluster sorts
     * last, it must not vanish), label non-null/non-empty ("Unlabeled"
     * fallback included), n_docs ≥ 1. `n_docs_total` (constant): Σ
@@ -431,8 +424,7 @@ object MlQueries {
     * train-corpus weighting, nearest centroid). The date is a fixed
     * literal — path construction stays deterministic across runs.
     *
-    * BOUND FRAME ROW since r11 (r10 verdict item 1): the predicted
-    * cluster ids are K-means-internal (s09 pins the disk round-trip
+    * A bound frame row: the predicted cluster ids are K-means-internal (s09 pins the disk round-trip
     * identity, m11 pins the predict path on a planted closed-form
     * corpus), but WHICH sampled docs survive prediction is fully
     * relational: the predict path drops exactly the docs with no
@@ -498,17 +490,14 @@ object MlQueries {
     * flow). Full DuckDB oracle: every sampled doc, flag 1 — a lossy
     * write, a vocab/weighting drift, or a dropped doc breaks rows or
     * hash. */
-  /** Deterministic per-(app, dataset) model dir under java.io.tmpdir —
-    * the applicationId keeps concurrent sessions off each other's paths;
-    * the fixed date keeps the versioned path stable across runs. */
+  /** Deterministic per-(app, dataset) model dir under the session's
+    * artifact root; the fixed date keeps the versioned path stable
+    * across runs. */
   private def tmpModelDir(s: SparkSession, d: String, tag: String,
-                          k: Int): String = {
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_model_${s.sparkContext.applicationId}_" +
-        Integer.toHexString(d.hashCode)).getAbsolutePath
-    graft.api.ModelStore.versionedDir(base, k,
+                          k: Int): String =
+    graft.api.ModelStore.versionedDir(
+      graft.sources.TmpDirs.artifactRoot(s, d, s"${tag}_model"), k,
       java.time.LocalDate.of(2026, 1, 1))
-  }
 
   def modelRoundtrip(s: SparkSession, d: String): DataFrame = {
     import graft.api.{ModelPipeline, ModelStore}
@@ -595,7 +584,7 @@ object MlQueries {
     val fm = graft.api.ModelPipeline.fitted(s, d, k = 15, seed = 123)
     // one pass: withinss already carries per-cluster doc counts, so the
     // assignments relation is scanned once, not once per invariant
-    ClusterPipeline.withinss(fm.assignments, fm.model)
+    ModelRefresh.withinss(fm.assignments, modelCenters(fm))
       .agg(sum(col("n_docs")).as("n_docs"),
         min(when(col("withinss") >= 0, 1).otherwise(0)).as("nonneg_ok"))
       .select(lit(fm.model.clusterCenters.length.toLong).as("n_centers"),

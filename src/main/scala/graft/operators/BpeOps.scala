@@ -566,10 +566,7 @@ object BpeOps {
   }
 
   def bpeRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.sources.TmpDirs.registered(
-      new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_t19_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(d.hashCode)).getAbsolutePath)
+    val dir = graft.sources.TmpDirs.artifactRoot(s, d, "t19")
     saveMerges(s, trainedMerges(s, d), dir)
     withRatio(docPieceCounts(s, d, loadMerges(s, dir), "t19"))
   }

@@ -981,10 +981,7 @@ object PackOps {
     * ([[graft.sources.TmpDirs]], r11 ADVICE). */
   def exportManifest(s: SparkSession, d: String): DataFrame = {
     val assigned = exportAssigned(Tables.documents(s, d))
-    val root = graft.sources.TmpDirs.registered(
-      new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_p11_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(d.hashCode)).getAbsolutePath)
+    val root = graft.sources.TmpDirs.artifactRoot(s, d, "p11")
     // the export GENERATION is itself a versioned artifact: the commit
     // root the trainer reads is resolved through the atomic CURRENT
     // pointer (r16 ask #1, export family — a re-export or p15-style
@@ -1047,10 +1044,7 @@ object PackOps {
   def incrementalExport(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ExportCommit
     val docs = Tables.documents(s, d)
-    val base = graft.sources.TmpDirs.registered(
-      new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_p12_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(d.hashCode)).getAbsolutePath)
+    val base = graft.sources.TmpDirs.artifactRoot(s, d, "p12")
     val shardsRoot = s"$base/shards"
     val indexRoot = s"$base/index"
     val epoch0 = exportAssigned(docs.filter(col("doc_id") % 10 =!= 0))
@@ -1255,10 +1249,7 @@ object PackOps {
   def tombstoneExport(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ExportCommit
     val docs = Tables.documents(s, d)
-    val base = graft.sources.TmpDirs.registered(
-      new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_p15_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(d.hashCode)).getAbsolutePath)
+    val base = graft.sources.TmpDirs.artifactRoot(s, d, "p15")
     val shardsRoot = s"$base/shards"
     val indexRoot = s"$base/index"
     val tombRoot = s"$base/tombstones"

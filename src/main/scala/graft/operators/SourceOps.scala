@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.multimodal.Multimodal
-import graft.sources.{Sinks, Tables}
+import graft.sources.{Sinks, Tables, TmpDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,11 +39,7 @@ object SourceOps {
   private def csvRoundtrip(s: SparkSession, d: String, tag: String,
       proj: DataFrame, schema: org.apache.spark.sql.types.StructType,
       write: (DataFrame, String) => Unit): DataFrame = {
-    // applicationId in the path: two concurrent sessions round-tripping
-    // the same dataset would otherwise race one directory
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_${s.sparkContext.applicationId}_" +
-        Integer.toHexString(d.hashCode)).getAbsolutePath
+    val dir = TmpDirs.artifactRoot(s, d, tag)
     write(proj, dir)
     Sinks.readChunks(s, dir, schema).orderBy(col("doc_id"))
   }
@@ -266,9 +262,7 @@ object SourceOps {
   def partitionedSink(s: SparkSession, d: String): DataFrame = {
     val dir = partitionedOnce.computeIfAbsent(
       s.sparkContext.applicationId + "|" + d, _ => {
-        val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_s15_${s.sparkContext.applicationId}_" +
-            Integer.toHexString(d.hashCode)).getAbsolutePath
+        val path = TmpDirs.artifactRoot(s, d, "s15")
         Tables.documents(s, d)
           .select(col("doc_id"), col("text"), col("source"),
             col("n_chars"), col("lang"))
@@ -318,9 +312,8 @@ object SourceOps {
   private def bucketedTables(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val key = s.sparkContext.applicationId + "|" + d
     val names = bucketedOnce.computeIfAbsent(key, _ => {
-      val hex = Integer.toHexString(d.hashCode)
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_bucketed_${s.sparkContext.applicationId}_$hex").getAbsolutePath
+      val hex = TmpDirs.pathDigest(d)
+      val base = TmpDirs.artifactRoot(s, d, "bucketed")
       val li = s"graft_li_$hex"
       val ord = s"graft_ord_$hex"
       Tables.lineitem(s, d)
@@ -390,9 +383,7 @@ object SourceOps {
     val proj = Tables.documents(s, d)
       .select(col("doc_id"), md5(col("text").cast("binary")).as("digest"),
         col("n_chars").cast("long").as("n_chars"))
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_s17_${s.sparkContext.applicationId}_" +
-        Integer.toHexString(d.hashCode)).getAbsolutePath
+    val base = TmpDirs.artifactRoot(s, d, "s17")
     val fragDir = s"$base/frag"
     val compDir = s"$base/comp"
     proj.repartition(50).write.mode("overwrite").parquet(fragDir)
@@ -433,9 +424,7 @@ object SourceOps {
     * mechanics that make that evolution safe. */
   def schemaMergeScan(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_s18_${s.sparkContext.applicationId}_" +
-        Integer.toHexString(d.hashCode)).getAbsolutePath
+    val base = TmpDirs.artifactRoot(s, d, "s18")
     docs.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), md5(col("text").cast("binary")).as("digest"))
       .write.mode("overwrite").parquet(s"$base/gen1")
@@ -478,10 +467,7 @@ object SourceOps {
   def jsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
     val proj = Tables.documents(s, d)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
-    val dir = graft.sources.TmpDirs.registered(
-      new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_s21_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(d.hashCode)).getAbsolutePath)
+    val dir = TmpDirs.artifactRoot(s, d, "s21")
     proj.write.mode("overwrite").option("compression", "gzip").json(dir)
     s.read.schema(proj.schema).json(dir).orderBy(col("doc_id"))
   }

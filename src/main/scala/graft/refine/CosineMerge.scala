@@ -1,10 +1,5 @@
 package graft.refine
 
-import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.ml.stat.Summarizer
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
 /** Cosine-similarity cluster merging (SURVEY §2.9 M7 + §2.3 J3) —
   * re-expressing the reference's merge loop
   * (ref 02_build_models_with_auto_lables._optimised_clusters.R:861-879).
@@ -13,8 +8,9 @@ import org.apache.spark.sql.functions._
   * deliberately reproduced: it is first-wins CHAINING, not transitive
   * closure (if cos(1,2)>t merges 2→1, a later cos(2,3)>t retargets
   * nothing because nothing maps to 2 anymore — §7.4.4). Centers are k×d
-  * with k ≤ ~50 (SURVEY §7.4.11), so the pairwise pass is a safe
-  * driver-side collect; the resulting k-row map is broadcast-joined.
+  * with k ≤ ~50 (SURVEY §7.4.11), so the pairwise pass runs on the
+  * driver over [[ModelRefresh.summary]]'s centers; the resulting k-row
+  * map is applied by [[ModelRefresh.relabel]].
   */
 object CosineMerge {
 
@@ -38,28 +34,5 @@ object CosineMerge {
       if cos(centers(i), centers(j)) > threshold
     } ids.foreach(x => if (mm(x) == j) mm(x) = i)
     mm.toMap
-  }
-
-  /** Per-cluster mean centers as a driver-side map (k ≤ ~50 rows;
-    * the mean itself is a distributed Summarizer aggregation). */
-  def collectCenters(assignments: DataFrame,
-                     featuresCol: String = "features",
-                     clusterCol: String = "cluster"): Map[Int, Array[Double]] =
-    assignments.groupBy(col(clusterCol))
-      .agg(Summarizer.mean(col(featuresCol)).as("center"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getAs[Vector]("center").toArray)
-      .toMap
-
-  /** Apply a merge map to assignments via a broadcast join. */
-  def apply(assignments: DataFrame, mm: Map[Int, Int],
-            clusterCol: String = "cluster"): DataFrame = {
-    val spark = assignments.sparkSession
-    import spark.implicits._
-    val mapDf = mm.toSeq.toDF(clusterCol, "merged_cluster")
-    assignments
-      .join(broadcast(mapDf), clusterCol)
-      .drop(clusterCol)
-      .withColumnRenamed("merged_cluster", clusterCol)
   }
 }

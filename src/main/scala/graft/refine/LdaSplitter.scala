@@ -90,8 +90,9 @@ object LdaSplitter {
                                            failures: Map[Int, String])
 
   /** Split every low-coherence cluster. Returns (doc_id, cluster) with
-    * split docs reassigned to fresh ids (dense-renumber afterwards —
-    * [[Renumber.dense]] — to restore canonical ids).
+    * split docs reassigned to fresh ids above the largest old id;
+    * [[Renumber.dense]] (one collect of the distinct ids, then one
+    * [[ModelRefresh.relabel]]) restores canonical 0-based ids.
     *
     * @param countVecs   (doc_id, features) term-count vectors over the
     *                    vocabulary, one per assigned doc (the DTM — LDA

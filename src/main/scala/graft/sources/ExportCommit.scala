@@ -387,23 +387,16 @@ object ExportCommit {
   }
 }
 
-/** Session-lifetime tmp-dir registry (r11 ADVICE): every export-family
-  * operator that materializes a corpus-sized tree under java.io.tmpdir
-  * routes its root through [[registered]], and ONE JVM shutdown hook
-  * deletes everything registered — sessions no longer leave a gzip
-  * copy of the corpus per run. Registration is idempotent per path. */
+/** Session-lifetime tmp-dir registry: every operator that writes a tree
+  * under java.io.tmpdir takes its root from [[artifactRoot]] (the only
+  * reader of that property in src/main), and ONE JVM shutdown hook
+  * deletes every root handed out — sessions leave no tree behind. */
 object TmpDirs {
   private val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private lazy val hook: Unit = {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       dirs.forEach(d => deleteRec(new File(d)))))
     ()
-  }
-
-  def registered(path: String): String = {
-    hook
-    dirs.add(path)
-    path
   }
 
   /** Session-scoped artifact root under java.io.tmpdir, registered for
@@ -415,10 +408,13 @@ object TmpDirs {
     * would silently share one store directory; 64 digest bits make
     * that effectively impossible). */
   def artifactRoot(s: org.apache.spark.sql.SparkSession, dataset: String,
-      tag: String): String =
-    registered(new File(System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_${s.sparkContext.applicationId}_" +
-        pathDigest(dataset)).getAbsolutePath)
+      tag: String): String = {
+    hook
+    val path = new File(System.getProperty("java.io.tmpdir"),
+      s"graft_${tag}_${s.sparkContext.applicationId}_" + pathDigest(dataset)).getAbsolutePath
+    dirs.add(path)
+    path
+  }
 
   /** First 8 bytes of SHA-256(path), hex — collision-resistant tmp-dir
     * key component. */

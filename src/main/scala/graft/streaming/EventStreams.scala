@@ -578,9 +578,7 @@ object EventStreams {
     * semantics, checked for free by the bench's repeat runs. */
   def streamHourlyAppend(s: SparkSession, d: String): DataFrame = {
     val ss = streamSession(s)
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_s11_sink_${s.sparkContext.applicationId}_" +
-        Integer.toHexString(d.hashCode)).getAbsolutePath
+    val dir = graft.sources.TmpDirs.artifactRoot(s, d, "s11_sink")
     val agg = hourlyCounts(readEvents(ss, d))
     drain(agg.writeStream.outputMode("append").format("parquet")
       .option("path", s"$dir/out")
@@ -2031,10 +2029,7 @@ object EventStreams {
     * (ExportCommitSpec replays a batch and proves no double count). */
   def streamExportManifest(s: SparkSession, d: String): DataFrame = {
     val ss = streamSession(s)
-    val base = graft.sources.TmpDirs.registered(
-      new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_s22_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(d.hashCode)).getAbsolutePath)
+    val base = graft.sources.TmpDirs.artifactRoot(s, d, "s22")
     val shardsRoot = s"$base/shards"
     val src = graft.operators.PackOps.exportAssigned(readDocuments(ss, d))
     drain(src.writeStream
@@ -2063,9 +2058,7 @@ object EventStreams {
     * stream's final store must reproduce it row-for-row. */
   def streamUpsert(s: SparkSession, d: String): DataFrame = {
     val ss = streamSession(s)
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_s16_store_${s.sparkContext.applicationId}_" +
-        Integer.toHexString(d.hashCode)).getAbsolutePath
+    val dir = graft.sources.TmpDirs.artifactRoot(s, d, "s16_store")
     val src = readEvents(ss, d).select(col("user_id"),
       unix_micros(col("ts")).as("us"), col("event_id"), col("value"))
     drain(src.writeStream

@@ -2,6 +2,7 @@ package graft
 
 import graft.api.ModelPipeline
 import graft.cluster.ClusterPipeline
+import graft.refine.ModelRefresh
 import org.apache.spark.sql.functions._
 
 /** K-means stage invariants over the FIXTURES A2 6-doc forced-split
@@ -42,13 +43,14 @@ class ClusterPipelineSpec extends SparkSpec {
     assert(a1 === a2)
   }
 
-  test("withinss is non-negative and covers every cluster") {
+  test("withinss against the model's centers is non-negative and covers every cluster") {
     val fm = ModelPipeline.fit(corpus, k = 3, seed = 123, vocabSize = 100)
     val (asg, model) = (fm.assignments, fm.model)
-    val w = ClusterPipeline.withinss(asg, model).collect()
-      .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
+    val centers = model.clusterCenters.zipWithIndex.map { case (v, c) => c -> v }.toMap
+    val w = ModelRefresh.withinss(asg, centers).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     assert(w.length === 3)
-    w.foreach { case (_, ss, n) => assert(ss >= 0.0); assert(n >= 1L) }
+    w.foreach { case (_, n, ss) => assert(ss >= 0.0); assert(n >= 1L) }
   }
 
   test("topTerms ranks per-cluster by mass with dense ranks 1..k") {

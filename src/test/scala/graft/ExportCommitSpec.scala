@@ -612,4 +612,36 @@ class ExportCommitSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"hand-rolled stage/commit outside ExportCommit: ${offenders.mkString(", ")}")
   }
+
+  // ---- one temp-root recipe ------------------------------------------------
+
+  /** Code lines of src/main that read java.io.tmpdir outside `TmpDirs`. */
+  private def tmpdirOffenders(root: java.io.File): Seq[String] =
+    MainSources.files(root).flatMap { f =>
+      val ls = MainSources.lines(f)
+      val home = ls.indexWhere(_.startsWith("object TmpDirs "))
+      val inHome = (i: Int) => home >= 0 && i > home && i < ls.indexWhere(_ == "}", home)
+      ls.indices.collect {
+        case i if ls(i).contains("java.io.tmpdir") && !inHome(i) &&
+            !ls(i).trim.startsWith("*") && !ls(i).trim.startsWith("//") =>
+          s"${f.getPath}:${i + 1}"
+      }
+    }
+
+  test("src/main reads java.io.tmpdir only inside TmpDirs") {
+    val offenders = tmpdirOffenders(new java.io.File("src/main/scala"))
+    assert(offenders.isEmpty, s"temp roots built outside TmpDirs.artifactRoot: ${offenders.mkString("; ")}")
+  }
+
+  test("the temp-root scan fails on a copy of src/main that builds its own root") {
+    val copy = MainSources.copyWith("Mutant.scala",
+      """package graft
+        |object Mutant {
+        |  def root(d: String) = new java.io.File(System.getProperty("java.io.tmpdir"),
+        |    "graft_x_" + Integer.toHexString(d.hashCode)).getAbsolutePath
+        |}
+        |""".stripMargin)
+    val offenders = tmpdirOffenders(copy)
+    assert(offenders.size === 1 && offenders.head.contains("Mutant.scala"), offenders)
+  }
 }

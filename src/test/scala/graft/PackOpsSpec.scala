@@ -472,9 +472,7 @@ class PackOpsSpec extends SparkSpec {
     // the stored id index ends complete: one id per corpus doc — read
     // through the commit protocol (r12: the root holds manifests +
     // staged dirs, not bare parquet)
-    val idxRoot = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_p12_${spark.sparkContext.applicationId}_" +
-        Integer.toHexString(sfTiny.hashCode)).getAbsolutePath + "/index"
+    val idxRoot = graft.sources.TmpDirs.artifactRoot(spark, sfTiny, "p12") + "/index"
     val idSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType)))
@@ -490,9 +488,7 @@ class PackOpsSpec extends SparkSpec {
     import graft.sources.ExportCommit
     val out = PackOps.tombstoneExport(spark, sfTiny).collect().map(_.toSeq).toSeq
     assert(out.nonEmpty)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_p15_${spark.sparkContext.applicationId}_" +
-        Integer.toHexString(sfTiny.hashCode)).getAbsolutePath
+    val base = graft.sources.TmpDirs.artifactRoot(spark, sfTiny, "p15")
     val docs = graft.sources.Tables.documents(spark, sfTiny)
     val n = docs.count()
     val nT = docs.filter(col("doc_id") % 10 === 0).count()

@@ -63,24 +63,83 @@ class RefineSpec extends SparkSpec {
     assert(mm.keySet === centers.keySet && mm.values.toSet.subsetOf(centers.keySet))
   }
 
-  test("CosineMerge.apply + Renumber yields merged dense assignments") {
+  test("ModelRefresh.relabel of a merge map composed with the dense renumber yields merged dense assignments") {
     val asg = Seq((1L, 0), (2L, 1), (3L, 2)).toDF("doc_id", "cluster")
-    val merged = Renumber.dense(
-      CosineMerge.apply(asg, Map(0 -> 0, 1 -> 0, 2 -> 2)))
+    val mm = Map(0 -> 0, 1 -> 0, 2 -> 2)
+    val dense = Renumber.denseMap(mm.values)
+    val merged = ModelRefresh.relabel(asg, mm.map { case (c, r) => c -> dense(r) })
     val got = merged.collect().map(r => (r.getLong(0), r.getInt(1))).toMap
     assert(got === Map(1L -> 0, 2L -> 0, 3L -> 1))
   }
 
-  test("ModelRefresh.stats recomputes sizes and withinss per cluster") {
+  test("ModelRefresh.summary and withinss recompute sizes, centers and withinss per cluster") {
     val vecs = Seq(
-      (1L, 0, org.apache.spark.ml.linalg.Vectors.dense(0.0, 0.0)),
-      (2L, 0, org.apache.spark.ml.linalg.Vectors.dense(2.0, 0.0)),
-      (3L, 1, org.apache.spark.ml.linalg.Vectors.dense(5.0, 5.0))
+      (1L, 0, Vectors.dense(0.0, 0.0)),
+      (2L, 0, Vectors.dense(2.0, 0.0)),
+      (3L, 1, Vectors.dense(5.0, 5.0))
     ).toDF("doc_id", "cluster", "features")
-    val got = ModelRefresh.stats(vecs).orderBy("cluster").collect()
+    val summary = ModelRefresh.summary(vecs)
+    assert(summary.map { case (c, (n, v)) => c -> (n, v.toArray.toSeq) } ===
+      Map(0 -> (2L, Seq(1.0, 0.0)), 1 -> (1L, Seq(5.0, 5.0))))
+    val got = ModelRefresh.withinss(vecs, summary.map { case (c, (_, v)) => c -> v }).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     // cluster 0 center = (1,0): withinss = 1 + 1 = 2; cluster 1 singleton = 0
     assert(got === Array((0, 2L, 2.0), (1, 1L, 0.0)))
+  }
+
+  /** Three clusters of 2-d points: the centers of 0 and 2 have cosine
+    * 0.9999, cluster 1's has cosine below 0.15 with both. */
+  private val mergePoints = Seq(
+    (1L, 0, Seq(1.0, 0.0)), (2L, 0, Seq(3.0, 0.0)), (3L, 0, Seq(2.0, 0.5)),
+    (4L, 1, Seq(0.0, 5.0)), (5L, 1, Seq(0.5, 7.0)),
+    (6L, 2, Seq(9.0, 1.0)), (7L, 2, Seq(11.0, 1.0)))
+
+  test("ModelPipeline.merge on a fixture that merges: dense ids, conserved n_docs, union withinss") {
+    import graft.api.ModelPipeline
+    val asg = mergePoints.map { case (d, c, xs) => (d, c, Vectors.dense(xs.toArray)) }
+      .toDF("doc_id", "cluster", "features")
+    val summary = ModelRefresh.summary(asg)
+    val merged = ModelPipeline.merge(asg, summary)
+    assert(merged.map === Map(0 -> 0, 1 -> 1, 2 -> 0))
+    val byDoc = merged.assignments.select(col("doc_id"), col("cluster")).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(byDoc === Map(1L -> 0, 2L -> 0, 3L -> 0, 4L -> 1, 5L -> 1, 6L -> 0, 7L -> 0))
+    val stats = ModelRefresh.withinss(merged.assignments, merged.centers).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
+    assert(stats.map(_._1).toSeq === Seq(0, 1), "merged ids are not dense")
+    assert(stats.map(_._2).sum === mergePoints.size.toLong, "n_docs not conserved")
+    // plain-Scala recompute over each merged cluster's union of points
+    val union = mergePoints.groupBy { case (d, _, _) => byDoc(d) }
+    stats.foreach { case (c, n, ss) =>
+      val pts = union(c).map(_._3)
+      val center = pts.transpose.map(_.sum / pts.size)
+      val want = pts.map(_.zip(center).map { case (x, m) => (x - m) * (x - m) }.sum).sum
+      assert(n === pts.size.toLong)
+      assert(math.abs(ss - want) <= 1e-9, s"cluster $c: withinss $ss vs $want")
+      val (fn, fc) = merged.summary(c)
+      assert(fn === n)
+      fc.toArray.zip(center).foreach { case (a, b) => assert(math.abs(a - b) <= 1e-9) }
+    }
+  }
+
+  test("optimize on a built split runs at most 2 jobs; the report at most 17") {
+    import graft.api.ModelPipeline
+    val params = LdaSplitter.Params(kRange = 2 to 3, coherenceThreshold = 0.5,
+      minDocsForSplit = 10, maxIter = 5)
+    ModelPipeline.splitAssignments(spark, sfTiny, params, 15, 123)
+    val (stats, optimizeJobs) = recordJobs() {
+      ModelPipeline.optimize(spark, sfTiny, 15, 123, params, 0.9).collect()
+    }
+    val (report, reportJobs) = recordJobs() {
+      ModelPipeline.refinerReport(spark, sfTiny, 15, 123, params).collect()
+    }
+    val (o, r) = (optimizeJobs.count(inBody), reportJobs.count(inBody))
+    info(s"optimize: $o jobs, report: $r jobs")
+    // a merge built from joins, a window renumber and a re-aggregated
+    // refresh ran 12 jobs here, and the report 18
+    assert(stats.map(_.getAs[Long]("n_docs")).sum === report.map(_.getAs[Long]("n_docs")).sum)
+    assert(o <= 2, s"optimize ran $o jobs")
+    assert(r <= 17, s"the report ran $r jobs")
   }
 
   test("refinerReport produces a labeled coherence report (M10/A10)") {
@@ -296,5 +355,53 @@ class RefineSpec extends SparkSpec {
     assert(group.size > 1, "the sweep should have run iterations before its deadline")
     group.foreach(e => assert(e.time <= returnedAt, s"job ${e.jobId} started after split returned"))
     assert(byDoc(updated).values.toSet === Set(0), "a timed-out sweep must leave every doc unsplit")
+  }
+
+  // ---- one per-cluster kernel in src/main --------------------------------
+
+  /** Code lines (not comments) of `dirs` under `root` matching `re`. */
+  private def codeLines(root: java.io.File, re: scala.util.matching.Regex,
+                        dirs: Seq[String] = Seq("")): Seq[String] =
+    for {
+      f <- MainSources.files(root)
+      if dirs.exists(d => f.getPath.contains(s"/graft/$d"))
+      (line, i) <- MainSources.lines(f).zipWithIndex
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("//") && !code.startsWith("/**")
+      if re.findFirstIn(code).isDefined
+    } yield s"${f.getPath}:${i + 1}"
+
+  private def kernelOffenders(root: java.io.File): Seq[String] = {
+    val means = codeLines(root, """Summarizer\.mean\b""".r)
+    val sqdists = codeLines(root, """Vectors\.sqdist\b""".r, Seq("refine/", "cluster/"))
+    (if (means.size == 1) Nil else Seq(s"Summarizer.mean on ${means.size} lines: $means")) ++
+      (if (sqdists.size == 1) Nil else Seq(s"Vectors.sqdist on ${sqdists.size} lines: $sqdists"))
+  }
+
+  test("src/main holds one center mean and, under refine/ and cluster/, one withinss distance") {
+    val offenders = kernelOffenders(new java.io.File("src/main/scala"))
+    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
+
+  test("the kernel scan fails on a copy of src/main that adds a second center and withinss kernel") {
+    val copy = MainSources.copyWith("cluster/Mutant.scala",
+      """package graft.cluster
+        |object Mutant {
+        |  def centers(asg: org.apache.spark.sql.DataFrame) =
+        |    asg.groupBy("cluster").agg(org.apache.spark.ml.stat.Summarizer.mean(asg("features")))
+        |  def sq(a: org.apache.spark.ml.linalg.Vector, b: org.apache.spark.ml.linalg.Vector) =
+        |    org.apache.spark.ml.linalg.Vectors.sqdist(a, b)
+        |}
+        |""".stripMargin)
+    val offenders = kernelOffenders(copy)
+    assert(offenders.size === 2 && offenders.forall(_.contains("Mutant.scala")), offenders)
+  }
+
+  test("the merged-away helpers are gone: collectCenters, CosineMerge.apply, stats, ClusterPipeline.withinss, mapping") {
+    def methods(o: AnyRef) = o.getClass.getDeclaredMethods.map(_.getName).toSet
+    assert(!methods(CosineMerge).exists(Set("collectCenters", "apply")))
+    assert(!methods(ModelRefresh).contains("stats"))
+    assert(!methods(graft.cluster.ClusterPipeline).contains("withinss"))
+    assert(!methods(Renumber).contains("mapping"))
   }
 }
