@@ -43,7 +43,7 @@ class ClusterPipelineSpec extends SparkSpec {
     assert(a1 === a2)
   }
 
-  test("withinss against the model's centers is non-negative and covers every cluster") {
+  test("withinss is non-negative and covers every cluster") {
     val fm = ModelPipeline.fit(corpus, k = 3, seed = 123, vocabSize = 100)
     val (asg, model) = (fm.assignments, fm.model)
     val centers = model.clusterCenters.zipWithIndex.map { case (v, c) => c -> v }.toMap

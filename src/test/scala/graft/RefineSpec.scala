@@ -63,7 +63,7 @@ class RefineSpec extends SparkSpec {
     assert(mm.keySet === centers.keySet && mm.values.toSet.subsetOf(centers.keySet))
   }
 
-  test("ModelRefresh.relabel of a merge map composed with the dense renumber yields merged dense assignments") {
+  test("CosineMerge.apply + Renumber yields merged dense assignments") {
     val asg = Seq((1L, 0), (2L, 1), (3L, 2)).toDF("doc_id", "cluster")
     val mm = Map(0 -> 0, 1 -> 0, 2 -> 2)
     val dense = Renumber.denseMap(mm.values)
@@ -72,7 +72,7 @@ class RefineSpec extends SparkSpec {
     assert(got === Map(1L -> 0, 2L -> 0, 3L -> 1))
   }
 
-  test("ModelRefresh.summary and withinss recompute sizes, centers and withinss per cluster") {
+  test("ModelRefresh.stats recomputes sizes and withinss per cluster") {
     val vecs = Seq(
       (1L, 0, Vectors.dense(0.0, 0.0)),
       (2L, 0, Vectors.dense(2.0, 0.0)),
